@@ -163,21 +163,23 @@ class BatchProber:
 
 def results_to_df(spark: SparkSession, records: Iterable[dict]) -> DataFrame:
     """Probe results → DataFrame in the 8-column PROBE_RESULT schema,
-    ready for writer.upsert into the fact table."""
-    rows = [
-        (
-            r["date"],
-            r["symbol"],
-            r["available"],
-            r["file_size_bytes"],
-            r["last_modified"],
-            r["url"],
-            r["status_code"],
-            r["probe_timestamp"],
-        )
-        for r in records
-    ]
-    return spark.createDataFrame(rows, PROBE_RESULT)
+    ready for writer.upsert into the fact table.
+
+    The records travel as one Arrow table, so the frame plans as a
+    ``LocalTableScan``: every later scan of it (touched dates, the merge)
+    reads JVM-local rows. A ``createDataFrame(list_of_tuples)`` frame is
+    an RDD scan instead, and each of its scans re-pickles the rows through
+    Python workers. Naive timestamps are read as UTC, the probe's clock.
+    One partition: a wave is bounded by symbols × lookback days (~10⁴
+    rows), one task's worth; the local scan would otherwise split it into
+    one task per core in every stage that reads it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(
+        list(records), schema=to_arrow_schema(PROBE_RESULT)
+    )
+    return spark.createDataFrame(table).coalesce(1)
 
 
 def probe_matrix_distributed(

@@ -8,6 +8,10 @@ Design notes (scale-first):
   of defense at 100 TB where static shuffle.partitions is always wrong.
 - shuffle.partitions defaults to the local core count for tests; on a real
   cluster this is overridden by AQE's coalescing from a high initial value.
+- Partition discovery of a table with more than 32 partition directories
+  runs as a Spark job, by default one task per directory (a 2.5k-date
+  fact table: 2.5k tasks to list it). Its width is pinned to the shuffle
+  width, so a listing costs one wave of tasks on the session's cores.
 - Arrow enabled for any toPandas()/pandas_udf boundary (vectorized transfer).
 """
 
@@ -17,7 +21,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: task slots of a local session (and its shuffle width): the CPUs this
+#: process may run on, unless ``$SPARK_GRAFT_CPUS`` says otherwise
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 
 def _apply_driver_memory() -> None:
@@ -57,6 +65,10 @@ def get_session(
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.parallelism",
+            str(shuffle_partitions),
+        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

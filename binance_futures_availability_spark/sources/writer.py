@@ -131,60 +131,114 @@ def upsert_partitioned(
     partition_col: str = "date",
 ) -> None:
     """Upsert by rewriting only the partitions present in ``incoming``.
-    Cost ∝ touched dates, not table size.
+    Cost ∝ touched dates, not table size: nothing here lists or reads the
+    whole table.
 
-    Spark cannot overwrite a path that is also an input of the running plan
-    (lazy read + overwrite of the same directory is an AnalysisException, or
-    silent data loss without that guard). So the merge is STAGED: write the
-    merged touched-partition rows to a sibling staging directory first, then
-    re-read them (fresh lineage, no dependency on the target) and commit via
-    dynamic partition overwrite, which replaces only the touched partition
-    directories of the target table.
+    The touched partition values are collected from ``incoming`` (bounded
+    by the lookback window) and their ``<partition_col>=<v>`` directories
+    are checked through the Hadoop FileSystem, one existence call each.
 
-    Insert-only fast path (r14): when none of the touched partitions exists
-    in the target — the common cron tick, where today's probe window is
-    strictly past the table's max date — the merged rows depend only on
-    ``incoming``, so the staging write + re-read round-trip is skipped and
-    the deduped incoming rows commit directly via dynamic partition
-    overwrite (one partitioned write instead of two). The emptiness probe
-    is one partition-pruned semi-join over the touched dates.
+    - None exists (the common cron tick: the window is past the table's
+      max date): the merge reduces to an intra-incoming dedup (latest
+      version per key). Its rows are NULL-filled to the table's schema,
+      read from ONE existing partition's footer, so a narrower incoming
+      frame (8 probe columns into the 17-column fact table) still commits
+      full-width files. One partitioned write.
+    - Some exist: only those directories are read (``basePath`` keeps the
+      partition column) and merged with ``incoming``. Spark cannot
+      overwrite a path that is also an input of the running plan, so the
+      merge is STAGED: written to a sibling directory, re-read (fresh
+      lineage, no dependency on the target) and then committed.
+
+    Every commit is a dynamic partition overwrite set on the write itself:
+    only the touched partition directories of the target are replaced, and
+    the session's conf is never changed.
     """
     spark = incoming.sparkSession
-    staging = spark_existing_path.rstrip("/") + ".__staging__"
-    existing = spark.read.parquet(spark_existing_path)
-    touched = incoming.select(partition_col).distinct()
-    relevant = existing.join(F.broadcast(touched), partition_col, "left_semi")
-    if relevant.isEmpty():
-        # no overlap: the merge reduces to an intra-incoming dedup (latest
-        # version per key), whose lineage never references the target path
-        merged = upsert(incoming.limit(0), incoming, key, version_col)
-        prev_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy(
-                partition_col
-            ).parquet(spark_existing_path)
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
+    root = spark_existing_path.rstrip("/")
+    present = [
+        d
+        for d in _partition_dirs(spark, root, incoming, partition_col)
+        if _exists(spark, d)
+    ]
+    if not present:
+        # no overlap: the merge's lineage never references the target
+        empty = incoming.limit(0)
+        schema = _partition_schema(spark, root, partition_col)
+        if schema is not None:
+            empty = _widen(empty, schema)
+        merged = upsert(empty, incoming, key, version_col)
+        _overwrite_partitions(merged, root, partition_col)
         return
-    merged = upsert(relevant, incoming, key, version_col)
+    existing = spark.read.option("basePath", root).parquet(*present)
+    merged = upsert(existing, incoming, key, version_col)
+    staging = root + ".__staging__"
     merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        spark.read.parquet(staging).write.mode("overwrite").partitionBy(
-            partition_col
-        ).parquet(spark_existing_path)
+        _overwrite_partitions(
+            spark.read.schema(merged.schema).parquet(staging),
+            root,
+            partition_col,
+        )
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
         _rm_tree(spark, staging)
+
+
+def _overwrite_partitions(
+    df: DataFrame, path: str, partition_col: str, mode: str = "dynamic"
+) -> None:
+    """Commit ``df`` partitioned by ``partition_col``. ``dynamic`` replaces
+    only the partitions ``df`` holds; ``static`` replaces the whole table.
+    The mode is an option of this one write, never a session conf."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", mode)
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
+
+
+def _partition_dirs(
+    spark, root: str, df: DataFrame, partition_col: str
+) -> list[str]:
+    """The ``<root>/<col>=<value>`` directory of every distinct
+    ``partition_col`` value in ``df``, named exactly as Spark's writer
+    names them (value cast to string in the session time zone, then
+    path-escaped; NULL is the default partition)."""
+    catalog = spark.sparkContext._jvm.org.apache.spark.sql.catalyst.catalog
+    dir_name = catalog.ExternalCatalogUtils.getPartitionPathString
+    values = df.select(F.col(partition_col).cast("string")).distinct()
+    return [f"{root}/{dir_name(partition_col, r[0])}" for r in values.collect()]
+
+
+def _partition_schema(spark, root: str, partition_col: str):
+    """The table's schema (data columns + the partition column) from the
+    footer of ONE of its partitions — never a listing of every partition.
+    None when the table holds no partition yet."""
+    fs, hroot = _hadoop_path(spark, root)
+    it = fs.listStatusIterator(hroot)
+    while it.hasNext():
+        status = it.next()
+        name = status.getPath().getName()
+        if status.isDirectory() and name.startswith(partition_col + "="):
+            one = f"{root}/{name}"
+            return spark.read.option("basePath", root).parquet(one).schema
+    return None
+
+
+def _widen(df: DataFrame, schema) -> DataFrame:
+    """``df`` with every column of ``schema`` it lacks added as a typed
+    NULL, in ``schema``'s order; ``df``'s other columns follow."""
+    have = set(df.columns)
+    return df.select(
+        *[
+            F.col(f.name)
+            if f.name in have
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ],
+        *[c for c in df.columns if c not in schema.fieldNames()],
+    )
 
 
 def merge(
@@ -263,19 +317,15 @@ def merge_into(
 
     staging = target_path.rstrip("/") + ".__staging__"
     merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set(
-        "spark.sql.sources.partitionOverwriteMode",
-        "dynamic" if pruned else "static",
-    )
     try:
         # explicit schema: a merge that deletes every scoped row stages an
         # EMPTY dataset (no part files), which schema inference rejects
         staged = spark.read.schema(merged.schema).parquet(staging)
-        staged.write.mode("overwrite").partitionBy(partition_col).parquet(
-            target_path
+        _overwrite_partitions(
+            staged,
+            target_path,
+            partition_col,
+            "dynamic" if pruned else "static",
         )
         if pruned:
             # dynamic overwrite only replaces partitions PRESENT in the
@@ -292,30 +342,38 @@ def merge_into(
                     spark, f"{target_path.rstrip('/')}/{partition_col}={v}"
                 )
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
         _rm_tree(spark, staging)
 
 
-def _rm_tree(spark, path: str) -> None:
-    """Recursive delete through the Hadoop FileSystem API — works for any
-    scheme the table lives on (local, hdfs://, s3a://); a shutil.rmtree
-    would silently leak the staging copy on object stores."""
+def _hadoop_path(spark, path: str):
+    """(FileSystem, Path) for ``path`` through the Hadoop FileSystem API —
+    works for any scheme the table lives on (local, hdfs://, s3a://),
+    where ``os.path`` / ``shutil`` calls silently see nothing."""
     jvm = spark.sparkContext._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs, hpath
+
+
+def _exists(spark, path: str) -> bool:
+    fs, hpath = _hadoop_path(spark, path)
+    return bool(fs.exists(hpath))
+
+
+def _rm_tree(spark, path: str) -> None:
+    """Recursive delete (a shutil.rmtree would silently leak the staging
+    copy on object stores)."""
+    fs, hpath = _hadoop_path(spark, path)
     fs.delete(hpath, True)
 
 
 def table_exists(spark, path: str) -> bool:
     """True when ``path`` holds a committed table (its ``_SUCCESS`` marker).
 
-    Same Hadoop FileSystem routing as _rm_tree: an ``os.path.exists`` check
-    is always False for hdfs:// / s3a:// paths, which would make callers
-    treat every write as the first one and overwrite committed data."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/_SUCCESS")
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
+    An ``os.path.exists`` check is always False for hdfs:// / s3a:// paths,
+    which would make callers treat every write as the first one and
+    overwrite committed data."""
+    return _exists(spark, path.rstrip("/") + "/_SUCCESS")
 
 
 def refresh_symbol_counts(da: DataFrame) -> DataFrame:
@@ -409,16 +467,9 @@ def compact_partitions(
         .partitionBy(partition_col)
         .parquet(staging)
     )
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        spark.read.parquet(staging).write.mode("overwrite").partitionBy(
-            partition_col
-        ).parquet(path)
+        _overwrite_partitions(spark.read.parquet(staging), path, partition_col)
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
         _rm_tree(spark, staging)
     return fragged
 
@@ -476,10 +527,7 @@ def expire_partitions(
     guard every retention job needs: a malformed ``before`` that matches
     nothing simply removes nothing.
     """
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(conf)
+    fs, root = _hadoop_path(spark, path)
     if not fs.exists(root):
         return []
     removed = []

@@ -17,14 +17,19 @@ Semantics carried over exactly:
 
 Scale shape: probing is driver-threaded for one day (the reference's
 150-worker optimum) or executor-distributed for backfills
-(``probe_matrix_distributed``); the upsert rewrites only the touched
-date partitions (work ∝ lookback_days, not table size); the rankings
+(``probe_matrix_distributed``); the probe rows reach Spark as one local
+Arrow table, never through Python workers. A tick lists the fact table
+ONCE — the post-upsert read that validation, rankings and release share.
+The upsert itself reads and rewrites only the touched date partitions,
+found by one directory check per touched date (work ∝ lookback_days,
+not table size); validation is one per-date aggregation; the rankings
 append computes rows only past the archive watermark.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import time
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,7 +42,7 @@ from .schema import (
     DAILY_AVAILABILITY_VERSION,
 )
 from .sources import writer
-from .validation import completeness, continuity, cross_check
+from .validation import cross_check
 
 
 def lookback_window(
@@ -73,11 +78,22 @@ def validate_report(
 
     Never raises on findings; the caller logs and exits 0
     (validate.py:183's always-0 policy).
+
+    Continuity and completeness come from ONE aggregation — the count of
+    available rows per date, collected (bounded by the calendar, not the
+    table). A calendar date in [first date, ``end``] with no row is a gap,
+    as ``continuity.find_gaps`` reports it; a date with
+    0 < available < ``min_symbols`` is incomplete, as
+    ``completeness.incomplete_dates`` reports it (a date whose rows are all
+    unavailable has no available cohort, so it is neither).
     """
-    bounds = da.agg(
-        F.min("date").alias("lo"), F.max("date").alias("hi")
-    ).collect()[0]
-    if bounds["lo"] is None:
+    available = {
+        r["date"]: r["n"]
+        for r in da.groupBy("date")
+        .agg(F.count(F.when(F.col("available"), 1)).alias("n"))
+        .collect()
+    }
+    if not available:
         return {
             "empty": True,
             "missing_dates": [],
@@ -85,8 +101,9 @@ def validate_report(
             "cross_check": None,
             "has_warnings": True,
         }
+    lo, hi = min(available), max(available)
     if end_date is None:
-        end = bounds["hi"] - dt.timedelta(days=3)
+        end = hi - dt.timedelta(days=3)
     else:
         end = (
             dt.date.fromisoformat(end_date)
@@ -94,22 +111,10 @@ def validate_report(
             else end_date
         )
     report: dict = {"empty": False}
-    if end >= bounds["lo"]:
-        report["missing_dates"] = [
-            r["expected_date"]
-            for r in continuity.find_gaps(da, bounds["lo"], end)
-            .orderBy("expected_date")
-            .collect()
-        ]
-    else:
-        report["missing_dates"] = []
+    calendar = (lo + dt.timedelta(days=i) for i in range((end - lo).days + 1))
+    report["missing_dates"] = [d for d in calendar if d not in available]
     report["incomplete_dates"] = [
-        (r["date"], r["symbol_count"])
-        for r in completeness.incomplete_dates(
-            da, min_symbols, bounds["lo"], bounds["hi"]
-        )
-        .orderBy("date")
-        .collect()
+        (d, n) for d, n in sorted(available.items()) if 0 < n < min_symbols
     ]
     if api_symbols is not None:
         db_symbols = da.filter("available").select("symbol").distinct()
@@ -161,13 +166,26 @@ def run_daily_update(
        summary so the caller can log/compare it.
 
     Returns a summary dict mirroring the reference's closing log line
-    (records / available / unavailable / window) plus the report.
+    (records / available / unavailable / window) plus the report, and
+    ``timings``: wall seconds of each step (probe, upsert — including the
+    read of the committed table —, validate, rankings, release; a skipped
+    step reads ~0).
     """
+    timings: dict[str, float] = {}
+    mark = time.perf_counter()
+
+    def lap(step: str) -> None:
+        nonlocal mark
+        now = time.perf_counter()
+        timings[step] = round(now - mark, 3)
+        mark = now
+
     today = today or dt.date.today()
     start, end = lookback_window(today, lookback_days)
     prober = BatchProber(max_workers=max_workers, head=head)
     records = prober.probe_date_range(start, end, symbols)
     incoming = results_to_df(spark, records)
+    lap("probe")
 
     if writer.table_exists(spark, fact_path):
         writer.upsert_partitioned(
@@ -179,6 +197,7 @@ def run_daily_update(
     else:
         writer.write_partitioned(incoming, fact_path)
     da = spark.read.parquet(fact_path)
+    lap("upsert")
 
     summary: dict = {
         "window": (start.isoformat(), end.isoformat()),
@@ -188,6 +207,7 @@ def run_daily_update(
     }
     if validate:
         summary["validation"] = validate_report(da, end_date=end)
+    lap("validate")
 
     if rankings_path is not None:
         if writer.table_exists(spark, rankings_path):
@@ -215,6 +235,7 @@ def run_daily_update(
                 da, generated_at=generated_at, sort=False
             ).write.mode("overwrite").parquet(rankings_path)
             summary["rankings_appended"] = True
+    lap("rankings")
 
     if release_path is not None:
         from .sources import release as release_mod
@@ -222,4 +243,6 @@ def run_daily_update(
         summary["release_stats"] = release_mod.release_database(
             da, release_path
         )
+    lap("release")
+    summary["timings"] = timings
     return summary

@@ -127,6 +127,50 @@ def test_probe_matrix_distributed(spark):
     assert all(r["available"] for r in rows)
 
 
+def test_results_to_df_matches_tuple_path(spark, monkeypatch):
+    """The Arrow-built probe frame equals the ``createDataFrame(tuples)``
+    frame it replaces — schema (nullability included) and rows, with NULL
+    size/last-modified and naive UTC timestamps — and plans as a local
+    table scan, not an RDD scan through Python workers."""
+    import time
+
+    from binance_futures_availability_spark.schema import PROBE_RESULT
+
+    # the tuple path reads naive datetimes in the process's local zone
+    monkeypatch.setenv("TZ", "UTC")
+    time.tzset()
+    try:
+        recs = [
+            probe.check_symbol_availability(
+                "BTCUSDT", D(2024, 1, 15), head=head_200, now=NOW
+            ),
+            probe.check_symbol_availability(
+                "GONEUSDT", D(2024, 1, 15), head=head_404, now=NOW
+            ),
+            dict(
+                probe.check_symbol_availability(
+                    "ETHUSDT", D(2024, 1, 14), head=head_200, now=NOW
+                ),
+                probe_timestamp=dt.datetime(2024, 1, 16, 3, 0, 0, 123456),
+            ),
+        ]
+        got = probe.results_to_df(spark, recs)
+        old = spark.createDataFrame(
+            [tuple(r[f.name] for f in PROBE_RESULT.fields) for r in recs],
+            PROBE_RESULT,
+        )
+        assert got.schema == old.schema == PROBE_RESULT
+        assert sorted(got.collect()) == sorted(old.collect())
+        gone = [r for r in got.collect() if r["symbol"] == "GONEUSDT"][0]
+        assert gone["file_size_bytes"] is None and gone["last_modified"] is None
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert probe.results_to_df(spark, []).schema == PROBE_RESULT
+
+
 def test_probe_to_upsert_to_query_end_to_end(spark):
     """fetch → DataFrame → writer.upsert → snapshot query."""
 

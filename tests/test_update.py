@@ -20,6 +20,7 @@ from binance_futures_availability_spark import update as update_mod
 from binance_futures_availability_spark.cli.main import main as cli_main
 from binance_futures_availability_spark.ingest import discovery, probe
 from binance_futures_availability_spark.operators import rankings as rankings_ops
+from binance_futures_availability_spark.validation import completeness, continuity
 
 
 # ---------------------------------------------------------------- helpers
@@ -103,6 +104,9 @@ def test_run_daily_update_end_to_end(spark, tmp_path):
         dt.date.fromisoformat(d) for d in dates
     ]
     assert report["has_warnings"] is True
+    timings = summary["timings"]
+    assert list(timings) == ["probe", "upsert", "validate", "rankings", "release"]
+    assert all(t >= 0 for t in timings.values())
 
 
 def test_run_daily_update_rerun_is_idempotent(spark, tmp_path):
@@ -238,6 +242,161 @@ def test_validate_report_empty_table(spark):
     empty = spark.createDataFrame([], DAILY_AVAILABILITY)
     report = update_mod.validate_report(empty)
     assert report["empty"] is True and report["has_warnings"] is True
+
+
+def _trio_report(da, end_date, min_symbols):
+    """(missing, incomplete) from the catalog's own validation operators
+    — the three-action form validate_report replaces."""
+    lo, hi = da.agg(F.min("date"), F.max("date")).first()
+    if lo is None:
+        return [], []
+    if end_date is None:
+        end = hi - dt.timedelta(days=3)
+    else:
+        end = dt.date.fromisoformat(end_date)
+    missing = []
+    if end >= lo:
+        missing = [
+            r["expected_date"]
+            for r in continuity.find_gaps(da, lo, end)
+            .orderBy("expected_date")
+            .collect()
+        ]
+    incomplete = [
+        (r["date"], r["symbol_count"])
+        for r in completeness.incomplete_dates(da, min_symbols, lo, hi)
+        .orderBy("date")
+        .collect()
+    ]
+    return missing, incomplete
+
+
+@pytest.mark.parametrize(
+    "case, end_date, min_symbols",
+    [
+        ("populated", None, 5),
+        ("populated", "2024-01-15", 2),
+        ("gappy", "2024-01-20", 3),
+        ("before_first", "2024-01-01", 3),
+        ("all_unavailable_date", "2024-01-18", 2),
+        ("empty", None, 5),
+    ],
+)
+def test_validate_report_one_pass_matches_trio(
+    spark, populated_da, case, end_date, min_symbols
+):
+    """The one-aggregation report equals find_gaps + incomplete_dates: on
+    the fixture, with a gap, with ``end_date`` before the first date, with
+    a date whose rows are all unavailable, and on an empty table."""
+    from conftest import _row
+
+    from binance_futures_availability_spark.schema import DAILY_AVAILABILITY
+
+    da = {
+        "populated": populated_da,
+        "gappy": populated_da.filter(
+            F.col("date") != F.lit(dt.date(2024, 1, 14))
+        ),
+        "before_first": populated_da,
+        "all_unavailable_date": populated_da.unionByName(
+            spark.createDataFrame(
+                [
+                    _row(dt.date(2024, 1, 17), s, False, None)
+                    for s in ("BTCUSDT", "ETHUSDT")
+                ],
+                DAILY_AVAILABILITY,
+            )
+        ),
+        "empty": spark.createDataFrame([], DAILY_AVAILABILITY),
+    }[case]
+    report = update_mod.validate_report(
+        da, end_date=end_date, min_symbols=min_symbols
+    )
+    missing, incomplete = _trio_report(da, end_date, min_symbols)
+    assert report["missing_dates"] == missing
+    assert report["incomplete_dates"] == incomplete
+    assert report["empty"] is (case == "empty")
+    if case == "all_unavailable_date":
+        assert missing == [dt.date(2024, 1, 16), dt.date(2024, 1, 18)]
+        assert dt.date(2024, 1, 17) not in [d for d, _ in incomplete]
+
+
+def test_daily_update_tick_job_shape_on_many_partitions(
+    spark, tmp_path, monkeypatch
+):
+    """A tick on a table with more than 32 date partitions (where Spark
+    lists partitions in a job, one task per directory by default): no job
+    runs a stage wider than the session's cores, the table is listed once,
+    and the upsert reads only the touched partition directories."""
+    from conftest import _row
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from binance_futures_availability_spark.schema import DAILY_AVAILABILITY
+    from binance_futures_availability_spark.sources import writer
+
+    fact = str(tmp_path / "fact")
+    first = dt.date(2024, 1, 1)  # 40 dates: 2024-01-01 .. 2024-02-09
+    writer.write_partitioned(
+        spark.createDataFrame(
+            [
+                _row(first + dt.timedelta(days=i), s, True, 10.0 + i)
+                for i in range(40)
+                for s in SYMS
+            ],
+            DAILY_AVAILABILITY,
+        ),
+        fact,
+    )
+    reads = []
+    real_parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        reads.extend(paths)
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    sc = spark.sparkContext
+    group = f"tick-shape-{tmp_path.name}"
+    sc.setJobGroup(group, "daily update tick")
+    try:
+        # window 2024-02-08 .. 2024-02-10: two existing dates, one new
+        summary = update_mod.run_daily_update(
+            spark,
+            fact,
+            SYMS,
+            lookback_days=3,
+            today=dt.date(2024, 2, 11),
+            head=det_head,
+            rankings_path=str(tmp_path / "rankings"),
+            release_path=str(tmp_path / "release" / "a.duckdb.gz"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tick_reads = list(reads)
+    assert summary["records"] == 6
+    assert spark.read.parquet(fact).count() == 41 * len(SYMS)
+
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group)
+    assert job_ids
+    widths = {
+        (j, s): tracker.getStageInfo(s).numTasks
+        for j in job_ids
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s) is not None
+    }
+    assert max(widths.values()) <= sc.defaultParallelism, widths
+
+    root = fact.rstrip("/")
+    table_reads = [
+        p for p in tick_reads if p.startswith(root + "/") or p == root
+    ]
+    assert table_reads.count(root) == 1  # the post-upsert read
+    assert sorted(p for p in table_reads if p != root) == [
+        f"{root}/date=2024-02-08",
+        f"{root}/date=2024-02-09",
+    ]
 
 
 # ------------------------------------------------------------- CLI verbs

@@ -116,6 +116,100 @@ def test_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
     assert not os.path.exists(path + ".__staging__")
 
 
+def test_upsert_partitioned_insert_only_keeps_table_schema(spark, tmp_path):
+    """A narrow probe batch (8 columns) landing only on NEW dates commits
+    full-width files: the insert-only branch NULL-fills to the table's
+    17 columns instead of writing 8-column files into the table."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from binance_futures_availability_spark.schema import PROBE_RESULT
+
+    path = str(tmp_path / "fact")
+    writer.write_partitioned(
+        make_da(
+            spark,
+            [
+                (D(2024, 1, 1), "BTCUSDT", True, 100.0),
+                (D(2024, 1, 2), "BTCUSDT", True, 200.0),
+            ],
+        ),
+        path,
+    )
+    probe_cols = [f.name for f in PROBE_RESULT.fields]
+    incoming = make_da(
+        spark,
+        [
+            (D(2024, 1, 3), "BTCUSDT", True, None),
+            (D(2024, 1, 4), "ETHUSDT", False, None),
+        ],
+    ).select(probe_cols)
+    writer.upsert_partitioned(
+        path, incoming, ["date", "symbol"], "probe_timestamp"
+    )
+
+    # every committed file, ``date`` counted from its directory
+    want = sorted(DAILY_AVAILABILITY.fieldNames())
+    cols = {
+        f: sorted(pq.read_schema(f).names + ["date"])
+        for f in glob.glob(path + "/date=*/*.parquet")
+    }
+    assert any("date=2024-01-04" in f for f in cols)
+    assert all(c == want for c in cols.values()), cols
+    got = {
+        (r["date"], r["symbol"]): r["quote_volume_usdt"]
+        for r in spark.read.parquet(path).collect()
+    }
+    assert got == {
+        (D(2024, 1, 1), "BTCUSDT"): 100.0,
+        (D(2024, 1, 2), "BTCUSDT"): 200.0,
+        (D(2024, 1, 3), "BTCUSDT"): None,
+        (D(2024, 1, 4), "ETHUSDT"): None,
+    }
+
+
+def test_writers_leave_session_overwrite_mode_static(spark, tmp_path):
+    """The partition-overwrite mode rides on each write as an option: no
+    writer changes the session's conf, whose value stays static."""
+    from pyspark.sql import functions as F
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    assert spark.conf.get(key).lower() == "static"
+    path = str(tmp_path / "fact")
+    writer.write_partitioned(
+        make_da(
+            spark,
+            [
+                (D(2024, 1, 1), "BTCUSDT", True, 100.0),
+                (D(2024, 1, 2), "ETHUSDT", True, 50.0),
+            ],
+        ),
+        path,
+    )
+    # upsert: slow path (2024-01-02 exists) + insert-only path (new date)
+    for day in (D(2024, 1, 2), D(2024, 1, 3)):
+        writer.upsert_partitioned(
+            path,
+            make_da(spark, [(day, "BTCUSDT", True, 1.0)]),
+            ["date", "symbol"],
+            "probe_timestamp",
+        )
+        assert spark.conf.get(key).lower() == "static"
+    src = make_da(spark, [(D(2024, 1, 1), "XRPUSDT", True, 2.0)])
+    writer.merge_into(path, src, ["date", "symbol"])  # dynamic commit
+    assert spark.conf.get(key).lower() == "static"
+    writer.merge_into(path, src, ["symbol"])  # static, whole-table commit
+    assert spark.conf.get(key).lower() == "static"
+    assert spark.read.parquet(path).count() == 5
+    frag = str(tmp_path / "frag")
+    spark.range(12).withColumn("date", F.lit(D(2024, 1, 1))).repartition(
+        3
+    ).write.partitionBy("date").parquet(frag)
+    assert writer.compact_partitions(spark, frag, max_files=1)
+    assert spark.conf.get(key).lower() == "static"
+
+
 def test_matview_counts(spark, populated_da):
     mv = {r["date"]: r for r in writer.refresh_symbol_counts(populated_da).collect()}
     d3 = mv[D(2024, 1, 15)]
