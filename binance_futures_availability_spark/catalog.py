@@ -1,4 +1,4 @@
-"""Table registry: parquet directories → DataFrames / temp views.
+"""Table registry: parquet directories → DataFrames.
 
 The engine's "catalog" role (reference keeps one DuckDB file,
 database/availability_db.py:32-47; here a directory of parquet tables).
@@ -12,6 +12,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .index_cache import cached_index, cached_value, path_key
 
 TESTDATA_TABLES = [
     "region",
@@ -33,16 +35,11 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: memoized relation handles — the engine's catalog-metadata cache. A fresh
-#: ``spark.read.parquet(path)`` builds a new InMemoryFileIndex, and the
-#: file listing + schema resolution run A SPARK JOB each time; resolving
-#: the same path once per session is what any engine's catalog does.
-#: Keyed by (app id, path, directory fingerprint): in-place regeneration
-#: of the testdata (new file sizes/mtimes) misses and re-lists.
-_TABLE_CACHE: dict = {}
-
-
 def _dir_fingerprint(path: str):
+    """(name, size, mtime_ns) of every entry of ``path`` — the identity
+    of one snapshot of a table directory, shared by every registry key
+    over it (``index_cache.path_key`` and the ``hot:`` sweep). None for
+    an unreadable/remote path (never memoized)."""
     try:
         with os.scandir(path) as entries:
             return tuple(
@@ -55,37 +52,27 @@ def _dir_fingerprint(path: str):
         st = os.stat(path)
         return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
     except OSError:
-        return None  # unreadable/remote path: skip memoization
+        return None
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table. Column pruning + predicate pushdown happen at the scan
     because callers express projections/filters declaratively on the result.
-    Relation handles are served from the catalog-metadata cache above."""
+
+    Relation handles are registry values (the engine's catalog-metadata
+    cache): a fresh ``spark.read.parquet(path)`` builds a new
+    InMemoryFileIndex, and the file listing + schema resolution run A
+    SPARK JOB each time; resolving the same snapshot once per session is
+    what any engine's catalog does. An in-place rewrite changes the
+    directory fingerprint, so the next read misses and re-lists."""
     path = table_path(sf_dir, name)
     fp = _dir_fingerprint(path)
     if fp is None:
         return spark.read.parquet(path)
-    key = (spark.sparkContext.applicationId, path, fp)
-    df = _TABLE_CACHE.get(key)
-    if df is None:
-        # drop superseded fingerprints for this path (plain relation
-        # handles, nothing persisted — eviction just keeps the dict flat
-        # across in-place testdata rewrites)
-        for old_key in [
-            k for k in _TABLE_CACHE if k[:2] == key[:2] and k != key
-        ]:
-            _TABLE_CACHE.pop(old_key)
-        df = spark.read.parquet(path)
-        _TABLE_CACHE[key] = df
-    return df
-
-
-#: hot-table handles — the buffer-pool analogue for tables whole queries
-#: re-scan (the warehouse join family re-reads lineitem/orders/customer on
-#: every call; DuckDB serves the same re-reads from its buffer pool + OS
-#: page cache). Keyed like _TABLE_CACHE.
-_HOT_CACHE: dict = {}
+    return cached_value(
+        path_key(path, fp, "table", spark.sparkContext.applicationId),
+        lambda: spark.read.parquet(path),
+    )
 
 
 def load_table_hot(
@@ -95,6 +82,9 @@ def load_table_hot(
     downstream scans parallelize regardless of the source file's row-group
     layout (a single-row-group parquet file yields ONE input partition —
     every aggregate over it runs single-threaded no matter the core count).
+    The buffer-pool analogue for tables whole queries re-scan (the
+    warehouse join family re-reads lineitem/orders/customer on every call;
+    DuckDB serves the same re-reads from its buffer pool + OS page cache).
 
     Scale stance: pin hot DIMENSION tables and repeatedly-scanned working
     sets; a 100 TB fact stream should NOT route through here (Spark's
@@ -108,42 +98,17 @@ def load_table_hot(
         # by load_table either; pinning a snapshot we could not detect
         # going stale would serve wrong rows after an in-place rewrite
         return load_table(spark, sf_dir, name)
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, path, fp, slices)
-    df = _HOT_CACHE.get(key)
-    if df is None:
-        # Evict-and-unpersist superseded entries for this (app, path):
-        # a testdata rewrite changes the fingerprint, and the pinned
-        # blocks of the stale snapshot would otherwise sit in executor
-        # storage for the life of the session (mirrors duckdb_io's
-        # _invalidate_handle discipline).
-        for old_key in [
-            k
-            for k in _HOT_CACHE
-            if k[0] == app_id and k[1] == path and k != key
-        ]:
-            try:
-                _HOT_CACHE.pop(old_key).unpersist()
-            except Exception:  # noqa: BLE001 — eviction is best-effort
-                pass
-        df = load_table(spark, sf_dir, name).repartition(slices).cache()
+
+    def pin() -> DataFrame:
+        df = load_table(spark, sf_dir, name).repartition(slices)
         # source identity for index_cache.plan_key: inputFiles() is empty
         # once the CacheManager swaps in the InMemoryRelation, which would
         # silently disable derived-artifact caching over hot tables (the
-        # plan_key PITFALL). The fingerprint keys staleness exactly like
-        # _HOT_CACHE itself does.
+        # plan_key PITFALL)
         df._spark_graft_source = (path, fp)
-        _HOT_CACHE[key] = df
-    return df
+        return df
 
-
-def register_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view; returns the DataFrames."""
-    out: dict[str, DataFrame] = {}
-    for name in TESTDATA_TABLES:
-        path = table_path(sf_dir, name)
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out
+    return cached_index(
+        path_key(path, fp, "hot", spark.sparkContext.applicationId, slices),
+        pin,
+    )

@@ -1,29 +1,54 @@
-"""Session-lifetime corpus-index cache.
+"""Session artifact registry: everything the engine derives once and
+reuses for the rest of the session, under one key shape, one staleness
+rule, two bounds and one release call.
 
-A real engine does not recompute its inverted index, signature table, or
-quantized-vector store on every query — it builds the index artifact once
-and serves queries from it. These handles are the in-session analogue for
-the derived corpus artifacts the dedup/similarity/text operators share
-(shingle arrays, MinHash signatures, SimHash fingerprints, quantized
-embeddings): the first query over a source table pays the derivation and
-``.persist()``-es it; every later query reuses the in-memory columnar form.
-The fact-table twin of this idea is ``operators.availability._FACT_HANDLES``.
+A real engine does not recompute its inverted index, signature table or
+quantized-vector store on every query, nor re-list a table's files: it
+builds the artifact once and serves later queries from it (DuckDB gets
+this from its buffer pool). The registry holds two stores:
 
-Keys capture BOTH the source files and the md5 of the canonicalized logical
-plan, so ``docs`` vs ``docs.filter(...)`` — same files, different plan —
-never share an entry, and a rewritten table (new file names) misses.
-Non-file-backed DataFrames (in-memory test frames) are never cached: their
-plans are cheap to recompute and their lifetimes are test-scoped.
+- **Frames** (``cached_index``, store ``_HANDLES``): persisted
+  DataFrames — the corpus index artifacts of the dedup/similarity/text
+  operators (shingle arrays, MinHash signatures, quantized embeddings,
+  pair graphs…), hot-pinned catalog tables (``catalog.load_table_hot``),
+  imported fact tables (``duckdb_io.read_fact``) and the symbol-clustered
+  fact projections. Bound: ``INDEX_CACHE_BUDGET_BYTES``. On every miss
+  insert the registry polls the JVM's persisted-block footprint and
+  unpersists least-recently-USED frames until the total fits (hits
+  refresh recency).
+- **Values** (``cached_value``, store ``_VALUES``): driver-side values
+  and unpersisted relation handles — row counts, IVF seed tables, SQ
+  grids, trained centroids, BPE merge lists, resolved query rows,
+  probe-cell lists, table readers. Bound: ``SCALAR_CACHE_CAP`` entries,
+  least-recently-used first (hits refresh recency).
 
-Memory bound: one entry per (source table, artifact, params) actually used
-in the session — bounded by the catalog, not by queries run — AND a byte
-budget (``INDEX_CACHE_BUDGET_BYTES``): on every miss insert the registry
-polls the JVM's persisted-block footprint and evicts least-recently-USED
-handles until the total fits (hits refresh recency). A 166-query catalog
-accumulates ~a dozen corpus artifacts (span stream, inverted index, kNN
-graph, quantized vectors…); entry-count bounds alone let their BYTES grow
-with the catalog on a long-lived session.
-``clear_indexes()`` releases everything (e.g. between benchmark phases).
+Keys. Every key has the ``plan_key`` shape: ``key[0]`` is the tuple of
+URIs the entry was derived from, the rest tags the artifact and its
+parameters. ``plan_key``/``multi_plan_key`` key on the source files AND
+the md5 of the canonicalized logical plan, so ``docs`` and
+``docs.filter(...)`` never share an entry. ``path_key`` keys a relation
+handle over a directory by a ``hot:PATH#md5(fingerprint)`` pseudo-URI
+(the fingerprint is ``catalog._dir_fingerprint``). Frames that are not
+file-backed get no key (None) and bypass the registry.
+
+Staleness. Every miss insert sweeps both stores
+(``sweep_dead_entries``): an entry is dead when a local file it names is
+gone (an in-place table rewrite writes new part-file names) or when the
+current fingerprint of a ``hot:`` directory no longer matches. Dead
+frames are unpersisted.
+
+Invalidation. ``invalidate(path)`` drops every entry that names a URI
+under ``path``; writers call it when they rewrite a directory in a way
+the sweep cannot see (the on-disk IVF index, a re-imported fact table).
+
+``clear_indexes()`` empties both stores and releases the tracked scoped
+persists (``tracked_persist``): storage returns to its baseline.
+
+Two caches stay outside the registry: ``operators.availability.
+_FACT_HANDLES`` (fact-table handles by path) and the module caches of
+``__spark_entry__``; the benchmark harness reads them by name. It also
+reads three names here: ``cached_index`` (wrapped to count builds and
+hits), ``_HANDLES`` (a hit is ``key in _HANDLES``) and ``storage_bytes``.
 """
 
 from __future__ import annotations
@@ -34,18 +59,27 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
+#: persisted frames, least-recently-used first
 _HANDLES: dict = {}
 
+#: driver-side values and unpersisted relation handles, LRU first
+_VALUES: dict = {}
+
 #: Total persisted-storage budget (bytes) above which miss inserts evict
-#: least-recently-used index handles. Counts ALL persisted blocks in the
+#: least-recently-used frames. Counts ALL persisted blocks in the
 #: session (fact handles and tracked scoped persists included — they share
-#: the same storage pool), but only keyed index handles are evictable.
+#: the same storage pool), but only registry frames are evictable.
 #: Default 8 GiB — generous for a single-node session, a rounding error
 #: for a cluster (override via SPARK_GRAFT_INDEX_CACHE_BYTES; executors
 #: sized for 100 TB set it to a fraction of aggregate storage memory).
 INDEX_CACHE_BUDGET_BYTES = int(
     os.environ.get("SPARK_GRAFT_INDEX_CACHE_BYTES", str(8 << 30))
 )
+
+#: entry cap of the value store — large enough that a whole catalog run
+#: never evicts, small enough that a resident service rewriting tables
+#: or serving new query ids forever stays flat.
+SCALAR_CACHE_CAP = 512
 
 
 def storage_bytes(spark) -> int:
@@ -61,25 +95,25 @@ def storage_bytes(spark) -> int:
 
 
 #: Bytes persisted by NON-evictable owners (fact handles, tracked scoped
-#: persists) observed the last time evicting every keyed handle still left
+#: persists) observed the last time evicting every frame still left
 #: the session over budget. storage_bytes() counts the whole session pool,
 #: so without this floor a foreign footprint larger than the budget makes
-#: every miss insert evict the entire index cache down to the inserted key
+#: every miss insert evict every frame down to the inserted key
 #: — silent thrash of exactly the warm artifacts the catalog depends on
 #: (r11 advice). Budget checks subtract the floor; it resets whenever the
 #: session footprint drops below it (foreign blocks were released).
 _FOREIGN_FLOOR = 0
 
 #: Observability: number of times eviction exhausted every evictable
-#: handle while the session stayed over budget (i.e. the overage was not
-#: attributable to the index cache). Non-zero means the budget is sized
+#: frame while the session stayed over budget (i.e. the overage was not
+#: attributable to the registry). Non-zero means the budget is sized
 #: below the session's non-evictable persists.
 EVICTION_STALLS = 0
 
 
 def _attributable_bytes(spark) -> int:
     """Session persisted footprint minus the recorded non-evictable
-    floor — the portion of the pool the index cache can actually free."""
+    floor — the portion of the pool the registry can actually free."""
     global _FOREIGN_FLOOR
     total = storage_bytes(spark)
     if total < _FOREIGN_FLOOR:
@@ -87,22 +121,34 @@ def _attributable_bytes(spark) -> int:
     return total - _FOREIGN_FLOOR
 
 
+def _release(store: dict, key, blocking: bool = False) -> None:
+    """Drop ``key`` from ``store``; a frame is also unpersisted. Values
+    are never unpersisted: a table reader's plan can equal a cached
+    frame's plan, and the CacheManager would drop that frame too."""
+    handle = store.pop(key)
+    if store is _HANDLES:
+        try:
+            handle.unpersist(blocking=blocking)
+        except Exception:  # noqa: BLE001 — context may already be stopped
+            pass
+
+
 def _evict_over_budget(spark, keep_key) -> int:
-    """Unpersist least-recently-used index handles until the session's
+    """Unpersist least-recently-used frames until the session's
     ATTRIBUTABLE persisted footprint fits the budget. ``keep_key`` (the
     entry being inserted) is never evicted — a new artifact must not
     evict itself before first use. Returns the number of evictions.
     Freshly inserted, not-yet-materialized handles report 0 bytes, so the
     budget reacts one insert late — steady state is bounded by budget +
-    one artifact. If evicting every evictable handle still leaves the
+    one artifact. If evicting every evictable frame still leaves the
     session over budget, the residual is non-evictable (fact handles,
     scoped persists): it is recorded as the foreign floor and discounted
     from later checks, so a big foreign footprint degrades to a smaller
-    effective index budget instead of evict-everything thrash."""
+    effective budget instead of evict-everything thrash."""
     global _FOREIGN_FLOOR, EVICTION_STALLS
     # Decay the floor on every miss insert: it was measured at one
     # stall instant, and only a total-below-floor drop resets it — if
-    # foreign blocks shrink while index handles grow, total stays above
+    # foreign blocks shrink while frames grow, total stays above
     # the stale-high floor forever and the discount lets the cache
     # under-evict past the budget indefinitely. Geometric decay
     # (-12.5%/insert) converges the discount back toward zero; if the
@@ -117,11 +163,7 @@ def _evict_over_budget(spark, keep_key) -> int:
         victim = next((k for k in _HANDLES if k != keep_key), None)
         if victim is None:
             break
-        handle = _HANDLES.pop(victim)
-        try:
-            handle.unpersist(blocking=True)
-        except Exception:  # noqa: BLE001
-            pass
+        _release(_HANDLES, victim, blocking=True)
         n += 1
     if (
         len(_HANDLES) <= 1
@@ -133,20 +175,21 @@ def _evict_over_budget(spark, keep_key) -> int:
     return n
 
 
-def is_file_backed(df: DataFrame) -> bool:
-    """True when ``df`` reads identifiable files (directly or through a
-    hot-pinned catalog handle's ``_spark_graft_source``) — i.e. when
-    ``plan_key`` would return a real key and derived artifacts may cache.
-    Use this for BRANCHING on cacheability (advisor r14): probing with
-    ``plan_key(df, "<some-tag>")`` works only because the result is
-    discarded, pays a JVM plan-canonicalization round-trip for nothing,
-    and misleads readers into thinking the probe tag is the cache key."""
-    try:
-        if df.inputFiles():
-            return True
-    except Exception:  # noqa: BLE001 — streaming/exotic plans
-        return False
-    return getattr(df, "_spark_graft_source", None) is not None
+def _hot_uri(path: str, fp) -> str:
+    """``hot:PATH#md5(FP)`` — the identity of one snapshot of directory
+    ``path``. The md5, not str(FP): the raw fingerprint embeds file
+    NAMES, and a name containing '#' would corrupt the sweep's
+    rpartition('#') split (the entry would evict and rebuild on every
+    miss insert). The hash also keeps keys small for large directories."""
+    return f"hot:{path}#{hashlib.md5(str(fp).encode()).hexdigest()}"
+
+
+def path_key(path: str, fp, *extra):
+    """Key for a relation handle over directory ``path`` whose
+    fingerprint (``catalog._dir_fingerprint``) is ``fp``: a rewrite
+    changes the fingerprint, so the next read misses and the sweep drops
+    the superseded entry."""
+    return ((_hot_uri(path, fp),), *extra)
 
 
 def plan_key(df: DataFrame, *extra):
@@ -159,23 +202,18 @@ def plan_key(df: DataFrame, *extra):
     degenerates to None and silently disables caching. Operators that
     build an index over another index thread the source-frame key down
     (see dedup._pair_jaccard's ``postings_key``). Hot-pinned catalog
-    tables (``catalog.load_table_hot``) carry their source identity in
-    ``_spark_graft_source`` — (path, fingerprint) — which substitutes
-    for the empty file list, so derived artifacts over hot tables cache
-    too (the fingerprint keys staleness exactly like the hot cache)."""
+    tables (``catalog.load_table_hot``) and fact handles carry their
+    source identity in ``_spark_graft_source`` — (path, fingerprint) —
+    which substitutes for the empty file list as a ``hot:`` URI, so
+    derived artifacts over them cache too and go stale exactly when the
+    directory's fingerprint changes."""
     try:
         files = tuple(sorted(df.inputFiles()))
         if not files:
             src = getattr(df, "_spark_graft_source", None)
             if src is None:
                 return None
-            # md5 of the fingerprint, not str(tuple): the raw tuple
-            # embeds file NAMES, and a name containing '#' would corrupt
-            # sweep_dead_entries' rpartition('#') split (the artifact
-            # would evict+rebuild on every miss insert). The hash also
-            # keeps keys small for large directories.
-            fp_hash = hashlib.md5(str(src[1]).encode()).hexdigest()
-            files = (f"hot:{src[0]}#{fp_hash}",)
+            files = (_hot_uri(*src),)
         plan = df._jdf.queryExecution().analyzed().canonicalized().toString()
     except Exception:  # noqa: BLE001 — streaming/exotic plans: just don't cache
         return None
@@ -199,97 +237,108 @@ def multi_plan_key(dfs, *extra):
 
 
 def _local_path(uri: str) -> str | None:
-    """Filesystem path for a ``file:``-scheme input URI, else None."""
+    """Filesystem path named by a ``file:`` URI or a scheme-less path;
+    None for remote schemes (``hdfs:``, ``s3a:``…)."""
     if uri.startswith("file:"):
         import urllib.parse
 
         return urllib.parse.unquote(uri[5:].replace("///", "/", 1)) or None
-    if uri.startswith("/"):
-        return uri
-    return None
+    scheme, colon, _ = uri.partition(":")
+    return uri if not colon or "/" in scheme else None
 
 
-def sweep_dead_entries(cache: dict) -> int:
-    """Evict (and unpersist) entries whose source files no longer exist.
+def _hot_path(uri: str) -> str:
+    """Directory named by a ``hot:PATH#md5`` URI."""
+    return uri[4:].rpartition("#")[0]
 
-    Keys follow the ``plan_key`` shape — ``key[0]`` is the sorted tuple of
-    input files. A table rewritten in place gets NEW part-file names, so
-    the superseded snapshot's entries point at deleted files; without this
-    sweep they sit persisted in executor storage for the session. Remote
+
+def _norm(uri: str) -> str:
+    """Comparable form of a path or entry URI: ``hot:`` unwrapped, local
+    paths (scheme-less or ``file:``) made absolute, remote URIs as
+    written without a trailing '/'."""
+    if uri.startswith("hot:"):
+        uri = _hot_path(uri)
+    p = _local_path(uri)
+    return os.path.abspath(p) if p is not None else uri.rstrip("/")
+
+
+def _uris(key) -> tuple:
+    files = key[0] if isinstance(key, tuple) and key else ()
+    if not isinstance(files, tuple):
+        return ()
+    return tuple(u for u in files if isinstance(u, str))
+
+
+def _drop_where(stores, doomed: Callable[[str], bool]) -> int:
+    """Release every entry of ``stores`` naming a URI for which
+    ``doomed`` holds; returns the number released."""
+    n = 0
+    for store in stores:
+        for key in [k for k in store if any(map(doomed, _uris(k)))]:
+            _release(store, key)
+            n += 1
+    return n
+
+
+def _is_dead(uri: str) -> bool:
+    if uri.startswith("hot:"):
+        from . import catalog
+
+        path = _hot_path(uri)
+        return _hot_uri(path, catalog._dir_fingerprint(path)) != uri
+    p = _local_path(uri)
+    return p is not None and not os.path.exists(p)
+
+
+def sweep_dead_entries(*stores) -> int:
+    """Release entries whose sources no longer exist as they were keyed;
+    both stores when none is given. Returns the number released.
+
+    A table rewritten in place gets NEW part-file names, so the
+    superseded snapshot's entries name deleted files; without this sweep
+    they would sit in the registry (frames: persisted in executor
+    storage) for the session. A ``hot:PATH#md5(FP)`` URI is dead when the
+    md5 of the directory's CURRENT fingerprint differs. Remote
     (non-``file:``) inputs are never treated as dead — existence can't be
     checked cheaply and a false eviction only costs a rebuild anyway.
-    Returns the number of entries evicted. O(live entries) per call; runs
-    only on cache MISS inserts, so steady-state hits pay nothing.
+    Each distinct URI is checked once per sweep; sweeps run only on
+    miss inserts, so steady-state hits pay nothing."""
+    seen: dict[str, bool] = {}
 
-    ``hot:PATH#md5(FP)`` pseudo-URIs (artifacts derived from hot-pinned
-    catalog tables) are dead when the md5 of the directory's CURRENT
-    fingerprint no longer matches — same staleness rule the hot cache
-    itself uses. FP is hashed at key construction (plan_key) because the
-    raw fingerprint embeds file names, which may themselves contain
-    '#' and would corrupt this rpartition split."""
-    import os
+    def dead(uri: str) -> bool:
+        if uri not in seen:
+            seen[uri] = _is_dead(uri)
+        return seen[uri]
 
-    dead = []
-    for key in cache:
-        files = key[0] if isinstance(key, tuple) and key else ()
-        if not isinstance(files, tuple):
-            continue
-        for uri in files:
-            if isinstance(uri, str) and uri.startswith("hot:"):
-                from . import catalog
-
-                path, _, fp = uri[4:].rpartition("#")
-                cur = hashlib.md5(
-                    str(catalog._dir_fingerprint(path)).encode()
-                ).hexdigest()
-                if cur != fp:
-                    dead.append(key)
-                    break
-                continue
-            p = _local_path(uri)
-            if p is not None and not os.path.exists(p):
-                dead.append(key)
-                break
-    for key in dead:
-        handle = cache.pop(key)
-        try:
-            handle.unpersist()
-        except AttributeError:
-            pass  # scalar caches share the key shape but hold plain values
-        except Exception:  # noqa: BLE001 — context may already be stopped
-            pass
-    return len(dead)
+    return _drop_where(stores or (_HANDLES, _VALUES), dead)
 
 
-#: insertion-order bound for scalar caches (counts, vocab sizes) — large
-#: enough that a whole catalog run never evicts, small enough that a
-#: resident service rewriting tables forever stays flat.
-SCALAR_CACHE_CAP = 512
+def invalidate(path: str) -> int:
+    """Release every entry (frame or value) that names a URI at or under
+    ``path`` — for writers that rewrite a directory in place. Returns
+    the number released. ``path`` and the entry URIs are compared in one
+    normal form (``_norm``), so a ``file:`` or remote root releases its
+    own entries."""
+    root = _norm(path)
+    prefix = root.rstrip("/") + "/"
 
+    def under(uri: str) -> bool:
+        p = _norm(uri)
+        return p == root or p.startswith(prefix)
 
-def bounded_scalar_put(cache: dict, key, value) -> None:
-    """Insert into a scalar cache with dead-file sweep + hard size bound.
-
-    The sweep reclaims entries for rewritten tables immediately; the cap
-    is the backstop for non-file churn (dicts preserve insertion order,
-    so eviction is oldest-first)."""
-    sweep_dead_entries(cache)
-    while len(cache) >= SCALAR_CACHE_CAP:
-        cache.pop(next(iter(cache)))
-    cache[key] = value
+    return _drop_where((_HANDLES, _VALUES), under)
 
 
 def cached_index(key, factory: Callable[[], DataFrame]) -> DataFrame:
-    """Return the persisted index artifact for ``key``, building it via
-    ``factory`` on first use. ``key=None`` bypasses the cache entirely.
-    Every miss first sweeps entries whose source files were deleted by an
-    in-place table rewrite, so superseded snapshots don't accumulate in
-    executor storage on long-lived sessions."""
+    """Return the persisted frame for ``key``, building it via
+    ``factory`` on first use. ``key=None`` bypasses the registry.
+    Every miss first sweeps dead entries, so superseded snapshots don't
+    accumulate in executor storage on long-lived sessions."""
     if key is None:
         return factory()
     handle = _HANDLES.get(key)
     if handle is None:
-        sweep_dead_entries(_HANDLES)
+        sweep_dead_entries()
         handle = factory().persist()
         _HANDLES[key] = handle
         _evict_over_budget(handle.sparkSession, key)
@@ -300,7 +349,27 @@ def cached_index(key, factory: Callable[[], DataFrame]) -> DataFrame:
     return handle
 
 
-#: persists made OUTSIDE the keyed cache (self-join intermediates over
+def cached_value(key, factory: Callable[[], object]):
+    """Return the driver-side value (or unpersisted relation handle) for
+    ``key``, computing it via ``factory`` on first use. ``key=None``
+    bypasses the registry. Every miss sweeps dead entries, then evicts
+    least-recently-used values down to ``SCALAR_CACHE_CAP``; a hit
+    refreshes recency, so busy readers, seeds and trained models outlive
+    per-query churn."""
+    if key is None:
+        return factory()
+    if key in _VALUES:
+        _VALUES[key] = value = _VALUES.pop(key)
+        return value
+    sweep_dead_entries()
+    value = factory()
+    while len(_VALUES) >= SCALAR_CACHE_CAP:
+        _release(_VALUES, next(iter(_VALUES)))
+    _VALUES[key] = value
+    return value
+
+
+#: persists made OUTSIDE the keyed stores (self-join intermediates over
 #: non-file-backed inputs) — tracked so clear_indexes() releases them.
 #: Strong references ON PURPOSE: DataFrame.persist registers the plan in
 #: the JVM CacheManager, which pins the storage blocks until an explicit
@@ -327,16 +396,14 @@ def tracked_persist(df: DataFrame) -> DataFrame:
 
 
 def clear_indexes() -> None:
-    """Unpersist and drop every cached index artifact and every tracked
-    scoped persist — storage memory returns to its pre-index baseline."""
+    """Empty the registry — every frame unpersisted, every value dropped
+    — and release every tracked scoped persist: storage memory returns
+    to its pre-registry baseline."""
     global _FOREIGN_FLOOR
     _FOREIGN_FLOOR = 0
-    while _HANDLES:
-        _, handle = _HANDLES.popitem()
-        try:
-            handle.unpersist(blocking=True)
-        except Exception:  # noqa: BLE001 — context may already be stopped
-            pass
+    for store in (_HANDLES, _VALUES):
+        while store:
+            _release(store, next(iter(store)), blocking=True)
     while _SCOPED:
         try:
             _SCOPED.pop().unpersist(blocking=True)

@@ -36,7 +36,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import _dir_fingerprint, load_table
+from ..index_cache import cached_index, invalidate, path_key
 
 #: bump when the derivation changes — invalidates materialized caches
 DA_VERSION = "v4"
@@ -199,8 +200,9 @@ def availability_fact(
     if handle is not None:
         return handle
     # a new fingerprint supersedes any older materialization of the same
-    # sf_dir — unpersist the stale handle (and its clustered projections)
-    # so a session that regenerates testdata doesn't strand cached blocks
+    # sf_dir — unpersist the stale handle and release every registry
+    # entry derived from it (clustered projections, index artifacts) so
+    # a session that regenerates testdata doesn't strand cached blocks
     stale_prefix = f"{sf_name}-{digest}-"
     for old_path in [
         p
@@ -211,13 +213,7 @@ def availability_fact(
             _FACT_HANDLES.pop(old_path).unpersist()
         except Exception:  # noqa: BLE001 — eviction is best-effort
             pass
-    for old_key in [
-        k for k in _CLUSTERED_HANDLES if k[0][0] == real and k[0][1] != fp
-    ]:
-        try:
-            _CLUSTERED_HANDLES.pop(old_key).unpersist()
-        except Exception:  # noqa: BLE001
-            pass
+        invalidate(old_path)
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         staging = f"{path}.tmp-{os.getpid()}"
@@ -231,18 +227,16 @@ def availability_fact(
 
             shutil.rmtree(staging, ignore_errors=True)
     handle = spark.read.parquet(path).cache()
-    # carry the source identity the way catalog.load_table_hot does
-    # (catalog.py:135): inputFiles() can come back empty through the
-    # cached handle, and without this attribute plan_key(da, ...) returns
-    # None and SILENTLY disables every index artifact derived from the
-    # fact (index_cache.py:150 — the documented pitfall)
-    handle._spark_graft_source = (path, fp)
+    # carry the source identity the way catalog.load_table_hot does:
+    # inputFiles() can come back empty through the cached handle, and
+    # without this attribute plan_key(da, ...) returns None and SILENTLY
+    # disables every index artifact derived from the fact. The
+    # fingerprint is the directory's own (catalog._dir_fingerprint), the
+    # one the registry's sweep recomputes — any other digest would read
+    # as stale and evict the fact's artifacts on every miss insert.
+    handle._spark_graft_source = (path, _dir_fingerprint(path))
     _FACT_HANDLES[path] = handle
     return handle
-
-
-#: symbol-clustered projections of the fact table, keyed by (sf_dir, cols).
-_CLUSTERED_HANDLES: dict = {}
 
 
 def availability_fact_by_symbol(
@@ -263,23 +257,23 @@ def availability_fact_by_symbol(
     same property across sessions. One narrow-projection copy per column
     set; built lazily on first use and shared for the session.
     """
-    # fingerprint in the key: without it an in-place testdata rewrite
-    # would keep serving the STALE clustered projection (availability_fact
-    # detects the rewrite, but this key wouldn't) — superseded entries are
-    # evicted by availability_fact when the new fingerprint first misses
-    key = ((os.path.realpath(sf_dir), _source_fingerprint(sf_dir)), tuple(cols))
-    handle = _CLUSTERED_HANDLES.get(key)
-    if handle is None:
+    fact = availability_fact(spark, sf_dir)
+
+    def build() -> DataFrame:
         n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        handle = (
-            availability_fact(spark, sf_dir)
-            .select(*cols)
+        return (
+            fact.select(*cols)
             .repartition(n, "symbol")
             .sortWithinPartitions("symbol", "date")
-            .cache()
         )
-        _CLUSTERED_HANDLES[key] = handle
-    return handle
+
+    # keyed on the fact handle's source identity: a testdata rewrite
+    # resolves a new fact path, and availability_fact invalidates the
+    # superseded one's entries
+    return cached_index(
+        path_key(*fact._spark_graft_source, "symbol_clustered", tuple(cols)),
+        build,
+    )
 
 
 #: DuckDB CTE equivalent of :func:`availability_from_lineitem` — prepend to

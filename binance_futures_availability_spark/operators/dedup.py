@@ -43,15 +43,11 @@ from ..functions import (
     tokens,
 )
 from ..index_cache import (
-    bounded_scalar_put,
     cached_index,
+    cached_value,
     plan_key,
     tracked_persist,
 )
-
-#: per-corpus doc counts for the verify-join broadcast decision, keyed like
-#: every other derived scalar (bounded_scalar_put)
-_NDOC_CACHE: dict = {}
 
 #: MinHash permutation constants (deterministic, coprime-ish with P) for
 #: the default width k=8. ``minhash_params(k)`` extends the family
@@ -345,7 +341,7 @@ def _prefix_filtered_pairs(
     per-metric pruning (tighter, uncached)."""
     if postings_key is not None:
         return cached_index(
-            ("prefix_pairs", postings_key, max_shingle_freq, float(threshold)),
+            (*postings_key, "prefix_pairs", max_shingle_freq, float(threshold)),
             lambda: _prefix_pairs_build(
                 sh, id_col, threshold, "containment", max_shingle_freq,
                 sizes, postings_key,
@@ -428,7 +424,7 @@ def _prefix_pairs_build(
     capped = annotated.filter(F.col("__df") <= cap) if cap is not None else annotated
 
     arr_key = (
-        ("capped_arrays", postings_key, cap) if postings_key is not None else None
+        (*postings_key, "capped_arrays", cap) if postings_key is not None else None
     )
     arrays = cached_index(
         arr_key,
@@ -445,12 +441,7 @@ def _prefix_pairs_build(
     # operator on dense corpora). Beyond that the hint is skipped and the
     # planner falls back to shuffled joins — the right call when per-doc
     # state outgrows executor memory.
-    if arr_key is not None and arr_key in _NDOC_CACHE:
-        n_docs = _NDOC_CACHE[arr_key]
-    else:
-        n_docs = arrays.count()
-        if arr_key is not None:
-            bounded_scalar_put(_NDOC_CACHE, arr_key, n_docs)
+    n_docs = cached_value(arr_key, arrays.count)
     _bc = F.broadcast if n_docs <= 250_000 else (lambda df: df)
 
     # rarest-first RANKED postings — (id, __h, rn, szp, sz) — shared by the
@@ -460,7 +451,7 @@ def _prefix_pairs_build(
     w_doc = Window.partitionBy(id_col).orderBy("__df", "__h")
     w_id = Window.partitionBy(id_col)
     rank_key = (
-        ("ranked_postings", postings_key, cap) if postings_key is not None else None
+        (*postings_key, "ranked_postings", cap) if postings_key is not None else None
     )
     ranked = cached_index(
         rank_key,
@@ -1257,12 +1248,8 @@ def _simhash_pair_graph(
     # without materialization each side re-runs the full shingle aggregation
     s = tracked_persist(simhash(docs, id_col, text_col))
     if block_pairs is None:
-        probe_key = plan_key(
-            docs, "simhash_blockprobe", id_col, text_col, max_hamming
-        )
-        if probe_key is not None and probe_key in _NDOC_CACHE:
-            n_docs, single_cands = _NDOC_CACHE[probe_key]
-        else:
+
+        def probe() -> tuple[int, float]:
             sc_chunks = max_hamming + 1
             sc_bits = -(-SIMHASH_BITS // sc_chunks)  # ceil, as below
             sc_mask = (1 << sc_bits) - 1
@@ -1293,11 +1280,12 @@ def _simhash_pair_graph(
                 )
                 .collect()[0]
             )
-            n_docs, single_cands = int(row["n"]), float(row["cand"])
-            if probe_key is not None:
-                bounded_scalar_put(
-                    _NDOC_CACHE, probe_key, (n_docs, single_cands)
-                )
+            return int(row["n"]), float(row["cand"])
+
+        n_docs, single_cands = cached_value(
+            plan_key(docs, "simhash_blockprobe", id_col, text_col, max_hamming),
+            probe,
+        )
         block_pairs = single_cands > BLOCK_CAND_PER_DOC * max(n_docs, 1)
     if block_pairs:
         n_chunks = max_hamming + 2

@@ -22,6 +22,7 @@ Scale design:
 
 from __future__ import annotations
 
+import functools
 import os
 import random
 
@@ -36,7 +37,13 @@ from ..functions import (
     md5_int60,
     quantize_embedding,
 )
-from ..index_cache import cached_index, plan_key, tracked_persist
+from ..index_cache import (
+    cached_index,
+    cached_value,
+    invalidate,
+    plan_key,
+    tracked_persist,
+)
 
 def _block_cosine_fn(threshold: float):
     """Per-block-pair exact cosine kernel for applyInPandas.
@@ -229,22 +236,13 @@ COSINE_MIN_BLOCKS = int(
     os.environ.get("SPARK_GRAFT_COSINE_MIN_BLOCKS", "8")
 )
 
-#: vector-count scalar cache (plan_key-shaped: dead-file-swept, capped) —
-#: the adaptive block count needs |corpus| and must not pay a count job
-#: per query over the cached quantized artifact.
-_VEC_COUNT_CACHE: dict = {}
-
-
 def _vec_count(emb: DataFrame, vec_col: str) -> int:
-    from ..index_cache import bounded_scalar_put
-
-    key = plan_key(emb, "n_vectors", vec_col)
-    if key is not None and key in _VEC_COUNT_CACHE:
-        return _VEC_COUNT_CACHE[key]
-    n = _with_quantized(emb, vec_col).count()
-    if key is not None:
-        bounded_scalar_put(_VEC_COUNT_CACHE, key, n)
-    return n
+    """|corpus| for the adaptive block count — a registry value, so a
+    query does not pay a count job over the cached quantized artifact."""
+    return cached_value(
+        plan_key(emb, "n_vectors", vec_col),
+        lambda: _with_quantized(emb, vec_col).count(),
+    )
 
 
 def cosine_pairs_blocked(
@@ -328,9 +326,7 @@ def _cosine_pair_graph(
     )
 
 
-_BUCKET_BATCH: dict = {}
-
-
+@functools.lru_cache(maxsize=None)
 def _bucket_batch(n_planes: int = N_PLANES):
     """Arrow-batched LSH bucket id: sign bits of ``n_planes`` plane dots.
 
@@ -341,8 +337,6 @@ def _bucket_batch(n_planes: int = N_PLANES):
     product and 64-term sum is an integer < 2^53). Lazy: pandas_udf needs
     an active session. Cached per width.
     """
-    if n_planes in _BUCKET_BATCH:
-        return _BUCKET_BATCH[n_planes]
     from pyspark.sql.functions import pandas_udf
 
     plane_rows = planes(n_planes)
@@ -361,7 +355,6 @@ def _bucket_batch(n_planes: int = N_PLANES):
         weights = 1 << np.arange(len(plane_rows), dtype=np.int64)
         return pd.Series(((dots > 0) * weights).sum(axis=1).astype(np.int64))
 
-    _BUCKET_BATCH[n_planes] = bucket_batch
     return bucket_batch
 
 
@@ -489,16 +482,11 @@ def table_planes(table: int, n_planes: int, dim: int = EMB_DIM) -> list[list[int
     return planes((table + 1) * n_planes, dim)[table * n_planes :]
 
 
-_MULTI_BUCKET_BATCH: dict = {}
-
-
+@functools.lru_cache(maxsize=None)
 def _multi_bucket_batch(n_planes: int, n_tables: int):
     """Arrow-batched kernel: ALL tables' bucket ids in one GEMM against the
     stacked (n_tables·n_planes) × dim plane matrix, returned as one
     array<long> column (one explode downstream, not one kernel per table)."""
-    key = (n_planes, n_tables)
-    if key in _MULTI_BUCKET_BATCH:
-        return _MULTI_BUCKET_BATCH[key]
     from pyspark.sql.functions import pandas_udf
 
     stacked = [row for t in range(n_tables) for row in table_planes(t, n_planes)]
@@ -516,7 +504,6 @@ def _multi_bucket_batch(n_planes: int, n_tables: int):
         buckets = (bits * weights).sum(axis=2).astype(np.int64)  # (n, T)
         return pd.Series(list(buckets))
 
-    _MULTI_BUCKET_BATCH[key] = multi_bucket
     return multi_bucket
 
 
@@ -623,76 +610,54 @@ IVF_N_CELLS = 16
 IVF_NPROBE = 4
 
 
-#: coarse-quantizer cache: (source files, id_col, vec_col, n_cells) →
-#: (seed matrix, seed norms). The IVF centroid table is an *index artifact*
-#: — real vector indexes build it once and reuse it across queries; without
-#: the cache every ivf_cells/ivf_topk call pays a driver-side collect job.
-#: Keyed by the scan's file set, so a changed/rewritten table misses.
-_SEED_CACHE: dict = {}
-
-#: resolved query rows of on-disk IVF indexes: (index root, id_col, id) →
-#: (quantized vector, norm). A serving system resolves a query embedding
-#: once; repeat queries then cost only the pruned scan. Invalidated with
-#: the seed cache on index rebuild (write_ivf_index).
-_QROW_CACHE: dict = {}
-
-#: probe-cell unions of batch queries against on-disk indexes:
-#: (index root, queries plan key, nprobe) → list[int]. A serving system
-#: answers the same query batch repeatedly (bench warm passes, retries,
-#: pagination); the union is a pure function of (index, query set,
-#: nprobe), so the bounded collect + probe-kernel pass runs once.
-#: Invalidated with the seed cache on index rebuild (write_ivf_index).
-_CELLS_CACHE: dict = {}
-
-#: vectors-table readers per index root — re-creating the reader re-lists
-#: the partition directories driver-side on every query (~0.15 s on local
-#: FS, worse on object stores); the DataFrame handle is immutable and the
-#: file index caches the listing.
-_VECTORS_CACHE: dict = {}
+def _seed_key(emb: DataFrame, id_col: str, vec_col: str, n_cells: int):
+    """Registry key of the IVF coarse quantizer over ``emb``. The plan is
+    part of the key: ``emb`` and ``emb.filter(...)`` read the same files
+    but have different lowest-id seeds."""
+    return plan_key(emb, "ivf_seeds", id_col, vec_col, n_cells)
 
 
 def _index_vectors(spark, root: str) -> DataFrame:
-    df = _VECTORS_CACHE.get(root)
-    if df is None:
-        df = spark.read.parquet(root + "/vectors")
-        _VECTORS_CACHE[root] = df
-    return df
+    """Vectors-table reader of an on-disk IVF index — a registry value:
+    re-creating the reader re-lists the partition directories
+    driver-side on every query (~0.15 s on local FS, worse on object
+    stores); the handle is immutable and its file index caches the
+    listing. Keyed under ``<root>/vectors``, so ``append_to_ivf_index``
+    invalidates it."""
+    vectors = root + "/vectors"
+    return cached_value(
+        ((vectors,), "ivf_reader"), lambda: spark.read.parquet(vectors)
+    )
 
 
-def _seed_cache_key(emb: DataFrame, id_col: str, vec_col: str, n_cells: int):
-    try:
-        files = tuple(sorted(emb.inputFiles()))
-    except Exception:  # noqa: BLE001 — non-file-backed (test) DataFrames
-        return None
-    return (files, id_col, vec_col, n_cells) if files else None
-
-
-def _collect_seeds(base: DataFrame, id_col: str, n_cells: int, cache_key=None):
+def _collect_seeds(base: DataFrame, id_col: str, n_cells: int, key=None):
     """The IVF coarse quantizer: the ``n_cells`` lowest-id vectors.
 
     Deterministic seed selection (no k-means RNG) keeps the index
     reproducible and lets the DuckDB oracle rebuild it with ``ORDER BY id
     LIMIT n``. Collecting the seeds to the driver is the IVF pattern, not a
     scale smell: the centroid table is a bounded dimension (n_cells × dim
-    ints) that every IVF implementation ships to all workers.
+    ints) that every IVF implementation ships to all workers. The table is
+    a registry value under ``key`` (``_seed_key``): real vector indexes
+    build it once and reuse it across queries.
     """
-    if cache_key is not None and cache_key in _SEED_CACHE:
-        return _SEED_CACHE[cache_key]
-    rows = (
-        base.orderBy(id_col)
-        .limit(n_cells)
-        .select("__q", "__norm")
-        .collect()
-    )
-    if not rows:
-        raise ValueError("IVF index over an empty embeddings table")
-    import numpy as np
 
-    sq = np.asarray([r["__q"] for r in rows], dtype=np.float64)
-    snrm = np.asarray([r["__norm"] for r in rows], dtype=np.float64)
-    if cache_key is not None:
-        _SEED_CACHE[cache_key] = (sq, snrm)
-    return sq, snrm
+    def collect():
+        import numpy as np
+
+        rows = (
+            base.orderBy(id_col)
+            .limit(n_cells)
+            .select("__q", "__norm")
+            .collect()
+        )
+        if not rows:
+            raise ValueError("IVF index over an empty embeddings table")
+        sq = np.asarray([r["__q"] for r in rows], dtype=np.float64)
+        snrm = np.asarray([r["__norm"] for r in rows], dtype=np.float64)
+        return sq, snrm
+
+    return cached_value(key, collect)
 
 
 def _cell_kernel(sq, snrm):
@@ -732,7 +697,7 @@ def _ivf_assigned(
     def build() -> DataFrame:
         base = _with_quantized(emb, vec_col)
         sq, snrm = _collect_seeds(
-            base, id_col, n_cells, _seed_cache_key(emb, id_col, vec_col, n_cells)
+            base, id_col, n_cells, _seed_key(emb, id_col, vec_col, n_cells)
         )
         return base.withColumn("cell", _cell_kernel(sq, snrm)(F.col("__q")))
 
@@ -780,7 +745,7 @@ def ivf_topk(
     """
     base = _with_quantized(emb, vec_col)
     sq, snrm = _collect_seeds(
-        base, id_col, n_cells, _seed_cache_key(emb, id_col, vec_col, n_cells)
+        base, id_col, n_cells, _seed_key(emb, id_col, vec_col, n_cells)
     )
     qrow = base.filter(F.col(id_col) == query_vec_id).select("__q", "__norm").first()
     if qrow is None:
@@ -862,7 +827,7 @@ def write_ivf_index(
     """
     base = _with_quantized(emb, vec_col)
     sq, snrm = _collect_seeds(
-        base, id_col, n_cells, _seed_cache_key(emb, id_col, vec_col, n_cells)
+        base, id_col, n_cells, _seed_key(emb, id_col, vec_col, n_cells)
     )
     spark = emb.sparkSession
     seeds = spark.createDataFrame(
@@ -872,13 +837,8 @@ def write_ivf_index(
         ],
         "cell int, __q array<bigint>, __norm bigint",
     )
-    # rebuilt index: drop stale resident seeds, query rows, and readers
-    _SEED_CACHE.pop(path.rstrip("/"), None)
-    _VECTORS_CACHE.pop(path.rstrip("/"), None)
-    for k in [k for k in _QROW_CACHE if k[0] == path.rstrip("/")]:
-        _QROW_CACHE.pop(k, None)
-    for k in [k for k in _CELLS_CACHE if k[0] == path.rstrip("/")]:
-        _CELLS_CACHE.pop(k, None)
+    # rebuilt index: drop its resident seeds, readers, query rows, cells
+    invalidate(path.rstrip("/"))
     seeds.coalesce(1).write.mode("overwrite").parquet(path.rstrip("/") + "/seeds")
     (
         base.withColumn("cell", _cell_kernel(sq, snrm)(F.col("__q")))
@@ -905,20 +865,16 @@ def append_to_ivf_index(
     append writes only the parquet files for the batch's own rows —
     work ∝ batch size, never ∝ index size. Re-run ``write_ivf_index``
     when drift makes the frozen centroids a poor quantizer (the
-    standard rebuild cadence trade). Serving caches for the path are
-    invalidated (a cached reader pins its file listing and would not
-    see the appended files); the seed cache is untouched — seeds are
-    immutable by construction.
+    standard rebuild cadence trade). Serving entries under
+    ``<path>/vectors`` are invalidated (a cached reader pins its file
+    listing and would not see the appended files); the resident seeds
+    under ``<path>/seeds`` are kept — seeds are immutable by construction.
     """
     spark = emb_new.sparkSession
     root = path.rstrip("/")
     sq, snrm = _read_seeds(spark, root)
     base = _with_quantized(emb_new, vec_col)
-    _VECTORS_CACHE.pop(root, None)
-    for k in [k for k in _QROW_CACHE if k[0] == root]:
-        _QROW_CACHE.pop(k, None)
-    for k in [k for k in _CELLS_CACHE if k[0] == root]:
-        _CELLS_CACHE.pop(k, None)
+    invalidate(root + "/vectors")
     (
         base.withColumn("cell", _cell_kernel(sq, snrm)(F.col("__q")))
         .select(F.col(id_col), "__q", "__norm", "cell")
@@ -955,21 +911,7 @@ def ivf_topk_indexed(
     root = index_path.rstrip("/")
     sq, snrm = _read_seeds(spark, root)
     vectors = _index_vectors(spark, root)
-    qkey = (root, id_col, query_vec_id)
-    qrow = _QROW_CACHE.get(qkey)
-    if qrow is None:
-        row = (
-            vectors.filter(F.col(id_col) == query_vec_id)
-            .select("__q", "__norm")
-            .first()
-        )
-        if row is None:
-            raise ValueError(
-                f"query {id_col}={query_vec_id} not found in index"
-            )
-        qrow = (list(row["__q"]), int(row["__norm"]))
-        _QROW_CACHE[qkey] = qrow
-    qq, qn = qrow
+    qq, qn = _index_query_row(spark, root, id_col, query_vec_id)
     probe = _probe_cells(sq, snrm, qq, qn, nprobe)
     # query shipped as a folded literal (resolved once, cached): the only
     # job left per query is the pruned scan + TakeOrdered
@@ -1010,21 +952,7 @@ def ivf_range_indexed(
     root = index_path.rstrip("/")
     sq, snrm = _read_seeds(spark, root)
     vectors = _index_vectors(spark, root)
-    qkey = (root, id_col, query_vec_id)
-    qrow = _QROW_CACHE.get(qkey)
-    if qrow is None:
-        row = (
-            vectors.filter(F.col(id_col) == query_vec_id)
-            .select("__q", "__norm")
-            .first()
-        )
-        if row is None:
-            raise ValueError(
-                f"query {id_col}={query_vec_id} not found in index"
-            )
-        qrow = (list(row["__q"]), int(row["__norm"]))
-        _QROW_CACHE[qkey] = qrow
-    qq, qn = qrow
+    qq, qn = _index_query_row(spark, root, id_col, query_vec_id)
     probe = _probe_cells(sq, snrm, qq, qn, nprobe)
     cands = _attach_query_literals(
         vectors.filter(F.col("cell").isin(probe)).filter(
@@ -1042,18 +970,42 @@ def ivf_range_indexed(
     ).filter(F.col("cosine") >= min_cosine)
 
 
-def _read_seeds(spark, root: str):
-    """Centroid table of a write_ivf_index artifact, cached per path."""
-    import numpy as np
+def _index_query_row(spark, root: str, id_col: str, query_vec_id: int):
+    """(quantized vector, norm) of corpus row ``query_vec_id`` in an
+    on-disk IVF index. A serving system resolves a query embedding once;
+    repeat queries then cost only the pruned scan. A registry value
+    under ``<root>/vectors`` (capped like every value, so serving new
+    query ids forever stays flat)."""
 
-    cached = _SEED_CACHE.get(root)
-    if cached is not None:
-        return cached
-    seed_rows = spark.read.parquet(root + "/seeds").orderBy("cell").collect()
-    sq = np.asarray([r["__q"] for r in seed_rows], dtype=np.float64)
-    snrm = np.asarray([r["__norm"] for r in seed_rows], dtype=np.float64)
-    _SEED_CACHE[root] = (sq, snrm)
-    return sq, snrm
+    def lookup():
+        row = (
+            _index_vectors(spark, root)
+            .filter(F.col(id_col) == query_vec_id)
+            .select("__q", "__norm")
+            .first()
+        )
+        if row is None:
+            raise ValueError(f"query {id_col}={query_vec_id} not found in index")
+        return list(row["__q"]), int(row["__norm"])
+
+    return cached_value(
+        ((root + "/vectors",), "ivf_query_row", id_col, query_vec_id), lookup
+    )
+
+
+def _read_seeds(spark, root: str):
+    """Centroid table of a write_ivf_index artifact — a registry value
+    under ``<root>/seeds``, read once per index."""
+
+    def read():
+        import numpy as np
+
+        rows = spark.read.parquet(root + "/seeds").orderBy("cell").collect()
+        sq = np.asarray([r["__q"] for r in rows], dtype=np.float64)
+        snrm = np.asarray([r["__norm"] for r in rows], dtype=np.float64)
+        return sq, snrm
+
+    return cached_value(((root + "/seeds",), "ivf_seeds"), read)
 
 
 def ivf_topk_indexed_vec(
@@ -1201,7 +1153,7 @@ def knn_join(
     """
     assigned = _ivf_assigned(corpus, id_col, vec_col, n_cells)
     base = _with_quantized(corpus, vec_col)
-    skey = _seed_cache_key(corpus, id_col, vec_col, n_cells)
+    skey = _seed_key(corpus, id_col, vec_col, n_cells)
     sq, snrm = _collect_seeds(base, id_col, n_cells, skey)
     probes = _knn_probes(
         queries,
@@ -1300,19 +1252,15 @@ def knn_join_indexed(
     probes = _knn_probes(
         queries, sq, snrm, nprobe, id_col, vec_col, _seeds_digest(sq, snrm)
     )
-    # the bounded cell-union collect is additionally memoized per
-    # (index, query set, nprobe) — repeat serves skip the collect job.
-    ckey = None
+    # the bounded cell-union collect is additionally a registry value
+    # per (index, query set, nprobe) — repeat serves skip the collect job.
     qpk = plan_key(queries, "knn_cells", vec_col, str(nprobe))
-    if qpk is not None:
-        ckey = (root, qpk)
-    cells = _CELLS_CACHE.get(ckey) if ckey is not None else None
-    if cells is None:
-        cells = [
+    cells = cached_value(
+        None if qpk is None else ((root + "/vectors", *qpk[0]), *qpk[1:]),
+        lambda: [
             int(r["cell"]) for r in probes.select("cell").distinct().collect()
-        ]
-        if ckey is not None:
-            _CELLS_CACHE[ckey] = cells
+        ],
+    )
     vectors = _index_vectors(spark, root).filter(F.col("cell").isin(cells))
     # ranked-graph artifact keyed with the index ROOT (not just the seed
     # digest): the disk-pruned build plan stays distinct from knn_join's
@@ -1412,14 +1360,6 @@ def kmeans_cells(
     )
 
 
-#: trained k-means centroid tables, keyed like _SEED_CACHE plus the
-#: iteration count — the fitted quantizer MODEL (n_cells × dim ints), the
-#: train-once/serve-many artifact every IVF deployment persists. Same
-#: bounded-scalar discipline as textops' count caches (dead-file sweep +
-#: size cap via bounded_scalar_put).
-_TRAINED_CACHE: dict = {}
-
-
 def _trained_centroids(
     base: DataFrame,
     emb: DataFrame,
@@ -1434,19 +1374,24 @@ def _trained_centroids(
     The training loop — n_iters × (Arrow assignment pass + (cell, dim)
     aggregate collect) — is a pure function of the embeddings table and
     the (n_cells, n_iters) knobs, so the fitted model is session-cached
-    exactly like the untrained seed table (_SEED_CACHE): first call per
+    exactly like the untrained seed table (``_collect_seeds``): first call per
     corpus pays the rounds, every rider serves assignments from the
-    cached n_cells×dim integer array. In-memory (test) frames have no
-    file key and never cache.
+    cached n_cells×dim integer array — the fitted quantizer MODEL, the
+    train-once/serve-many artifact every IVF deployment persists, kept
+    as a registry value. In-memory (test) frames have no file key and
+    never cache.
     """
+    seed_key = _seed_key(emb, id_col, vec_col, n_cells)
+    return cached_value(
+        None if seed_key is None else seed_key + ("lloyd", n_iters),
+        lambda: _train_centroids(base, id_col, n_cells, n_iters, seed_key),
+    )
+
+
+def _train_centroids(base, id_col: str, n_cells: int, n_iters: int, seed_key):
+    """The Lloyd rounds of ``_trained_centroids``, from the IVF seeds."""
     import numpy as np
 
-    from ..index_cache import bounded_scalar_put
-
-    seed_key = _seed_cache_key(emb, id_col, vec_col, n_cells)
-    trained_key = None if seed_key is None else seed_key + ("lloyd", n_iters)
-    if trained_key is not None and trained_key in _TRAINED_CACHE:
-        return _TRAINED_CACHE[trained_key]
     sq, snrm = _collect_seeds(base, id_col, n_cells, seed_key)
     sq = sq.copy()
     for _ in range(n_iters):
@@ -1471,8 +1416,6 @@ def _trained_centroids(
             [float(sum(int(v) * int(v) for v in row)) for row in sq],
             dtype=np.float64,
         )
-    if trained_key is not None:
-        bounded_scalar_put(_TRAINED_CACHE, trained_key, (sq, snrm))
     return sq, snrm
 
 
@@ -1558,33 +1501,23 @@ def lsh_recall_audit(
     )
 
 
-#: collected (label, dim) integer sum/count rows — the bounded per-label
-#: centroid MODEL (#labels×dim ints, the class-mean table a nearest-
-#: class-mean deployment trains once and serves) shared by
-#: centroid_confusion / centroid_outliers / label_centroids. plan_key-
-#: shaped: dead-file-swept, size-capped; in-memory frames never cache.
-_LABEL_SUM_CACHE: dict = {}
-
-
 def _label_centroid_rows(emb: DataFrame, vec_col: str, label_col: str):
-    from ..index_cache import bounded_scalar_put
-
-    key = plan_key(emb, "label_centroid_rows", vec_col, label_col)
-    if key is not None and key in _LABEL_SUM_CACHE:
-        return _LABEL_SUM_CACHE[key]
-    rows = (
-        _with_quantized(emb, vec_col)
+    """Collected (label, dim) integer sum/count rows — the bounded
+    per-label centroid MODEL (#labels×dim ints, the class-mean table a
+    nearest-class-mean deployment trains once and serves) shared by
+    centroid_confusion / centroid_outliers / label_centroids as one
+    registry value; in-memory frames never cache."""
+    return cached_value(
+        plan_key(emb, "label_centroid_rows", vec_col, label_col),
+        lambda: _with_quantized(emb, vec_col)
         .select(
             F.col(label_col).alias("__lbl"),
             F.posexplode(F.col("__q")).alias("dim", "v"),
         )
         .groupBy("__lbl", "dim")
         .agg(F.sum("v").alias("sv"), F.count(F.lit(1)).alias("cv"))
-        .collect()
+        .collect(),
     )
-    if key is not None:
-        bounded_scalar_put(_LABEL_SUM_CACHE, key, rows)
-    return rows
 
 
 def centroid_confusion(
@@ -2236,7 +2169,7 @@ def ivf_pq_topk(
     broadcast joins and one short-row aggregate."""
     base = _with_quantized(emb, vec_col)
     sq, snrm = _collect_seeds(
-        base, id_col, n_cells, _seed_cache_key(emb, id_col, vec_col, n_cells)
+        base, id_col, n_cells, _seed_key(emb, id_col, vec_col, n_cells)
     )
     qrow = (
         base.filter(F.col(id_col) == query_id).select("__q", "__norm").first()
@@ -2303,9 +2236,7 @@ def pq_recall_audit(
 #: operator turns that bound into a measured recall number per corpus.
 RP_DIM = 16
 
-_RP_BATCH: dict = {}
-
-
+@functools.lru_cache(maxsize=None)
 def _rp_batch(m: int):
     """Arrow-batched JL projection: quantized vector → ``m`` exact integer
     plane dots, re-quantized to the input grid by TRUNCATING division
@@ -2318,8 +2249,6 @@ def _rp_batch(m: int):
     inside BIGINT without losing cross-engine exactness. The plane matrix
     is the same prefix-stable seed-42 family the LSH operators use —
     ``planes(m)`` — so the oracle regenerates it verbatim."""
-    if m in _RP_BATCH:
-        return _RP_BATCH[m]
     from pyspark.sql.functions import pandas_udf
 
     from ..functions import EMB_SCALE
@@ -2339,7 +2268,6 @@ def _rp_batch(m: int):
         proj = np.sign(dots) * (np.abs(dots) // scale)
         return pd.Series(list(proj))
 
-    _RP_BATCH[m] = rp_batch
     return rp_batch
 
 
@@ -2462,10 +2390,7 @@ def rp_recall_audit(
 #: an 8× compression of the int64 quantized store and 4× of float32).
 SQ_LEVELS = 255
 
-_SQ_GRID_CACHE: dict = {}
-
-
-def _collect_sq_grid(base: DataFrame, cache_key=None):
+def _collect_sq_grid(base: DataFrame, key=None):
     """The SQ8 training pass: per-DIMENSION min/max over the quantized
     corpus — the whole "codebook" of scalar quantization (FAISS SQ8 /
     Milvus SQ8 keep exactly this: 2 numbers per dimension).
@@ -2474,24 +2399,24 @@ def _collect_sq_grid(base: DataFrame, cache_key=None):
     aggregate whose post-shuffle cardinality is the embedding WIDTH, then
     a dim-row bounded collect (the `_collect_seeds` class: a codebook is
     shipped to every worker by construction, it is not corpus-sized).
-    Session-cached per file set so the training scan runs once.
+    A registry value under ``key`` so the training scan runs once.
     """
-    if cache_key is not None and cache_key in _SQ_GRID_CACHE:
-        return _SQ_GRID_CACHE[cache_key]
-    rows = (
-        base.select(F.posexplode("__q").alias("__i", "__v"))
-        .groupBy("__i")
-        .agg(F.min("__v").alias("mn"), F.max("__v").alias("mx"))
-        .collect()
-    )
-    if not rows:
-        raise ValueError("SQ8 grid over an empty embeddings table")
-    by_i = {r["__i"]: (r["mn"], r["mx"]) for r in rows}
-    mins = [by_i[i][0] for i in sorted(by_i)]
-    maxs = [by_i[i][1] for i in sorted(by_i)]
-    if cache_key is not None:
-        _SQ_GRID_CACHE[cache_key] = (mins, maxs)
-    return mins, maxs
+
+    def train():
+        rows = (
+            base.select(F.posexplode("__q").alias("__i", "__v"))
+            .groupBy("__i")
+            .agg(F.min("__v").alias("mn"), F.max("__v").alias("mx"))
+            .collect()
+        )
+        if not rows:
+            raise ValueError("SQ8 grid over an empty embeddings table")
+        by_i = {r["__i"]: (r["mn"], r["mx"]) for r in rows}
+        mins = [by_i[i][0] for i in sorted(by_i)]
+        maxs = [by_i[i][1] for i in sorted(by_i)]
+        return mins, maxs
+
+    return cached_value(key, train)
 
 
 def _with_sq(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -2514,8 +2439,7 @@ def _with_sq(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
         # grid cache key MUST include the logical plan (plan_key), not
         # just the input files: a sample_ppm-filtered audit frame and the
         # full corpus share files but need DIFFERENT grids — a file-only
-        # key (the _seed_cache_key shape) would serve a sample-trained
-        # grid to full-corpus encodes
+        # key would serve a sample-trained grid to full-corpus encodes
         mins, maxs = _collect_sq_grid(
             base, plan_key(emb, "sq_grid", id_col, vec_col)
         )

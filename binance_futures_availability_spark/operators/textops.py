@@ -270,24 +270,14 @@ def fingerprints(
     )
 
 
-#: corpus row counts keyed by (source files, plan md5) — the n_docs literal
-#: is a property of the exact frame, not just its files: ``docs`` and
-#: ``docs.filter(...)`` read the same files but have different counts, so
-#: the key MUST include the canonicalized plan (``index_cache.plan_key``),
-#: exactly like every other derived-artifact cache in this package.
-_NDOCS_CACHE: dict = {}
-
-
 def _corpus_count(docs: DataFrame) -> int:
-    from ..index_cache import bounded_scalar_put, plan_key
+    """Corpus row count — a registry value. The n_docs literal is a
+    property of the exact frame, not just its files: ``docs`` and
+    ``docs.filter(...)`` read the same files but have different counts,
+    so the key includes the canonicalized plan (``plan_key``)."""
+    from ..index_cache import cached_value, plan_key
 
-    key = plan_key(docs, "n_docs")
-    if key is not None and key in _NDOCS_CACHE:
-        return _NDOCS_CACHE[key]
-    n = docs.count()
-    if key is not None:
-        bounded_scalar_put(_NDOCS_CACHE, key, n)
-    return n
+    return cached_value(plan_key(docs, "n_docs"), docs.count)
 
 
 def tf_index(
@@ -1270,9 +1260,9 @@ def scrub_boilerplate(
     (plan_key None) fall back to the per-call persist so the two
     consumers of the stream still share one materialization.
     """
-    from ..index_cache import is_file_backed, tracked_persist
+    from ..index_cache import plan_key, tracked_persist
 
-    if not is_file_backed(docs):
+    if plan_key(docs) is None:
         ch = tracked_persist(
             chunk_documents(docs, chunk_tokens, 0, id_col, text_col)
         )
@@ -1347,23 +1337,14 @@ def doc_keyterms(
     )
 
 
-#: |vocabulary| scalars keyed like every other derived artifact — the Laplace
-#: denominator is a per-call ``count()`` action otherwise (the r7 perf hole).
-_VOCAB_CACHE: dict = {}
-
-
 def _vocab_count(
     docs: DataFrame, uni: DataFrame, id_col: str, text_col: str
 ) -> int:
-    from ..index_cache import bounded_scalar_put, plan_key
+    """|vocabulary| — a registry value: the Laplace denominator is a
+    per-call ``count()`` action otherwise (the r7 perf hole)."""
+    from ..index_cache import cached_value, plan_key
 
-    key = plan_key(docs, "vocab_n", id_col, text_col)
-    if key is not None and key in _VOCAB_CACHE:
-        return _VOCAB_CACHE[key]
-    n = uni.count()
-    if key is not None:
-        bounded_scalar_put(_VOCAB_CACHE, key, n)
-    return n
+    return cached_value(plan_key(docs, "vocab_n", id_col, text_col), uni.count)
 
 
 def bigram_index(
@@ -1673,10 +1654,6 @@ def _cross_lm_scores_build(
     )
 
 
-#: scored-doc counts for lm_quality_buckets, keyed like every derived scalar
-_LM_COUNT_CACHE: dict = {}
-
-
 def lm_quality_buckets(
     docs: DataFrame,
     n_tiles: int = 10,
@@ -1703,7 +1680,7 @@ def lm_quality_buckets(
         # and negative values would assign nonsense buckets silently
         raise ValueError(f"n_tiles must be >= 1, got {n_tiles}")
     from ..functions import global_row_number
-    from ..index_cache import bounded_scalar_put, cached_index, plan_key
+    from ..index_cache import cached_index, cached_value, plan_key
 
     def _build_ranked() -> DataFrame:
         scored = bigram_lm_scores(docs, id_col, text_col)
@@ -1714,13 +1691,9 @@ def lm_quality_buckets(
     ranked = cached_index(
         plan_key(docs, "lm_quality_rank", id_col, text_col), _build_ranked
     )
-    key = plan_key(docs, "lm_scored_n", id_col, text_col)
-    if key is not None and key in _LM_COUNT_CACHE:
-        total = _LM_COUNT_CACHE[key]
-    else:
-        total = ranked.count()
-        if key is not None:
-            bounded_scalar_put(_LM_COUNT_CACHE, key, total)
+    total = cached_value(
+        plan_key(docs, "lm_scored_n", id_col, text_col), ranked.count
+    )
     q, rem = divmod(total, n_tiles)
     big = q + 1
     r0 = F.col("__rank") - 1  # 0-based
@@ -2112,10 +2085,6 @@ def classifier_eval(
     )
 
 
-#: per-key corpus token totals captured by the budget-run build
-_TB_TOTAL_CACHE: dict = {}
-
-
 def token_budget_selection(
     docs: DataFrame,
     budget_tokens: int | None = None,
@@ -2142,11 +2111,13 @@ def token_budget_selection(
     identical ties), and the budget filter is a narrow predicate.
     """
     from ..functions import global_running_sum
-    from ..index_cache import bounded_scalar_put, cached_index, plan_key
+    from ..index_cache import cached_index, cached_value, plan_key
 
     key = plan_key(docs, "token_budget_run", id_col, text_col)
+    total = None
 
     def _build() -> DataFrame:
+        nonlocal total
         # token count + quality read from the session-cached per-doc
         # profile (r13): identical expressions, no dedicated text scan
         base = _doc_profile(docs, id_col, text_col).select(
@@ -2161,10 +2132,10 @@ def token_budget_selection(
             out_col="cum_tokens",
             return_total=True,
         )
-        # the scalar rides the same bounded-cache discipline as every
-        # other derived scalar (_NDOCS/_VOCAB/_LM_COUNT caches): swept on
-        # table rewrite, capped in size
-        bounded_scalar_put(_TB_TOTAL_CACHE, key, int(total))
+        # the corpus total is a by-product of the build: keep it as a
+        # registry value under the run's key, so the default budget never
+        # pays a separate aggregate job
+        cached_value(key, lambda: int(total))
         return run
 
     # the quality-ranked running-total stream is a session-cached index
@@ -2173,15 +2144,17 @@ def token_budget_selection(
     # instead of re-running the range sort + offset passes
     run = cached_index(key, _build)
     if budget_tokens is None:
-        if key not in _TB_TOTAL_CACHE:
-            # scalar evicted independently of the index handle (the two
-            # caches sweep/cap separately): the total is just the MAX of
-            # the inclusive cumsum — one agg over the in-memory stream
-            tot = run.agg(
-                F.coalesce(F.max("cum_tokens"), F.lit(0))
-            ).collect()[0][0]
-            bounded_scalar_put(_TB_TOTAL_CACHE, key, int(tot))
-        budget_tokens = _TB_TOTAL_CACHE[key] // 2
+        if total is None:
+            # frame hit: the total is a registry value, or — if the value
+            # store capped it away — the MAX of the inclusive cumsum, one
+            # agg over the in-memory stream
+            total = cached_value(
+                key,
+                lambda: run.agg(
+                    F.coalesce(F.max("cum_tokens"), F.lit(0))
+                ).collect()[0][0],
+            )
+        budget_tokens = int(total) // 2
     return run.filter(F.col("cum_tokens") <= int(budget_tokens)).select(
         id_col, "n_tokens", "quality_score", "cum_tokens"
     )

@@ -30,12 +30,6 @@ from pyspark.sql import types as T
 #: truncate lineage every this many merge rounds
 _CHECKPOINT_EVERY = 4
 
-#: trained merge tables per (source files, plan, n_merges) — the merge
-#: list is a bounded driver-side artifact (n_merges rows), so re-serving
-#: a trained tokenizer costs nothing (same discipline as the LM count
-#: caches; bounded_scalar_put sweeps dead files and caps size)
-_MERGES_CACHE: dict = {}
-
 MERGE_SCHEMA = T.StructType(
     [
         T.StructField("rank", T.IntegerType(), False),
@@ -131,14 +125,27 @@ def bpe_merges(
     an exact pytest against an independent pure-Python BPE reference
     (tests/test_extensions.py). The per-round argmax collect is ONE row;
     the corpus is scanned exactly once (``word_freqs``)."""
+    spark = spark or docs.sparkSession
+    return spark.createDataFrame(
+        _trained_merges(docs, n_merges, text_col), MERGE_SCHEMA
+    )
+
+
+def _trained_merges(docs: DataFrame, n_merges: int, text_col: str) -> list[tuple]:
+    """The merge rows ``bpe_merges`` trains. The list is a bounded
+    driver-side artifact (n_merges rows): a registry value, so
+    re-serving a trained tokenizer costs nothing."""
+    from ..index_cache import cached_value, plan_key
+
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    spark = spark or docs.sparkSession
-    from ..index_cache import bounded_scalar_put, plan_key
+    return cached_value(
+        plan_key(docs, "bpe_merges", n_merges, text_col),
+        lambda: _train_merges(docs, n_merges, text_col),
+    )
 
-    key = plan_key(docs, "bpe_merges", n_merges, text_col)
-    if key is not None and key in _MERGES_CACHE:
-        return spark.createDataFrame(_MERGES_CACHE[key], MERGE_SCHEMA)
+
+def _train_merges(docs: DataFrame, n_merges: int, text_col: str) -> list[tuple]:
     wf = word_freqs(docs, text_col)
     syms = wf.select(F.split("word", "").alias("syms"), "freq").persist()
     merges: list[tuple] = []
@@ -164,9 +171,7 @@ def bpe_merges(
             syms = nxt
     finally:
         syms.unpersist()
-    if key is not None:
-        bounded_scalar_put(_MERGES_CACHE, key, merges)
-    return spark.createDataFrame(merges, MERGE_SCHEMA)
+    return merges
 
 
 def bpe_merge_rules(
@@ -180,18 +185,7 @@ def bpe_merge_rules(
     n_merges rows, so round-tripping it through a createDataFrame →
     orderBy → collect job costs ~0.5 s of pure scheduling per query for
     data that never left the driver."""
-    from ..index_cache import plan_key
-
-    key = plan_key(docs, "bpe_merges", n_merges, text_col)
-    if key is None or key not in _MERGES_CACHE:
-        bpe_merges(docs, n_merges, text_col)  # trains and fills the cache
-    if key is not None:
-        return [(m[1], m[2]) for m in _MERGES_CACHE[key]]
-    # non-file-backed input: no cache — collect the one-off training result
-    return [
-        (r["left"], r["right"])
-        for r in bpe_merges(docs, n_merges, text_col).orderBy("rank").collect()
-    ]
+    return [(m[1], m[2]) for m in _trained_merges(docs, n_merges, text_col)]
 
 
 def bpe_encode(

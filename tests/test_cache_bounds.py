@@ -33,23 +33,30 @@ def test_cached_index_sweeps_rewritten_tables(spark, tmp_path):
         assert len(live) == 1
 
 
-def test_bounded_scalar_put_caps_size():
+def test_value_store_caps_size():
     from binance_futures_availability_spark import index_cache
 
-    cache: dict = {}
+    index_cache.clear_indexes()
     for i in range(index_cache.SCALAR_CACHE_CAP + 100):
         # keys shaped like plan_key output, files kept non-local so the
         # dead-file sweep never fires — this exercises the hard cap alone
         key = ((f"hdfs:/warehouse/t{i}/part-0.parquet",), f"md5{i}", "n")
-        index_cache.bounded_scalar_put(cache, key, i)
-    assert len(cache) == index_cache.SCALAR_CACHE_CAP
+        assert index_cache.cached_value(key, lambda i=i: i) == i
+    assert len(index_cache._VALUES) == index_cache.SCALAR_CACHE_CAP
     # oldest-first eviction: the newest entries survive
-    assert ((f"hdfs:/warehouse/t0/part-0.parquet",), "md50", "n") not in cache
+    oldest = ((f"hdfs:/warehouse/t0/part-0.parquet",), "md50", "n")
+    assert oldest not in index_cache._VALUES
+    newest = index_cache.SCALAR_CACHE_CAP + 99
+    assert index_cache._VALUES[
+        ((f"hdfs:/warehouse/t{newest}/part-0.parquet",), f"md5{newest}", "n")
+    ] == newest
+    index_cache.clear_indexes()
 
 
 def test_scalar_caches_flat_across_rewrites(spark, tmp_path):
     """100 rewrite cycles of the same table leave the textops scalar
     caches flat: dead-file sweep reclaims each superseded key."""
+    from binance_futures_availability_spark import index_cache
     from binance_futures_availability_spark.operators import textops
 
     path = str(tmp_path / "docs.parquet")
@@ -61,13 +68,16 @@ def test_scalar_caches_flat_across_rewrites(spark, tmp_path):
         docs = spark.read.parquet(path)
         assert textops._corpus_count(docs) == 1
         live = [
-            k for k in textops._NDOCS_CACHE if any(path in f for f in k[0])
+            k
+            for k in index_cache._VALUES
+            if "n_docs" in k and any(path in f for f in k[0])
         ]
         sizes.add(len(live))
     assert sizes == {1}
 
 
 def test_read_fact_evicts_on_rewrite(spark, tmp_path, populated_da):
+    from binance_futures_availability_spark import index_cache
     from binance_futures_availability_spark.sources import duckdb_io
 
     path = str(tmp_path / "fact.parquet")
@@ -78,7 +88,11 @@ def test_read_fact_evicts_on_rewrite(spark, tmp_path, populated_da):
         import os
 
         real = os.path.realpath(path)
-        live = [k for k in duckdb_io._IMPORT_HANDLES if k[1] == real]
+        live = [
+            k
+            for k in index_cache._HANDLES
+            if "fact_import" in k and k[0][0].startswith(f"hot:{real}#")
+        ]
         assert len(live) == 1
 
 
@@ -474,13 +488,15 @@ def test_label_centroid_model_shared_and_exact(spark, tmp_path):
     spark.createDataFrame(rows, schema).write.parquet(path)
     emb = spark.read.parquet(path)
     index_cache.clear_indexes()
-    similarity._LABEL_SUM_CACHE.clear()
+
+    def label_models():
+        return [k for k in index_cache._VALUES if "label_centroid_rows" in k]
 
     cents = {tuple(r) for r in similarity.label_centroids(emb).collect()}
-    assert len(similarity._LABEL_SUM_CACHE) == 1
+    assert len(label_models()) == 1
     conf = {tuple(r) for r in similarity.centroid_confusion(emb).collect()}
     outl = [tuple(r) for r in similarity.centroid_outliers(emb, 5).collect()]
-    assert len(similarity._LABEL_SUM_CACHE) == 1  # shared, not re-keyed
+    assert len(label_models()) == 1  # shared, not re-keyed
     mem = spark.createDataFrame(rows, schema)
     assert cents == {
         tuple(r) for r in similarity.label_centroids(mem).collect()
@@ -492,7 +508,6 @@ def test_label_centroid_model_shared_and_exact(spark, tmp_path):
         tuple(r) for r in similarity.centroid_outliers(mem, 5).collect()
     ]
     assert cents and conf and outl
-    similarity._LABEL_SUM_CACHE.clear()
     index_cache.clear_indexes()
 
 
@@ -522,7 +537,7 @@ def test_prefix_pair_artifact_shared_and_exact(spark, tmp_path):
         return [
             k
             for k in index_cache._HANDLES
-            if isinstance(k, tuple) and k and k[0] == "prefix_pairs"
+            if isinstance(k, tuple) and "prefix_pairs" in k
         ]
 
     jac = {tuple(r) for r in dedup.ngram_jaccard_pairs(docs, 0.5).collect()}
@@ -802,7 +817,9 @@ def test_fact_handle_enables_index_artifacts(spark):
     (_spark_graft_source), so plan_key(da, ...) produces a real key and
     fact-derived index artifacts (the symbol-month coverage cube) cache
     instead of silently bypassing."""
-    from binance_futures_availability_spark import index_cache
+    import os
+
+    from binance_futures_availability_spark import catalog, index_cache
     from binance_futures_availability_spark.operators import analytics
     from binance_futures_availability_spark.operators.availability import (
         availability_fact,
@@ -810,7 +827,9 @@ def test_fact_handle_enables_index_artifacts(spark):
 
     da = availability_fact(spark, "/root/testdata/sf0.001")
     src = getattr(da, "_spark_graft_source", None)
-    assert src is not None and src[0].endswith(src[1]) is not None
+    # (materialized fact directory, its fingerprint as the sweep computes it)
+    assert src is not None and os.path.isdir(src[0])
+    assert src[1] == catalog._dir_fingerprint(src[0])
     key = index_cache.plan_key(da, "symbol_month_coverage")
     assert key is not None
     index_cache.clear_indexes()

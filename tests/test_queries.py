@@ -592,10 +592,17 @@ def test_load_table_hot_evicts_superseded_fingerprints(spark, tmp_path):
     rewrite cycles must not grow the cache monotonically."""
     import time
 
-    from binance_futures_availability_spark import catalog
+    from binance_futures_availability_spark import catalog, index_cache
 
     sf_dir = str(tmp_path)
     path = catalog.table_path(sf_dir, "region")
+
+    def hot_entries():
+        return [
+            k
+            for k in index_cache._HANDLES
+            if "hot" in k and k[0][0].startswith(f"hot:{path}#")
+        ]
 
     def write(v):
         spark.createDataFrame(
@@ -605,14 +612,14 @@ def test_load_table_hot_evicts_superseded_fingerprints(spark, tmp_path):
         # the fingerprint by touching the dir contents deterministically
         time.sleep(0.01)
 
-    before = {k for k in catalog._HOT_CACHE if k[1] == path}
+    before = hot_entries()
     assert not before
     sizes = set()
     for v in range(8):
         write(v)
         df = catalog.load_table_hot(spark, sf_dir, "region", slices=2)
         assert df.count() == 1
-        live = [k for k in catalog._HOT_CACHE if k[1] == path]
+        live = hot_entries()
         sizes.add(len(live))
     assert sizes == {1}  # never more than one live entry per path
     # and the survivor is the latest fingerprint's DataFrame
