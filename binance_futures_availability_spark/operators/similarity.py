@@ -805,6 +805,35 @@ def _topk_from_candidates(cands: DataFrame, k: int, id_col: str) -> DataFrame:
     )
 
 
+def _seed_table(spark, sq, snrm) -> DataFrame:
+    """The ``<index>/seeds`` table of the coarse quantizer ``(sq, snrm)``:
+    (cell, __q, __norm), one row per cell, in one partition."""
+    return spark.createDataFrame(
+        [
+            (i, [int(v) for v in sq[i]], int(snrm[i]))
+            for i in range(len(sq))
+        ],
+        "cell int, __q array<bigint>, __norm bigint",
+    ).coalesce(1)
+
+
+def _ivf_seed_table(
+    emb: DataFrame,
+    n_cells: int = IVF_N_CELLS,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The ``<index>/seeds`` table ``write_ivf_index`` writes over
+    ``emb`` (the streaming IVF sink freezes it from its first batch)."""
+    sq, snrm = _collect_seeds(
+        _with_quantized(emb, vec_col),
+        id_col,
+        n_cells,
+        _seed_key(emb, id_col, vec_col, n_cells),
+    )
+    return _seed_table(emb.sparkSession, sq, snrm)
+
+
 def write_ivf_index(
     emb: DataFrame,
     path: str,
@@ -829,17 +858,11 @@ def write_ivf_index(
     sq, snrm = _collect_seeds(
         base, id_col, n_cells, _seed_key(emb, id_col, vec_col, n_cells)
     )
-    spark = emb.sparkSession
-    seeds = spark.createDataFrame(
-        [
-            (i, [int(v) for v in sq[i]], int(snrm[i]))
-            for i in range(len(sq))
-        ],
-        "cell int, __q array<bigint>, __norm bigint",
-    )
     # rebuilt index: drop its resident seeds, readers, query rows, cells
     invalidate(path.rstrip("/"))
-    seeds.coalesce(1).write.mode("overwrite").parquet(path.rstrip("/") + "/seeds")
+    _seed_table(emb.sparkSession, sq, snrm).write.mode("overwrite").parquet(
+        path.rstrip("/") + "/seeds"
+    )
     (
         base.withColumn("cell", _cell_kernel(sq, snrm)(F.col("__q")))
         .select(F.col(id_col), "__q", "__norm", "cell")

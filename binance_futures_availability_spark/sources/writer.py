@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..schema import DAILY_AVAILABILITY
+
 
 def dedup_latest(
     df: DataFrame, key: list[str], version_col: str
@@ -143,7 +145,10 @@ def upsert_partitioned(
       version per key). Its rows are NULL-filled to the table's schema,
       read from ONE existing partition's footer, so a narrower incoming
       frame (8 probe columns into the 17-column fact table) still commits
-      full-width files. One partitioned write.
+      full-width files. A table with no partition yet — a missing root
+      included, so this is also the table's first write — takes the fact
+      table's schema, ``DAILY_AVAILABILITY``, and is written whole. One
+      partitioned write.
     - Some exist: only those directories are read (``basePath`` keeps the
       partition column) and merged with ``incoming``. Spark cannot
       overwrite a path that is also an input of the running plan, so the
@@ -163,12 +168,16 @@ def upsert_partitioned(
     ]
     if not present:
         # no overlap: the merge's lineage never references the target
-        empty = incoming.limit(0)
         schema = _partition_schema(spark, root, partition_col)
-        if schema is not None:
-            empty = _widen(empty, schema)
+        mode = "dynamic"
+        if schema is None:
+            # a table without partitions holds no rows: it takes the fact
+            # table's schema and is written whole, which also commits the
+            # root's _SUCCESS marker (table_exists)
+            schema, mode = DAILY_AVAILABILITY, "static"
+        empty = _widen(incoming.limit(0), schema)
         merged = upsert(empty, incoming, key, version_col)
-        _overwrite_partitions(merged, root, partition_col)
+        _overwrite_partitions(merged, root, partition_col, mode)
         return
     existing = spark.read.option("basePath", root).parquet(*present)
     merged = upsert(existing, incoming, key, version_col)
@@ -214,8 +223,10 @@ def _partition_dirs(
 def _partition_schema(spark, root: str, partition_col: str):
     """The table's schema (data columns + the partition column) from the
     footer of ONE of its partitions — never a listing of every partition.
-    None when the table holds no partition yet."""
+    None when the table holds no partition yet or ``root`` is missing."""
     fs, hroot = _hadoop_path(spark, root)
+    if not fs.exists(hroot):
+        return None
     it = fs.listStatusIterator(hroot)
     while it.hasNext():
         status = it.next()

@@ -17,6 +17,34 @@ rewrites only the date partitions present in each micro-batch
 (writer.upsert_partitioned), so per-batch cost tracks batch size, not table
 size. foreachBatch + idempotent partition overwrite gives effectively-once
 output on top of the checkpoint's exactly-once source tracking.
+
+Exactly-once store sinks (IVF append, PQ, SQ, classifier, anomaly, span
+census) share one protocol, ``_idempotent_batch_sink``; all of their store
+I/O goes through the Hadoop FileSystem, so a store on any scheme (local,
+``file://``, ``hdfs://``, ``s3a://``) behaves the same:
+
+- Per micro-batch: skip it if its marker ``<store>/_committed_batches/
+  batch-<id>`` exists (a checkpoint replay of a committed batch), skip it if
+  empty, run the sink's transform on the locally checkpointed batch, and
+  write the marker LAST, after the transform's output is committed.
+- Per-batch output lands in ``<store>/<sub>/batch-<id>``, written with
+  overwrite: a replay of the same id (crash after the output commit, before
+  the marker) rewrites its directory and never appends a second copy.
+- ``read_committed`` lists markers and batch dirs and reads only the
+  marker-committed ones, so an orphan dir stays invisible until its replay
+  commits it.
+- Frozen artifacts (PQ codebook, SQ grid, classifier weights, anomaly stats,
+  IVF seeds) are trained on the current batch only when the Hadoop FS
+  reports the artifact path missing. An artifact that exists is never
+  retrained: if it cannot be read, the batch fails and the stream retries
+  it, instead of splitting the output across two models.
+- The IVF sink appends into the index's ``vectors`` table instead of a
+  per-batch dir, so a crash between that append and the marker write (a
+  window of milliseconds) re-appends the batch on replay; a transactional
+  table format (Delta/Iceberg) would close it.
+- Markers are keyed by ``batch_id``. A fresh checkpoint restarts ids at 0,
+  so reusing a store with a new checkpoint skips every id that already has
+  a marker: start a new checkpoint on a new store, or clear its markers.
 """
 
 from __future__ import annotations
@@ -197,24 +225,21 @@ def start_upsert_sink(
     (touched partitions only); when ``counts_path`` is given, the summary
     table is refreshed for exactly the touched dates — the streaming form
     of the reference's refresh-after-insert. Restart-safe: the checkpoint
-    replays unacknowledged batches and the upsert is idempotent.
+    replays unacknowledged batches and the upsert is idempotent. The first
+    batch creates the table through the same upsert, NULL-filled to the
+    fact table's full width.
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if not batch_df.take(1):
             return
-        if writer.table_exists(spark, table_path):
-            writer.upsert_partitioned(
-                table_path,
-                batch_df,
-                DAILY_AVAILABILITY_KEY,
-                DAILY_AVAILABILITY_VERSION,
-            )
-        else:
-            batch_df.write.mode("overwrite").partitionBy("date").parquet(
-                table_path
-            )
+        writer.upsert_partitioned(
+            table_path,
+            batch_df,
+            DAILY_AVAILABILITY_KEY,
+            DAILY_AVAILABILITY_VERSION,
+        )
         if counts_path is not None:
             table = spark.read.parquet(table_path)
             touched = [
@@ -233,6 +258,13 @@ def start_upsert_sink(
                 "overwrite"
             ).parquet(counts_path)
 
+    return _batch_writer(stream, checkpoint_dir, process_batch)
+
+
+def _batch_writer(stream: DataFrame, checkpoint_dir: str, process_batch):
+    """The trailer every sink shares: ``process_batch`` per micro-batch,
+    progress checkpointed in ``checkpoint_dir``, backlog drained, then
+    stop. Returns the unstarted writer (``.start()`` runs it)."""
     return (
         stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
@@ -572,61 +604,115 @@ def embedding_stream_source(spark: SparkSession, incoming_dir: str) -> DataFrame
     )
 
 
+_MARKER_DIR = "_committed_batches"
+
+
+def _idempotent_batch_sink(
+    stream: DataFrame, store: str, checkpoint_dir: str, write_batch
+):
+    """The exactly-once protocol of the module docstring around
+    ``write_batch(batch, batch_id)``: skip a batch whose marker exists,
+    skip an empty batch, run ``write_batch`` on the locally checkpointed
+    batch, and write the marker only after it returns."""
+    markers = f"{store.rstrip('/')}/{_MARKER_DIR}"
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        marker = f"{markers}/batch-{batch_id}"
+        if writer._exists(spark, marker):
+            return  # checkpoint replay of an already-committed batch
+        if not batch_df.take(1):
+            return
+        write_batch(batch_df.localCheckpoint(eager=True), batch_id)
+        _touch(spark, marker)
+
+    return _batch_writer(stream, checkpoint_dir, process_batch)
+
+
+def _touch(spark: SparkSession, path: str) -> None:
+    """Create the empty file ``path`` (parents included). On a checksummed
+    FS (the local one) the raw FS beneath it writes the file: an empty file
+    has nothing to checksum, and the marker dir then holds markers only,
+    no ``.crc`` sidecars."""
+    fs, hpath = writer._hadoop_path(spark, path)
+    checksummed = spark.sparkContext._jvm.org.apache.hadoop.fs.ChecksumFileSystem
+    if checksummed._java_lang_class.isInstance(fs):
+        fs = fs.getRawFileSystem()
+    fs.create(hpath, True).close()
+
+
+def _overwrite_batch_dir(
+    df: DataFrame, store: str, sub: str, batch_id: int
+) -> None:
+    """Write ``df`` as ``<store>/<sub>/batch-<id>``, replacing whatever an
+    earlier attempt at the same id left there."""
+    df.write.mode("overwrite").parquet(
+        f"{store.rstrip('/')}/{sub}/batch-{batch_id}"
+    )
+
+
+def _frozen_artifact(
+    spark: SparkSession, store: str, name: str, train
+) -> DataFrame:
+    """The frozen artifact ``<store>/<name>``. ``train()`` builds it (from
+    the current batch) only when the Hadoop FS reports it missing; an
+    artifact that exists is read, never retrained, so an unreadable one
+    fails the batch and the stream retries it."""
+    path = f"{store.rstrip('/')}/{name}"
+    if not writer._exists(spark, path):
+        train().write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def _names(spark: SparkSession, path: str) -> set:
+    """Names of the entries directly under ``path``; empty when ``path``
+    does not exist."""
+    fs, hpath = writer._hadoop_path(spark, path)
+    if not fs.exists(hpath):
+        return set()
+    return {st.getPath().getName() for st in fs.listStatus(hpath)}
+
+
+def read_committed(spark: SparkSession, store: str, sub: str) -> DataFrame:
+    """Union of the marker-committed batch dirs ``<store>/<sub>/batch-<id>``
+    — the read side of every per-batch-dir sink (``codes`` of the PQ/SQ
+    sinks, ``scores`` of the classifier/anomaly sinks, ``parts`` of the
+    span census). Dirs without a marker are excluded. Raises
+    ``FileNotFoundError`` when no batch is committed."""
+    root = store.rstrip("/")
+    committed = _names(spark, f"{root}/{_MARKER_DIR}") & _names(
+        spark, f"{root}/{sub}"
+    )
+    if not committed:
+        raise FileNotFoundError(f"no committed batches under {root}/{sub}")
+    return spark.read.parquet(*(f"{root}/{sub}/{n}" for n in sorted(committed)))
+
+
 def start_ivf_append_sink(
     stream: DataFrame,
     index_path: str,
     checkpoint_dir: str,
     n_cells: int | None = None,
 ):
-    """writeStream → foreachBatch(incremental IVF append): the vector-
-    ingest pipeline. The FIRST batch builds the index (freezing the
-    coarse quantizer); every later batch assigns against the stored
-    centroids and appends only its own cell-partition files
-    (``append_to_ivf_index`` — work ∝ batch). Restart-safe: the
-    checkpoint replays unacknowledged batches, and a per-batch commit
-    marker under ``<index>/_committed_batches/`` makes the replay a
-    no-op — a crash between the parquet append and the checkpoint
-    commit re-delivers the batch, sees its marker, and skips the
-    double-append. The only remaining window is a crash between the
-    append and the marker write (milliseconds vs the append itself),
-    the gap a transactional table format (Delta/Iceberg) would close
-    on a real deployment.
-    """
-    import os
-
+    """Incremental IVF append: the vector-ingest pipeline. The first batch
+    trains and freezes the coarse quantizer (``<index>/seeds``, the
+    ``write_ivf_index`` seeds over that batch); every batch is assigned
+    against the stored seeds and appended to ``<index>/vectors``
+    (``append_to_ivf_index`` — work ∝ batch)."""
     from ..operators import similarity
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker_dir = os.path.join(
-            index_path.rstrip("/"), "_committed_batches"
-        )
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # checkpoint replay of an already-applied append
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        batch = batch_df.localCheckpoint(eager=True)
-        try:
-            spark.read.parquet(index_path.rstrip("/") + "/seeds").first()
-            exists = True
-        except Exception:  # noqa: BLE001 — first batch: no index yet
-            exists = False
-        if exists:
-            similarity.append_to_ivf_index(batch, index_path)
-        elif n_cells is not None:
-            similarity.write_ivf_index(batch, index_path, n_cells=n_cells)
-        else:
-            similarity.write_ivf_index(batch, index_path)
-        os.makedirs(marker_dir, exist_ok=True)
-        with open(marker, "w") as fh:
-            fh.write("committed")
+    cells = similarity.IVF_N_CELLS if n_cells is None else n_cells
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
+        _frozen_artifact(
+            batch.sparkSession,
+            index_path,
+            "seeds",
+            lambda: similarity._ivf_seed_table(batch, cells),
+        )
+        similarity.append_to_ivf_index(batch, index_path)
+
+    return _idempotent_batch_sink(stream, index_path, checkpoint_dir, write_batch)
 
 
 def start_pq_append_sink(
@@ -637,74 +723,36 @@ def start_pq_append_sink(
     k: int | None = None,
     iters: int = 0,
 ):
-    """writeStream → foreachBatch(frozen-quantizer PQ encode): the
-    compressed-vector ingest pipeline, the PQ twin of
-    ``start_ivf_append_sink``. The FIRST batch trains the codebook
-    (``pq_codebook`` over the batch — deterministic lowest-id seeds,
-    optional Lloyd ``iters``) and freezes it under
-    ``<store>/codebook``; every later batch encodes against the stored
-    codebook (``pq_encode_with`` — exact integer argmin, so a vector's
-    codes are identical whether it arrived in batch 1 or batch 100) and
-    writes only its own (id, m, code) rows under
-    ``<store>/codes/batch-<id>``. Restart-safe via the same per-batch
-    commit markers as the IVF sink, and exactly-once on output: a
-    replayed batch overwrites its own batch directory, and
-    ``read_pq_codes`` reads only marker-committed dirs."""
-    import os
-
+    """Frozen-quantizer PQ encode: the compressed-vector ingest pipeline.
+    The frozen artifact is ``<store>/codebook`` (``pq_codebook`` over the
+    first batch — deterministic lowest-id seeds, optional Lloyd ``iters``);
+    each batch's (id, m, code) rows (``pq_encode_with`` — exact integer
+    argmin, so a vector's codes do not depend on its batch) land in
+    ``<store>/codes/batch-<id>``."""
     from ..operators import similarity
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker_dir = os.path.join(store_path.rstrip("/"), "_committed_batches")
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # checkpoint replay of an already-applied append
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        batch = batch_df.localCheckpoint(eager=True)
-        cb_path = os.path.join(store_path.rstrip("/"), "codebook")
-        codes_path = os.path.join(
-            store_path.rstrip("/"), "codes", f"batch-{batch_id}"
-        )
-        kwargs = {}
-        if m is not None:
-            kwargs["m"] = m
-        if k is not None:
-            kwargs["k"] = k
-        # Train-and-freeze ONLY when the codebook genuinely does not
-        # exist yet. Any other read failure (corrupt file, transient
-        # FS/permission error) must propagate so the batch retries —
-        # retraining on the current batch would overwrite the frozen
-        # codebook and silently invalidate every code already appended
-        # against the old one.
-        if os.path.exists(cb_path):
-            cb = spark.read.parquet(cb_path)
-            cb_row = cb.first()
-        else:
+    m_eff = similarity.PQ_M if m is None else m
+    k_eff = similarity.PQ_K if k is None else k
+
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
+        def train() -> DataFrame:
             dim = len(batch.select("embedding").first()[0])
-            cb = similarity.pq_codebook(
-                batch, dim=dim, iters=iters, **kwargs
+            return similarity.pq_codebook(
+                batch, m=m_eff, k=k_eff, dim=dim, iters=iters
             )
-            cb.write.mode("overwrite").parquet(cb_path)
-            cb = spark.read.parquet(cb_path)
-            cb_row = cb.first()
+
+        cb = _frozen_artifact(batch.sparkSession, store_path, "codebook", train)
         # dim from the frozen codebook (m subspaces × subvector width) —
         # no extra per-batch driver job against the data
-        m_eff = kwargs.get("m", similarity.PQ_M)
-        dim = m_eff * len(cb_row["csub"])
-        similarity.pq_encode_with(
-            batch, cb, m=m_eff, dim=dim
-        ).write.mode("overwrite").parquet(codes_path)
-        os.makedirs(marker_dir, exist_ok=True)
-        with open(marker, "w") as fh:
-            fh.write("committed")
+        dim = m_eff * len(cb.first()["csub"])
+        _overwrite_batch_dir(
+            similarity.pq_encode_with(batch, cb, m=m_eff, dim=dim),
+            store_path,
+            "codes",
+            batch_id,
+        )
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _idempotent_batch_sink(stream, store_path, checkpoint_dir, write_batch)
 
 
 def start_classifier_score_sink(
@@ -713,106 +761,32 @@ def start_classifier_score_sink(
     checkpoint_dir: str,
     min_df: int | None = None,
 ):
-    """writeStream → foreachBatch(frozen-weights quality scoring): the
-    streaming twin of the corpus-trained classifier
-    (``textops.classifier_weights`` / ``classifier_score_with``) —
-    incoming documents are scored against a FROZEN trained weight table
-    and their (doc_id, n_pos, n_neg, logit, pred_good) rows appended, so
-    a document's score is identical whether it arrived in batch 1 or
-    batch 100 (the same frozen-artifact invariant as the PQ/IVF sinks).
-
-    The FIRST batch cold-starts the model: it trains the weight table on
-    itself (its own train hash-split) and freezes it under
-    ``<store>/weights``. A production pipeline would normally pre-seed
-    that path from the batch trainer over the historical corpus; the
-    cold-start exists so the sink is self-contained. As with the PQ sink,
-    only a genuinely-missing weights path trains — any other read error
-    propagates so the batch retries instead of silently re-training and
-    splitting the score stream across two models.
-
-    Exactly-once output: each batch's scores land in their OWN
-    batch-id-derived directory with overwrite semantics, so a replayed
-    batch (crash after the output commit but before the marker) rewrites
-    the same directory instead of appending duplicates; readers
-    (``read_classifier_scores``) see only marker-committed batch dirs, so
-    a half-written orphan is invisible until its replay completes."""
-    import os
-
+    """Frozen-weights quality scoring: the streaming twin of the
+    corpus-trained classifier (``textops.classifier_weights`` /
+    ``classifier_score_with``). The frozen artifact is ``<store>/weights``,
+    cold-started on the first batch's own train hash-split (a production
+    pipeline pre-seeds it from the batch trainer over the historical
+    corpus); each batch's (doc_id, n_pos, n_neg, logit, pred_good) rows
+    land in ``<store>/scores/batch-<id>``."""
     from ..operators import textops
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker_dir = os.path.join(store_path.rstrip("/"), "_committed_batches")
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # checkpoint replay of an already-applied batch
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        batch = batch_df.localCheckpoint(eager=True)
-        weights_path = os.path.join(store_path.rstrip("/"), "weights")
-        batch_out = os.path.join(
-            store_path.rstrip("/"), "scores", f"batch-{batch_id}"
+    min_df_eff = textops.CLS_MIN_DF if min_df is None else min_df
+
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
+        weights = _frozen_artifact(
+            batch.sparkSession,
+            store_path,
+            "weights",
+            lambda: textops.classifier_weights(batch, min_df=min_df_eff),
         )
-        if os.path.exists(weights_path):
-            weights = spark.read.parquet(weights_path)
-        else:
-            kwargs = {} if min_df is None else {"min_df": min_df}
-            textops.classifier_weights(batch, **kwargs).write.mode(
-                "overwrite"
-            ).parquet(weights_path)
-            weights = spark.read.parquet(weights_path)
-        textops.classifier_score_with(batch, weights).write.mode(
-            "overwrite"
-        ).parquet(batch_out)
-        os.makedirs(marker_dir, exist_ok=True)
-        with open(marker, "w") as fh:
-            fh.write("committed")
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-
-
-def _committed_batch_paths(store_path: str, sub: str) -> list:
-    """Batch output directories under ``<store>/<sub>`` whose commit
-    marker exists — the committed prefix of a per-batch-dir sink's log.
-    Marker order is irrelevant (readers aggregate/union)."""
-    import os
-
-    base = store_path.rstrip("/")
-    marker_dir = os.path.join(base, "_committed_batches")
-    if not os.path.isdir(marker_dir):
-        return []
-    return [
-        os.path.join(base, sub, name)
-        for name in sorted(os.listdir(marker_dir))
-        if os.path.isdir(os.path.join(base, sub, name))
-    ]
-
-
-def read_pq_codes(spark: SparkSession, store_path: str) -> DataFrame:
-    """Union of every marker-committed batch's PQ code rows — the read
-    side of ``start_pq_append_sink``'s per-batch-dir layout."""
-    paths = _committed_batch_paths(store_path, "codes")
-    if not paths:
-        raise FileNotFoundError(
-            f"no committed code batches under {store_path}"
+        _overwrite_batch_dir(
+            textops.classifier_score_with(batch, weights),
+            store_path,
+            "scores",
+            batch_id,
         )
-    return spark.read.parquet(*paths)
 
-
-def read_classifier_scores(spark: SparkSession, store_path: str) -> DataFrame:
-    """Union of every marker-committed batch's score rows — the read side
-    of ``start_classifier_score_sink``'s per-batch-dir exactly-once
-    layout (uncommitted orphan dirs are excluded by construction)."""
-    paths = _committed_batch_paths(store_path, "scores")
-    if not paths:
-        raise FileNotFoundError(
-            f"no committed score batches under {store_path}"
-        )
-    return spark.read.parquet(*paths)
+    return _idempotent_batch_sink(stream, store_path, checkpoint_dir, write_batch)
 
 
 def start_anomaly_score_sink(
@@ -821,71 +795,30 @@ def start_anomaly_score_sink(
     checkpoint_dir: str,
     k: int = 5,
 ):
-    """writeStream → foreachBatch(frozen-stats robust anomaly scoring):
-    the streaming twin of ``events.value_outliers`` — incoming events
-    are flagged against a FROZEN per-type median/MAD table
-    (``events.robust_value_stats`` / ``score_values_with``), so an
-    event's verdict and milli-z are identical whether it arrived in
-    batch 1 or batch 100 (the frozen-artifact invariant of the
-    PQ/SQ/classifier sinks; online anomaly detection against drifting
-    statistics is a different product, re-train by re-seeding the
-    store). The FIRST batch cold-starts the stats on itself and freezes
-    them under ``<store>/stats``; a production pipeline pre-seeds that
-    path from the batch operator over history. Only a genuinely-missing
-    stats path trains — any other read error propagates so the batch
-    retries instead of silently splitting the score stream across two
-    models. Types absent from the frozen table are dropped (the frozen-
-    vocabulary discipline). Exactly-once output: per-batch-id dirs with
-    overwrite semantics + commit markers; ``read_anomaly_scores`` sees
-    only committed dirs."""
-    import os
-
+    """Frozen-stats robust anomaly scoring: the streaming twin of
+    ``events.value_outliers``. The frozen artifact is ``<store>/stats``, the
+    per-type median/MAD table (``events.robust_value_stats``) cold-started
+    on the first batch (a production pipeline pre-seeds it from history;
+    re-train by re-seeding the store); each batch's verdicts
+    (``score_values_with``) land in ``<store>/scores/batch-<id>``. Types
+    absent from the frozen table are dropped."""
     from ..operators import events as ev_ops
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker_dir = os.path.join(store_path.rstrip("/"), "_committed_batches")
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # checkpoint replay of an already-applied batch
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        batch = batch_df.localCheckpoint(eager=True)
-        stats_path = os.path.join(store_path.rstrip("/"), "stats")
-        out_path = os.path.join(
-            store_path.rstrip("/"), "scores", f"batch-{batch_id}"
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
+        stats = _frozen_artifact(
+            batch.sparkSession,
+            store_path,
+            "stats",
+            lambda: ev_ops.robust_value_stats(batch),
         )
-        if os.path.exists(stats_path):
-            stats = spark.read.parquet(stats_path)
-        else:
-            ev_ops.robust_value_stats(batch).write.mode("overwrite").parquet(
-                stats_path
-            )
-            stats = spark.read.parquet(stats_path)
-        ev_ops.score_values_with(batch, stats, k).write.mode(
-            "overwrite"
-        ).parquet(out_path)
-        os.makedirs(marker_dir, exist_ok=True)
-        with open(marker, "w") as fh:
-            fh.write("committed")
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-
-
-def read_anomaly_scores(spark: SparkSession, store_path: str) -> DataFrame:
-    """Union of every marker-committed batch's anomaly rows — the read
-    side of ``start_anomaly_score_sink``'s per-batch-dir exactly-once
-    layout."""
-    paths = _committed_batch_paths(store_path, "scores")
-    if not paths:
-        raise FileNotFoundError(
-            f"no committed anomaly batches under {store_path}"
+        _overwrite_batch_dir(
+            ev_ops.score_values_with(batch, stats, k),
+            store_path,
+            "scores",
+            batch_id,
         )
-    return spark.read.parquet(*paths)
+
+    return _idempotent_batch_sink(stream, store_path, checkpoint_dir, write_batch)
 
 
 def start_sq_append_sink(
@@ -893,65 +826,26 @@ def start_sq_append_sink(
     store_path: str,
     checkpoint_dir: str,
 ):
-    """writeStream → foreachBatch(frozen-grid SQ8 encode): the scalar-
-    quantization member of the compressed-vector ingest family (the SQ8
-    twin of ``start_pq_append_sink``). The FIRST batch trains the
-    per-dimension min/max grid (``similarity.sq_grid`` over the batch)
-    and freezes it under ``<store>/grid``; every later batch encodes
-    against the stored grid (``sq_encode_with`` — exact floor-over-double
-    arithmetic, out-of-range values clamp to [0, 255]) and writes its own
-    (id, i, code) rows under ``<store>/codes/batch-<id>``. Same
-    exactly-once discipline as the PQ sink: per-batch-dir overwrite +
-    commit markers, readers see only committed dirs; only a
-    genuinely-missing grid path trains — any other read error propagates
-    so the batch retries instead of silently re-training."""
-    import os
-
+    """Frozen-grid SQ8 encode: the scalar-quantization twin of
+    ``start_pq_append_sink``. The frozen artifact is ``<store>/grid``, the
+    per-dimension min/max grid (``similarity.sq_grid``) of the first batch;
+    each batch's (id, i, code) rows (``sq_encode_with`` — exact
+    floor-over-double arithmetic, out-of-range values clamp to [0, 255])
+    land in ``<store>/codes/batch-<id>``."""
     from ..operators import similarity
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker_dir = os.path.join(store_path.rstrip("/"), "_committed_batches")
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # checkpoint replay of an already-applied append
-        if not batch_df.take(1):
-            return
-        spark = batch_df.sparkSession
-        batch = batch_df.localCheckpoint(eager=True)
-        grid_path = os.path.join(store_path.rstrip("/"), "grid")
-        codes_path = os.path.join(
-            store_path.rstrip("/"), "codes", f"batch-{batch_id}"
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
+        grid = _frozen_artifact(
+            batch.sparkSession,
+            store_path,
+            "grid",
+            lambda: similarity.sq_grid(batch),
         )
-        if os.path.exists(grid_path):
-            grid = spark.read.parquet(grid_path)
-        else:
-            similarity.sq_grid(batch).write.mode("overwrite").parquet(
-                grid_path
-            )
-            grid = spark.read.parquet(grid_path)
-        similarity.sq_encode_with(batch, grid).write.mode(
-            "overwrite"
-        ).parquet(codes_path)
-        os.makedirs(marker_dir, exist_ok=True)
-        with open(marker, "w") as fh:
-            fh.write("committed")
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-
-
-def read_sq_codes(spark: SparkSession, store_path: str) -> DataFrame:
-    """Union of every marker-committed batch's SQ8 code rows — the read
-    side of ``start_sq_append_sink``'s per-batch-dir layout."""
-    paths = _committed_batch_paths(store_path, "codes")
-    if not paths:
-        raise FileNotFoundError(
-            f"no committed code batches under {store_path}"
+        _overwrite_batch_dir(
+            similarity.sq_encode_with(batch, grid), store_path, "codes", batch_id
         )
-    return spark.read.parquet(*paths)
+
+    return _idempotent_batch_sink(stream, store_path, checkpoint_dir, write_batch)
 
 
 def start_span_census_sink(
@@ -960,43 +854,25 @@ def start_span_census_sink(
     checkpoint_dir: str,
     width: int = 6,
 ):
-    """writeStream → foreachBatch(incremental substring-duplication
-    census): the streaming twin of ``operators.dedup.duplicated_spans``.
+    """Incremental substring-duplication census: the streaming twin of
+    ``operators.dedup.duplicated_spans``.
 
-    Each batch folds ITS OWN documents into hashed ``width``-token spans
-    and appends one partial-aggregate parquet — (span_md5, n_docs,
-    n_occurrences) over just that batch — under ``<store>/parts``. The
-    census is never rewritten: per-batch work ∝ batch size, and the
-    merge (sum of partials, filter > 1) happens at READ time via
-    ``read_span_census`` — the log-append/compact-on-read shape that
-    stays O(batch) at any corpus size (a serving deployment would
-    periodically compact parts with the same aggregate).
+    Each batch folds its own documents into hashed ``width``-token spans
+    and writes one partial aggregate — (span_md5, n_docs, n_occurrences)
+    over that batch only — to ``<store>/parts/batch-<id>``. The census is
+    never rewritten: per-batch work ∝ batch size, and the merge (sum of
+    partials, filter > 1) happens at read time in ``read_span_census``
+    (a serving deployment would periodically compact the parts with the
+    same aggregate).
 
     Correctness contract: a document's rows arrive within one batch
-    (append-only corpus, whole-document records — the same assumption
-    every sink here makes), so summing per-batch ``COUNT(DISTINCT
-    doc_id)`` partials equals the global distinct count.
-
-    Exactly-once output: each batch's partial lands in its OWN
-    batch-id-derived directory with overwrite semantics (replay after a
-    crash rewrites, never double-appends), and ``read_span_census``
-    merges only marker-committed batch dirs.
+    (append-only corpus, whole-document records), so summing per-batch
+    ``COUNT(DISTINCT doc_id)`` partials equals the global distinct count.
     """
-    import os
-
     from ..operators.dedup import _span_fold
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker_dir = os.path.join(store_path.rstrip("/"), "_committed_batches")
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker):
-            return  # checkpoint replay of an already-applied batch
-        if not batch_df.take(1):
-            return
-        batch_out = os.path.join(
-            store_path.rstrip("/"), "parts", f"batch-{batch_id}"
-        )
-        spans = batch_df.select(
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
+        spans = batch.select(
             "doc_id",
             F.explode(_span_fold(F.col("text"), width)).alias("span"),
         ).filter(F.col("span").isNotNull())
@@ -1004,16 +880,9 @@ def start_span_census_sink(
             F.countDistinct("doc_id").cast("long").alias("n_docs"),
             F.count(F.lit(1)).cast("long").alias("n_occurrences"),
         )
-        partial.write.mode("overwrite").parquet(batch_out)
-        os.makedirs(marker_dir, exist_ok=True)
-        with open(marker, "w") as fh:
-            fh.write("committed")
+        _overwrite_batch_dir(partial, store_path, "parts", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _idempotent_batch_sink(stream, store_path, checkpoint_dir, write_batch)
 
 
 def read_span_census(spark: SparkSession, store_path: str) -> DataFrame:
@@ -1025,14 +894,9 @@ def read_span_census(spark: SparkSession, store_path: str) -> DataFrame:
     per-batch fan-in. Counts stay LONG end-to-end — a viral span's
     occurrences across batches exceed int32 at the corpus scales this
     sink targets."""
-    paths = _committed_batch_paths(store_path, "parts")
-    if not paths:
-        raise FileNotFoundError(
-            f"no committed census batches under {store_path}"
-        )
-    parts = spark.read.parquet(*paths)
     return (
-        parts.groupBy("span_md5")
+        read_committed(spark, store_path, "parts")
+        .groupBy("span_md5")
         .agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
             F.sum("n_occurrences").cast("long").alias("n_occurrences"),

@@ -156,7 +156,8 @@ def run_daily_update(
     2. probe every symbol × day in the window (``head`` injectable for
        tests, exactly like the reference's mocked prober),
     3. UPSERT into the partitioned fact table — touched partitions only;
-       a re-run of the same window is a no-op on the table's content,
+       a re-run of the same window is a no-op on the table's content; on
+       a missing table the upsert is its full-width first write,
     4. warnings-only validation report,
     5. optional rankings append for dates past the archive watermark
        (duplicate-date guard raises — the reference's concat rejection),
@@ -187,15 +188,12 @@ def run_daily_update(
     incoming = results_to_df(spark, records)
     lap("probe")
 
-    if writer.table_exists(spark, fact_path):
-        writer.upsert_partitioned(
-            fact_path,
-            incoming,
-            DAILY_AVAILABILITY_KEY,
-            DAILY_AVAILABILITY_VERSION,
-        )
-    else:
-        writer.write_partitioned(incoming, fact_path)
+    writer.upsert_partitioned(
+        fact_path,
+        incoming,
+        DAILY_AVAILABILITY_KEY,
+        DAILY_AVAILABILITY_VERSION,
+    )
     da = spark.read.parquet(fact_path)
     lap("upsert")
 

@@ -6,12 +6,17 @@ runtime, no async flakiness).
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
+import glob
+import pathlib
 
+import pyarrow.parquet as pq
 import pytest
 
 from binance_futures_availability_spark.ingest import probe
 from binance_futures_availability_spark.operators import snapshots
+from binance_futures_availability_spark.schema import DAILY_AVAILABILITY
 from binance_futures_availability_spark.streaming import (
     availability_transitions,
     dedup_probe_stream,
@@ -59,6 +64,14 @@ def test_stream_upsert_end_to_end(spark, tmp_path):
 
     got = spark.read.parquet(str(table))
     assert got.count() == 2
+    # the first batch creates the table full width: every committed file
+    # holds the 17 fact columns (``date`` from its directory)
+    want_cols = sorted(DAILY_AVAILABILITY.fieldNames())
+    files = glob.glob(str(table / "date=*" / "*.parquet"))
+    assert files
+    assert all(
+        sorted(pq.read_schema(f).names + ["date"]) == want_cols for f in files
+    )
 
     # wave 2: re-probe flips ETHUSDT to 404 (later probe_timestamp wins)
     # and adds day 2 — only touched partitions rewritten, matview follows
@@ -745,7 +758,7 @@ def test_streaming_pq_append_sink_batch_equivalence(spark, tmp_path):
     from binance_futures_availability_spark.operators import similarity
     from binance_futures_availability_spark.streaming.pipeline import (
         embedding_stream_source,
-        read_pq_codes,
+        read_committed,
         start_pq_append_sink,
     )
 
@@ -791,7 +804,7 @@ def test_streaming_pq_append_sink_batch_equivalence(spark, tmp_path):
     )
     got = sorted(
         (r["vec_id"], r["m"], r["code"])
-        for r in read_pq_codes(spark, store).collect()
+        for r in read_committed(spark, store, "codes").collect()
     )
     assert got == want
     # frozen quantizer: the codebook was trained on batch 1 only
@@ -806,22 +819,32 @@ def test_streaming_pq_append_sink_batch_equivalence(spark, tmp_path):
     assert (
         sorted(
             (r["vec_id"], r["m"], r["code"])
-            for r in read_pq_codes(spark, store).collect()
+            for r in read_committed(spark, store, "codes").collect()
         )
         == want
     )
 
 
-def test_streaming_pq_sink_corrupt_codebook_raises(spark, tmp_path):
-    """A readable-but-corrupt codebook must FAIL the batch, not silently
-    retrain: retraining would overwrite the frozen codebook while codes
-    from earlier batches remain encoded against the old one (ADVICE r8).
-    Only a genuinely missing <store>/codebook takes the train path."""
+@pytest.mark.parametrize(
+    "sink, artifact, output",
+    [("pq", "codebook", "codes/batch-0"), ("ivf", "seeds", "vectors")],
+    ids=["pq", "ivf"],
+)
+def test_streaming_pq_sink_corrupt_codebook_raises(
+    spark, tmp_path, sink, artifact, output
+):
+    """A readable-but-corrupt frozen artifact (PQ codebook, IVF seeds)
+    must FAIL the batch, not silently retrain: retraining would overwrite
+    the frozen artifact while output from earlier batches remains encoded
+    against the old one (ADVICE r8) — for IVF, the rebuild also replaced
+    every stored vector with the current batch. Only a genuinely missing
+    artifact takes the train path."""
     import math as _math
     import os
 
     from binance_futures_availability_spark.streaming.pipeline import (
         embedding_stream_source,
+        start_ivf_append_sink,
         start_pq_append_sink,
     )
 
@@ -841,18 +864,20 @@ def test_streaming_pq_sink_corrupt_codebook_raises(spark, tmp_path):
     ).write.mode("append").parquet(str(incoming))
 
     def run(ckpt):
-        q = start_pq_append_sink(
-            embedding_stream_source(spark, str(incoming)),
-            store,
-            str(tmp_path / ckpt),
-            m=2,
-            k=4,
-        ).start()
+        source = embedding_stream_source(spark, str(incoming))
+        if sink == "pq":
+            q = start_pq_append_sink(
+                source, store, str(tmp_path / ckpt), m=2, k=4
+            ).start()
+        else:
+            q = start_ivf_append_sink(
+                source, store, str(tmp_path / ckpt), n_cells=4
+            ).start()
         q.awaitTermination(120)
 
     run("ck1")
-    cb_path = os.path.join(store, "codebook")
-    # corrupt every parquet part file in the frozen codebook
+    cb_path = os.path.join(store, artifact)
+    # corrupt every parquet part file in the frozen artifact
     for name in os.listdir(cb_path):
         if name.endswith(".parquet"):
             with open(os.path.join(cb_path, name), "wb") as fh:
@@ -870,8 +895,8 @@ def test_streaming_pq_sink_corrupt_codebook_raises(spark, tmp_path):
 
     shutil.rmtree(os.path.join(store, "_committed_batches"))
     with pytest.raises(Exception):
-        run("ck2")  # corrupt (but present) codebook read must raise
-    # and the corrupt codebook was NOT overwritten by a retrain
+        run("ck2")  # corrupt (but present) artifact read must raise
+    # and the corrupt artifact was NOT overwritten by a retrain
     with open(
         [
             os.path.join(cb_path, n)
@@ -881,6 +906,9 @@ def test_streaming_pq_sink_corrupt_codebook_raises(spark, tmp_path):
         "rb",
     ) as fh:
         assert fh.read() == b"not parquet"
+    # the first batch's output is intact
+    first = spark.read.parquet(os.path.join(store, output))
+    assert {r["vec_id"] for r in first.collect()} == set(range(8))
 
 
 def _rm_commit(ckpt: str, batch_id: str) -> None:
@@ -907,7 +935,7 @@ def test_streaming_classifier_score_sink_batch_equivalence(spark, tmp_path):
     from binance_futures_availability_spark.operators import textops
     from binance_futures_availability_spark.streaming.pipeline import (
         document_stream_source,
-        read_classifier_scores,
+        read_committed,
         start_classifier_score_sink,
     )
 
@@ -947,7 +975,7 @@ def test_streaming_classifier_score_sink_batch_equivalence(spark, tmp_path):
         tuple(r)
         for r in textops.classifier_score_with(union, weights).collect()
     )
-    got = sorted(tuple(r) for r in read_classifier_scores(spark, store).collect())
+    got = sorted(tuple(r) for r in read_committed(spark, store, "scores").collect())
     assert got == want
     # frozen model: weights trained on batch 1 only — batch 2's novel
     # terms (w12..w19) are absent from the table
@@ -962,7 +990,7 @@ def test_streaming_classifier_score_sink_batch_equivalence(spark, tmp_path):
     _rm_commit(str(tmp_path / "clsckpt"), last_id)
     run()
     assert (
-        sorted(tuple(r) for r in read_classifier_scores(spark, store).collect())
+        sorted(tuple(r) for r in read_committed(spark, store, "scores").collect())
         == want
     )
 
@@ -970,7 +998,7 @@ def test_streaming_classifier_score_sink_batch_equivalence(spark, tmp_path):
     shutil.rmtree(str(tmp_path / "clsckpt"))
     run()
     assert (
-        sorted(tuple(r) for r in read_classifier_scores(spark, store).collect())
+        sorted(tuple(r) for r in read_committed(spark, store, "scores").collect())
         == want
     )
 
@@ -1069,24 +1097,33 @@ def test_streaming_span_census_matches_batch_and_replays_safely(spark, tmp_path)
     assert again == want
 
 
-def test_streaming_sq_append_sink_batch_equivalence(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["path", "file_uri"])
+def test_streaming_sq_append_sink_batch_equivalence(
+    spark, tmp_path, monkeypatch, scheme
+):
     """First micro-batch trains and freezes the SQ8 min/max grid; later
     batches encode against it (out-of-range values clamp) — codes equal
     a one-shot frozen-grid encode of the union, and a checkpoint replay
-    appends nothing twice."""
+    appends nothing twice. The same holds for a store given as a
+    ``file://`` URI, and no stray ``file:`` directory appears in the cwd
+    (store I/O goes through the Hadoop FS, never os.path)."""
     import os
     import shutil
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
 
     from binance_futures_availability_spark.operators import similarity
     from binance_futures_availability_spark.streaming.pipeline import (
         embedding_stream_source,
-        read_sq_codes,
+        read_committed,
         start_sq_append_sink,
     )
 
     schema = "vec_id long, embedding array<float>, label int"
     incoming = tmp_path / "sq_in"
-    store = str(tmp_path / "sqstore")
+    store = scheme + str(tmp_path / "sqstore")
     batch1 = [
         (i, [float((i * 7 + j) % 11) / 10.0 for j in range(4)], 0)
         for i in range(8)
@@ -1123,7 +1160,7 @@ def test_streaming_sq_append_sink_batch_equivalence(spark, tmp_path):
     )
     got = sorted(
         (r["vec_id"], r["i"], r["code"])
-        for r in read_sq_codes(spark, store).collect()
+        for r in read_committed(spark, store, "codes").collect()
     )
     assert got == want
     assert all(0 <= c <= 255 for _, _, c in got)
@@ -1145,10 +1182,11 @@ def test_streaming_sq_append_sink_batch_equivalence(spark, tmp_path):
     assert (
         sorted(
             (r["vec_id"], r["i"], r["code"])
-            for r in read_sq_codes(spark, store).collect()
+            for r in read_committed(spark, store, "codes").collect()
         )
         == want
     )
+    assert not [n for n in os.listdir(cwd) if n.startswith("file:")]
 
 
 def test_streaming_debounce_matches_batch(spark, tmp_path):
@@ -1227,11 +1265,12 @@ def test_streaming_debounce_matches_batch(spark, tmp_path):
 def test_streaming_anomaly_scores_frozen_stats(spark, tmp_path):
     """First batch trains and freezes the per-type median/MAD; its own
     scores equal the batch operator on batch 1; batch 2 is scored under
-    the FROZEN stats (not its own); replay is a no-op."""
+    the FROZEN stats (not its own); a same-id replay leaves the committed
+    rows unchanged."""
     from binance_futures_availability_spark.operators import events as ev_ops
     from binance_futures_availability_spark.streaming.pipeline import (
         event_stream_source,
-        read_anomaly_scores,
+        read_committed,
         start_anomaly_score_sink,
     )
 
@@ -1260,7 +1299,7 @@ def test_streaming_anomaly_scores_frozen_stats(spark, tmp_path):
         q.awaitTermination(120)
 
     run()
-    got1 = {r["event_id"]: r for r in read_anomaly_scores(spark, store).collect()}
+    got1 = {r["event_id"]: r for r in read_committed(spark, store, "scores").collect()}
     want1 = {
         r["event_id"]: r
         for r in ev_ops.value_outliers(
@@ -1275,12 +1314,62 @@ def test_streaming_anomaly_scores_frozen_stats(spark, tmp_path):
         str(incoming)
     )
     run()
-    got2 = {r["event_id"]: r for r in read_anomaly_scores(spark, store).collect()}
+    got2 = {r["event_id"]: r for r in read_committed(spark, store, "scores").collect()}
     # frozen stats from batch 1: med=4.5, mad2=8e6 -> 200.0 flags, 4.0
     # doesn't; type B unseen -> dropped
     assert set(got2) == set(got1) | {100}
     d = abs(2 * 200_000_000 - 9_000_000)
     assert got2[100]["robust_z_milli"] == 2000 * d // 8_000_000
 
-    run()  # replay: markers make it a no-op
-    assert len(read_anomaly_scores(spark, store).collect()) == len(got2)
+    # same-id replay: drop the last batch's marker and its checkpoint
+    # commit, so the stream re-delivers that batch; it rewrites its own
+    # batch dir and the committed rows stay the same
+    import os
+
+    markers = os.path.join(store, "_committed_batches")
+    last = sorted(os.listdir(markers))[-1]
+    os.remove(os.path.join(markers, last))
+    _rm_commit(str(tmp_path / "an_ckpt"), last.rsplit("-", 1)[1])
+    run()
+    assert os.path.exists(os.path.join(markers, last))
+    got3 = sorted(map(tuple, read_committed(spark, store, "scores").collect()))
+    assert got3 == sorted(map(tuple, got2.values()))
+
+
+PIPELINE = (
+    pathlib.Path(__file__).resolve().parents[1]
+    / "binance_futures_availability_spark"
+    / "streaming"
+    / "pipeline.py"
+)
+
+
+def test_pipeline_store_io_has_one_protocol():
+    """Every store sink goes through the one marker protocol on the
+    Hadoop FS: no os.path/os.makedirs/os.listdir/open call (they miss any
+    non-local scheme), the marker dir named once, one foreachBatch."""
+    tree = ast.parse(PIPELINE.read_text())
+    docstrings = {
+        id(n.value)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
+    }
+    calls = [
+        ast.unparse(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)
+    ]
+    local_io = [
+        c
+        for c in calls
+        if c.startswith("os.path.") or c in ("os.makedirs", "os.listdir", "open")
+    ]
+    assert not local_io, local_io
+    assert sum(c.endswith(".foreachBatch") for c in calls) == 1
+    marker_names = [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and "_committed_batches" in n.value
+        and id(n) not in docstrings
+    ]
+    assert len(marker_names) == 1

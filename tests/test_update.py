@@ -10,9 +10,11 @@ calc → probe → upsert → summary), tests/test_probing/test_20day_lookback.p
 from __future__ import annotations
 
 import datetime as dt
+import glob
 import hashlib
 import json
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,6 +22,7 @@ from binance_futures_availability_spark import update as update_mod
 from binance_futures_availability_spark.cli.main import main as cli_main
 from binance_futures_availability_spark.ingest import discovery, probe
 from binance_futures_availability_spark.operators import rankings as rankings_ops
+from binance_futures_availability_spark.schema import DAILY_AVAILABILITY
 from binance_futures_availability_spark.validation import completeness, continuity
 
 
@@ -84,6 +87,15 @@ def test_run_daily_update_end_to_end(spark, tmp_path):
         for r in spark.read.parquet(fact).collect()
     }
     assert len(rows) == 6
+    # the first write of a missing table is full width: every committed
+    # file holds the 17 fact columns (``date`` from its directory), not
+    # the 8 probe columns
+    want_cols = sorted(DAILY_AVAILABILITY.fieldNames())
+    files = glob.glob(fact + "/date=*/*.parquet")
+    assert files
+    assert all(
+        sorted(pq.read_schema(f).names + ["date"]) == want_cols for f in files
+    )
     for s in SYMS:
         for d in dates:
             h = _hash(s, d)
