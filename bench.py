@@ -22,7 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
-from binance_futures_availability_spark.session import get_session
+from binance_futures_availability_spark.session import DEFAULT_CPUS, get_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -82,8 +82,9 @@ def main() -> None:
     #
     # r14 (verdict r13 item 2): the width DEFAULT is data-adaptive instead
     # of the constant 8 — ceil(input_bytes / 128 MB) floored at 8 and
-    # capped at $SPARK_GRAFT_CPUS (guide §2.2: size partitions by bytes,
-    # not by a constant tuned to one box). At sf0.1 (~17 MB input) this
+    # capped at session.DEFAULT_CPUS ($SPARK_GRAFT_CPUS, else the CPU
+    # affinity; guide §2.2: size partitions by bytes, not by a constant
+    # tuned to one box). At sf0.1 (~17 MB input) this
     # still resolves to 8, keeping the warm protocol comparable with every
     # committed r11-r13 artifact; at sf10+ the width grows with the data
     # and the low-core/high-core runs genuinely diverge. Setting
@@ -102,8 +103,7 @@ def main() -> None:
                     total += os.path.getsize(os.path.join(root, f))
                 except OSError:
                     pass
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        return max(8, min(cpus, -(-total // (128 << 20))))
+        return max(8, min(DEFAULT_CPUS, -(-total // (128 << 20))))
 
     spark = get_session(
         "bench",

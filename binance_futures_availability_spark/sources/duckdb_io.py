@@ -16,12 +16,15 @@ so the connector provides both directions:
 
 Scale stance: a .duckdb file is a single-node artifact by construction —
 there is nothing to distribute while reading it. The bridge is DuckDB's
-own parquet COPY (multi-threaded, streams to disk, no driver-memory
-residency), after which Spark owns the data: the partitioned write and
-everything downstream distribute normally. Pre-ADR-0007 databases
-(missing the nine volume columns — schema.py:20-42's migration) import
-cleanly: absent columns are NULL-filled, exactly what the reference's
-``ALTER TABLE ADD COLUMN`` migration produces.
+own parquet COPY / ``read_parquet`` (multi-threaded, streams to disk, no
+driver-memory residency), after which Spark owns the data: the
+partitioned write and everything downstream distribute normally. An
+export of a bare scan of local parquet files hands DuckDB the committed
+files themselves, so no Spark job runs and no copy is staged.
+Pre-ADR-0007 databases (missing the nine volume columns —
+schema.py:20-42's migration) import cleanly: absent columns are
+NULL-filled, exactly what the reference's ``ALTER TABLE ADD COLUMN``
+migration produces.
 """
 
 from __future__ import annotations
@@ -31,6 +34,7 @@ import os
 import re
 import shutil
 import tempfile
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -207,9 +211,18 @@ def export_duckdb(
     accepts PKs at CREATE time, so ``mode='overwrite'`` drops and
     recreates while ``mode='append'`` INSERT OR REPLACEs into the
     existing table (the reference's own upsert verb,
-    availability_db.py:97-124). Data travels Spark → parquet staging →
-    DuckDB ``read_parquet`` — both sides' native bulk paths, no
-    row-at-a-time driver loop.
+    availability_db.py:97-124), ordered by (date, symbol).
+
+    Data reaches DuckDB's ``read_parquet`` — no row-at-a-time driver loop
+    — from one of two sources:
+
+    - ``da`` is a bare parquet scan of local files (the cron tick's
+      post-upsert read): DuckDB reads exactly ``da.inputFiles()`` in
+      place (``hive_partitioning`` restores the partition column,
+      ``union_by_name`` NULL-fills the columns a file lacks). No Spark
+      job runs and nothing is copied.
+    - any other frame is written by Spark to a parquet staging directory
+      first.
 
     Missing nullable columns are NULL-filled (the mirror of the import
     path's pre-ADR-0007 handling): a probe-only table — no volume
@@ -218,22 +231,37 @@ def export_duckdb(
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
     _check_ident(table)
-    staging = tempfile.mkdtemp(prefix="duckdb_export_")
+    files = _local_scan_files(da)
+    staging = None if files else tempfile.mkdtemp(prefix="duckdb_export_")
     try:
-        staged = os.path.join(staging, "fact")
-        present = set(da.columns)
-        da.select(
-            *[
-                F.col(f.name)
-                if f.name in present
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in DAILY_AVAILABILITY.fields
-            ]
-        ).write.mode("overwrite").parquet(staged)
+        if staging is not None:
+            present = set(da.columns)
+            da.select(
+                *[
+                    F.col(f.name)
+                    if f.name in present
+                    else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in DAILY_AVAILABILITY.fields
+                ]
+            ).write.mode("overwrite").parquet(os.path.join(staging, "fact"))
+            files = [os.path.join(staging, "fact", "*.parquet")]
         con = _connect(db_path)
         try:
+            scan = (
+                "read_parquet(?, hive_partitioning = true, "
+                "union_by_name = true)"
+            )
+            # the frame's columns the files hold; the rest read as NULL
+            have = set(da.columns) & {
+                d[0]
+                for d in con.execute(
+                    f"SELECT * FROM {scan} LIMIT 0", [files]
+                ).description
+            }
             cols = ", ".join(_FACT_COLUMNS)
-            src = f"SELECT {cols} FROM read_parquet('{staged}/*.parquet')"
+            select = ", ".join(
+                c if c in have else f"NULL AS {c}" for c in _FACT_COLUMNS
+            )
             if mode == "overwrite":
                 con.execute(f"DROP TABLE IF EXISTS {table}")
             exists = con.execute(
@@ -244,10 +272,33 @@ def export_duckdb(
             if not exists:
                 con.execute(_CREATE_DAILY.format(table=table))
             con.execute(
-                f"INSERT OR REPLACE INTO {table} ({cols}) {src} "
-                "ORDER BY date, symbol"
+                f"INSERT OR REPLACE INTO {table} ({cols}) "
+                f"SELECT {select} FROM {scan} ORDER BY date, symbol",
+                [files],
             )
         finally:
             con.close()
     finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        if staging is not None:
+            shutil.rmtree(staging, ignore_errors=True)
+
+
+def _local_scan_files(da: DataFrame) -> list[str] | None:
+    """The local files ``da`` reads when it is a bare parquet scan — its
+    analyzed plan is the file relation alone, so its rows are exactly the
+    files' rows — else None (also for a scan of no file, or of a file
+    on another file system)."""
+    plan = da._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    relation = plan.relation()
+    if (
+        relation.getClass().getSimpleName() != "HadoopFsRelation"
+        or relation.fileFormat().getClass().getSimpleName()
+        != "ParquetFileFormat"
+    ):
+        return None
+    uris = [urlparse(f) for f in da.inputFiles()]
+    if not uris or any(u.scheme != "file" for u in uris):
+        return None
+    return [unquote(u.path) for u in uris]

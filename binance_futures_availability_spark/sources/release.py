@@ -16,12 +16,14 @@ DataFrame in ONE aggregate job (``release_stats``) — then diffs them
 (``verify_release``).
 
 Scale stance: the .duckdb artifact is a single-node distribution format by
-construction (the reference's users download one file); building it funnels
-through ``export_duckdb``'s parquet staging, which is Spark-parallel until
-the final single-file DuckDB load. The verification side never collects the
-fact table: ``release_stats`` is one partial-aggregated reduction to a single
-row at any scale, and the artifact side runs inside DuckDB on the
-already-single-node file.
+construction (the reference's users download one file); building it is one
+DuckDB ``read_parquet`` load. For a bare scan of committed local files (the
+cron tick's post-upsert read) DuckDB reads those files in place, with no
+Spark job and no copy; any other frame first goes through
+``export_duckdb``'s Spark-parallel parquet staging. The verification side
+never collects the fact table: ``release_stats`` is one partial-aggregated
+reduction to a single row at any scale, and the artifact side runs inside
+DuckDB on the already-single-node file.
 """
 
 from __future__ import annotations

@@ -10,11 +10,21 @@ Parity targets:
 
 Scale notes: the dedup window shuffles on the key — the same shuffle a MERGE
 would do. For a date-partitioned table, ``upsert_partitioned`` rewrites ONLY
-the touched date partitions (dynamic partition overwrite), which is the
-100 TB-safe path: work is proportional to the incoming dates, not the table.
+the touched date partitions, which is the 100 TB-safe path: work is
+proportional to the incoming dates, not the table.
+
+Every rewrite of data a table already holds (upsert overlap, ``merge_into``,
+``compact_partitions``, the rankings append, the streaming sinks' frozen
+artifacts) commits through ONE staging path, ``_publish``: the frame is
+written once to a unique sibling ``<root>.__staging__-<uuid>``, checked,
+and moved into place by Hadoop FileSystem renames — per partition the same
+delete-then-rename swap Spark's dynamic-overwrite commit performs, without
+a second write of the staged bytes.
 """
 
 from __future__ import annotations
+
+import uuid
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -132,65 +142,54 @@ def upsert_partitioned(
     version_col: str,
     partition_col: str = "date",
 ) -> None:
-    """Upsert by rewriting only the partitions present in ``incoming``.
-    Cost ∝ touched dates, not table size: nothing here lists or reads the
-    whole table.
+    """Upsert into the fact table by rewriting only the partitions present
+    in ``incoming``. Cost ∝ touched dates, not table size: nothing here
+    lists or reads the whole table.
 
     The touched partition values are collected from ``incoming`` (bounded
     by the lookback window) and their ``<partition_col>=<v>`` directories
     are checked through the Hadoop FileSystem, one existence call each.
+    The table's schema is the declared ``DAILY_AVAILABILITY``: no footer
+    is read to learn it, and a frame that does not match it is refused
+    before anything is written.
 
     - None exists (the common cron tick: the window is past the table's
       max date): the merge reduces to an intra-incoming dedup (latest
-      version per key). Its rows are NULL-filled to the table's schema,
-      read from ONE existing partition's footer, so a narrower incoming
-      frame (8 probe columns into the 17-column fact table) still commits
-      full-width files. A table with no partition yet — a missing root
-      included, so this is also the table's first write — takes the fact
-      table's schema, ``DAILY_AVAILABILITY``, and is written whole. One
-      partitioned write.
+      version per key), NULL-filled to the declared schema, so a narrower
+      incoming frame (8 probe columns into the 17-column fact table)
+      still commits full-width files. One dynamic partition overwrite,
+      set on the write itself (the session's conf is never changed); a
+      table with no partition yet — a missing root included, so this is
+      also the table's first write — is written whole, which also commits
+      the root's ``_SUCCESS`` marker (``table_exists``).
     - Some exist: only those directories are read (``basePath`` keeps the
-      partition column) and merged with ``incoming``. Spark cannot
-      overwrite a path that is also an input of the running plan, so the
-      merge is STAGED: written to a sibling directory, re-read (fresh
-      lineage, no dependency on the target) and then committed.
-
-    Every commit is a dynamic partition overwrite set on the write itself:
-    only the touched partition directories of the target are replaced, and
-    the session's conf is never changed.
+      partition column, old 8-column partitions read back NULL-filled)
+      and merged with ``incoming``. The merge is written ONCE, to a unique
+      staging sibling, and each staged partition directory is renamed
+      into place (``_publish``).
     """
     spark = incoming.sparkSession
     root = spark_existing_path.rstrip("/")
-    present = [
-        d
-        for d in _partition_dirs(spark, root, incoming, partition_col)
-        if _exists(spark, d)
-    ]
+    dirs = (
+        f"{root}/{n}" for n in _partition_names(spark, incoming, partition_col)
+    )
+    present = [d for d in dirs if _exists(spark, d)]
     if not present:
         # no overlap: the merge's lineage never references the target
-        schema = _partition_schema(spark, root, partition_col)
-        mode = "dynamic"
-        if schema is None:
-            # a table without partitions holds no rows: it takes the fact
-            # table's schema and is written whole, which also commits the
-            # root's _SUCCESS marker (table_exists)
-            schema, mode = DAILY_AVAILABILITY, "static"
-        empty = _widen(incoming.limit(0), schema)
+        empty = _widen(incoming.limit(0), DAILY_AVAILABILITY)
         merged = upsert(empty, incoming, key, version_col)
+        _check_schema(merged, DAILY_AVAILABILITY)
+        first = next(_table_partitions(spark, root, partition_col), None)
+        mode = "static" if first is None else "dynamic"
         _overwrite_partitions(merged, root, partition_col, mode)
         return
-    existing = spark.read.option("basePath", root).parquet(*present)
+    existing = (
+        spark.read.schema(DAILY_AVAILABILITY)
+        .option("basePath", root)
+        .parquet(*present)
+    )
     merged = upsert(existing, incoming, key, version_col)
-    staging = root + ".__staging__"
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-    try:
-        _overwrite_partitions(
-            spark.read.schema(merged.schema).parquet(staging),
-            root,
-            partition_col,
-        )
-    finally:
-        _rm_tree(spark, staging)
+    _publish(merged, root, DAILY_AVAILABILITY, partition_col)
 
 
 def _overwrite_partitions(
@@ -207,34 +206,118 @@ def _overwrite_partitions(
     )
 
 
-def _partition_dirs(
-    spark, root: str, df: DataFrame, partition_col: str
+def _check_schema(df: DataFrame, schema) -> None:
+    """Refuse ``df`` unless its columns are exactly ``schema``'s, by name
+    and type (order and nullability aside) — a check of the frame's
+    schema, no file is opened."""
+    got = {f.name: f.dataType for f in df.schema.fields}
+    want = {f.name: f.dataType for f in schema.fields}
+    if got != want:
+        diff = sorted(
+            n for n in got.keys() | want.keys() if got.get(n) != want.get(n)
+        )
+        raise ValueError(f"frame does not match the table schema: {diff}")
+
+
+def _publish(
+    df: DataFrame,
+    root: str,
+    schema=None,
+    partition_col: str | None = None,
+    drop=(),
+    check=None,
 ) -> list[str]:
-    """The ``<root>/<col>=<value>`` directory of every distinct
+    """Write ``df`` ONCE to a unique sibling ``<root>.__staging__-<uuid>``
+    and move it into ``root`` with Hadoop FS renames; the staging
+    directory is removed whatever happens. Returns the published names.
+
+    - ``schema``: the table's declared schema; a frame that does not match
+      it is refused before anything is written.
+    - ``partition_col``: each staged ``<col>=<v>`` directory replaces its
+      target (delete, then rename: the per-partition swap of Spark's
+      dynamic-overwrite commit, so the crash window is the same), and a
+      name in ``drop`` that was not staged is deleted. Without it, a
+      missing ``root`` becomes the staged directory (one rename, its
+      ``_SUCCESS`` marker included) and an existing ``root`` gains the
+      staged data files (an append: part-file names are unique per job).
+    - ``check()`` runs after the write, before anything is published; a
+      falsy return publishes nothing.
+    """
+    if schema is not None:
+        _check_schema(df, schema)
+    spark = df.sparkSession
+    root = root.rstrip("/")
+    staging = _staging_path(root)
+    out = df.write
+    if partition_col is not None:
+        out = out.partitionBy(partition_col)
+    try:
+        out.parquet(staging)
+        if check is not None and not check():
+            return []
+        fs, src = _hadoop_path(spark, staging)
+        dst = _hadoop_path(spark, root)[1]
+        if partition_col is None and not fs.exists(dst):
+            fs.mkdirs(dst.getParent())
+            _swap(fs, src, dst)
+            return [dst.getName()]
+        if partition_col is None:
+            names = [
+                st.getPath().getName()
+                for st in fs.listStatus(src)
+                if st.isFile()
+                and not st.getPath().getName().startswith(("_", "."))
+            ]
+        else:
+            names = list(_table_partitions(spark, staging, partition_col))
+        fs.mkdirs(dst)
+        Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        for name in names:
+            _swap(fs, Path(src, name), Path(dst, name))
+        for name in sorted(set(drop) - set(names)):
+            fs.delete(Path(dst, name), True)
+        return names
+    finally:
+        _rm_tree(spark, staging)
+
+
+def _staging_path(root: str) -> str:
+    """A staging sibling of ``root`` no other writer uses."""
+    return f"{root}.__staging__-{uuid.uuid4().hex}"
+
+
+def _swap(fs, src, dst) -> None:
+    """Replace ``dst`` by ``src``: delete, then rename."""
+    fs.delete(dst, True)
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src} -> {dst} failed")
+
+
+def _partition_names(spark, df: DataFrame, partition_col: str) -> list[str]:
+    """The ``<col>=<value>`` directory name of every distinct
     ``partition_col`` value in ``df``, named exactly as Spark's writer
     names them (value cast to string in the session time zone, then
     path-escaped; NULL is the default partition)."""
     catalog = spark.sparkContext._jvm.org.apache.spark.sql.catalyst.catalog
     dir_name = catalog.ExternalCatalogUtils.getPartitionPathString
     values = df.select(F.col(partition_col).cast("string")).distinct()
-    return [f"{root}/{dir_name(partition_col, r[0])}" for r in values.collect()]
+    return [dir_name(partition_col, r[0]) for r in values.collect()]
 
 
-def _partition_schema(spark, root: str, partition_col: str):
-    """The table's schema (data columns + the partition column) from the
-    footer of ONE of its partitions — never a listing of every partition.
-    None when the table holds no partition yet or ``root`` is missing."""
+def _table_partitions(spark, root: str, partition_col: str):
+    """Yield the names of the ``<col>=<value>`` directories directly under
+    ``root`` (a listing, no file opened); nothing when ``root`` is
+    missing."""
     fs, hroot = _hadoop_path(spark, root)
     if not fs.exists(hroot):
-        return None
+        return
+    prefix = partition_col + "="
     it = fs.listStatusIterator(hroot)
     while it.hasNext():
-        status = it.next()
-        name = status.getPath().getName()
-        if status.isDirectory() and name.startswith(partition_col + "="):
-            one = f"{root}/{name}"
-            return spark.read.option("basePath", root).parquet(one).schema
-    return None
+        st = it.next()
+        name = st.getPath().getName()
+        if st.isDirectory() and name.startswith(prefix):
+            yield name
 
 
 def _widen(df: DataFrame, schema) -> DataFrame:
@@ -309,51 +392,27 @@ def merge_into(
 
     Cost model: when ``partition_col`` is one of the ``on`` keys, every
     matched row lives in a partition the source also touches, so only the
-    source's partitions are staged and committed via dynamic partition
-    overwrite — cost ∝ source, exactly like ``upsert_partitioned``.
-    Otherwise the whole table must be rewritten (documented degradation:
-    file-level pruning of arbitrary-predicate merges is what a Delta log
-    buys; parquet alone cannot know which files hold matches without
-    reading them).
+    source's partitions are staged and published — cost ∝ source, exactly
+    like ``upsert_partitioned``; a touched partition whose rows were all
+    deleted is removed. Otherwise the whole table must be rewritten
+    (documented degradation: file-level pruning of arbitrary-predicate
+    merges is what a Delta log buys; parquet alone cannot know which
+    files hold matches without reading them): every staged partition is
+    published and every other partition of the table removed. Either way
+    the merge is written once (``_publish``).
     """
     spark = source.sparkSession
-    target = spark.read.parquet(target_path)
-    pruned = partition_col in on
-    if pruned:
+    root = target_path.rstrip("/")
+    target = spark.read.parquet(root)
+    if partition_col in on:
         touched = source.select(partition_col).distinct()
         scope = target.join(F.broadcast(touched), partition_col, "left_semi")
+        drop = _partition_names(spark, source, partition_col)
     else:
         scope = target
+        drop = list(_table_partitions(spark, root, partition_col))
     merged = merge(scope, source, on, when_matched, when_not_matched)
-
-    staging = target_path.rstrip("/") + ".__staging__"
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-    try:
-        # explicit schema: a merge that deletes every scoped row stages an
-        # EMPTY dataset (no part files), which schema inference rejects
-        staged = spark.read.schema(merged.schema).parquet(staging)
-        _overwrite_partitions(
-            staged,
-            target_path,
-            partition_col,
-            "dynamic" if pruned else "static",
-        )
-        if pruned:
-            # dynamic overwrite only replaces partitions PRESENT in the
-            # write: a touched partition whose rows were all deleted would
-            # keep its old directory and resurrect the rows — remove it.
-            touched_vals = {
-                r[0] for r in source.select(partition_col).distinct().collect()
-            }
-            surviving = {
-                r[0] for r in staged.select(partition_col).distinct().collect()
-            }
-            for v in sorted(touched_vals - surviving):
-                _rm_tree(
-                    spark, f"{target_path.rstrip('/')}/{partition_col}={v}"
-                )
-    finally:
-        _rm_tree(spark, staging)
+    _publish(merged, root, target.schema, partition_col, drop)
 
 
 def _hadoop_path(spark, path: str):
@@ -449,10 +508,10 @@ def compact_partitions(
 
     Cost ∝ fragmented partitions, not table size: the stats pass is one
     narrow scan; only offending partitions are re-read (partition-pruned
-    semi join), re-clustered so each holds ``files_per_partition`` write
-    tasks, and committed via the same staged dynamic-partition-overwrite
-    discipline as ``upsert_partitioned`` — untouched partitions are
-    never rewritten. Returns the compacted partition values.
+    filter), re-clustered so each holds ``files_per_partition`` write
+    tasks, written once to a staging sibling and published partition by
+    partition (``_publish``) — untouched partitions are never rewritten.
+    Returns the compacted partition values.
     """
     stats = partition_file_stats(spark, path, partition_col)
     fragged = [
@@ -461,7 +520,6 @@ def compact_partitions(
     ]
     if not fragged:
         return []
-    staging = path.rstrip("/") + ".__compact__"
     part = spark.read.parquet(path).filter(
         F.col(partition_col).isin(fragged)
     )
@@ -472,16 +530,7 @@ def compact_partitions(
             F.lit(files_per_partition),
         )
         shuffle_cols.append(salt)
-    (
-        part.repartition(*shuffle_cols)
-        .write.mode("overwrite")
-        .partitionBy(partition_col)
-        .parquet(staging)
-    )
-    try:
-        _overwrite_partitions(spark.read.parquet(staging), path, partition_col)
-    finally:
-        _rm_tree(spark, staging)
+    _publish(part.repartition(*shuffle_cols), path, part.schema, partition_col)
     return fragged
 
 

@@ -34,10 +34,12 @@ I/O goes through the Hadoop FileSystem, so a store on any scheme (local,
   marker-committed ones, so an orphan dir stays invisible until its replay
   commits it.
 - Frozen artifacts (PQ codebook, SQ grid, classifier weights, anomaly stats,
-  IVF seeds) are trained on the current batch only when the Hadoop FS
-  reports the artifact path missing. An artifact that exists is never
-  retrained: if it cannot be read, the batch fails and the stream retries
-  it, instead of splitting the output across two models.
+  IVF seeds) are trained on the current batch only when the artifact path
+  holds no committed table (``_SUCCESS``); a partial directory there is
+  removed and the artifact is staged to a sibling and renamed into place.
+  An artifact that exists is never retrained: if it cannot be read, the
+  batch fails and the stream retries it, instead of splitting the output
+  across two models.
 - The IVF sink appends into the index's ``vectors`` table instead of a
   per-batch dir, so a crash between that append and the marker write (a
   window of milliseconds) re-appends the batch on replay; a transactional
@@ -655,12 +657,16 @@ def _frozen_artifact(
     spark: SparkSession, store: str, name: str, train
 ) -> DataFrame:
     """The frozen artifact ``<store>/<name>``. ``train()`` builds it (from
-    the current batch) only when the Hadoop FS reports it missing; an
-    artifact that exists is read, never retrained, so an unreadable one
-    fails the batch and the stream retries it."""
+    the current batch) only when it is missing — no committed table
+    (``_SUCCESS``) at the path; a partial directory a crashed write left
+    there is removed first. The artifact is staged to a unique sibling
+    and renamed into place (``writer._publish``), so the path only ever
+    holds a complete artifact. One that exists is read, never retrained,
+    so an unreadable one fails the batch and the stream retries it."""
     path = f"{store.rstrip('/')}/{name}"
-    if not writer._exists(spark, path):
-        train().write.mode("overwrite").parquet(path)
+    if not writer.table_exists(spark, path):
+        writer._rm_tree(spark, path)
+        writer._publish(train(), path)
     return spark.read.parquet(path)
 
 

@@ -20,10 +20,25 @@ Scale shape: probing is driver-threaded for one day (the reference's
 (``probe_matrix_distributed``); the probe rows reach Spark as one local
 Arrow table, never through Python workers. A tick lists the fact table
 ONCE — the post-upsert read that validation, rankings and release share.
-The upsert itself reads and rewrites only the touched date partitions,
-found by one directory check per touched date (work ∝ lookback_days,
-not table size); validation is one per-date aggregation; the rankings
-append computes rows only past the archive watermark.
+Every table a tick reads is read with its declared schema
+(``DAILY_AVAILABILITY``, ``RANKINGS``): no footer is opened to infer one,
+and partitions that predate the volume columns read back NULL-filled.
+Every byte a tick writes is written once:
+
+- the upsert reads only the touched date partitions, found by one
+  directory check per touched date (work ∝ lookback_days, not table
+  size), writes their merge to a staging sibling and renames each staged
+  partition into place (``writer._publish``);
+- validation is one per-date aggregation;
+- the rankings append runs no Spark job past the archive's watermark
+  query unless a fact partition lies past that watermark (the fact
+  table's max date comes from the post-upsert listing); when one does,
+  the window pipeline is evaluated once: its rows are staged, the staged
+  dates are checked against the watermark and the part files are renamed
+  into the archive;
+- the release is built by DuckDB straight from the committed parquet
+  files of the post-upsert read (``export_duckdb``): no Spark job, no
+  staging copy of the table.
 """
 
 from __future__ import annotations
@@ -32,14 +47,16 @@ import datetime as dt
 import time
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .ingest.probe import BatchProber, results_to_df
 from .operators import rankings as rankings_ops
 from .schema import (
+    DAILY_AVAILABILITY,
     DAILY_AVAILABILITY_KEY,
     DAILY_AVAILABILITY_VERSION,
+    RANKINGS,
 )
 from .sources import writer
 from .validation import cross_check
@@ -160,7 +177,8 @@ def run_daily_update(
        a missing table the upsert is its full-width first write,
     4. warnings-only validation report,
     5. optional rankings append for dates past the archive watermark
-       (duplicate-date guard raises — the reference's concat rejection),
+       (a staged date at or below the watermark raises — the reference's
+       duplicate-date concat rejection),
     6. optional release artifact refresh (``release_path``): the updated
        table exported → gzip + sha256, the workflow's publish step
        (update-database.yml:403-410); the shipped stats block rides the
@@ -194,7 +212,7 @@ def run_daily_update(
         DAILY_AVAILABILITY_KEY,
         DAILY_AVAILABILITY_VERSION,
     )
-    da = spark.read.parquet(fact_path)
+    da = spark.read.schema(DAILY_AVAILABILITY).parquet(fact_path)
     lap("upsert")
 
     summary: dict = {
@@ -209,25 +227,9 @@ def run_daily_update(
 
     if rankings_path is not None:
         if writer.table_exists(spark, rankings_path):
-            archive = spark.read.parquet(rankings_path)
-            watermark = archive.agg(F.max("date").alias("hi")).collect()[0][
-                "hi"
-            ]
-            new_rows = rankings_ops.volume_rankings(
-                da,
-                start_date=watermark,
-                generated_at=generated_at,
-                sort=False,
+            summary["rankings_appended"] = _append_rankings(
+                da, rankings_path, generated_at
             )
-            if new_rows.take(1):
-                # duplicate-date guard (generate_volume_rankings.py:259-293)
-                # — raises before any write; then append ONLY the new rows'
-                # files (work ∝ new dates, the archive is never rewritten)
-                rankings_ops.incremental_append(archive, new_rows)
-                new_rows.write.mode("append").parquet(rankings_path)
-                summary["rankings_appended"] = True
-            else:
-                summary["rankings_appended"] = False
         else:
             rankings_ops.volume_rankings(
                 da, generated_at=generated_at, sort=False
@@ -244,3 +246,55 @@ def run_daily_update(
     lap("release")
     summary["timings"] = timings
     return summary
+
+
+def _append_rankings(
+    da: DataFrame, rankings_path: str, generated_at
+) -> bool:
+    """Append the rankings of the fact dates past the archive's watermark
+    (generate_volume_rankings.py:259-293); True when rows were appended.
+
+    Nothing past the watermark is found from the listing ``da`` already
+    holds (its partition directories), so that case runs no job beyond
+    the watermark query. Otherwise the window pipeline runs once, into a
+    staging sibling, observing the staged rows' count and min date on the
+    way; the staged dates are checked against the watermark (the
+    duplicate-date guard: raises before anything is published) and the
+    staged part files are renamed into the archive, which is never
+    rewritten."""
+    spark = da.sparkSession
+    archive = spark.read.schema(RANKINGS).parquet(rankings_path)
+    watermark = archive.agg(F.max("date")).first()[0]
+    latest = _max_partition_date(da)
+    if watermark is not None and (latest is None or latest <= watermark):
+        return False
+    staged = Observation()
+    new_rows = rankings_ops.volume_rankings(
+        da, start_date=watermark, generated_at=generated_at, sort=False
+    ).observe(
+        staged, F.min("date").alias("lo"), F.count(F.lit(1)).alias("n")
+    )
+
+    def guard() -> bool:
+        lo, n = staged.get["lo"], staged.get["n"]
+        if n and watermark is not None and lo <= watermark:
+            raise ValueError(
+                f"duplicate dates in append: {lo} <= watermark {watermark}"
+            )
+        return n > 0
+
+    return bool(
+        writer._publish(new_rows, rankings_path, RANKINGS, check=guard)
+    )
+
+
+def _max_partition_date(da: DataFrame) -> dt.date | None:
+    """The latest ``date=`` partition among the files ``da`` scans — read
+    off the listing the scan already holds, no job."""
+    dates = {
+        part[len("date="):]
+        for f in da.inputFiles()
+        for part in f.split("/")
+        if part.startswith("date=")
+    }
+    return dt.date.fromisoformat(max(dates)) if dates else None

@@ -297,3 +297,75 @@ def test_cli_publish_dry_run(spark, populated_da, tmp_path, capsys):
     plan = json_mod.loads(capsys.readouterr().out)
     assert plan["files"] == ["rel.duckdb.gz", "rel.duckdb.gz.sha256"]
     assert f"**Total Records**: {populated_da.count():,}" in plan["notes"]
+
+
+def test_release_in_place_equals_staged_export(spark, populated_da, tmp_path):
+    """The export of a bare scan of committed local files (DuckDB reads
+    them in place, no Spark job) and the staged export of the same table
+    give the same ordered rows and stats block — including a partition
+    whose files hold only the 8 probe columns, which the in-place read
+    NULL-fills. The in-place release verifies against the live table."""
+    import glob
+
+    from binance_futures_availability_spark.schema import (
+        DAILY_AVAILABILITY,
+        PROBE_RESULT,
+    )
+    from binance_futures_availability_spark.sources import duckdb_io
+
+    fact = str(tmp_path / "fact")
+    populated_da.write.partitionBy("date").parquet(fact)
+    narrow = [f.name for f in PROBE_RESULT.fields if f.name != "date"]
+    (
+        populated_da.filter(F.col("date") == F.lit(dt.date(2024, 1, 13)))
+        .withColumn("date", F.lit(dt.date(2024, 1, 16)))
+        .select(*narrow, "date")
+        .write.partitionBy("date")
+        .mode("append")
+        .parquet(fact)
+    )
+    narrow_files = glob.glob(fact + "/date=2024-01-16/*.parquet")
+    assert narrow_files
+    assert all(
+        len(duckdb.read_parquet(f).columns) == len(narrow) for f in narrow_files
+    )
+
+    da = spark.read.schema(DAILY_AVAILABILITY).parquet(fact)
+    assert duckdb_io._local_scan_files(da)
+    staged_da = da.filter(F.lit(True))
+    assert duckdb_io._local_scan_files(staged_da) is None
+
+    sc = spark.sparkContext
+    group = f"in-place-{tmp_path.name}"
+    sc.setJobGroup(group, "in-place export")
+    try:
+        duckdb_io.export_duckdb(da, str(tmp_path / "in_place.duckdb"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    duckdb_io.export_duckdb(staged_da, str(tmp_path / "staged.duckdb"))
+
+    def rows(db):
+        con = duckdb.connect(db, read_only=True)
+        try:
+            return con.execute("SELECT * FROM daily_availability").fetchall()
+        finally:
+            con.close()
+
+    in_place = rows(str(tmp_path / "in_place.duckdb"))
+    assert in_place == rows(str(tmp_path / "staged.duckdb"))
+    assert len(in_place) == populated_da.count() + 3
+    # the 8-column partition came back NULL-filled (column 8 is
+    # quote_volume_usdt, set on two of the 2024-01-13 rows it copies)
+    late = [r for r in in_place if r[0] == dt.date(2024, 1, 16)]
+    assert len(late) == 3 and all(r[8] is None for r in late)
+    for as_of in (None, dt.date(2024, 1, 16)):
+        assert release.database_stats(
+            str(tmp_path / "in_place.duckdb"), as_of=as_of
+        ) == release.database_stats(str(tmp_path / "staged.duckdb"), as_of=as_of)
+
+    out = str(tmp_path / "availability.duckdb.gz")
+    release.release_database(da, out)
+    ok, diffs = release.verify_release(da, out, as_of=dt.date(2024, 1, 16))
+    assert ok, diffs

@@ -312,7 +312,7 @@ def test_stream_upsert_sink_on_non_ospath_scheme(spark, tmp_path):
     assert [r["symbol"] for r in snap] == ["BTCUSDT"]
     # staging dir was cleaned through the same FS routing (the viewfs
     # mount resolves to tmp_path, where os.path CAN check the cleanup)
-    assert not os.path.exists(str(tmp_path / "fact.__staging__"))
+    assert not glob.glob(str(tmp_path / "fact.__staging__*"))
     mv = {r["date"]: r for r in spark.read.parquet(counts_uri).collect()}
     assert mv[D(2024, 1, 15)]["available_count"] == 1
 
@@ -1187,6 +1187,58 @@ def test_streaming_sq_append_sink_batch_equivalence(
         == want
     )
     assert not [n for n in os.listdir(cwd) if n.startswith("file:")]
+
+
+def test_streaming_sq_sink_recovers_from_partial_artifact(spark, tmp_path):
+    """A frozen-artifact directory a crashed first write left behind
+    (Spark's ``_temporary/`` only, no ``_SUCCESS``) counts as missing: the
+    sink removes it and trains, and the next run reads the frozen grid —
+    both runs succeed, and every batch is encoded against the one grid."""
+    import os
+
+    from binance_futures_availability_spark.operators import similarity
+    from binance_futures_availability_spark.streaming.pipeline import (
+        embedding_stream_source,
+        read_committed,
+        start_sq_append_sink,
+    )
+
+    schema = "vec_id long, embedding array<float>, label int"
+    incoming = str(tmp_path / "sq_in")
+    store = str(tmp_path / "sqstore")
+    os.makedirs(os.path.join(store, "grid", "_temporary", "0"))
+    batches = [
+        [(i, [float((i * 5 + j) % 7) for j in range(4)], 0) for i in range(8)],
+        [(i, [float(i), -2.0, 3.0, 0.5], 0) for i in range(8, 12)],
+    ]
+    for rows in batches:
+        spark.createDataFrame(rows, schema).write.mode("append").parquet(
+            incoming
+        )
+        start_sq_append_sink(
+            embedding_stream_source(spark, incoming),
+            store,
+            str(tmp_path / "sqckpt"),
+        ).start().awaitTermination(120)
+
+    grid_dir = os.path.join(store, "grid")
+    assert "_temporary" not in os.listdir(grid_dir)
+    assert os.path.exists(os.path.join(grid_dir, "_SUCCESS"))
+    assert not glob.glob(grid_dir + ".__staging__*")
+    grid = spark.read.parquet(grid_dir)
+    assert sorted(grid.collect()) == sorted(
+        similarity.sq_grid(spark.createDataFrame(batches[0], schema)).collect()
+    )
+    union = spark.createDataFrame(batches[0] + batches[1], schema)
+    want = sorted(
+        (r["vec_id"], r["i"], r["code"])
+        for r in similarity.sq_encode_with(union, grid).collect()
+    )
+    got = sorted(
+        (r["vec_id"], r["i"], r["code"])
+        for r in read_committed(spark, store, "codes").collect()
+    )
+    assert got == want
 
 
 def test_streaming_debounce_matches_batch(spark, tmp_path):

@@ -411,6 +411,101 @@ def test_daily_update_tick_job_shape_on_many_partitions(
     ]
 
 
+def test_daily_update_tick_writes_once_reads_declared(
+    spark, tmp_path, monkeypatch
+):
+    """The steady-state tick on the overlap path (every window date is
+    already in the table, the rankings archive is at the table's max
+    date): the table root is never a ``DataFrameWriter.parquet`` target
+    (the merge is staged and renamed into place), every read passes the
+    table's declared schema, the release step runs no Spark job, and the
+    tick runs a pinned number of jobs."""
+    from conftest import _row
+    from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
+
+    from binance_futures_availability_spark.sources import release, writer
+
+    fact = str(tmp_path / "fact")
+    rankings = str(tmp_path / "rankings")
+    first = dt.date(2024, 1, 1)  # 40 dates: 2024-01-01 .. 2024-02-09
+    seed = spark.createDataFrame(
+        [
+            _row(first + dt.timedelta(days=i), s, True, 10.0 + i)
+            for i in range(40)
+            for s in SYMS
+        ],
+        DAILY_AVAILABILITY,
+    )
+    writer.write_partitioned(seed, fact)
+    rankings_ops.volume_rankings(seed, sort=False).write.parquet(rankings)
+
+    reads, writes = [], []
+    real_schema = DataFrameReader.schema
+    real_read = DataFrameReader.parquet
+    real_write = DataFrameWriter.parquet
+
+    def schema_spy(self, schema):
+        self._declared = True
+        return real_schema(self, schema)
+
+    def read_spy(self, *paths, **kw):
+        reads.append((paths, getattr(self, "_declared", False)))
+        return real_read(self, *paths, **kw)
+
+    def write_spy(self, path, *a, **kw):
+        writes.append(path)
+        return real_write(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "schema", schema_spy)
+    monkeypatch.setattr(DataFrameReader, "parquet", read_spy)
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_spy)
+
+    sc = spark.sparkContext
+    group = f"tick-{tmp_path.name}"
+    release_group = f"release-{tmp_path.name}"
+    real_release = release.release_database
+
+    def release_spy(*a, **kw):
+        sc.setJobGroup(release_group, "release step")
+        try:
+            return real_release(*a, **kw)
+        finally:
+            sc.setJobGroup(group, "daily update tick")
+
+    monkeypatch.setattr(release, "release_database", release_spy)
+    sc.setJobGroup(group, "daily update tick")
+    try:
+        # window 2024-02-07 .. 2024-02-09: every date already stored
+        summary = update_mod.run_daily_update(
+            spark,
+            fact,
+            SYMS,
+            lookback_days=3,
+            today=dt.date(2024, 2, 10),
+            head=det_head,
+            rankings_path=rankings,
+            release_path=str(tmp_path / "release" / "a.duckdb.gz"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tick_reads, tick_writes = list(reads), list(writes)
+    assert summary["records"] == 6
+    assert summary["rankings_appended"] is False
+    assert summary["release_stats"]["total_records"] == 40 * len(SYMS)
+
+    root = fact.rstrip("/")
+    assert root not in [str(w).rstrip("/") for w in tick_writes]
+    assert all(str(w).startswith(root + ".__staging__-") for w in tick_writes)
+    read_paths = {p for paths, _ in tick_reads for p in paths}
+    assert {root, rankings, f"{root}/date=2024-02-07"} <= read_paths
+    assert all(declared for _, declared in tick_reads), tick_reads
+
+    tracker = sc.statusTracker()
+    assert list(tracker.getJobIdsForGroup(release_group)) == []
+    assert len(tracker.getJobIdsForGroup(group)) == 8
+
+
 # ------------------------------------------------------------- CLI verbs
 
 def test_cli_update_verb(spark, tmp_path, capsys, monkeypatch):

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from binance_futures_availability_spark.schema import DAILY_AVAILABILITY
 from binance_futures_availability_spark.sources import writer
 from binance_futures_availability_spark.validation import cross_check, differ
@@ -78,6 +80,7 @@ def test_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
         ],
     )
     writer.write_partitioned(initial, path)
+    import glob
     import os
 
     d1_dir = os.path.join(path, "date=2024-01-01")
@@ -113,7 +116,7 @@ def test_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
     )
     assert d1_mtime_after == d1_mtime_before
     # staging directory cleaned up
-    assert not os.path.exists(path + ".__staging__")
+    assert not glob.glob(path + ".__staging__*")
 
 
 def test_upsert_partitioned_insert_only_keeps_table_schema(spark, tmp_path):
@@ -167,6 +170,121 @@ def test_upsert_partitioned_insert_only_keeps_table_schema(spark, tmp_path):
         (D(2024, 1, 3), "BTCUSDT"): None,
         (D(2024, 1, 4), "ETHUSDT"): None,
     }
+
+
+def _fact_rows(spark, path):
+    return sorted(
+        (r["date"], r["symbol"], r["quote_volume_usdt"])
+        for r in spark.read.schema(DAILY_AVAILABILITY).parquet(path).collect()
+    )
+
+
+def _seed_fact(spark, path):
+    writer.write_partitioned(
+        make_da(
+            spark,
+            [
+                (D(2024, 1, 1), "BTCUSDT", True, 100.0),
+                (D(2024, 1, 2), "BTCUSDT", True, 200.0),
+            ],
+        ),
+        path,
+    )
+
+
+def test_upsert_publish_failure_keeps_old_rows(spark, tmp_path, monkeypatch):
+    """A failure in the publish step (after the merge is staged, before
+    any partition is swapped) leaves every committed row readable and no
+    staging directory behind."""
+    import glob
+
+    path = str(tmp_path / "fact")
+    _seed_fact(spark, path)
+    before = _fact_rows(spark, path)
+
+    def boom(fs, src, dst):
+        raise OSError("publish failed")
+
+    monkeypatch.setattr(writer, "_swap", boom)
+    with pytest.raises(OSError, match="publish failed"):
+        writer.upsert_partitioned(
+            path,
+            make_da(spark, [(D(2024, 1, 2), "BTCUSDT", True, 999.0)]),
+            ["date", "symbol"],
+            "probe_timestamp",
+        )
+    assert _fact_rows(spark, path) == before
+    assert not glob.glob(path + ".__staging__*")
+
+
+def test_upserts_stage_to_distinct_paths(spark, tmp_path, monkeypatch):
+    """Two upserts of the same table stage to two different siblings, so
+    concurrent writers never share a staging directory."""
+    import glob
+
+    path = str(tmp_path / "fact")
+    _seed_fact(spark, path)
+    staged = []
+    real = writer._staging_path
+
+    def spy(root):
+        staged.append(real(root))
+        return staged[-1]
+
+    monkeypatch.setattr(writer, "_staging_path", spy)
+    for qv in (1.0, 2.0):
+        writer.upsert_partitioned(
+            path,
+            make_da(spark, [(D(2024, 1, 2), "BTCUSDT", True, qv)]),
+            ["date", "symbol"],
+            "probe_timestamp",
+        )
+    assert len(staged) == 2 and staged[0] != staged[1]
+    assert all(p.startswith(path + ".__staging__-") for p in staged)
+    assert not glob.glob(path + ".__staging__*")
+    assert (D(2024, 1, 2), "BTCUSDT", 2.0) in _fact_rows(spark, path)
+
+
+def test_publish_refuses_a_frame_off_the_table_schema(
+    spark, tmp_path, monkeypatch
+):
+    """A merge whose columns are not the table's declared ones (an extra
+    column, a column of another type) is refused before anything is
+    written or published — on the overlap path and on the insert-only
+    path (a new date) alike."""
+    import glob
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    path = str(tmp_path / "fact")
+    _seed_fact(spark, path)
+    before = _fact_rows(spark, path)
+    writes = []
+    real = DataFrameWriter.parquet
+
+    def spy(self, target, *a, **kw):
+        writes.append(target)
+        return real(self, target, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    for day in (D(2024, 1, 2), D(2024, 1, 3)):
+        good = make_da(spark, [(day, "BTCUSDT", True, 999.0)])
+        for bad in (
+            good.withColumn("extra", F.lit(1)),
+            good.withColumn("status_code", F.col("status_code").cast("string")),
+        ):
+            with pytest.raises(ValueError, match="table schema"):
+                writer.upsert_partitioned(
+                    path, bad, ["date", "symbol"], "probe_timestamp"
+                )
+    with pytest.raises(ValueError, match="table schema"):
+        writer._publish(
+            good.drop("url"), path, DAILY_AVAILABILITY, partition_col="date"
+        )
+    assert writes == []
+    assert _fact_rows(spark, path) == before
+    assert not glob.glob(path + ".__staging__*")
 
 
 def test_writers_leave_session_overwrite_mode_static(spark, tmp_path):
