@@ -252,13 +252,6 @@ def _gate_head(url: str, timeout: float) -> tuple[int, dict]:
     return 404, {}
 
 
-#: daily_update artifacts already verified this process (skip marker stat)
-_UPDATE_READY: set = set()
-#: cached window-row handles per committed fact path (the _FACT_HANDLES
-#: discipline: repeat reads must not re-pay partition discovery)
-_UPDATE_HANDLES: dict = {}
-
-
 def _daily_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed cron tick (update.run_daily_update — reference
     run_daily_update.py:33-93 + validate.py + rankings append), gate-
@@ -269,79 +262,47 @@ def _daily_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     the committed table, so hash-parity proves the probe → results_to_df →
     upsert path loses nothing. Like duckdb_import_snapshot, the composed
     artifact is built once per PROCESS under the session-scoped scratch
-    dir (``_session_cache_root``): warm reps measure the query; every
+    dir (``_session_cache_root``), and the window rows are one registry
+    frame keyed on the committed path: warm reps measure the query; every
     fresh process re-pays the full pipeline rebuild (cold-pass cost)."""
     import datetime as dt
     import hashlib
     import os
 
+    from binance_futures_availability_spark import index_cache
     from binance_futures_availability_spark import update as update_mod
     from binance_futures_availability_spark.operators.availability import (
         _source_fingerprint,
     )
 
-    cache_root = _session_cache_root()
     key = "{}-{}".format(
         hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8],
         _source_fingerprint(sf_dir),
     )
-    root = os.path.join(cache_root, "daily_update")
-    os.makedirs(root, exist_ok=True)
-    fact = os.path.join(root, f"{key}_fact")
-    marker = os.path.join(root, f"{key}_done")
-    if fact not in _UPDATE_READY:
-        if not os.path.exists(marker):
-            # build in a process-private staging dir and commit with an
-            # atomic rename (the availability_fact discipline): two
-            # harness processes racing on a cold cache both produce
-            # correct results and exactly one commit wins — a direct
-            # overwrite of the shared path would tear the other's write
-            staging = f"{fact}.tmp-{os.getpid()}"
-            da = _da(spark, sf_dir)
-            writer.write_partitioned(
-                da.filter(F.col("date") >= F.lit(UPDATE_SEED_START)), staging
-            )
-            syms = sorted(
-                r["symbol"]
-                for r in da.select("symbol").distinct().collect()
-            )[:UPDATE_MAX_SYMBOLS]
-            update_mod.run_daily_update(
-                spark,
-                staging,
-                syms,
-                lookback_days=UPDATE_LOOKBACK,
-                today=dt.date.fromisoformat(UPDATE_TODAY),
-                head=_gate_head,
-                rankings_path=os.path.join(
-                    staging.rstrip("/") + "_rankings"
-                ),
-                generated_at=GEN_TS,
-            )
-            import shutil
+    fact = os.path.join(_session_cache_root(), "daily_update", f"{key}_fact")
+    start, end = _UPDATE_WINDOW
 
-            try:
-                os.rename(staging, fact)
-            except OSError:
-                # lost the race — the other process's deterministic
-                # build is byte-equivalent; use it
-                shutil.rmtree(staging, ignore_errors=True)
-            shutil.rmtree(staging + "_rankings", ignore_errors=True)
-            if not os.path.exists(marker):
-                with open(marker, "w", encoding="utf-8") as f:
-                    f.write("ok")
-        _UPDATE_READY.add(fact)
-    out = _UPDATE_HANDLES.get(fact)
-    if out is None:
-        start, end = update_mod.lookback_window(
-            dt.date.fromisoformat(UPDATE_TODAY), UPDATE_LOOKBACK
+    def build() -> DataFrame:
+        da = _da(spark, sf_dir)
+        writer.write_partitioned(
+            da.filter(F.col("date") >= F.lit(UPDATE_SEED_START)), fact
         )
-        out = (
+        syms = sorted(
+            r["symbol"] for r in da.select("symbol").distinct().collect()
+        )[:UPDATE_MAX_SYMBOLS]
+        update_mod.run_daily_update(
+            spark,
+            fact,
+            syms,
+            lookback_days=UPDATE_LOOKBACK,
+            today=dt.date.fromisoformat(UPDATE_TODAY),
+            head=_gate_head,
+            rankings_path=fact + "_rankings",
+            generated_at=GEN_TS,
+        )
+        return (
             spark.read.parquet(fact)
-            .filter(
-                F.col("date").between(
-                    F.lit(start.isoformat()), F.lit(end.isoformat())
-                )
-            )
+            .filter(F.col("date").between(F.lit(start), F.lit(end)))
             .select(
                 F.col("date").cast("date").alias("date"),
                 "symbol",
@@ -350,9 +311,9 @@ def _daily_update(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "status_code",
                 "url",
             )
-            .cache()
         )
-        _UPDATE_HANDLES[fact] = out
+
+    out = index_cache.cached_index(((fact,), "daily_update"), build)
     return gathered_sort(out, "date", "symbol")
 
 

@@ -45,9 +45,9 @@ the sweep cannot see (the on-disk IVF index, a re-imported fact table).
 persists (``tracked_persist``): storage returns to its baseline.
 
 Two caches stay outside the registry: ``operators.availability.
-_FACT_HANDLES`` (fact-table handles by path) and the module caches of
-``__spark_entry__``; the benchmark harness reads them by name. It also
-reads three names here: ``cached_index`` (wrapped to count builds and
+_FACT_HANDLES`` (fact-table handles by path) and ``__spark_entry__.
+_IVF_INDEX_PATHS`` (the on-disk IVF index per ``sf_dir``); the benchmark
+harness reads them by name. It also reads three names here: ``cached_index`` (wrapped to count builds and
 hits), ``_HANDLES`` (a hit is ``key in _HANDLES``) and ``storage_bytes``.
 """
 

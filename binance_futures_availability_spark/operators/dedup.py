@@ -1436,12 +1436,22 @@ def _star_contraction(pairs: DataFrame, max_iter: int):
     must not grow with rounds) and the fixpoint test is exact set
     equality (counts + exceptAll on DISTINCT sets): at the fixpoint the
     edges ARE the component map. Raises on non-convergence — partial
-    labels are silent wrong answers. r14: the input edge set is no
-    longer pre-counted in its own job — round 1's count materializes it,
-    comparisons start at round 2 — so an input that is ALREADY star-form
-    is detected one round later (and ``max_iter=1`` cannot certify a
-    pre-converged input); every normal invocation saves one whole
-    scheduling-floor job.
+    labels are silent wrong answers. The input edge set is not counted in
+    a job of its own: round 1 counts it in the same job as its own
+    output, so an input that is already star-form is certified in round 1
+    (``max_iter=1`` suffices for it).
+
+    Each round's exchanges are sized to the MEASURED edge sliver (guide
+    §2: scale-adaptive partitioning) by an explicit ``repartition(n,
+    "src")`` of the frames they shuffle — the session's shuffle width,
+    sized for corpus-scale scans, would multiply each of them into
+    width × rounds near-empty tasks (AQE would coalesce these, but the
+    bench pins AQE off and at cluster scale the sliver is still orders
+    below the session width). ``n`` comes from the previous round's
+    count; round 1's input is un-measured and keeps the session width —
+    also the honest cluster story (the first pass over an unknown edge
+    set should not be presized to 1). ``n`` is never above the session
+    width, and no session conf is changed.
     """
     E = (
         pairs.select(
@@ -1451,37 +1461,17 @@ def _star_contraction(pairs: DataFrame, max_iter: int):
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         # lazy checkpoint: round 1's count materializes it in the SAME
-        # job as round 1's own edges (r14 — the previous standalone
-        # E.count() was one whole scheduling-floor job on a loop whose
-        # sf0.1 cost is almost entirely the per-job floor)
+        # job as round 1's own edges
         .localCheckpoint(eager=False)
     )
-    # Size the iteration's shuffles to the MEASURED edge sliver (guide
-    # §2: scale-adaptive partitioning): each round is 3 tiny exchanges
-    # over the edge rows, and the session's shuffle width — sized for
-    # corpus-scale scans — multiplies every one of them into
-    # width × rounds near-empty tasks (AQE would coalesce these, but the
-    # bench pins AQE off and at cluster scale the sliver is still orders
-    # below the session width). r14: the width derives from round 1's
-    # measured OUTPUT count (set before round 2 plans), so the initial
-    # standalone count job is gone; round 1 runs at the session width —
-    # its input is un-measured, which is also the honest cluster story
-    # (the first pass over an unknown edge set should not be presized to
-    # 1). Never raised above the session setting; restored in the
-    # caller's finally before the (lazily-consumed) result plans.
-    spark = pairs.sparkSession
-    width_key = "spark.sql.shuffle.partitions"
-    old_width = spark.conf.get(width_key)
-    try:
-        return _star_rounds(E, spark, width_key, int(old_width), max_iter)
-    finally:
-        spark.conf.set(width_key, old_width)
+    session_width = int(
+        pairs.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    )
+    e_count = width = None  # unknown until round 1 is measured
 
+    def by_src(df: DataFrame) -> DataFrame:
+        return df if width is None else df.repartition(width, "src")
 
-def _star_rounds(
-    E: DataFrame, spark, width_key: str, session_width: int, max_iter: int
-):
-    e_count = None  # unknown until round 1 is measured (r14: no count job)
     wsrc = Window.partitionBy("src")
     for rounds in range(1, max_iter + 1):
         bidir = E.unionByName(
@@ -1493,9 +1483,8 @@ def _star_rounds(
         # — duplicates are swallowed by the small-star's distinct below,
         # saving an exchange.
         large = (
-            bidir.withColumn(
-                "__m", F.least(F.col("src"), F.min("dst").over(wsrc))
-            )
+            by_src(bidir)
+            .withColumn("__m", F.least(F.col("src"), F.min("dst").over(wsrc)))
             .filter(F.col("dst") > F.col("src"))
             .select(F.col("dst").alias("src"), F.col("__m").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
@@ -1506,8 +1495,9 @@ def _star_rounds(
         # self-loops (dst == m2) and duplicate (src → m2) emissions die
         # in the filter + distinct. Every dst < src in `large`, so
         # src != m2 always holds for the second emission.
-        small = (
-            large.withColumn("__m", F.min("dst").over(wsrc))
+        small = by_src(
+            by_src(large)
+            .withColumn("__m", F.min("dst").over(wsrc))
             .select(
                 F.explode(
                     F.array(
@@ -1524,32 +1514,23 @@ def _star_rounds(
                 F.col("__e.s").alias("src"), F.col("__e.d").alias("dst")
             )
             .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+        ).distinct().localCheckpoint(eager=False)
         # set equality on DISTINCT sets: equal counts gate the exceptAll
         # probe, so shrinking rounds pay one tiny count job and nothing
         # else (`and` short-circuits). The count doubles as the lazy
-        # checkpoint's materializing action — one job per round, not two.
-        # Round 1 has no previous count (r14: the standalone E.count()
-        # job is gone), so it never probes — an already-converged input
-        # is simply detected one round later, trading a rare extra round
-        # for one fewer job on every normal invocation. (A fused
-        # left-join probe computing |small| and |small ∩ E| in one job
-        # was built and REJECTED by measurement: the per-round SMJ +
-        # single-partition agg cost more than the one exceptAll job it
-        # saves at the converged round — warm 0.74 → 1.04 s isolated.)
-        small_count = small.count()
-        stable = (
-            e_count is not None
-            and small_count == e_count
-            and small.exceptAll(E).isEmpty()
-        )
+        # checkpoint's materializing action — one job per round, not two;
+        # round 1's job also counts (and materializes) the input edges.
+        # (A fused left-join probe computing |small| and |small ∩ E| in
+        # one job was built and REJECTED by measurement: the per-round
+        # SMJ + single-partition agg cost more than the one exceptAll job
+        # it saves at the converged round — warm 0.74 → 1.04 s isolated.)
+        if e_count is None:
+            e_count, small_count = _side_counts(E, small)
+        else:
+            small_count = small.count()
+        stable = small_count == e_count and small.exceptAll(E).isEmpty()
         # presize the NEXT round's exchanges to the measured sliver
-        spark.conf.set(
-            width_key,
-            str(max(1, min(session_width, -(-small_count // 50_000)))),
-        )
+        width = max(1, min(session_width, -(-small_count // 50_000)))
         E, e_count = small, small_count
         if stable:
             # measured size of the converged map, for the caller's
@@ -1561,6 +1542,16 @@ def _star_rounds(
         "rounds — returning partial components would be a silent wrong "
         "answer; raise max_iter"
     )
+
+
+def _side_counts(left: DataFrame, right: DataFrame) -> tuple[int, int]:
+    """(|left|, |right|) in ONE job: both frames tagged, unioned and
+    counted per side."""
+    tagged = left.select(F.lit(0).alias("__r")).unionByName(
+        right.select(F.lit(1).alias("__r"))
+    )
+    n, n_right = tagged.agg(F.count(F.lit(1)), F.sum("__r")).first()
+    return n - (n_right or 0), n_right or 0
 
 
 def duplicate_clusters(

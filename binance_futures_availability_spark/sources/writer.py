@@ -13,13 +13,17 @@ would do. For a date-partitioned table, ``upsert_partitioned`` rewrites ONLY
 the touched date partitions, which is the 100 TB-safe path: work is
 proportional to the incoming dates, not the table.
 
-Every rewrite of data a table already holds (upsert overlap, ``merge_into``,
-``compact_partitions``, the rankings append, the streaming sinks' frozen
-artifacts) commits through ONE staging path, ``_publish``: the frame is
-written once to a unique sibling ``<root>.__staging__-<uuid>``, checked,
-and moved into place by Hadoop FileSystem renames — per partition the same
-delete-then-rename swap Spark's dynamic-overwrite commit performs, without
-a second write of the staged bytes.
+One commit rule: every update of a table — the upsert (a first write,
+new dates and overlap alike), ``merge_into``, ``compact_partitions``,
+the rankings archive's first write and appends, the streaming sinks'
+frozen artifacts — commits through ONE staging path, ``_publish``: the frame is written once
+to a unique sibling ``<root>.__staging__-<uuid>``, checked, and moved
+into place by Hadoop FileSystem renames — the whole directory when the
+root holds no table yet, otherwise per partition the same
+delete-then-rename swap Spark's dynamic-overwrite commit performs,
+without a second write of the staged bytes. Only the whole-table writers
+(``write_partitioned``, ``write_bucketed``, ``write_zordered``) write
+their target directly.
 """
 
 from __future__ import annotations
@@ -149,24 +153,17 @@ def upsert_partitioned(
     The touched partition values are collected from ``incoming`` (bounded
     by the lookback window) and their ``<partition_col>=<v>`` directories
     are checked through the Hadoop FileSystem, one existence call each.
-    The table's schema is the declared ``DAILY_AVAILABILITY``: no footer
-    is read to learn it, and a frame that does not match it is refused
-    before anything is written.
-
-    - None exists (the common cron tick: the window is past the table's
-      max date): the merge reduces to an intra-incoming dedup (latest
-      version per key), NULL-filled to the declared schema, so a narrower
-      incoming frame (8 probe columns into the 17-column fact table)
-      still commits full-width files. One dynamic partition overwrite,
-      set on the write itself (the session's conf is never changed); a
-      table with no partition yet — a missing root included, so this is
-      also the table's first write — is written whole, which also commits
-      the root's ``_SUCCESS`` marker (``table_exists``).
-    - Some exist: only those directories are read (``basePath`` keeps the
-      partition column, old 8-column partitions read back NULL-filled)
-      and merged with ``incoming``. The merge is written ONCE, to a unique
-      staging sibling, and each staged partition directory is renamed
-      into place (``_publish``).
+    Only the ones that exist — possibly none — are read (``basePath``
+    keeps the partition column, old 8-column partitions read back
+    NULL-filled), merged with ``incoming`` (latest version per key) and
+    committed by ``_publish``: the merge is written once to a unique
+    staging sibling and each staged partition is renamed into place. The
+    merge is NULL-filled to the declared ``DAILY_AVAILABILITY``, so a
+    narrower incoming frame (8 probe columns into the 17-column fact
+    table) still commits full-width files, and a frame that does not match
+    the declared schema is refused before anything is written. On a
+    missing table ``_publish`` makes the staged directory the table, its
+    ``_SUCCESS`` marker (``table_exists``) included.
     """
     spark = incoming.sparkSession
     root = spark_existing_path.rstrip("/")
@@ -174,36 +171,17 @@ def upsert_partitioned(
         f"{root}/{n}" for n in _partition_names(spark, incoming, partition_col)
     )
     present = [d for d in dirs if _exists(spark, d)]
-    if not present:
-        # no overlap: the merge's lineage never references the target
-        empty = _widen(incoming.limit(0), DAILY_AVAILABILITY)
-        merged = upsert(empty, incoming, key, version_col)
-        _check_schema(merged, DAILY_AVAILABILITY)
-        first = next(_table_partitions(spark, root, partition_col), None)
-        mode = "static" if first is None else "dynamic"
-        _overwrite_partitions(merged, root, partition_col, mode)
-        return
-    existing = (
-        spark.read.schema(DAILY_AVAILABILITY)
-        .option("basePath", root)
-        .parquet(*present)
-    )
+    if present:
+        existing = (
+            spark.read.schema(DAILY_AVAILABILITY)
+            .option("basePath", root)
+            .parquet(*present)
+        )
+    else:
+        # the merge's lineage never references the target
+        existing = _widen(incoming.limit(0), DAILY_AVAILABILITY)
     merged = upsert(existing, incoming, key, version_col)
     _publish(merged, root, DAILY_AVAILABILITY, partition_col)
-
-
-def _overwrite_partitions(
-    df: DataFrame, path: str, partition_col: str, mode: str = "dynamic"
-) -> None:
-    """Commit ``df`` partitioned by ``partition_col``. ``dynamic`` replaces
-    only the partitions ``df`` holds; ``static`` replaces the whole table.
-    The mode is an option of this one write, never a session conf."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", mode)
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
 
 
 def _check_schema(df: DataFrame, schema) -> None:
@@ -233,13 +211,16 @@ def _publish(
 
     - ``schema``: the table's declared schema; a frame that does not match
       it is refused before anything is written.
-    - ``partition_col``: each staged ``<col>=<v>`` directory replaces its
-      target (delete, then rename: the per-partition swap of Spark's
-      dynamic-overwrite commit, so the crash window is the same), and a
-      name in ``drop`` that was not staged is deleted. Without it, a
-      missing ``root`` becomes the staged directory (one rename, its
-      ``_SUCCESS`` marker included) and an existing ``root`` gains the
-      staged data files (an append: part-file names are unique per job).
+    - A ``root`` that holds no table yet — missing, or without a partition
+      (``partition_col``) or a ``_SUCCESS`` marker (no ``partition_col``)
+      — is replaced by the whole staged directory in one rename, its
+      ``_SUCCESS`` marker included: the table's first write.
+    - Otherwise, with ``partition_col``, each staged ``<col>=<v>``
+      directory replaces its target (delete, then rename: the
+      per-partition swap of Spark's dynamic-overwrite commit, so the crash
+      window is the same), and a name in ``drop`` that was not staged is
+      deleted; without it, ``root`` gains the staged data files (an
+      append: part-file names are unique per job).
     - ``check()`` runs after the write, before anything is published; a
       falsy return publishes nothing.
     """
@@ -257,7 +238,11 @@ def _publish(
             return []
         fs, src = _hadoop_path(spark, staging)
         dst = _hadoop_path(spark, root)[1]
-        if partition_col is None and not fs.exists(dst):
+        if partition_col is None:
+            first = not table_exists(spark, root)
+        else:
+            first = not any(_table_partitions(spark, root, partition_col))
+        if first:
             fs.mkdirs(dst.getParent())
             _swap(fs, src, dst)
             return [dst.getName()]
@@ -270,7 +255,6 @@ def _publish(
             ]
         else:
             names = list(_table_partitions(spark, staging, partition_col))
-        fs.mkdirs(dst)
         Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
         for name in names:
             _swap(fs, Path(src, name), Path(dst, name))

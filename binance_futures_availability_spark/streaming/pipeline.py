@@ -658,14 +658,13 @@ def _frozen_artifact(
 ) -> DataFrame:
     """The frozen artifact ``<store>/<name>``. ``train()`` builds it (from
     the current batch) only when it is missing — no committed table
-    (``_SUCCESS``) at the path; a partial directory a crashed write left
-    there is removed first. The artifact is staged to a unique sibling
-    and renamed into place (``writer._publish``), so the path only ever
-    holds a complete artifact. One that exists is read, never retrained,
-    so an unreadable one fails the batch and the stream retries it."""
+    (``_SUCCESS``) at the path. The artifact is staged to a unique sibling
+    and renamed into place over whatever partial directory a crashed
+    write left there (``writer._publish``), so the path only ever holds a
+    complete artifact. One that exists is read, never retrained, so an
+    unreadable one fails the batch and the stream retries it."""
     path = f"{store.rstrip('/')}/{name}"
     if not writer.table_exists(spark, path):
-        writer._rm_tree(spark, path)
         writer._publish(train(), path)
     return spark.read.parquet(path)
 

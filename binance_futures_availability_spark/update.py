@@ -23,19 +23,23 @@ ONCE — the post-upsert read that validation, rankings and release share.
 Every table a tick reads is read with its declared schema
 (``DAILY_AVAILABILITY``, ``RANKINGS``): no footer is opened to infer one,
 and partitions that predate the volume columns read back NULL-filled.
-Every byte a tick writes is written once:
+Every byte a tick writes is written once, and every table it writes is
+committed by ONE path, ``writer._publish`` (staged to a unique sibling,
+checked, renamed into place):
 
-- the upsert reads only the touched date partitions, found by one
-  directory check per touched date (work ∝ lookback_days, not table
-  size), writes their merge to a staging sibling and renames each staged
-  partition into place (``writer._publish``);
-- validation is one per-date aggregation;
+- the upsert reads only the touched date partitions that exist (possibly
+  none), found by one directory check per touched date (work ∝
+  lookback_days, not table size), and publishes their merge with the
+  probe rows partition by partition — or, on a missing table, as the
+  whole table;
+- validation is one per-date aggregation, which also counts the rows
+  each date can rank;
 - the rankings append runs no Spark job past the archive's watermark
-  query unless a fact partition lies past that watermark (the fact
-  table's max date comes from the post-upsert listing); when one does,
-  the window pipeline is evaluated once: its rows are staged, the staged
-  dates are checked against the watermark and the part files are renamed
-  into the archive;
+  query unless that census has a rankable date past the watermark; when
+  it has, the window pipeline is evaluated once: its rows are staged,
+  the staged dates are checked against the watermark and the part files
+  are renamed into the archive. A missing archive is created the same
+  way, with no watermark;
 - the release is built by DuckDB straight from the committed parquet
   files of the post-upsert read (``export_duckdb``): no Spark job, no
   staging copy of the table.
@@ -98,18 +102,44 @@ def validate_report(
 
     Continuity and completeness come from ONE aggregation — the count of
     available rows per date, collected (bounded by the calendar, not the
-    table). A calendar date in [first date, ``end``] with no row is a gap,
-    as ``continuity.find_gaps`` reports it; a date with
-    0 < available < ``min_symbols`` is incomplete, as
-    ``completeness.incomplete_dates`` reports it (a date whose rows are all
-    unavailable has no available cohort, so it is neither).
+    table; ``_date_census``). A calendar date in [first date, ``end``]
+    with no row is a gap, as ``continuity.find_gaps`` reports it; a date
+    with 0 < available < ``min_symbols`` is incomplete, as
+    ``completeness.incomplete_dates`` reports it (a date whose rows are
+    all unavailable has no available cohort, so it is neither).
     """
-    available = {
-        r["date"]: r["n"]
+    return _report(da, _date_census(da), end_date, min_symbols, api_symbols)
+
+
+def _date_census(da: DataFrame) -> dict:
+    """date → (available rows, rankable rows) for every date of ``da``,
+    in one aggregation. Rankable rows are the rankings cohort: available,
+    with a ``quote_volume_usdt``."""
+    return {
+        r["date"]: (r["n"], r["ranked"])
         for r in da.groupBy("date")
-        .agg(F.count(F.when(F.col("available"), 1)).alias("n"))
+        .agg(
+            F.count(F.when(F.col("available"), 1)).alias("n"),
+            F.count(
+                F.when(
+                    F.col("available") & F.col("quote_volume_usdt").isNotNull(),
+                    1,
+                )
+            ).alias("ranked"),
+        )
         .collect()
     }
+
+
+def _report(
+    da: DataFrame,
+    census: dict,
+    end_date: dt.date | str | None = None,
+    min_symbols: int = 5,
+    api_symbols: DataFrame | None = None,
+) -> dict:
+    """``validate_report`` over an already collected ``_date_census``."""
+    available = {d: n for d, (n, _) in census.items()}
     if not available:
         return {
             "empty": True,
@@ -178,7 +208,8 @@ def run_daily_update(
     4. warnings-only validation report,
     5. optional rankings append for dates past the archive watermark
        (a staged date at or below the watermark raises — the reference's
-       duplicate-date concat rejection),
+       duplicate-date concat rejection); a missing archive is created
+       from the whole table,
     6. optional release artifact refresh (``release_path``): the updated
        table exported → gzip + sha256, the workflow's publish step
        (update-database.yml:403-410); the shipped stats block rides the
@@ -221,20 +252,18 @@ def run_daily_update(
         "available": sum(1 for r in records if r["available"]),
         "unavailable": sum(1 for r in records if not r["available"]),
     }
+    census = (
+        _date_census(da) if validate or rankings_path is not None else {}
+    )
     if validate:
-        summary["validation"] = validate_report(da, end_date=end)
+        summary["validation"] = _report(da, census, end_date=end)
     lap("validate")
 
     if rankings_path is not None:
-        if writer.table_exists(spark, rankings_path):
-            summary["rankings_appended"] = _append_rankings(
-                da, rankings_path, generated_at
-            )
-        else:
-            rankings_ops.volume_rankings(
-                da, generated_at=generated_at, sort=False
-            ).write.mode("overwrite").parquet(rankings_path)
-            summary["rankings_appended"] = True
+        latest = max((d for d, (_, r) in census.items() if r), default=None)
+        summary["rankings_appended"] = _append_rankings(
+            da, rankings_path, generated_at, latest
+        )
     lap("rankings")
 
     if release_path is not None:
@@ -249,25 +278,30 @@ def run_daily_update(
 
 
 def _append_rankings(
-    da: DataFrame, rankings_path: str, generated_at
+    da: DataFrame, rankings_path: str, generated_at, latest: dt.date | None
 ) -> bool:
     """Append the rankings of the fact dates past the archive's watermark
-    (generate_volume_rankings.py:259-293); True when rows were appended.
+    (generate_volume_rankings.py:259-293); True when rows were appended
+    or the archive was created. ``latest`` is the last fact date with
+    rankable rows (``_date_census``), None when there is none.
 
-    Nothing past the watermark is found from the listing ``da`` already
-    holds (its partition directories), so that case runs no job beyond
-    the watermark query. Otherwise the window pipeline runs once, into a
+    A missing archive has no watermark: the whole fact table is ranked
+    and the archive created, empty when nothing ranks. An existing one
+    whose watermark ``latest`` does not pass runs no job beyond the
+    watermark query. Otherwise the window pipeline runs once, into a
     staging sibling, observing the staged rows' count and min date on the
     way; the staged dates are checked against the watermark (the
     duplicate-date guard: raises before anything is published) and the
     staged part files are renamed into the archive, which is never
-    rewritten."""
+    rewritten (``writer._publish``)."""
     spark = da.sparkSession
-    archive = spark.read.schema(RANKINGS).parquet(rankings_path)
-    watermark = archive.agg(F.max("date")).first()[0]
-    latest = _max_partition_date(da)
-    if watermark is not None and (latest is None or latest <= watermark):
-        return False
+    first = not writer.table_exists(spark, rankings_path)
+    watermark = None
+    if not first:
+        archive = spark.read.schema(RANKINGS).parquet(rankings_path)
+        watermark = archive.agg(F.max("date")).first()[0]
+        if latest is None or (watermark is not None and latest <= watermark):
+            return False
     staged = Observation()
     new_rows = rankings_ops.volume_rankings(
         da, start_date=watermark, generated_at=generated_at, sort=False
@@ -281,20 +315,8 @@ def _append_rankings(
             raise ValueError(
                 f"duplicate dates in append: {lo} <= watermark {watermark}"
             )
-        return n > 0
+        return first or n > 0
 
     return bool(
         writer._publish(new_rows, rankings_path, RANKINGS, check=guard)
     )
-
-
-def _max_partition_date(da: DataFrame) -> dt.date | None:
-    """The latest ``date=`` partition among the files ``da`` scans — read
-    off the listing the scan already holds, no job."""
-    dates = {
-        part[len("date="):]
-        for f in da.inputFiles()
-        for part in f.split("/")
-        if part.startswith("date=")
-    }
-    return dt.date.fromisoformat(max(dates)) if dates else None

@@ -769,6 +769,29 @@ def test_duplicate_clusters_raises_instead_of_partial_labels(spark):
         ).collect()
 
 
+def test_star_contraction_certifies_star_form_input_in_one_round(spark):
+    """An edge set already in star form (every edge points at its
+    component's minimum) is the fixpoint: ``max_iter=1`` certifies it
+    instead of raising, on ``_star_contraction`` and on the distributed
+    path of ``duplicate_clusters``."""
+    pairs = spark.createDataFrame(
+        [(2, 1), (1, 3), (7, 5), (5, 9)], ["id_a", "id_b"]
+    )
+    stars, rounds = dedup._star_contraction(pairs, max_iter=1)
+    assert rounds == 1
+    assert {(r["src"], r["dst"]) for r in stars.collect()} == {
+        (2, 1), (3, 1), (7, 5), (9, 5)
+    }
+    docs = spark.createDataFrame([(i, "x") for i in range(10)], ["doc_id", "text"])
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.duplicate_clusters(
+            docs, pairs, max_iter=1, driver_pair_limit=0
+        ).collect()
+    }
+    assert got == {0: 0, 1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 6, 7: 5, 8: 8, 9: 5}
+
+
 # ---------------------------------------------------- corpus management
 
 

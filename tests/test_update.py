@@ -17,6 +17,7 @@ import json
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from binance_futures_availability_spark import update as update_mod
 from binance_futures_availability_spark.cli.main import main as cli_main
@@ -168,7 +169,7 @@ def test_run_daily_update_probe_failure_raises(spark, tmp_path):
 
 
 def test_run_daily_update_rankings_watermark_append(
-    spark, populated_da, tmp_path
+    spark, populated_da, tmp_path, monkeypatch
 ):
     """The rankings leg appends ONLY rows past the archive watermark and
     reports False when nothing new ranks (probe rows carry no volume)."""
@@ -205,8 +206,17 @@ def test_run_daily_update_rankings_watermark_append(
     )
 
     # second tick: watermark is now D3; the new probe rows have NULL
-    # volume -> nothing ranks -> append skipped, archive unchanged
+    # volume -> nothing ranks -> append skipped without staging the
+    # window pipeline, archive unchanged
     n_before = archive.count()
+    writes = []
+    real_write = DataFrameWriter.parquet
+
+    def write_spy(self, path, *a, **kw):
+        writes.append(str(path))
+        return real_write(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_spy)
     summary2 = update_mod.run_daily_update(
         spark,
         fact,
@@ -216,7 +226,9 @@ def test_run_daily_update_rankings_watermark_append(
         rankings_path=rank_path,
         generated_at="2024-02-03 00:00:00",
     )
+    monkeypatch.undo()
     assert summary2["rankings_appended"] is False
+    assert not [w for w in writes if w.startswith(rank_path)], writes
     assert spark.read.parquet(rank_path).count() == n_before
 
 
@@ -421,7 +433,7 @@ def test_daily_update_tick_writes_once_reads_declared(
     table's declared schema, the release step runs no Spark job, and the
     tick runs a pinned number of jobs."""
     from conftest import _row
-    from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
+    from pyspark.sql.readwriter import DataFrameReader
 
     from binance_futures_availability_spark.sources import release, writer
 
@@ -504,6 +516,88 @@ def test_daily_update_tick_writes_once_reads_declared(
     tracker = sc.statusTracker()
     assert list(tracker.getJobIdsForGroup(release_group)) == []
     assert len(tracker.getJobIdsForGroup(group)) == 8
+
+
+@pytest.mark.parametrize("case", ["insert_only", "first_tick"])
+def test_daily_update_tick_commits_by_publish(
+    spark, populated_da, tmp_path, monkeypatch, case
+):
+    """A tick whose window holds only new dates (insert-only) and the
+    first tick on a missing table (with a missing rankings archive)
+    commit through the one staging path: neither the fact root nor the
+    rankings root is ever a ``DataFrameWriter.parquet`` target, and both
+    are committed tables afterwards."""
+    from binance_futures_availability_spark.sources import writer
+
+    fact = str(tmp_path / "fact")
+    rankings = str(tmp_path / "rankings")
+    if case == "insert_only":
+        writer.write_partitioned(populated_da, fact)
+    writes = []
+    real_write = DataFrameWriter.parquet
+
+    def write_spy(self, path, *a, **kw):
+        writes.append(str(path).rstrip("/"))
+        return real_write(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_spy)
+    summary = update_mod.run_daily_update(
+        spark,
+        fact,
+        SYMS,
+        lookback_days=2,
+        today=dt.date(2024, 2, 3),
+        head=det_head,
+        rankings_path=rankings,
+    )
+    monkeypatch.undo()
+    assert summary["records"] == 4
+    assert summary["rankings_appended"] is True
+    assert writes and all(
+        w.startswith((fact + ".__staging__-", rankings + ".__staging__-"))
+        for w in writes
+    ), writes
+    assert writer.table_exists(spark, fact)
+    assert writer.table_exists(spark, rankings)
+    n_fact = 4 + (8 if case == "insert_only" else 0)
+    assert spark.read.parquet(fact).count() == n_fact
+    assert not glob.glob(fact + ".__staging__*")
+    assert not glob.glob(rankings + ".__staging__*")
+
+
+def test_daily_update_rankings_first_write_failure_leaves_nothing(
+    spark, populated_da, tmp_path, monkeypatch
+):
+    """A failure while publishing the rankings archive's first write
+    leaves no archive and no staging directory; the next tick creates
+    the archive."""
+    from binance_futures_availability_spark.sources import writer
+
+    fact = str(tmp_path / "fact")
+    rankings = str(tmp_path / "rankings")
+    writer.write_partitioned(populated_da, fact)
+    real_swap = writer._swap
+
+    def boom(fs, src, dst):
+        if str(dst.toUri().getPath()).rstrip("/") == rankings:
+            raise OSError("publish failed")
+        return real_swap(fs, src, dst)
+
+    monkeypatch.setattr(writer, "_swap", boom)
+    kw = dict(
+        lookback_days=1,
+        today=dt.date(2024, 2, 2),
+        head=det_head,
+        rankings_path=rankings,
+    )
+    with pytest.raises(OSError, match="publish failed"):
+        update_mod.run_daily_update(spark, fact, SYMS, **kw)
+    assert not glob.glob(rankings + "*")
+    monkeypatch.undo()
+    summary = update_mod.run_daily_update(spark, fact, SYMS, **kw)
+    assert summary["rankings_appended"] is True
+    assert writer.table_exists(spark, rankings)
+    assert not glob.glob(rankings + ".__staging__*")
 
 
 # ------------------------------------------------------------- CLI verbs

@@ -5,7 +5,9 @@ scripts/verify-database-consistency.py:266-339 (row diff)."""
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
+import pathlib
 
 import pytest
 
@@ -192,15 +194,23 @@ def _seed_fact(spark, path):
     )
 
 
-def test_upsert_publish_failure_keeps_old_rows(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("case", ["overlap", "insert_only", "first_write"])
+def test_upsert_publish_failure_keeps_old_rows(
+    spark, tmp_path, monkeypatch, case
+):
     """A failure in the publish step (after the merge is staged, before
-    any partition is swapped) leaves every committed row readable and no
-    staging directory behind."""
+    anything is swapped) leaves every committed row readable — or, on a
+    first write, no table at all — and no staging directory behind: on
+    the overlap path, for a new date into an existing table, and for a
+    missing table."""
     import glob
+    import os
 
     path = str(tmp_path / "fact")
-    _seed_fact(spark, path)
-    before = _fact_rows(spark, path)
+    day = D(2024, 1, 3) if case == "insert_only" else D(2024, 1, 2)
+    if case != "first_write":
+        _seed_fact(spark, path)
+        before = _fact_rows(spark, path)
 
     def boom(fs, src, dst):
         raise OSError("publish failed")
@@ -209,11 +219,14 @@ def test_upsert_publish_failure_keeps_old_rows(spark, tmp_path, monkeypatch):
     with pytest.raises(OSError, match="publish failed"):
         writer.upsert_partitioned(
             path,
-            make_da(spark, [(D(2024, 1, 2), "BTCUSDT", True, 999.0)]),
+            make_da(spark, [(day, "BTCUSDT", True, 999.0)]),
             ["date", "symbol"],
             "probe_timestamp",
         )
-    assert _fact_rows(spark, path) == before
+    if case == "first_write":
+        assert not os.path.exists(path)
+    else:
+        assert _fact_rows(spark, path) == before
     assert not glob.glob(path + ".__staging__*")
 
 
@@ -288,8 +301,8 @@ def test_publish_refuses_a_frame_off_the_table_schema(
 
 
 def test_writers_leave_session_overwrite_mode_static(spark, tmp_path):
-    """The partition-overwrite mode rides on each write as an option: no
-    writer changes the session's conf, whose value stays static."""
+    """No writer changes the session's partition-overwrite mode, which
+    stays static through every upsert, merge and compaction."""
     from pyspark.sql import functions as F
 
     key = "spark.sql.sources.partitionOverwriteMode"
@@ -650,3 +663,60 @@ def test_expire_partitions_metadata_only(spark, tmp_path):
     assert {str(r["date"]) for r in left.select("date").distinct().collect()} == {"2024-01-03"}
     # idempotent: nothing else matches
     assert expire_partitions(spark, path, before="2024-01-03") == []
+
+
+
+PACKAGE = pathlib.Path(writer.__file__).resolve().parents[1]
+
+
+def test_no_session_conf_writes_in_package():
+    """No code of the package changes a session conf: no ``.conf.set(``
+    call anywhere (sizing rides on the frames, write modes on the
+    writes)."""
+    sources = [
+        *sorted(PACKAGE.rglob("*.py")),
+        PACKAGE.parent / "__spark_entry__.py",
+    ]
+    calls = [
+        (p.name, n.lineno)
+        for p in sources
+        for n in ast.walk(ast.parse(p.read_text()))
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "set"
+        and isinstance(n.func.value, ast.Attribute)
+        and n.func.value.attr == "conf"
+    ]
+    assert calls == []
+
+
+@pytest.mark.parametrize(
+    "module, name",
+    [
+        ("sources/writer.py", "upsert_partitioned"),
+        ("update.py", "run_daily_update"),
+        ("update.py", "_append_rankings"),
+    ],
+)
+def test_tick_commits_only_through_publish(module, name):
+    """The tick's table writers hold no ``DataFrameWriter`` of their own
+    (no ``.write`` attribute): every commit goes through
+    ``writer._publish``; the upsert calls it exactly once."""
+    fn = next(
+        n
+        for n in ast.walk(ast.parse((PACKAGE / module).read_text()))
+        if isinstance(n, ast.FunctionDef) and n.name == name
+    )
+    assert not [
+        n.lineno
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Attribute) and n.attr == "write"
+    ]
+    if name == "upsert_partitioned":
+        called = [
+            getattr(n.func, "id", getattr(n.func, "attr", None))
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Call)
+        ]
+        assert called.count("_publish") == 1
+        assert not [c for c in called if c and "overwrite" in c], called
