@@ -519,7 +519,12 @@ _IVF_INDEX_PATHS: dict = {}
 
 
 def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
+    """The on-disk IVF index of ``sf_dir``'s embeddings, built on first
+    use under the artifact root ``availability_fact`` stores the fact
+    table in (``$SPARK_GRAFT_CACHE``, else ``.cache`` in this checkout),
+    keyed by the embeddings' input files."""
     import hashlib
+    import os
 
     path = _IVF_INDEX_PATHS.get(sf_dir)
     if path is None:
@@ -527,7 +532,10 @@ def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
         fp = hashlib.md5(
             "|".join(sorted(emb.inputFiles())).encode()
         ).hexdigest()[:12]
-        path = f"/tmp/spark_graft_ivf_{fp}"
+        root = os.environ.get("SPARK_GRAFT_CACHE") or os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), ".cache"
+        )
+        path = os.path.join(root, "ivf", fp)
         if not writer.table_exists(spark, path + "/vectors"):
             similarity.write_ivf_index(emb, path)
         _IVF_INDEX_PATHS[sf_dir] = path

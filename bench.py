@@ -1,14 +1,19 @@
-"""Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness — the one place the repo times a catalog query.
 
 Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}. Each query plan is fully executed via
 the noop sink (materializes every output column; nothing collected to the
-driver). Session startup is excluded; one warmup query primes the JVM.
+driver). Session startup is excluded.
 
-The COMPLETE artifact (cold + warm + secondary per-query maps — everything,
-including what goes to stderr) is also written to ``--out FILE`` (default
+The COMPLETE artifact (cold + warm + secondary per-query maps, and each
+query's per-layer record under ``layers`` — everything, including what
+goes to stderr) is also written to ``--out FILE`` (default
 ``BENCH_FULL.json`` next to this script), because the driver captures only
 the tail of combined output and a 111-query stdout line loses its head.
+
+    python bench.py                          # the full catalog
+    python bench.py --only q1 q2 --out x.json  # a subset, same protocol
+    python bench.py --oracle-out o.json      # plus the paired DuckDB sweep
 """
 
 from __future__ import annotations
@@ -19,27 +24,136 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+sys.path += [os.path.join(ROOT, "perfbench"), os.path.join(ROOT, "tools")]
 
 import __spark_entry__ as entrymod
 from binance_futures_availability_spark.session import DEFAULT_CPUS, get_session
+from probes import SparkCounters, codegen_delta  # perfbench/probes.py
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: three warm passes, per-query MIN, per-query SPREAD (max−min of the
+#: warm reps): steady-state latency, robust to ambient load spikes
+#: (standard min-of-N benchmarking practice — the min is the run least
+#: polluted by noise, not a best case: these are fixed deterministic
+#: plans). The spread is the repetition-noise bound that makes the
+#: round-over-round warm ratio interpretable: a query whose spread rivals
+#: its min moved because the BOX moved, not the plan. Pinned in r11:
+#: min-of-3 warm on BOTH sides, reps + spread recorded in every artifact.
+WARM_REPS = 3
 
 
 def run_df(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def measure(spark, qs: dict, names: list, sf_dir: str, warm_reps: int) -> dict:
+    """Time the catalog queries ``names`` (keys of ``qs``) at ``sf_dir``:
+    one cold sweep, then ``warm_reps`` warm sweeps, every run through the
+    noop sink under its own job group.
+
+    Returns per-query maps ``cold`` (seconds), ``warm`` (min over the
+    successful warm reps; -1 when the cold run or every warm rep failed),
+    ``spread`` (max − min of the successful warm reps), ``failed_reps``
+    (warm reps that raised, only where non-zero), ``cache_bytes`` (session
+    storage after each query of the first warm sweep) and ``layers``:
+    for the cold sweep and the first warm sweep, one record per query of
+
+    - ``wall_s``: the run, timed inside the job group (-1 when it raised);
+    - ``build_s``: inside the query function, before the final DataFrame
+      exists — the eager jobs (-1 when the function raised);
+    - ``jobs``, ``stages``, ``tasks``: the job group's, from the status
+      tracker (stages that ran at least one task);
+    - ``compiles``, ``compile_s``: Janino compiles and their seconds.
+    """
+    from binance_futures_availability_spark.index_cache import storage_bytes
+
+    counters = SparkCounters(spark)
+
+    def run(name: str) -> dict:
+        cg0 = counters.codegen()
+        n0 = (counters.jobs, counters.stages, counters.tasks)
+        build = wall = -1.0
+        with counters.op_group():
+            t0 = time.perf_counter()
+            try:
+                df = qs[name](spark, sf_dir)
+                build = round(time.perf_counter() - t0, 3)
+                run_df(df)
+                wall = round(time.perf_counter() - t0, 3)
+            except Exception:  # noqa: BLE001 — a failed run is a recorded -1
+                pass
+        cg = codegen_delta(cg0, counters.codegen())
+        return {
+            "wall_s": wall,
+            "build_s": build,
+            "jobs": counters.jobs - n0[0],
+            "stages": counters.stages - n0[1],
+            "tasks": counters.tasks - n0[2],
+            "compiles": int(cg["codegen.compiles"]),
+            "compile_s": round(cg["codegen.compile_s"], 3),
+        }
+
+    layers: dict[str, dict[str, dict]] = {"cold": {}, "warm": {}}
+    for name in names:
+        layers["cold"][name] = run(name)
+    reps: dict[str, list[float]] = {name: [] for name in names}
+    cache_bytes: dict[str, int] = {}
+    for sweep in range(warm_reps):
+        for name in names:
+            rec = run(name)
+            reps[name].append(rec["wall_s"])
+            if sweep == 0:
+                layers["warm"][name] = rec
+                cache_bytes[name] = storage_bytes(spark)
+    cold = {name: rec["wall_s"] for name, rec in layers["cold"].items()}
+    warm: dict[str, float] = {}
+    spread: dict[str, float] = {}
+    # intermittent warm-path failures stay visible: a query that throws
+    # on some reps but succeeds once still reports min(successes), and
+    # its failed-rep count is recorded so flaky warm runs are
+    # distinguishable from clean min-of-N numbers
+    failed_reps: dict[str, int] = {}
+    for name in names:
+        rs = [t for t in reps[name] if t >= 0]
+        if len(rs) < len(reps[name]):
+            failed_reps[name] = len(reps[name]) - len(rs)
+        if cold[name] < 0 or not rs:
+            warm[name] = -1.0
+        else:
+            warm[name] = min(rs)
+            spread[name] = round(max(rs) - min(rs), 3)
+    return {
+        "cold": cold,
+        "warm": warm,
+        "spread": spread,
+        "failed_reps": failed_reps,
+        "cache_bytes": cache_bytes,
+        "layers": layers,
+    }
+
+
+def _sf_value(sf_dir: str):
+    sf = sf_dir.rstrip("/").split("sf")[-1]
+    return float(sf) if sf.replace(".", "").isdigit() else sf
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument(
         "--out",
-        default=os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
-        ),
+        default=os.path.join(ROOT, "BENCH_FULL.json"),
         help="write the complete bench artifact (cold+warm+secondary "
-        "per-query) here; '' disables",
+        "per-query, per-layer records) here; '' disables",
+    )
+    ap.add_argument(
+        "--only",
+        nargs="+",
+        metavar="NAME",
+        help="time only these catalog queries (every pass, the oracle "
+        "sweep and the budget checks)",
     )
     ap.add_argument(
         "--assert-budget",
@@ -60,19 +174,23 @@ def main() -> None:
     ap.add_argument(
         "--oracle-out",
         default="",
-        help="with --assert-budget, also write the paired in-process "
-        "oracle sweep's full bench-shaped dict here (the ORACLE_BENCH_* "
-        "artifact), so the committed pair is guaranteed same-process",
+        help="run the paired in-process DuckDB oracle sweep over the same "
+        "queries after the warm pass and write its bench-shaped dict here "
+        "(the ORACLE_BENCH_* artifact), so the committed pair is "
+        "same-process",
     )
     ap.add_argument(
         "--budgets",
-        default=os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BUDGETS.json"
-        ),
+        default=os.path.join(ROOT, "BUDGETS.json"),
         help="per-query warm-latency budget file {name: max_sec}; missing "
         "file means no per-query assertions",
     )
     args = ap.parse_args()
+    qs = entrymod.queries()
+    unknown = sorted(set(args.only or ()) - set(qs))
+    if unknown:
+        ap.error(f"unknown queries: {unknown}")
+    names = [n for n in qs if not args.only or n in args.only]
     # Session sized to the benchmark scale: shuffle partitions small enough
     # that sub-GB shuffles don't pay 32-task scheduling overhead, and AQE off
     # because its per-exchange replanning (each exchange becomes a separate
@@ -119,71 +237,19 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
 
     # Two passes, both reported. The cold pass includes one-time JVM
     # whole-stage-codegen compilation per plan shape (~0.2-0.9 s/query) and
     # the fact-table materialization; the warm pass is the steady-state
     # latency of the fixed query catalog — the operationally relevant number
     # for templates that run every day — and is the headline metric.
-    cold: dict[str, float] = {}
-    for name, fn in qs.items():
-        t0 = time.time()
-        try:
-            run_df(fn(spark, SF_DIR))
-            cold[name] = round(time.time() - t0, 3)
-        except Exception:  # noqa: BLE001
-            cold[name] = -1.0
+    primary = measure(spark, qs, names, SF_DIR, WARM_REPS)
+    cold, times, spread = primary["cold"], primary["warm"], primary["spread"]
+    failed_reps = primary["failed_reps"]
 
-    # three warm passes, per-query MIN, per-query SPREAD (max−min of the
-    # warm reps): steady-state latency, robust to ambient load spikes
-    # (standard min-of-N benchmarking practice — the min is the run least
-    # polluted by noise, not a best case: these are fixed deterministic
-    # plans). The spread is the repetition-noise bound that makes the
-    # round-over-round warm ratio interpretable: a query whose spread
-    # rivals its min moved because the BOX moved, not the plan. Protocol
-    # pinned in r11 (verdict r10 #4): min-of-3 warm on BOTH sides, reps +
-    # spread recorded in every artifact.
-    WARM_REPS = 3
-    from binance_futures_availability_spark.index_cache import storage_bytes
-
-    reps: dict[str, list[float]] = {}
-    cache_bytes: dict[str, int] = {}  # persisted footprint AFTER each query
-    for sweep in range(WARM_REPS):
-        for name, fn in qs.items():
-            if cold[name] < 0:
-                continue
-            t0 = time.time()
-            try:
-                run_df(fn(spark, SF_DIR))
-                reps.setdefault(name, []).append(round(time.time() - t0, 3))
-            except Exception:  # noqa: BLE001
-                reps.setdefault(name, []).append(-1.0)
-            if sweep == 0:
-                cache_bytes[name] = storage_bytes(spark)
-    times: dict[str, float] = {}
-    spread: dict[str, float] = {}
-    # intermittent warm-path failures must stay visible in the artifact
-    # (r11 advice): a query that throws on some reps but succeeds once
-    # still reports min(successes), but its failed-rep count is recorded
-    # so flaky warm runs are distinguishable from clean min-of-3 numbers
-    failed_reps: dict[str, int] = {}
-    for name in qs:
-        all_reps = reps.get(name, [])
-        rs = [t for t in all_reps if t >= 0]
-        nfail = len(all_reps) - len(rs)
-        if nfail:
-            failed_reps[name] = nfail
-        if cold[name] < 0 or not rs:
-            times[name] = -1.0
-        else:
-            times[name] = min(rs)
-            spread[name] = round(max(rs) - min(rs), 3)
-
-    sf = SF_DIR.rstrip("/").split("sf")[-1]
+    sf_val = _sf_value(SF_DIR)
     total = round(sum(t for t in times.values() if t >= 0), 3)
     cold_total = round(sum(t for t in cold.values() if t >= 0), 3)
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     # Cold-pass diagnostics go to stderr: the driver captures only the tail
     # of combined output and parses the single stdout JSON line below —
     # r02's line with both passes inline overflowed that buffer.
@@ -200,21 +266,9 @@ def main() -> None:
     secondary = None
     sec_dir = os.environ.get("BENCH_SECONDARY_SF_DIR", "/root/testdata/sf0.01")
     if sec_dir and os.path.isdir(sec_dir) and sec_dir != SF_DIR:
-        sec_times: dict[str, float] = {}
-        for warm in (False, True):  # first sweep = cold at this SF
-            for name, fn in qs.items():
-                t0 = time.time()
-                try:
-                    run_df(fn(spark, sec_dir))
-                    t = round(time.time() - t0, 3)
-                    if warm:
-                        sec_times[name] = t
-                except Exception:  # noqa: BLE001
-                    if warm:
-                        sec_times[name] = -1.0
-        sec_sf = sec_dir.rstrip("/").split("sf")[-1]
+        sec_times = measure(spark, qs, names, sec_dir, 1)["warm"]
         secondary = {
-            "sf": float(sec_sf) if sec_sf.replace(".", "").isdigit() else sec_sf,
+            "sf": _sf_value(sec_dir),
             "value": round(sum(t for t in sec_times.values() if t >= 0), 3),
         }
         print(
@@ -253,20 +307,18 @@ def main() -> None:
     if secondary is not None:
         out["secondary"] = secondary
     budget_failures: list[str] = []
-    if args.assert_budget:
+    if args.assert_budget or args.oracle_out:
         # paired oracle run in the SAME process, immediately after the warm
         # pass — the only comparison that survives this box's ±3 s ambient
         # cross-process variance
-        sys.path.insert(
-            0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
-        )
         import oracle_bench
 
-        oracle = oracle_bench.run(SF_DIR)
+        oracle = oracle_bench.run(SF_DIR, names=names)
         if args.oracle_out:
             with open(args.oracle_out, "w", encoding="utf-8") as f:
                 json.dump(oracle, f, indent=1, sort_keys=True)
                 f.write("\n")
+    if args.assert_budget:
         ratio = (total / oracle["value"]) if oracle["value"] > 0 else 0.0
         print(
             json.dumps(
@@ -287,6 +339,8 @@ def main() -> None:
             with open(args.budgets, encoding="utf-8") as f:
                 budgets = json.load(f)
             for name, limit in sorted(budgets.items()):
+                if args.only and name not in names:
+                    continue
                 got = times.get(name)
                 if got is None:
                     budget_failures.append(f"{name}: budgeted but not in catalog")
@@ -308,7 +362,9 @@ def main() -> None:
             # session-cache residency after each query of the first warm
             # sweep — the growth curve that explains (or acquits) warm
             # drift as the catalog's cache population accumulates
-            "cache_bytes_after": cache_bytes,
+            "cache_bytes_after": primary["cache_bytes"],
+            # per pass, per query: where the time went (see measure())
+            "layers": primary["layers"],
         }
         if secondary is not None:
             full["secondary"] = {**secondary, "queries": sec_times}

@@ -25,6 +25,7 @@ from __future__ import annotations
 import functools
 import os
 import random
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -2214,6 +2215,31 @@ def ivf_pq_topk(
     )
 
 
+def _recall_at_k(
+    emb: DataFrame,
+    query_id: int,
+    topk: int,
+    id_col: str,
+    vec_col: str,
+    sample_ppm: int | None,
+    approx_topk: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """One row (k, n_hits, recall): how many of the exact brute-force
+    top-``topk`` ids ``approx_topk(emb)`` also returns, both ranked over
+    the same ``audit_sample`` of ``emb`` (the probe vector survives)."""
+    emb = audit_sample(emb, sample_ppm, id_col, keep_id=query_id)
+    exact = ann_topk(emb, query_id, topk, id_col, vec_col).select(
+        F.col(id_col).alias("__e")
+    )
+    approx = approx_topk(emb).select(F.col(id_col).alias("__a"))
+    j = exact.join(approx, exact["__e"] == approx["__a"], "left_outer")
+    return j.agg(
+        F.lit(topk).cast("long").alias("k"),
+        F.count("__a").cast("long").alias("n_hits"),
+        (F.count("__a") / F.lit(float(topk))).alias("recall"),
+    )
+
+
 def pq_recall_audit(
     emb: DataFrame,
     query_id: int,
@@ -2233,20 +2259,11 @@ def pq_recall_audit(
     (``audit_sample``; the probe vector always survives the filter) —
     the full-rank exact baseline then runs on the hash-sampled
     sub-corpus."""
-    emb = audit_sample(emb, sample_ppm, id_col, keep_id=query_id)
-    exact = ann_topk(emb, query_id, topk, id_col, vec_col).select(
-        F.col(id_col).alias("__e")
-    )
-    approx = pq_topk(
-        emb, query_id, topk, id_col, vec_col, m, k, dim, iters
-    ).select(
-        F.col(id_col).alias("__a")
-    )
-    j = exact.join(approx, exact["__e"] == approx["__a"], "left_outer")
-    return j.agg(
-        F.lit(topk).cast("long").alias("k"),
-        F.count("__a").cast("long").alias("n_hits"),
-        (F.count("__a") / F.lit(float(topk))).alias("recall"),
+    return _recall_at_k(
+        emb, query_id, topk, id_col, vec_col, sample_ppm,
+        lambda e: pq_topk(
+            e, query_id, topk, id_col, vec_col, m, k, dim, iters
+        ),
     )
 
 
@@ -2390,18 +2407,9 @@ def rp_recall_audit(
     pq_recall_audit / lsh_recall_audit: never trust a compression knob
     you haven't audited). ``sample_ppm`` hash-samples the corpus for
     production-scale audits (``audit_sample``; the probe survives)."""
-    emb = audit_sample(emb, sample_ppm, id_col, keep_id=query_id)
-    exact = ann_topk(emb, query_id, topk, id_col, vec_col).select(
-        F.col(id_col).alias("__e")
-    )
-    approx = rp_topk(emb, query_id, topk, m, id_col, vec_col).select(
-        F.col(id_col).alias("__a")
-    )
-    j = exact.join(approx, exact["__e"] == approx["__a"], "left_outer")
-    return j.agg(
-        F.lit(topk).cast("long").alias("k"),
-        F.count("__a").cast("long").alias("n_hits"),
-        (F.count("__a") / F.lit(float(topk))).alias("recall"),
+    return _recall_at_k(
+        emb, query_id, topk, id_col, vec_col, sample_ppm,
+        lambda e: rp_topk(e, query_id, topk, m, id_col, vec_col),
     )
 
 
@@ -2643,18 +2651,9 @@ def sq_recall_audit(
     compression for THIS corpus (the SQ member of the
     lsh/pq/rp_recall_audit family; same ``sample_ppm`` hash-sampling for
     production-scale runs)."""
-    emb = audit_sample(emb, sample_ppm, id_col, keep_id=query_id)
-    exact = ann_topk(emb, query_id, topk, id_col, vec_col).select(
-        F.col(id_col).alias("__e")
-    )
-    approx = sq_topk(emb, query_id, topk, id_col, vec_col).select(
-        F.col(id_col).alias("__a")
-    )
-    j = exact.join(approx, exact["__e"] == approx["__a"], "left_outer")
-    return j.agg(
-        F.lit(topk).cast("long").alias("k"),
-        F.count("__a").cast("long").alias("n_hits"),
-        (F.count("__a") / F.lit(float(topk))).alias("recall"),
+    return _recall_at_k(
+        emb, query_id, topk, id_col, vec_col, sample_ppm,
+        lambda e: sq_topk(e, query_id, topk, id_col, vec_col),
     )
 
 

@@ -572,15 +572,12 @@ def expire_partitions(
     nothing simply removes nothing.
     """
     fs, root = _hadoop_path(spark, path)
-    if not fs.exists(root):
-        return []
-    removed = []
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     prefix = partition_col + "="
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
-        if status.isDirectory() and name.startswith(prefix):
-            value = name[len(prefix):]
-            if value < before:
-                fs.delete(status.getPath(), True)
-                removed.append(value)
+    removed = []
+    for name in list(_table_partitions(spark, path, partition_col)):
+        value = name[len(prefix):]
+        if value < before:
+            fs.delete(Path(root, name), True)
+            removed.append(value)
     return sorted(removed)

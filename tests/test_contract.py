@@ -10,11 +10,14 @@ full gate run later).
 
 from __future__ import annotations
 
+import pathlib
+
 import duckdb
 import pytest
 
 import __spark_entry__ as entry
 
+ROOT = pathlib.Path(__file__).resolve().parents[1]
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = (
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -71,9 +74,9 @@ def test_every_query_has_budget_and_catalog_row():
     import __spark_entry__ as entrymod
 
     q = set(entrymod.queries())
-    budgets = json.load(open("/root/repo/BUDGETS.json"))
+    budgets = json.load(open(ROOT / "BUDGETS.json"))
     assert q <= set(budgets), sorted(q - set(budgets))
-    cat = json.load(open("/root/repo/QUERY_CATALOG.json"))
+    cat = json.load(open(ROOT / "QUERY_CATALOG.json"))
     names = {
         r["name"] if isinstance(r, dict) else r
         for r in (cat if isinstance(cat, list) else cat.get("queries", []))
@@ -91,7 +94,7 @@ def test_gate_priority_rewrite_is_idempotent_and_parseable(tmp_path):
     import sys
 
     spec = importlib.util.spec_from_file_location(
-        "gate_priority", "/root/repo/tools/gate_priority.py"
+        "gate_priority", ROOT / "tools" / "gate_priority.py"
     )
     gp = importlib.util.module_from_spec(spec)
     sys.modules["gate_priority"] = gp
@@ -110,7 +113,7 @@ def test_gate_priority_rewrite_is_idempotent_and_parseable(tmp_path):
     # rendering twice from the same history is byte-identical
     assert block == gp.render_block(priority, last)
     # the committed contract file holds exactly this block between markers
-    src = open("/root/repo/__spark_entry__.py", encoding="utf-8").read()
+    src = open(ROOT / "__spark_entry__.py", encoding="utf-8").read()
     m = re.search(
         re.escape(gp.BEGIN) + r".*?" + re.escape(gp.END), src, re.DOTALL
     )
@@ -142,7 +145,7 @@ def test_driver_history_freshness_bound():
     import sys
 
     spec = importlib.util.spec_from_file_location(
-        "gate_priority", "/root/repo/tools/gate_priority.py"
+        "gate_priority", ROOT / "tools" / "gate_priority.py"
     )
     gp = importlib.util.module_from_spec(spec)
     sys.modules["gate_priority_fresh"] = gp

@@ -345,3 +345,24 @@ def test_no_module_level_caches_outside_registry():
         for name in _module_caches(p)
     ]
     assert set(strays) <= allowed, strays
+
+
+def test_ivf_index_resolves_under_cache_root(spark, tmp_path, monkeypatch):
+    """The catalog's on-disk IVF index is built under the artifact root
+    (``$SPARK_GRAFT_CACHE``), not in a shared directory that outlives the
+    process."""
+    import __spark_entry__ as entry
+    from binance_futures_availability_spark.operators import similarity
+
+    sf_dir = tmp_path / "sf"
+    _write_embeddings(spark, str(sf_dir / "embeddings.parquet"))
+    cache = tmp_path / "cache"
+    monkeypatch.setenv("SPARK_GRAFT_CACHE", str(cache))
+    monkeypatch.setattr(entry, "_IVF_INDEX_PATHS", {})
+    built = []
+    monkeypatch.setattr(
+        similarity, "write_ivf_index", lambda emb, path: built.append(path)
+    )
+    path = entry._ivf_index_path(spark, str(sf_dir))
+    assert built == [path]
+    assert pathlib.Path(path).resolve().is_relative_to(cache.resolve())

@@ -18,7 +18,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from binance_futures_availability_spark.catalog import TESTDATA_TABLES, table_path  # noqa: E402
@@ -96,6 +96,11 @@ def compare(name: str, spark_pd: pd.DataFrame, oracle_pd: pd.DataFrame) -> list[
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        return 2
     spark = get_session("check")
     con = duckdb.connect()
     # DuckDB defaults its memory_limit to 80% of PHYSICAL RAM, blind to
@@ -114,7 +119,6 @@ def main() -> int:
         except duckdb.Error:
             pass
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failed = []
     for name, fn in qs.items():
         if only and name not in only:

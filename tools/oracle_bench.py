@@ -11,12 +11,13 @@ an apples-to-apples diff at any SF:
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from binance_futures_availability_spark.catalog import (  # noqa: E402
@@ -25,8 +26,9 @@ from binance_futures_availability_spark.catalog import (  # noqa: E402
 )
 
 
-def run(sf_dir: str, warm_reps: int = 3) -> dict:
-    """Oracle catalog sweeps; returns the bench-shaped dict. Importable
+def run(sf_dir: str, warm_reps: int = 3, names=None) -> dict:
+    """Oracle catalog sweeps (over ``names`` only, when given); returns the
+    bench-shaped dict. Importable
     so ``bench.py --assert-budget`` can pair Spark and oracle back-to-back
     in ONE process (cross-process totals vary ±3 s on this box and are not
     comparable).
@@ -46,7 +48,11 @@ def run(sf_dir: str, warm_reps: int = 3) -> dict:
             )
         except duckdb.Error:
             pass
-    sqls = entrymod.oracle_sql()
+    sqls = {
+        name: sql
+        for name, sql in entrymod.oracle_sql().items()
+        if names is None or name in names
+    }
     reps: dict[str, list[float]] = {name: [] for name in sqls}
     for sweep in range(warm_reps + 1):
         for name, sql in sqls.items():

@@ -22,11 +22,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+import bench
 from binance_futures_availability_spark.session import get_session
 
 #: r13 (verdict #5): the study covers the FULL catalog — every queries()
@@ -86,10 +86,6 @@ def fixture_vocab(sf_dir: str) -> str:
     return "tiny"
 
 
-def run_df(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
 def main() -> int:
     args = sys.argv[1:]
     out_path = args[0] if args else "SCALING.json"
@@ -141,21 +137,8 @@ def main() -> int:
             for n in SLICE
             if not (saturated and n in PAIR_SATURATED)
         ]
-        times: dict[str, float] = {}
-        for name in queries:  # cold pass: index builds + codegen
-            try:
-                run_df(qs[name](spark, sf_dir))
-            except Exception:  # noqa: BLE001
-                pass
-        for _ in range(2):  # warm passes, per-query min
-            for name in queries:
-                t0 = time.time()
-                try:
-                    run_df(qs[name](spark, sf_dir))
-                    t = round(time.time() - t0, 3)
-                    times[name] = min(times.get(name, t), t)
-                except Exception:  # noqa: BLE001
-                    times[name] = -1.0
+        # cold pass (index builds + codegen), then per-query min of 2 warm
+        times = bench.measure(spark, qs, queries, sf_dir, 2)["warm"]
         results[tag] = times
         # release this SF's session-persisted index artifacts before the
         # next SF — they are keyed per source dir and useless across SFs,
@@ -224,17 +207,7 @@ def main() -> int:
                 if name not in results.get(tag, {}):
                     continue
                 clear_indexes()
-                try:
-                    run_df(qs[name](spark, sf_dir))  # own cold build
-                    best = None
-                    for _ in range(2):
-                        t0 = time.time()
-                        run_df(qs[name](spark, sf_dir))
-                        t = round(time.time() - t0, 3)
-                        best = t if best is None else min(best, t)
-                    iso[tag] = best
-                except Exception:  # noqa: BLE001
-                    iso[tag] = -1.0
+                iso[tag] = bench.measure(spark, qs, [name], sf_dir, 2)["warm"][name]
                 clear_indexes()
             a, b = iso.get(lo, -1), iso.get(hi, -1)
             if a > 0 and b > 0:
