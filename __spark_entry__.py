@@ -20,7 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binance_futures_availability_spark import oracles
-from binance_futures_availability_spark.catalog import load_table, load_table_hot
+from binance_futures_availability_spark.catalog import (
+    _artifact_root,
+    load_table,
+    load_table_hot,
+)
 from binance_futures_availability_spark.functions import (
     CONTRACT_SUFFIX_RE,
     classify_symbol,
@@ -521,8 +525,8 @@ _IVF_INDEX_PATHS: dict = {}
 def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
     """The on-disk IVF index of ``sf_dir``'s embeddings, built on first
     use under the artifact root ``availability_fact`` stores the fact
-    table in (``$SPARK_GRAFT_CACHE``, else ``.cache`` in this checkout),
-    keyed by the embeddings' input files."""
+    table in (``catalog._artifact_root()``), keyed by the embeddings' input
+    files."""
     import hashlib
     import os
 
@@ -532,10 +536,7 @@ def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
         fp = hashlib.md5(
             "|".join(sorted(emb.inputFiles())).encode()
         ).hexdigest()[:12]
-        root = os.environ.get("SPARK_GRAFT_CACHE") or os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), ".cache"
-        )
-        path = os.path.join(root, "ivf", fp)
+        path = os.path.join(_artifact_root(), "ivf", fp)
         if not writer.table_exists(spark, path + "/vectors"):
             similarity.write_ivf_index(emb, path)
         _IVF_INDEX_PATHS[sf_dir] = path

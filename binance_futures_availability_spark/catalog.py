@@ -31,6 +31,15 @@ TESTDATA_TABLES = [
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _artifact_root() -> str:
+    """Root of the on-disk artifacts derived from the testdata (the fact
+    table, the IVF index): ``$SPARK_GRAFT_CACHE``, else ``.cache`` next to
+    the imported package, so each checkout keeps its own."""
+    return os.environ.get("SPARK_GRAFT_CACHE") or os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache"
+    )
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 

@@ -36,7 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import _dir_fingerprint, load_table
+from ..catalog import _artifact_root, _dir_fingerprint, load_table
 from ..index_cache import cached_index, invalidate, path_key
 
 #: bump when the derivation changes — invalidates materialized caches
@@ -167,25 +167,20 @@ def _source_fingerprint(sf_dir: str) -> str:
     return hashlib.md5("\n".join(entries).encode()).hexdigest()[:8]
 
 
-def availability_fact(
-    spark: SparkSession, sf_dir: str, cache_root: str | None = None
-) -> DataFrame:
+def availability_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized ``daily_availability`` for a testdata dir.
 
     Derives from lineitem exactly once per (sf_dir, source fingerprint,
-    DA_VERSION), stores it under ``cache_root``, and thereafter returns a
-    catalog read — so an 18-query session performs ONE derivation
-    aggregation instead of 18 full re-aggregations of the fact source (the
-    round-1 scale-killer).
+    DA_VERSION), stores it under ``catalog._artifact_root()``, and
+    thereafter returns a catalog read — so an 18-query session performs
+    ONE derivation aggregation instead of 18 full re-aggregations of the
+    fact source (the round-1 scale-killer).
 
     Concurrency: materialization is staged into a process-private temp dir
     and committed with an atomic rename, so two processes racing on a cold
     cache both produce correct results and exactly one commit wins — no
     partially-written cache dir is ever readable under ``path``.
     """
-    cache_root = cache_root or os.environ.get(
-        "SPARK_GRAFT_CACHE", "/root/repo/.cache"
-    )
     # key on the FULL resolved path (basename alone would silently share a
     # cache between /a/sf0.1 and /b/sf0.1) plus the input fingerprint
     # (detects in-place regeneration); basename kept for readability
@@ -194,7 +189,7 @@ def availability_fact(
     digest = hashlib.md5(real.encode()).hexdigest()[:8]
     fp = _source_fingerprint(sf_dir)
     path = os.path.join(
-        cache_root, f"da_{DA_VERSION}", f"{sf_name}-{digest}-{fp}"
+        _artifact_root(), f"da_{DA_VERSION}", f"{sf_name}-{digest}-{fp}"
     )
     handle = _FACT_HANDLES.get(path)
     if handle is not None:

@@ -1173,7 +1173,6 @@ def simhash_pairs(
     max_hamming: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    block_pairs: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs with simhash hamming distance ≤ max_hamming.
 
@@ -1194,13 +1193,13 @@ def simhash_pairs(
     & Das Sarma's permuted-table blocking: as the corpus grows, widen
     the block key, never the bucket.
 
-    ``block_pairs`` picks the blocking (a PHYSICAL strategy — output is
-    identical): False = single-chunk (d+1 chunks, d+1 exploded rows/doc
-    — cheaper while buckets stay small), True = chunk pairs, None
-    (default) = auto on MEASURED single-chunk candidate volume: one
-    bounded aggregation over the persisted fingerprint table (output ≤
-    (d+1)·2^(60/(d+1)) bucket rows) sums pop·(pop−1)/2 and switches to
-    the wide key when candidates exceed ``BLOCK_CAND_PER_DOC`` per doc.
+    The blocking is a PHYSICAL strategy (output is identical): single-
+    chunk (d+1 chunks, d+1 exploded rows/doc — cheaper while buckets stay
+    small) or chunk pairs, chosen on MEASURED single-chunk candidate
+    volume: one bounded aggregation over the persisted fingerprint table
+    (output ≤ (d+1)·2^(60/(d+1)) bucket rows) sums pop·(pop−1)/2 and
+    switches to the wide key when candidates exceed ``BLOCK_CAND_PER_DOC``
+    per doc.
     A doc-count threshold gets this wrong in both directions — uniform
     fingerprints keep single-chunk buckets small far past any fixed
     count (measured sf10/500 k docs: single 2.6 s vs pair 4.4 s warm,
@@ -1219,18 +1218,16 @@ def simhash_pairs(
     The verified pair set itself is session-cached (r13, the LSH/minhash
     pair-graph discipline — sparse by the hamming bound): the banding
     explode + self-join + bit_count verification otherwise re-ran per
-    execution. The key carries only LOGICAL parameters (``block_pairs``
-    is a physical strategy with identical, property-tested output, so
-    both strategies serve one artifact); in-memory corpora bypass.
+    execution. The key carries only LOGICAL parameters (the blocking is
+    a physical strategy with identical, property-tested output, so both
+    strategies serve one artifact); in-memory corpora bypass.
     """
     return gathered_sort(
         cached_index(
             plan_key(
                 docs, "simhash_pair_graph", id_col, text_col, max_hamming
             ),
-            lambda: _simhash_pair_graph(
-                docs, max_hamming, id_col, text_col, block_pairs
-            ),
+            lambda: _simhash_pair_graph(docs, max_hamming, id_col, text_col),
         ),
         "id_a",
         "id_b",
@@ -1242,51 +1239,49 @@ def _simhash_pair_graph(
     max_hamming: int,
     id_col: str,
     text_col: str,
-    block_pairs: bool | None,
 ) -> DataFrame:
     # one fingerprint per doc, persisted: both self-join sides scan it, and
     # without materialization each side re-runs the full shingle aggregation
     s = tracked_persist(simhash(docs, id_col, text_col))
-    if block_pairs is None:
 
-        def probe() -> tuple[int, float]:
-            sc_chunks = max_hamming + 1
-            sc_bits = -(-SIMHASH_BITS // sc_chunks)  # ceil, as below
-            sc_mask = (1 << sc_bits) - 1
-            probe_structs = F.expr(
-                "array("
-                + ", ".join(
-                    f"struct({i} AS band, (shiftright(simhash, "
-                    f"{i * sc_bits}) & {sc_mask}) AS chunk)"
-                    for i in range(sc_chunks)
-                )
-                + ")"
+    def probe() -> tuple[int, float]:
+        sc_chunks = max_hamming + 1
+        sc_bits = -(-SIMHASH_BITS // sc_chunks)  # ceil, as below
+        sc_mask = (1 << sc_bits) - 1
+        probe_structs = F.expr(
+            "array("
+            + ", ".join(
+                f"struct({i} AS band, (shiftright(simhash, "
+                f"{i * sc_bits}) & {sc_mask}) AS chunk)"
+                for i in range(sc_chunks)
             )
-            row = (
-                s.select(F.explode(probe_structs).alias("bc"))
-                .groupBy("bc.band", "bc.chunk")
-                .agg(F.count(F.lit(1)).alias("pop"))
-                .agg(
-                    F.coalesce(
-                        F.sum(
-                            F.col("pop") * (F.col("pop") - 1) / F.lit(2)
-                        ),
-                        F.lit(0.0),
-                    ).alias("cand"),
-                    F.coalesce(
-                        (F.sum("pop") / F.lit(sc_chunks)).cast("long"),
-                        F.lit(0).cast("long"),
-                    ).alias("n"),
-                )
-                .collect()[0]
-            )
-            return int(row["n"]), float(row["cand"])
-
-        n_docs, single_cands = cached_value(
-            plan_key(docs, "simhash_blockprobe", id_col, text_col, max_hamming),
-            probe,
+            + ")"
         )
-        block_pairs = single_cands > BLOCK_CAND_PER_DOC * max(n_docs, 1)
+        row = (
+            s.select(F.explode(probe_structs).alias("bc"))
+            .groupBy("bc.band", "bc.chunk")
+            .agg(F.count(F.lit(1)).alias("pop"))
+            .agg(
+                F.coalesce(
+                    F.sum(
+                        F.col("pop") * (F.col("pop") - 1) / F.lit(2)
+                    ),
+                    F.lit(0.0),
+                ).alias("cand"),
+                F.coalesce(
+                    (F.sum("pop") / F.lit(sc_chunks)).cast("long"),
+                    F.lit(0).cast("long"),
+                ).alias("n"),
+            )
+            .collect()[0]
+        )
+        return int(row["n"]), float(row["cand"])
+
+    n_docs, single_cands = cached_value(
+        plan_key(docs, "simhash_blockprobe", id_col, text_col, max_hamming),
+        probe,
+    )
+    block_pairs = single_cands > BLOCK_CAND_PER_DOC * max(n_docs, 1)
     if block_pairs:
         n_chunks = max_hamming + 2
         chunk_bits = max(1, SIMHASH_BITS // n_chunks)

@@ -23,7 +23,6 @@ Scale design:
 from __future__ import annotations
 
 import functools
-import os
 import random
 from collections.abc import Callable
 
@@ -198,6 +197,28 @@ def ann_topk(
     )
 
 
+#: target rows per GEMM block for the adaptive block count: the diagonal
+#: block's n_target² float64 cosine matrix is the per-task memory bound
+#: (4096² × 8 B ≈ 134 MB).
+COSINE_BLOCK_ROWS = 4096
+
+#: parallelism floor for the adaptive block count: fewer blocks than this
+#: collapses the GEMM into too few applyInPandas groups to spread over
+#: the shuffle width (measured: 1 block at n=2000 → one task, 1.4 s vs
+#: 0.97 s for 8 blocks/36 groups at sf0.1). 8 blocks = 36 unordered
+#: block pairs, the r12-tuned width.
+COSINE_MIN_BLOCKS = 8
+
+
+def _vec_count(emb: DataFrame, vec_col: str) -> int:
+    """|corpus| for the adaptive block count — a registry value, so a
+    query does not pay a count job over the cached quantized artifact."""
+    return cached_value(
+        plan_key(emb, "n_vectors", vec_col),
+        lambda: _with_quantized(emb, vec_col).count(),
+    )
+
+
 def cosine_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
@@ -214,81 +235,34 @@ def cosine_pairs(
     n_blocks+1 groups), never the O(n²) pair rows — the earlier per-pair
     join shipped every 64-dim array once per pair through Arrow (2 GB at
     2 000 vectors) and evaluated an interpreted fold per row (~40 s);
-    the blocked GEMM does the same exact arithmetic in ~2 s. At cluster
-    scale, raise n_blocks so each block fits an executor's memory.
-    """
-    return cosine_pairs_blocked(emb, threshold, id_col, vec_col)
+    the blocked GEMM does the same exact arithmetic in ~2 s.
 
-
-#: target rows per GEMM block for the adaptive block count: the diagonal
-#: block's n_target² float64 cosine matrix is the per-task memory bound
-#: (4096² × 8 B ≈ 134 MB). Override via SPARK_GRAFT_COSINE_BLOCK_ROWS for
-#: executors with a different memory envelope.
-COSINE_BLOCK_ROWS = int(
-    os.environ.get("SPARK_GRAFT_COSINE_BLOCK_ROWS", "4096")
-)
-
-#: parallelism floor for the adaptive block count: fewer blocks than this
-#: collapses the GEMM into too few applyInPandas groups to spread over
-#: the shuffle width (measured: 1 block at n=2000 → one task, 1.4 s vs
-#: 0.97 s for 8 blocks/36 groups at sf0.1). 8 blocks = 36 unordered
-#: block pairs, the r12-tuned width.
-COSINE_MIN_BLOCKS = int(
-    os.environ.get("SPARK_GRAFT_COSINE_MIN_BLOCKS", "8")
-)
-
-def _vec_count(emb: DataFrame, vec_col: str) -> int:
-    """|corpus| for the adaptive block count — a registry value, so a
-    query does not pay a count job over the cached quantized artifact."""
-    return cached_value(
-        plan_key(emb, "n_vectors", vec_col),
-        lambda: _with_quantized(emb, vec_col).count(),
-    )
-
-
-def cosine_pairs_blocked(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_blocks: int | None = None,
-) -> DataFrame:
-    """Blocked-GEMM all-pairs cosine (see cosine_pairs docstring).
-
-    ``n_blocks=None`` (default) derives the block count from the measured
-    corpus size — ``max(COSINE_MIN_BLOCKS, ceil(n / COSINE_BLOCK_ROWS))``
-    — so one block's pairwise GEMM fits a task's memory at ANY corpus
-    size (the r12 CONSTANT block count meant blocks grew with the corpus
-    and the (n/8)² per-task cosine matrix would OOM past ~10⁵ vectors —
-    guide §2 scale-adaptive partitioning, §5 per-task memory), while the
-    floor keeps enough groups to fill the shuffle width on small corpora
-    (1 block at n=2000 measured 1.4 s vs 0.97 s for the 8-block shape).
-    The pair set is invariant to the block count; group count grows as
+    The block count derives from the measured corpus size —
+    ``max(COSINE_MIN_BLOCKS, ceil(n / COSINE_BLOCK_ROWS))`` — so one
+    block's pairwise GEMM fits a task's memory at ANY corpus size (the r12
+    CONSTANT block count meant blocks grew with the corpus and the (n/8)²
+    per-task cosine matrix would OOM past ~10⁵ vectors — guide §2
+    scale-adaptive partitioning, §5 per-task memory), while the floor
+    keeps enough groups to fill the shuffle width on small corpora. The
+    pair set is invariant to the block count; group count grows as
     n_blocks²/2, which is what ``audit_sample`` bounds at production
     scale.
 
-    On the default adaptive path the threshold-filtered pair set is
-    session-cached (index_cache discipline): it is the exact similarity
-    GRAPH at this threshold — sparse and byte-bounded by construction —
-    and it is the audit baseline ``lsh_recall_audit`` re-derives on top
-    of the catalog's own ``cosine_pairs``. The GEMM is the most
-    expensive recompute in the similarity family, so the graph is built
-    once per (corpus, threshold) and served to both consumers; an
-    explicit ``n_blocks`` (tuning/tests) bypasses the cache.
+    The threshold-filtered pair set is session-cached (index_cache
+    discipline): it is the exact similarity GRAPH at this threshold —
+    sparse and byte-bounded by construction — and it is the audit
+    baseline ``lsh_recall_audit`` re-derives on top of. The GEMM is the
+    most expensive recompute in the similarity family, so the graph is
+    built once per (corpus, threshold) and served to both consumers.
     """
-    if n_blocks is None:
-        n_blocks = max(
-            COSINE_MIN_BLOCKS,
-            -(-_vec_count(emb, vec_col) // COSINE_BLOCK_ROWS),
-        )
-        out = cached_index(
-            plan_key(emb, "cosine_pair_graph", threshold, id_col, vec_col),
-            lambda: _cosine_pair_graph(
-                emb, threshold, id_col, vec_col, n_blocks
-            ),
-        )
-    else:
-        out = _cosine_pair_graph(emb, threshold, id_col, vec_col, n_blocks)
+    n_blocks = max(
+        COSINE_MIN_BLOCKS,
+        -(-_vec_count(emb, vec_col) // COSINE_BLOCK_ROWS),
+    )
+    out = cached_index(
+        plan_key(emb, "cosine_pair_graph", threshold, id_col, vec_col),
+        lambda: _cosine_pair_graph(emb, threshold, id_col, vec_col, n_blocks),
+    )
     # threshold-filtered pairs are sparse → gathered presentation sort (a
     # range orderBy's sampling job would re-run the GEMM stage)
     return gathered_sort(out, "id_a", "id_b")

@@ -310,7 +310,6 @@ def term_frequencies(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_df: bool = True,
 ) -> DataFrame:
     """TF/DF table: (doc_id, term, tf, df, n_docs) — the integer-exact
     core of TF-IDF, gate-checkable because every column is an integer
@@ -322,15 +321,11 @@ def term_frequencies(
     one shuffle on (doc, term) for tf → term-level partial agg for df →
     join df back on term.
 
-    ``broadcast_df`` (default True) hints the vocabulary-sized df side for
-    the broadcast join — right for natural-language vocabularies (millions
-    of terms at worst), where the planner cannot estimate the aggregate's
-    size and would fall back to a sort-merge join re-shuffling the whole TF
-    table. For open vocabularies (web-crawl URLs / typos / code tokens can
-    reach 10⁹ distinct terms) pass ``broadcast_df=False``: the df aggregate
-    then reuses the TF table's hash partitioning on ``term`` — Catalyst
-    plans the join exchange-free on the df side, never materializing the
-    vocabulary on any single node.
+    The vocabulary-sized df side is hinted for a broadcast join, which
+    assumes a natural-language vocabulary (millions of terms at worst) that
+    fits a broadcast: the planner cannot estimate the aggregate's size and
+    would otherwise fall back to a sort-merge join re-shuffling the whole TF
+    table.
 
     The (doc, term, tf) table is the corpus's INVERTED INDEX — a
     session-cached artifact (index_cache, same discipline as
@@ -345,9 +340,7 @@ def term_frequencies(
     n_docs = _corpus_count(docs)
     tf = tf_index(docs, id_col, text_col)
     df_tbl = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    if broadcast_df:
-        df_tbl = F.broadcast(df_tbl)
-    return tf.join(df_tbl, "term").select(
+    return tf.join(F.broadcast(df_tbl), "term").select(
         F.col(id_col),
         "term",
         F.col("tf").cast("int").alias("tf"),
@@ -704,7 +697,6 @@ def vocab_growth(
     group_col: str = "source",
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_groups: bool = False,
 ) -> DataFrame:
     """Per-source vocabulary statistics — (source, n_docs, n_tokens,
     n_types, ttr_ppm): the Heaps'-law audit a corpus-composition report
@@ -720,16 +712,11 @@ def vocab_growth(
     group-bounded (group, term)/(group, doc) column pairs.
 
     The doc→group map scales with DOCUMENT count (not a bounded
-    dimension), so it is NOT broadcast by default — the equi-join
-    shuffles on ``id_col``, which the cached index is already hashed on.
-    Pass ``broadcast_groups=True`` only when the corpus slice is known
-    to be driver-bounded (same opt-in discipline as
-    ``bigram_lm_scores(broadcast_counts=)``).
+    dimension), so it is never broadcast — the equi-join shuffles on
+    ``id_col``, which the cached index is already hashed on.
     """
     tf = tf_index(docs, id_col, text_col)
     groups = docs.select(F.col(id_col), F.col(group_col))
-    if broadcast_groups:
-        groups = F.broadcast(groups)
     return (
         tf.join(groups, id_col)
         .groupBy(group_col)
@@ -1386,7 +1373,6 @@ def bigram_lm_scores(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_counts: bool = True,
 ) -> DataFrame:
     """Statistical language-model quality scoring (the CCNet/KenLM-style
     filter, reduced to a corpus-trained bigram model): per document the
@@ -1417,13 +1403,10 @@ def bigram_lm_scores(
     other index-backed textops (r7 cached only tf_index and re-paid the
     bigram explode, two count shuffles, and a count() action per call).
 
-    ``broadcast_counts`` (default True) hints the folded SCORE table for
-    the broadcast join — right for natural-language corpora, where the
-    bigram vocabulary is bounded (~|V|·k, millions at worst) and the
-    planner cannot estimate the aggregates' size. For open vocabularies
-    (web-crawl scale, 10⁹+ distinct bigrams) pass False: the score table
-    then reuses the bigram index's hash partitioning and the join plans
-    exchange-free on the score side.
+    The folded SCORE table is hinted for a broadcast join, which assumes
+    a natural-language corpus whose bigram vocabulary is bounded (~|V|·k,
+    millions at worst) and fits a broadcast; the planner cannot estimate
+    the aggregates' size itself.
 
     Documents with <2 tokens have no bigrams and are absent, mirrored by
     the oracle.
@@ -1438,16 +1421,13 @@ def bigram_lm_scores(
     from ..index_cache import cached_index, plan_key
 
     return cached_index(
-        plan_key(docs, "lm_scored", id_col, text_col, bool(broadcast_counts)),
-        lambda: _bigram_lm_scores_build(docs, id_col, text_col, broadcast_counts),
+        plan_key(docs, "lm_scored", id_col, text_col),
+        lambda: _bigram_lm_scores_build(docs, id_col, text_col),
     )
 
 
 def _bigram_lm_scores_build(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    broadcast_counts: bool,
+    docs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     from ..index_cache import cached_index, plan_key
 
@@ -1486,9 +1466,7 @@ def _bigram_lm_scores_build(
             .alias("__ilp1"),
         ),
     )
-    if broadcast_counts:
-        ilp = F.broadcast(ilp)
-    scored = bigrams.join(ilp, ["w1", "w2"]).select(
+    scored = bigrams.join(F.broadcast(ilp), ["w1", "w2"]).select(
         id_col,
         "tf_b",
         (F.col("tf_b") * F.col("__ilp1")).alias("__ilp"),
@@ -1509,7 +1487,6 @@ def cross_lm_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     source_col: str = "source",
-    broadcast_counts: bool = True,
 ) -> DataFrame:
     """CCNet-style CROSS-corpus LM filtering: score every document under a
     bigram model trained ONLY on the reference slice (``source_col`` ∈
@@ -1531,10 +1508,10 @@ def cross_lm_scores(
 
     Scale shape: the reference counts are (small-corpus) session-cached
     index artifacts; the scored stream is the whole-corpus ``bigram_index``
-    (shared with the self-trained scorer — no new corpus pass); both count
-    tables broadcast (or, with ``broadcast_counts=False``, reuse the
-    index's hash partitioning for open vocabularies). Documents with <2
-    tokens have no bigrams and are absent, mirrored by the oracle.
+    (shared with the self-trained scorer — no new corpus pass); both
+    reference score tables broadcast, which assumes the reference
+    vocabulary fits a broadcast. Documents with <2 tokens have no bigrams
+    and are absent, mirrored by the oracle.
 
     Like ``bigram_lm_scores``, the per-doc scored table is session-cached
     per (corpus, reference slice): each execution otherwise re-broadcast
@@ -1545,12 +1522,9 @@ def cross_lm_scores(
 
     ref_key = tuple(sorted(ref_sources))
     return cached_index(
-        plan_key(
-            docs, "xlm_scored", source_col, ref_key, id_col, text_col,
-            bool(broadcast_counts),
-        ),
+        plan_key(docs, "xlm_scored", source_col, ref_key, id_col, text_col),
         lambda: _cross_lm_scores_build(
-            docs, ref_sources, id_col, text_col, source_col, broadcast_counts
+            docs, ref_sources, id_col, text_col, source_col
         ),
     )
 
@@ -1561,7 +1535,6 @@ def _cross_lm_scores_build(
     id_col: str,
     text_col: str,
     source_col: str,
-    broadcast_counts: bool,
 ) -> DataFrame:
     from ..index_cache import cached_index, plan_key
 
@@ -1625,9 +1598,6 @@ def _cross_lm_scores_build(
             .alias("__ilpc"),
         ),
     )
-    if broadcast_counts:
-        ilp_ref = F.broadcast(ilp_ref)
-        ilp_ctx = F.broadcast(ilp_ctx)
     ilp_unseen = F.round(
         F.log(
             (F.lit(0) + F.lit(1.0)) / (F.lit(0) + F.lit(float(vocab_n)))
@@ -1635,8 +1605,8 @@ def _cross_lm_scores_build(
         * F.lit(1e9)
     ).cast("long")
     scored = (
-        bigrams.join(ilp_ref, ["w1", "w2"], "left")
-        .join(ilp_ctx, "w1", "left")
+        bigrams.join(F.broadcast(ilp_ref), ["w1", "w2"], "left")
+        .join(F.broadcast(ilp_ctx), "w1", "left")
         .select(
             id_col,
             "tf_b",
@@ -1956,16 +1926,15 @@ def _weighted_term_agg(
     posting: DataFrame,
     weights: DataFrame,
     id_col: str,
-    broadcast_weights: bool = True,
 ) -> DataFrame:
     """Shared scoring core: distinct (doc, term) postings × a trained
     (term, weight) table → per-doc (n_pos, n_neg, logit). Used by the
-    batch held-out scorer and the streaming frozen-weights sink."""
+    batch held-out scorer and the streaming frozen-weights sink. The
+    vocabulary-sized weight table is broadcast, which assumes a
+    natural-language vocabulary that fits a broadcast."""
     w = weights.select("term", "weight")
-    if broadcast_weights:
-        w = F.broadcast(w)
     return (
-        posting.join(w, "term")
+        posting.join(F.broadcast(w), "term")
         .groupBy(id_col)
         .agg(
             F.sum(F.when(F.col("weight") > 0, 1).otherwise(0))
@@ -1984,7 +1953,6 @@ def classifier_score_with(
     weights: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_weights: bool = True,
 ) -> DataFrame:
     """Score ARBITRARY documents against an already-trained weight table:
     (doc_id, n_pos, n_neg, logit, pred_good) — the serving/streaming form
@@ -2000,7 +1968,7 @@ def classifier_score_with(
         .filter(F.col("term") != "")
         .distinct()
     )
-    per_doc = _weighted_term_agg(posting, weights, id_col, broadcast_weights)
+    per_doc = _weighted_term_agg(posting, weights, id_col)
     return docs.select(id_col).join(per_doc, id_col, "left").select(
         id_col,
         F.coalesce("n_pos", F.lit(0)).cast("long").alias("n_pos"),
@@ -2015,7 +1983,6 @@ def classifier_scores(
     min_df: int = CLS_MIN_DF,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_weights: bool = True,
 ) -> DataFrame:
     """Held-out scoring: (doc_id, n_pos, n_neg, logit, pred_good,
     label_good) for every EVAL-split document. The logit is the integer
@@ -2023,10 +1990,9 @@ def classifier_scores(
     with no weighted terms score 0 via the left join (never silently
     dropped).
 
-    ``broadcast_weights`` (default True) fits natural-language
-    vocabularies; pass False for open vocabularies (URLs/code tokens) —
-    the join then reuses the posting table's hash partitioning on term,
-    the same knob rationale as ``term_frequencies.broadcast_df``.
+    The trained weight table is broadcast, which assumes a
+    natural-language vocabulary that fits a broadcast (the
+    ``term_frequencies`` df-side assumption).
 
     The scored eval table — one narrow row per eval-split document, the
     held-out score table a training pipeline materializes once per
@@ -2037,28 +2003,19 @@ def classifier_scores(
     from ..index_cache import cached_index, plan_key
 
     return cached_index(
-        plan_key(
-            docs, "classifier_eval_scores", min_df, id_col, text_col,
-            bool(broadcast_weights),
-        ),
-        lambda: _classifier_scores_build(
-            docs, min_df, id_col, text_col, broadcast_weights
-        ),
+        plan_key(docs, "classifier_eval_scores", min_df, id_col, text_col),
+        lambda: _classifier_scores_build(docs, min_df, id_col, text_col),
     )
 
 
 def _classifier_scores_build(
-    docs: DataFrame,
-    min_df: int,
-    id_col: str,
-    text_col: str,
-    broadcast_weights: bool,
+    docs: DataFrame, min_df: int, id_col: str, text_col: str
 ) -> DataFrame:
     meta = classifier_doc_meta(docs, id_col, text_col)
     eval_meta = meta.filter(F.col("split") == "eval").drop("split")
     w = classifier_weights(docs, min_df, id_col, text_col)
     posting = tf_index(docs, id_col, text_col).select(id_col, "term")
-    per_doc = _weighted_term_agg(posting, w, id_col, broadcast_weights)
+    per_doc = _weighted_term_agg(posting, w, id_col)
     return eval_meta.join(per_doc, id_col, "left").select(
         id_col,
         F.coalesce("n_pos", F.lit(0)).cast("long").alias("n_pos"),
@@ -2324,7 +2281,6 @@ def bigram_pmi_topk(
     min_count: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_counts: bool = True,
 ) -> DataFrame:
     """Collocation mining (Manning & Schütze ch. 5): the top-``k``
     bigrams by pointwise-mutual-information LIFT — (w1, w2, cb,
@@ -2342,9 +2298,9 @@ def bigram_pmi_topk(
 
     Shape: serves ENTIRELY from session-cached index artifacts shared
     with the LM family (``bigram_counts``, ``unigram_counts`` — vocab-
-    sized); the unigram table joins twice (broadcast under
-    ``broadcast_counts``, the bigram_lm_scores bounded-vocabulary
-    discipline), and the top-k collapses to TakeOrderedAndProject.
+    sized); the unigram table joins twice, broadcast on the
+    bigram_lm_scores assumption that the vocabulary fits a broadcast, and
+    the top-k collapses to TakeOrderedAndProject.
     """
     from ..index_cache import cached_index, plan_key
 
@@ -2365,12 +2321,10 @@ def bigram_pmi_topk(
     )
     u1 = uni.select(F.col("w1"), F.col("cu").alias("__c1"))
     u2 = uni.select(F.col("w1").alias("w2"), F.col("cu").alias("__c2"))
-    if broadcast_counts:
-        u1, u2 = F.broadcast(u1), F.broadcast(u2)
     return (
         bc.filter(F.col("cb") >= min_count)
-        .join(u1, "w1")
-        .join(u2, "w2")
+        .join(F.broadcast(u1), "w1")
+        .join(F.broadcast(u2), "w2")
         .select(
             "w1",
             "w2",

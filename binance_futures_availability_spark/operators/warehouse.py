@@ -210,7 +210,6 @@ def shipping_priority(
     segment: str,
     cutoff: str,
     k: int = 10,
-    broadcast_orders: bool = True,
 ) -> DataFrame:
     """Top-``k`` unshipped orders by outstanding revenue (the TPC-H Q3
     family): (o_orderkey, revenue, o_orderdate, o_orderpriority) for
@@ -244,26 +243,22 @@ def shipping_priority(
     # functionally dependent on the order key, so summing per order key
     # first is identical — the fact side reduces map-side to ≤|orders|
     # rows before any join, and the join runs order-sized ⋈ order-sized
-    # instead of sort-merging the full line-item stream. With
-    # ``broadcast_orders`` (default) the qualifying orders (segment ∩
-    # pre-cutoff — date × 1/|segments| selectivity) are broadcast TWICE
-    # on purpose: first as a semi-join under the aggregate so the revenue
-    # hash table only holds qualifying order keys (~10× fewer groups),
-    # then as the build side of the final attribute join — so the large
-    # aggregated stream is never broadcast and never shuffled beyond its
-    # one partial-agg exchange. That side scales with |orders|, not a
-    # bounded dimension: past ~10⁸ qualifying rows the forced hint would
-    # hit Spark's broadcast limits — pass ``broadcast_orders=False``
-    # there and the planner falls back to a shuffled join (AQE may still
-    # choose broadcast from runtime stats when it fits).
-    hint = F.broadcast if broadcast_orders else (lambda df: df)
+    # instead of sort-merging the full line-item stream. The qualifying
+    # orders (segment ∩ pre-cutoff — date × 1/|segments| selectivity) are
+    # broadcast TWICE on purpose: first as a semi-join under the aggregate
+    # so the revenue hash table only holds qualifying order keys (~10×
+    # fewer groups), then as the build side of the final attribute join —
+    # so the large aggregated stream is never broadcast and never shuffled
+    # beyond its one partial-agg exchange. That side scales with |orders|,
+    # not a bounded dimension: the hint assumes the qualifying orders stay
+    # under Spark's broadcast limits (~10⁸ rows).
     line_rev = (
         lineitem.filter(F.col("l_shipdate") > F.lit(cutoff))
         .select(
             "l_orderkey", (price_c * (F.lit(100) - disc_h)).alias("rev4")
         )
         .join(
-            hint(o.select("o_orderkey")),
+            F.broadcast(o.select("o_orderkey")),
             F.col("l_orderkey") == F.col("o_orderkey"),
             "left_semi",
         )
@@ -272,7 +267,7 @@ def shipping_priority(
     )
     return (
         line_rev.join(
-            hint(o), line_rev["l_orderkey"] == o["o_orderkey"]
+            F.broadcast(o), line_rev["l_orderkey"] == o["o_orderkey"]
         )
         .select(
             "o_orderkey",

@@ -323,9 +323,10 @@ def test_lsh_candidate_artifact_shared_and_exact(spark, tmp_path):
 def test_cosine_pair_graph_shared_and_exact(spark, tmp_path):
     """The exact blocked-GEMM cosine pair graph over a file-backed corpus
     is ONE session-cached artifact shared by cosine_pairs and
-    lsh_recall_audit's n_exact side — and identical to the cache-bypassed
-    (explicit n_blocks) build."""
+    lsh_recall_audit's n_exact side — and identical to a rebuild with a
+    different block count."""
     import random
+    from unittest import mock
 
     from binance_futures_availability_spark import index_cache
     from binance_futures_availability_spark.operators import similarity
@@ -360,14 +361,14 @@ def test_cosine_pair_graph_shared_and_exact(spark, tmp_path):
     assert len(graph_keys("cosine_pair_graph")) == 1  # audit reused it
     assert len(graph_keys("lsh_cosine_pair_graph")) == 1
     assert audit["n_exact"] == len(cached)
-    # explicit n_blocks bypasses the cache: same pair set
-    bypass = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in similarity.cosine_pairs_blocked(
-            emb, 0.95, n_blocks=3
-        ).collect()
-    }
-    assert cached == bypass and cached
+    # a rebuild over 3 blocks instead of 8: same pair set
+    index_cache.clear_indexes()
+    with mock.patch.object(similarity, "COSINE_MIN_BLOCKS", 3):
+        rebuilt = {
+            (r["id_a"], r["id_b"], r["cosine"])
+            for r in similarity.cosine_pairs(emb, 0.95).collect()
+        }
+    assert cached == rebuilt and cached
     index_cache.clear_indexes()
 
 

@@ -8,6 +8,7 @@ capped: each property drives a real Spark job.
 from __future__ import annotations
 
 import datetime as dt
+from unittest import mock
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -302,11 +303,13 @@ def test_classify_symbol_matches_python_reference(spark, symbols):
 @given(texts=_texts, max_hamming=st.integers(0, 8))
 def test_simhash_banding_equals_brute_force(spark, texts, max_hamming):
     """Pigeonhole banding is lossless for any max_hamming — and BOTH
-    physical strategies (block_pairs True/False) emit the identical pair
+    physical strategies (chunk pairs and single chunks, forced by moving
+    the measured crossover ``BLOCK_CAND_PER_DOC``) emit the identical pair
     set. The explicit two-strategy assertion is the CI guarantee that
     lets the simhash pair-graph session cache key on logical parameters
     only (advisor r13: a dual-body-under-one-key cache is safe exactly
-    as long as this property holds)."""
+    as long as this property holds). ``mock.patch.object`` rather than
+    ``monkeypatch``: hypothesis rejects function-scoped fixtures."""
     docs = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
     s = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs).collect()}
     brute = {
@@ -315,14 +318,15 @@ def test_simhash_banding_equals_brute_force(spark, texts, max_hamming):
         for b in s
         if a < b and bin(s[a] ^ s[b]).count("1") <= max_hamming
     }
-    for block_pairs in (None, True, False):
-        banded = {
-            (r["id_a"], r["id_b"])
-            for r in dedup.simhash_pairs(
-                docs, max_hamming, block_pairs=block_pairs
-            ).collect()
-        }
-        assert banded == brute, block_pairs
+    # the shipped crossover (measured choice); -1 forces chunk pairs, inf
+    # forces single chunks
+    for crossover in (dedup.BLOCK_CAND_PER_DOC, -1, float("inf")):
+        with mock.patch.object(dedup, "BLOCK_CAND_PER_DOC", crossover):
+            banded = {
+                (r["id_a"], r["id_b"])
+                for r in dedup.simhash_pairs(docs, max_hamming).collect()
+            }
+        assert banded == brute, crossover
 
 
 _doc_strategy = st.lists(

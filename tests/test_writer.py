@@ -669,18 +669,22 @@ def test_expire_partitions_metadata_only(spark, tmp_path):
 PACKAGE = pathlib.Path(writer.__file__).resolve().parents[1]
 
 
-def test_no_session_conf_writes_in_package():
-    """No code of the package changes a session conf: no ``.conf.set(``
-    call anywhere (sizing rides on the frames, write modes on the
-    writes)."""
+def _package_trees():
     sources = [
         *sorted(PACKAGE.rglob("*.py")),
         PACKAGE.parent / "__spark_entry__.py",
     ]
+    return [(p, ast.parse(p.read_text())) for p in sources]
+
+
+def test_no_session_conf_writes_in_package():
+    """No code of the package changes a session conf: no ``.conf.set(``
+    call anywhere (sizing rides on the frames, write modes on the
+    writes)."""
     calls = [
         (p.name, n.lineno)
-        for p in sources
-        for n in ast.walk(ast.parse(p.read_text()))
+        for p, tree in _package_trees()
+        for n in ast.walk(tree)
         if isinstance(n, ast.Call)
         and isinstance(n.func, ast.Attribute)
         and n.func.attr == "set"
@@ -688,6 +692,90 @@ def test_no_session_conf_writes_in_package():
         and n.func.value.attr == "conf"
     ]
     assert calls == []
+
+
+#: the deployment settings the package reads from the environment: paths,
+#: resources and credentials — never a choice between physical plans
+DEPLOYMENT_ENV = {
+    "SPARK_GRAFT_CACHE",
+    "SPARK_GRAFT_SF_DIR",
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_INDEX_CACHE_BYTES",
+    "PYSPARK_SUBMIT_ARGS",
+    "BFA_TABLE_PATH",
+    "GITHUB_TOKEN",
+}
+
+
+def test_env_reads_name_only_deployment_settings():
+    """Every ``os.environ``/``os.getenv`` read in the package and the
+    entry module names a literal deployment setting."""
+
+    def is_environ(n):
+        return isinstance(n, ast.Attribute) and n.attr == "environ"
+
+    bad = []
+    for p, tree in _package_trees():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and (
+                n.func.attr == "getenv" or is_environ(n.func.value)
+            ):
+                key = n.args[0] if n.args else None
+            elif isinstance(n, ast.Subscript) and is_environ(n.value):
+                key = n.slice
+            elif isinstance(n, ast.Compare) and any(
+                is_environ(c) for c in n.comparators
+            ):
+                key = n.left
+            else:
+                continue
+            name = getattr(key, "value", None)
+            if name not in DEPLOYMENT_ENV:
+                bad.append((p.name, n.lineno, name))
+    assert bad == []
+
+
+def test_no_broadcast_parameters_on_public_operators():
+    """Join strategy is not a caller's choice: no public operator
+    function takes a ``broadcast_*`` parameter."""
+    bad = [
+        (p.name, n.name, a.arg)
+        for p in sorted((PACKAGE / "operators").glob("*.py"))
+        for n in ast.parse(p.read_text()).body
+        if isinstance(n, ast.FunctionDef) and not n.name.startswith("_")
+        for a in (*n.args.posonlyargs, *n.args.args, *n.args.kwonlyargs)
+        if a.arg.startswith("broadcast_")
+    ]
+    assert bad == []
+
+
+def test_no_checkout_path_literals_in_package():
+    """No string constant outside a docstring names one particular
+    checkout (``/root/repo``): artifact paths resolve through
+    ``catalog._artifact_root()``, so a copy of the repo uses its own."""
+    bad = []
+    for p, tree in _package_trees():
+        docstrings = {
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(
+                n,
+                (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+            )
+            and n.body
+            and isinstance(n.body[0], ast.Expr)
+            and isinstance(n.body[0].value, ast.Constant)
+        }
+        bad += [
+            (p.name, n.lineno)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and "/root/repo" in n.value
+            and id(n) not in docstrings
+        ]
+    assert bad == []
 
 
 @pytest.mark.parametrize(

@@ -70,7 +70,7 @@ DESIGN_NOTES = {
     "cosine_pairs": (
         "INTENTIONALLY super-linear: the brute-force blocked-GEMM "
         "cosine enumeration is the RECALL BASELINE the LSH/IVF serving "
-        "paths are audited against (similarity.py blocked_cosine_pairs "
+        "paths are audited against (similarity.py cosine_pairs "
         "docstring) — O(n*n_blocks) work is quadratic in corpus by "
         "construction; the serving-path twins (lsh_cosine_pairs*, "
         "ivf_*, semantic_dedup) all measure alpha <= 1"
