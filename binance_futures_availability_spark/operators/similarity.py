@@ -241,8 +241,8 @@ def cosine_pairs(
     ``max(COSINE_MIN_BLOCKS, ceil(n / COSINE_BLOCK_ROWS))`` — so one
     block's pairwise GEMM fits a task's memory at ANY corpus size (the r12
     CONSTANT block count meant blocks grew with the corpus and the (n/8)²
-    per-task cosine matrix would OOM past ~10⁵ vectors — guide §2
-    scale-adaptive partitioning, §5 per-task memory), while the floor
+    per-task cosine matrix would OOM past ~10⁵ vectors; partitioning
+    scales with the data so per-task memory stays bounded), while the floor
     keeps enough groups to fill the shuffle width on small corpora. The
     pair set is invariant to the block count; group count grows as
     n_blocks²/2, which is what ``audit_sample`` bounds at production

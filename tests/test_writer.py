@@ -752,8 +752,9 @@ def test_no_broadcast_parameters_on_public_operators():
 
 def test_no_checkout_path_literals_in_package():
     """No string constant outside a docstring names one particular
-    checkout (``/root/repo``): artifact paths resolve through
+    checkout by its absolute path: artifact paths resolve through
     ``catalog._artifact_root()``, so a copy of the repo uses its own."""
+    checkout = str(PACKAGE.parent)
     bad = []
     for p, tree in _package_trees():
         docstrings = {
@@ -772,7 +773,7 @@ def test_no_checkout_path_literals_in_package():
             for n in ast.walk(tree)
             if isinstance(n, ast.Constant)
             and isinstance(n.value, str)
-            and "/root/repo" in n.value
+            and checkout in n.value
             and id(n) not in docstrings
         ]
     assert bad == []
