@@ -48,6 +48,7 @@ from binance_futures_availability_spark.operators import (
     warehouse,
 )
 from binance_futures_availability_spark.operators.availability import (
+    _snapshot_key,
     availability_fact,
     availability_fact_by_symbol,
     availability_from_lineitem,
@@ -173,29 +174,21 @@ def _session_cache_root() -> str:
 def _duckdb_import_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1/S8 + the migration connector, gate-verified end-to-end: the fact
     table round-trips Spark → .duckdb (reference's store, PK included) →
-    partitioned parquet via sources/duckdb_io, and the P1 snapshot runs
-    over the IMPORTED table. Hash-parity with the plain snapshot oracle
-    proves the connector loses nothing. The round-trip artifact is built
-    once per PROCESS under a session-scoped scratch dir
+    the engine's parquet fact layout via sources/duckdb_io, and the P1
+    snapshot runs over the IMPORTED table. Hash-parity with the plain
+    snapshot oracle proves the connector loses nothing. The round-trip
+    artifact is built once per PROCESS under a session-scoped scratch dir
     (``_session_cache_root``) so warm reps measure the query; every fresh
     process re-pays the full export→import rebuild (cold-pass cost)."""
-    import hashlib
     import os
 
-    from binance_futures_availability_spark.operators.availability import (
-        _source_fingerprint,
-    )
     from binance_futures_availability_spark.sources import duckdb_io
 
-    cache_root = _session_cache_root()
-    key = "{}-{}".format(
-        hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8],
-        _source_fingerprint(sf_dir),
-    )
-    root = os.path.join(cache_root, "duckdb_io")
+    key = _snapshot_key(sf_dir)
+    root = os.path.join(_session_cache_root(), "duckdb_io")
     os.makedirs(root, exist_ok=True)
     dest = os.path.join(root, f"{key}_fact")
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
+    if not writer.table_exists(spark, dest):
         db = os.path.join(root, f"{key}.duckdb")
         duckdb_io.export_duckdb(_da(spark, sf_dir), db)
         duckdb_io.import_duckdb(spark, db, dest_path=dest)
@@ -270,20 +263,14 @@ def _daily_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame keyed on the committed path: warm reps measure the query; every
     fresh process re-pays the full pipeline rebuild (cold-pass cost)."""
     import datetime as dt
-    import hashlib
     import os
 
     from binance_futures_availability_spark import index_cache
     from binance_futures_availability_spark import update as update_mod
-    from binance_futures_availability_spark.operators.availability import (
-        _source_fingerprint,
-    )
 
-    key = "{}-{}".format(
-        hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8],
-        _source_fingerprint(sf_dir),
+    fact = os.path.join(
+        _session_cache_root(), "daily_update", f"{_snapshot_key(sf_dir)}_fact"
     )
-    fact = os.path.join(_session_cache_root(), "daily_update", f"{key}_fact")
     start, end = _UPDATE_WINDOW
 
     def build() -> DataFrame:

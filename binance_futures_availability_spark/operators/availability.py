@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import _artifact_root, _dir_fingerprint, load_table
 from ..index_cache import cached_index, invalidate, path_key
+from ..schema import DAILY_AVAILABILITY
+from ..sources import writer
 
 #: bump when the derivation changes — invalidates materialized caches
 DA_VERSION = "v4"
@@ -109,34 +111,34 @@ def availability_from_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def materialize_fact(
-    da: DataFrame, path: str, partition_col: str | None = None
-) -> None:
+def materialize_fact(da: DataFrame, path: str) -> None:
     """Persist the fact table once so queries read it through the catalog
     instead of re-deriving it (the reference's ``daily_availability`` is a
     *stored* table, not a view — database/schema.py:68-95).
 
-    Layout is a scale decision:
-    - ``partition_col="date"`` for production volumes (≥ tens of MB/date):
-      snapshot/anti-join queries prune to single partitions, and incremental
-      upserts rewrite only touched dates (writer.upsert_partitioned).
-    - ``partition_col=None`` for small tables: a handful of range-split
-      files, each sorted by (date, symbol) with NON-OVERLAPPING ranges, so
-      parquet footer min/max serve file-level date pruning (P1/J3/J4) and
-      row-group stats the symbol path (P3) — same pruning power as the
-      previous single global-sorted file, but full scans (aggregations,
-      windows, the cached-handle build) parallelize across the splits
-      instead of running one task. Partitioning 60k rows into 2.5k dirs
-      would make every full scan open 2.5k files — wrong below ~1 GB/date.
+    One layout: a handful of range-split files, each sorted by (date,
+    symbol) with NON-OVERLAPPING ranges, so parquet footer min/max serve
+    file-level date pruning (P1/J3/J4) and row-group stats the symbol path
+    (P3), while full scans (aggregations, windows, the cached-handle
+    build) parallelize across the splits. A table that takes updates is
+    written with ``writer.write_partitioned`` instead (directory per date,
+    what ``upsert_partitioned`` rewrites); the writers that update in
+    place refuse this layout.
+
+    Commits through ``writer._publish``: staged to a unique sibling and
+    renamed into place only while ``path`` holds no committed table, so
+    when another process commits first nothing is published and its
+    byte-equivalent table (same deterministic derivation) stands.
     """
-    if partition_col:
-        da.repartition(partition_col).write.mode("overwrite").partitionBy(
-            partition_col
-        ).parquet(path)
-    else:
+    spark = da.sparkSession
+    writer._publish(
         da.repartitionByRange(8, "date", "symbol").sortWithinPartitions(
             "date", "symbol"
-        ).write.mode("overwrite").parquet(path)
+        ),
+        path,
+        DAILY_AVAILABILITY,
+        check=lambda: not writer.table_exists(spark, path),
+    )
 
 
 #: session-lifetime handles to the materialized table, keyed by parquet path —
@@ -167,6 +169,16 @@ def _source_fingerprint(sf_dir: str) -> str:
     return hashlib.md5("\n".join(entries).encode()).hexdigest()[:8]
 
 
+def _snapshot_key(sf_dir: str) -> str:
+    """``<md5 of the resolved sf_dir>-<source fingerprint>``: the key of
+    every artifact derived from one testdata dir. The FULL resolved path
+    (a basename alone would silently share artifacts between /a/sf0.1 and
+    /b/sf0.1) plus the input fingerprint (detects in-place
+    regeneration)."""
+    digest = hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8]
+    return f"{digest}-{_source_fingerprint(sf_dir)}"
+
+
 def availability_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized ``daily_availability`` for a testdata dir.
 
@@ -176,21 +188,14 @@ def availability_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE derivation aggregation instead of 18 full re-aggregations of the
     fact source (the round-1 scale-killer).
 
-    Concurrency: materialization is staged into a process-private temp dir
-    and committed with an atomic rename, so two processes racing on a cold
-    cache both produce correct results and exactly one commit wins — no
-    partially-written cache dir is ever readable under ``path``.
+    Concurrency: ``materialize_fact`` commits through ``writer._publish``,
+    so two processes racing on a cold cache both produce correct results,
+    at most one commit is published, and no partially-written directory
+    is ever readable under ``path``.
     """
-    # key on the FULL resolved path (basename alone would silently share a
-    # cache between /a/sf0.1 and /b/sf0.1) plus the input fingerprint
-    # (detects in-place regeneration); basename kept for readability
-    real = os.path.realpath(sf_dir)
-    sf_name = os.path.basename(real) or "default"
-    digest = hashlib.md5(real.encode()).hexdigest()[:8]
-    fp = _source_fingerprint(sf_dir)
-    path = os.path.join(
-        _artifact_root(), f"da_{DA_VERSION}", f"{sf_name}-{digest}-{fp}"
-    )
+    sf_name = os.path.basename(os.path.realpath(sf_dir)) or "default"
+    name = f"{sf_name}-{_snapshot_key(sf_dir)}"
+    path = os.path.join(_artifact_root(), f"da_{DA_VERSION}", name)
     handle = _FACT_HANDLES.get(path)
     if handle is not None:
         return handle
@@ -198,7 +203,7 @@ def availability_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf_dir — unpersist the stale handle and release every registry
     # entry derived from it (clustered projections, index artifacts) so
     # a session that regenerates testdata doesn't strand cached blocks
-    stale_prefix = f"{sf_name}-{digest}-"
+    stale_prefix = name.rsplit("-", 1)[0] + "-"
     for old_path in [
         p
         for p in _FACT_HANDLES
@@ -209,18 +214,8 @@ def availability_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
         except Exception:  # noqa: BLE001 — eviction is best-effort
             pass
         invalidate(old_path)
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        staging = f"{path}.tmp-{os.getpid()}"
-        materialize_fact(availability_from_lineitem(spark, sf_dir), staging)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            # lost the race — another process committed first; its content
-            # is byte-equivalent (same deterministic derivation), use it
-            import shutil
-
-            shutil.rmtree(staging, ignore_errors=True)
+    if not writer.table_exists(spark, path):
+        materialize_fact(availability_from_lineitem(spark, sf_dir), path)
     handle = spark.read.parquet(path).cache()
     # carry the source identity the way catalog.load_table_hot does:
     # inputFiles() can come back empty through the cached handle, and

@@ -94,6 +94,13 @@ def get_session(
         .config("spark.sql.files.openCostInBytes", str(512 * 1024))
         # local-mode friendliness; harmless on a cluster
         .config("spark.ui.enabled", "false")
+        # Python workers do not inherit the driver's sys.path: put the
+        # package's parent on theirs so UDFs can import the engine from any
+        # working directory. Spark joins this with the JVM's own PYTHONPATH.
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

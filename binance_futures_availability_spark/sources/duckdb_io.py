@@ -7,9 +7,11 @@ database/availability_db.py:32-47) with the 17-column
 (date, symbol)). A user migrating to this engine starts from that file,
 so the connector provides both directions:
 
-- ``import_duckdb``: .duckdb → parquet fact table in the engine's layout
-  (``materialize_fact``'s scale decision: range-split files by default,
-  directory-per-date for production volumes).
+- ``import_duckdb``: .duckdb → parquet fact table in the engine's one
+  materialized layout (``materialize_fact``: range-split files sorted by
+  (date, symbol)). A table that takes updates is written with
+  ``writer.write_partitioned`` instead, from the frame ``import_duckdb``
+  returns without ``dest_path``.
 - ``export_duckdb``: fact DataFrame → .duckdb with the reference's exact
   CREATE TABLE (PK included), so the reference CLI keeps working on the
   exported file.
@@ -88,19 +90,15 @@ def _connect(db_path: str, read_only: bool = False):
 
 def read_fact(spark: SparkSession, path: str) -> DataFrame:
     """Catalog read of an imported fact table in declared column order and
-    types (a partitioned read appends the partition column last and may
-    re-infer its type).
+    types.
 
     The handle is a persisted registry frame — the same buffer-pool
-    analogue as operators.availability._FACT_HANDLES. Without it every
-    catalog read re-runs parquet partition discovery over the ~2.5k date
-    directories (~4 s/call at bench scale, the r7 judge's worst ratio);
-    with it repeat reads serve from the cached columnar form. Keyed per
-    (resolved path, top-level directory fingerprint, session): an
-    in-place rewrite (upsert touches a date dir's mtime) misses and the
-    sweep releases the superseded snapshot; ``import_duckdb`` also
-    invalidates eagerly on re-import. Unreadable/remote paths are never
-    cached."""
+    analogue as operators.availability._FACT_HANDLES: repeat reads serve
+    from the cached columnar form instead of re-listing and re-reading
+    the files. Keyed per (resolved path, top-level directory fingerprint,
+    session): an in-place rewrite misses and the sweep releases the
+    superseded snapshot; ``import_duckdb`` also invalidates eagerly on
+    re-import. Unreadable/remote paths are never cached."""
     from ..catalog import _dir_fingerprint
 
     real = os.path.realpath(path)
@@ -123,7 +121,6 @@ def import_duckdb(
     db_path: str,
     dest_path: str | None = None,
     table: str = "daily_availability",
-    partition_col: str | None = None,
 ) -> DataFrame:
     """Read the reference's DuckDB fact table into Spark.
 
@@ -134,22 +131,18 @@ def import_duckdb(
     commits the fact table there and returns the catalog read over it.
     Without ``dest_path`` the cast staging read is returned directly.
 
-    ``partition_col`` is the same scale decision as
-    ``operators.availability.materialize_fact`` (which performs the
-    write): ``None`` (default) = the engine's small-table layout —
-    range-split files sorted by (date, symbol), footer min/max pruning —
-    exactly what ``availability_fact`` itself commits at this volume;
-    ``"date"`` = directory-per-date for production volumes (≥ tens of
-    MB/date). r14: the import previously hard-coded the date-partitioned
-    layout, paying a 2.5k-directory write (~8-10 s) plus 2.5k-file
-    partition discovery on read-back for a table the engine's own layout
-    rule stores as 8 range files (guide §6 — small files hurt twice).
+    The commit is ``operators.availability.materialize_fact``'s: the
+    engine's range-split layout, published through ``writer._publish``.
+    A table already at ``dest_path`` is removed first, so a re-import
+    replaces it. A table that takes updates is written with
+    ``writer.write_partitioned`` from the frame returned without
+    ``dest_path``.
 
     Columns the source predates (pre-ADR-0007 files lack the nine
     volume columns) are NULL-filled; unknown extra columns are ignored.
 
     Staging lifecycle: with ``dest_path`` the staging dir is deleted as
-    soon as the partitioned write has materialized it; without
+    soon as the fact table is committed; without
     ``dest_path`` the RETURNED frame still lazily reads the staging file,
     so it cannot be deleted here — cleanup is registered atexit instead
     (process-lifetime staging, never a permanent leak).
@@ -189,9 +182,11 @@ def import_duckdb(
         atexit.register(shutil.rmtree, staging, ignore_errors=True)
         return cast
     from ..operators.availability import materialize_fact
+    from .writer import _rm_tree
 
     try:
-        materialize_fact(cast, dest_path, partition_col=partition_col)
+        _rm_tree(spark, dest_path)
+        materialize_fact(cast, dest_path)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
     invalidate(os.path.realpath(dest_path))

@@ -13,15 +13,22 @@ would do. For a date-partitioned table, ``upsert_partitioned`` rewrites ONLY
 the touched date partitions, which is the 100 TB-safe path: work is
 proportional to the incoming dates, not the table.
 
-One commit rule: every update of a table — the upsert (a first write,
-new dates and overlap alike), ``merge_into``, ``compact_partitions``,
-the rankings archive's first write and appends, the streaming sinks'
-frozen artifacts — commits through ONE staging path, ``_publish``: the frame is written once
-to a unique sibling ``<root>.__staging__-<uuid>``, checked, and moved
-into place by Hadoop FileSystem renames — the whole directory when the
-root holds no table yet, otherwise per partition the same
+One commit path: every table built or changed in place — the upsert (a
+first write, new dates and overlap alike), ``merge_into``,
+``compact_partitions``, the fact materialization
+(``operators.availability.materialize_fact``, also behind
+``duckdb_io.import_duckdb``), the rankings archive
+(``update._append_rankings``) and the streaming sinks' frozen artifacts —
+commits through ``_publish``: the frame is written once to a unique
+sibling ``<root>.__staging__-<uuid>``, checked, and moved into place by
+Hadoop FileSystem renames. One first-write rule: a root that holds no
+data (missing, or only ``_``/``.`` names such as ``_SUCCESS`` or
+``_temporary``) is replaced by the whole staged directory in one rename;
+any other root gains the staged partitions (each the same
 delete-then-rename swap Spark's dynamic-overwrite commit performs,
-without a second write of the staged bytes. Only the whole-table writers
+without a second write of the staged bytes) or part files next to its
+own, and a staged layout that does not match the root's is refused
+before anything is written. Only the whole-table writers
 (``write_partitioned``, ``write_bucketed``, ``write_zordered``) write
 their target directly.
 """
@@ -163,7 +170,8 @@ def upsert_partitioned(
     table) still commits full-width files, and a frame that does not match
     the declared schema is refused before anything is written. On a
     missing table ``_publish`` makes the staged directory the table, its
-    ``_SUCCESS`` marker (``table_exists``) included.
+    ``_SUCCESS`` marker (``table_exists``) included; a table of data files
+    (``materialize_fact``'s layout) is refused before anything is written.
     """
     spark = incoming.sparkSession
     root = spark_existing_path.rstrip("/")
@@ -211,16 +219,20 @@ def _publish(
 
     - ``schema``: the table's declared schema; a frame that does not match
       it is refused before anything is written.
-    - A ``root`` that holds no table yet — missing, or without a partition
-      (``partition_col``) or a ``_SUCCESS`` marker (no ``partition_col``)
-      — is replaced by the whole staged directory in one rename, its
-      ``_SUCCESS`` marker included: the table's first write.
-    - Otherwise, with ``partition_col``, each staged ``<col>=<v>``
-      directory replaces its target (delete, then rename: the
-      per-partition swap of Spark's dynamic-overwrite commit, so the crash
-      window is the same), and a name in ``drop`` that was not staged is
-      deleted; without it, ``root`` gains the staged data files (an
-      append: part-file names are unique per job).
+    - The staged layout is ``<partition_col>=<v>`` directories, or data
+      files without ``partition_col``. A ``root`` whose data is of the
+      other kind (files beside staged directories, directories beside
+      staged files) is refused before anything is written.
+    - A ``root`` that holds no data — missing, or only ``_``/``.`` names
+      such as ``_SUCCESS`` or ``_temporary`` — is replaced by the whole
+      staged directory in one rename, its ``_SUCCESS`` marker included:
+      the table's first write.
+    - Otherwise each staged directory replaces its target (delete, then
+      rename: the per-partition swap of Spark's dynamic-overwrite commit,
+      so the crash window is the same), and a name in ``drop`` that was
+      not staged is deleted; staged data files are added to ``root`` (an
+      append: part-file names are unique per job). Nothing else of
+      ``root`` is ever deleted.
     - ``check()`` runs after the write, before anything is published; a
       falsy return publishes nothing.
     """
@@ -228,6 +240,11 @@ def _publish(
         _check_schema(df, schema)
     spark = df.sparkSession
     root = root.rstrip("/")
+    fs, dst = _hadoop_path(spark, root)
+    staged_dirs = partition_col is not None
+    held = _data_entries(fs, dst)
+    if any(is_dir != staged_dirs for is_dir in held.values()):
+        raise ValueError(f"{root} is not laid out as staged ({partition_col=})")
     staging = _staging_path(root)
     out = df.write
     if partition_col is not None:
@@ -236,25 +253,12 @@ def _publish(
         out.parquet(staging)
         if check is not None and not check():
             return []
-        fs, src = _hadoop_path(spark, staging)
-        dst = _hadoop_path(spark, root)[1]
-        if partition_col is None:
-            first = not table_exists(spark, root)
-        else:
-            first = not any(_table_partitions(spark, root, partition_col))
-        if first:
+        src = _hadoop_path(spark, staging)[1]
+        if not held:
             fs.mkdirs(dst.getParent())
             _swap(fs, src, dst)
             return [dst.getName()]
-        if partition_col is None:
-            names = [
-                st.getPath().getName()
-                for st in fs.listStatus(src)
-                if st.isFile()
-                and not st.getPath().getName().startswith(("_", "."))
-            ]
-        else:
-            names = list(_table_partitions(spark, staging, partition_col))
+        names = list(_data_entries(fs, src))
         Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
         for name in names:
             _swap(fs, Path(src, name), Path(dst, name))
@@ -263,6 +267,20 @@ def _publish(
         return names
     finally:
         _rm_tree(spark, staging)
+
+
+def _data_entries(fs, path) -> dict[str, bool]:
+    """``{name: is_directory}`` of the entries directly under ``path``
+    that hold data — every name but the ``_``/``.`` ones (markers,
+    checksums, a crashed job's ``_temporary``); one listing, no file
+    opened, empty when ``path`` is missing."""
+    if not fs.exists(path):
+        return {}
+    return {
+        st.getPath().getName(): st.isDirectory()
+        for st in fs.listStatus(path)
+        if not st.getPath().getName().startswith(("_", "."))
+    }
 
 
 def _staging_path(root: str) -> str:
@@ -286,22 +304,6 @@ def _partition_names(spark, df: DataFrame, partition_col: str) -> list[str]:
     dir_name = catalog.ExternalCatalogUtils.getPartitionPathString
     values = df.select(F.col(partition_col).cast("string")).distinct()
     return [dir_name(partition_col, r[0]) for r in values.collect()]
-
-
-def _table_partitions(spark, root: str, partition_col: str):
-    """Yield the names of the ``<col>=<value>`` directories directly under
-    ``root`` (a listing, no file opened); nothing when ``root`` is
-    missing."""
-    fs, hroot = _hadoop_path(spark, root)
-    if not fs.exists(hroot):
-        return
-    prefix = partition_col + "="
-    it = fs.listStatusIterator(hroot)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(prefix):
-            yield name
 
 
 def _widen(df: DataFrame, schema) -> DataFrame:
@@ -394,7 +396,7 @@ def merge_into(
         drop = _partition_names(spark, source, partition_col)
     else:
         scope = target
-        drop = list(_table_partitions(spark, root, partition_col))
+        drop = list(_data_entries(*_hadoop_path(spark, root)))
     merged = merge(scope, source, on, when_matched, when_not_matched)
     _publish(merged, root, target.schema, partition_col, drop)
 
@@ -575,9 +577,9 @@ def expire_partitions(
     Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     prefix = partition_col + "="
     removed = []
-    for name in list(_table_partitions(spark, path, partition_col)):
+    for name in _data_entries(fs, root):
         value = name[len(prefix):]
-        if value < before:
+        if name.startswith(prefix) and value < before:
             fs.delete(Path(root, name), True)
             removed.append(value)
     return sorted(removed)

@@ -659,9 +659,9 @@ def _frozen_artifact(
     """The frozen artifact ``<store>/<name>``. ``train()`` builds it (from
     the current batch) only when it is missing — no committed table
     (``_SUCCESS``) at the path. The artifact is staged to a unique sibling
-    and renamed into place over whatever partial directory a crashed
-    write left there (``writer._publish``), so the path only ever holds a
-    complete artifact. One that exists is read, never retrained, so an
+    and renamed into place over a directory that holds no data, such as
+    the ``_temporary/`` a crashed Spark write leaves (``writer._publish``),
+    so the path only ever holds a complete artifact. One that exists is read, never retrained, so an
     unreadable one fails the batch and the stream retries it."""
     path = f"{store.rstrip('/')}/{name}"
     if not writer.table_exists(spark, path):

@@ -424,6 +424,24 @@ def test_decode_image_real_path(spark):
     assert got[2]["width"] is None and got[2]["mode"] is None
 
 
+def test_python_workers_get_the_package_on_their_path(spark):
+    """Python workers import the engine (the image UDFs do) whatever the
+    caller's working directory or ``PYTHONPATH``: the session puts the
+    package's parent on the workers' ``PYTHONPATH``."""
+    import os
+    import pathlib
+
+    import binance_futures_availability_spark as pkg
+
+    parent = str(pathlib.Path(pkg.__file__).resolve().parents[1])
+    worker_path = (
+        spark.sparkContext.parallelize([0], 1)
+        .map(lambda _: os.environ.get("PYTHONPATH", ""))
+        .first()
+    )
+    assert parent in worker_path.split(os.pathsep)
+
+
 def test_resize_image_exact_pixels(spark):
     """resize_image produces EXACTLY the nearest-neighbor resample: the
     output PNG bytes equal the deterministic encode of independently

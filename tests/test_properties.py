@@ -329,6 +329,52 @@ def test_simhash_banding_equals_brute_force(spark, texts, max_hamming):
         assert banded == brute, crossover
 
 
+@SETTINGS
+@given(
+    bases=st.lists(st.integers(0, (1 << 60) - 1), min_size=1, max_size=4),
+    flips=st.lists(st.sets(st.integers(0, 59), max_size=8), max_size=4),
+    max_hamming=st.integers(1, 8),
+)
+def test_simhash_banding_uses_every_chunk(spark, bases, flips, max_hamming):
+    """Both banding arms equal brute force on fingerprints at exact hamming
+    distances, drawn directly (``dedup.simhash`` patched) because text
+    corpora this small only yield exact or near-exact duplicates. Each
+    example holds, per arm's chunk layout, a pair with one bit flipped in
+    each of the first ``max_hamming`` chunks: it agrees only on the last
+    chunk (single chunks) or the last two (chunk pairs), so an arm that
+    skips any chunk loses it."""
+    d = max_hamming
+    bits = dedup.SIMHASH_BITS
+    fps = list(bases)
+    for chunk_bits in (-(-bits // (d + 1)), bits // (d + 2)):
+        fps.append(bases[0] ^ sum(1 << (i * chunk_bits) for i in range(d)))
+    fps += [
+        bases[k % len(bases)] ^ sum(1 << b for b in f)
+        for k, f in enumerate(flips)
+    ]
+    brute = {
+        (a, b)
+        for a in range(len(fps))
+        for b in range(a + 1, len(fps))
+        if bin(fps[a] ^ fps[b]).count("1") <= d
+    }
+    docs = spark.createDataFrame(
+        [(i, "") for i in range(len(fps))], "doc_id long, text string"
+    )
+    fingerprints = spark.createDataFrame(
+        list(enumerate(fps)), "doc_id long, simhash long"
+    )
+    with mock.patch.object(dedup, "simhash", lambda *a: fingerprints):
+        # -1 forces chunk pairs, inf forces single chunks
+        for crossover in (-1, float("inf")):
+            with mock.patch.object(dedup, "BLOCK_CAND_PER_DOC", crossover):
+                banded = {
+                    (r["id_a"], r["id_b"])
+                    for r in dedup.simhash_pairs(docs, d).collect()
+                }
+            assert banded == brute, crossover
+
+
 _doc_strategy = st.lists(
     st.tuples(
         st.integers(0, 200),

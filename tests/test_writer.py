@@ -300,6 +300,95 @@ def test_publish_refuses_a_frame_off_the_table_schema(
     assert not glob.glob(path + ".__staging__*")
 
 
+def _materialized_fact(spark, path):
+    """A 20-row table (10 dates x 2 symbols) committed by
+    ``materialize_fact``: range-split data files, no date directories."""
+    from binance_futures_availability_spark.operators.availability import (
+        materialize_fact,
+    )
+
+    materialize_fact(
+        make_da(
+            spark,
+            [
+                (D(2024, 1, 1) + dt.timedelta(days=i), sym, True, float(i))
+                for i in range(10)
+                for sym in ("BTCUSDT", "ETHUSDT")
+            ],
+        ),
+        path,
+    )
+
+
+@pytest.mark.parametrize("op", ["upsert", "merge", "compact"])
+def test_in_place_writers_refuse_the_materialized_layout(spark, tmp_path, op):
+    """An in-place update that stages ``date=`` directories into a table
+    of data files (``materialize_fact``'s layout) is not a first write: it
+    is refused before anything is written, every row stays readable in
+    the original layout and no staging directory is left."""
+    import glob
+    import os
+
+    path = str(tmp_path / "fact")
+    _materialized_fact(spark, path)
+    before = _fact_rows(spark, path)
+    layout = sorted(os.listdir(path))
+    src = make_da(spark, [(D(2024, 1, 2), "BTCUSDT", True, 999.0)])
+    with pytest.raises(ValueError, match="not laid out as staged"):
+        if op == "upsert":
+            writer.upsert_partitioned(
+                path, src, ["date", "symbol"], "probe_timestamp"
+            )
+        elif op == "merge":
+            writer.merge_into(path, src, ["date", "symbol"])
+        else:
+            writer.compact_partitions(spark, path, max_files=0)
+    assert len(before) == 20 and _fact_rows(spark, path) == before
+    assert sorted(os.listdir(path)) == layout
+    assert not glob.glob(path + ".__staging__*")
+
+
+def test_publish_refuses_data_files_into_a_partitioned_table(spark, tmp_path):
+    """Staged part files are not appended to a root of ``date=``
+    directories."""
+    import glob
+
+    path = str(tmp_path / "fact")
+    _seed_fact(spark, path)
+    before = _fact_rows(spark, path)
+    with pytest.raises(ValueError, match="not laid out as staged"):
+        writer._publish(
+            make_da(spark, [(D(2024, 1, 3), "BTCUSDT", True, 1.0)]),
+            path,
+            DAILY_AVAILABILITY,
+        )
+    assert _fact_rows(spark, path) == before
+    assert not glob.glob(path + ".__staging__*")
+
+
+def test_materialize_fact_onto_a_committed_table_publishes_nothing(
+    spark, tmp_path
+):
+    """A second materialization of a committed path (the lost race of two
+    cold processes) publishes nothing: the committed rows and files stay,
+    and no staging directory is left."""
+    import glob
+    import os
+
+    from binance_futures_availability_spark.operators.availability import (
+        materialize_fact,
+    )
+
+    path = str(tmp_path / "fact")
+    _materialized_fact(spark, path)
+    before = _fact_rows(spark, path)
+    files = sorted(os.listdir(path))
+    materialize_fact(make_da(spark, [(D(2030, 1, 1), "XRPUSDT", True, 1.0)]), path)
+    assert _fact_rows(spark, path) == before
+    assert sorted(os.listdir(path)) == files
+    assert not glob.glob(path + ".__staging__*")
+
+
 def test_writers_leave_session_overwrite_mode_static(spark, tmp_path):
     """No writer changes the session's partition-overwrite mode, which
     stays static through every upsert, merge and compaction."""
@@ -694,6 +783,32 @@ def test_no_session_conf_writes_in_package():
     assert calls == []
 
 
+#: the modules whose ``os.replace`` commits one local file (the release
+#: artifact, the symbol discovery cache); table directories are committed
+#: by ``writer._publish``
+SINGLE_FILE_COMMITS = {"sources/release.py", "ingest/discovery.py"}
+
+
+def test_no_directory_renames_outside_publish():
+    """No ``os.rename`` anywhere in the package or the entry module, and
+    ``os.replace`` only where a single local file is committed: no module
+    carries a directory commit protocol of its own."""
+    calls = [
+        (p.relative_to(PACKAGE.parent).as_posix(), n.func.attr, n.lineno)
+        for p, tree in _package_trees()
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr in ("rename", "replace")
+        and isinstance(n.func.value, ast.Name)
+        and n.func.value.id == "os"
+    ]
+    allowed = {f"{PACKAGE.name}/{m}" for m in SINGLE_FILE_COMMITS}
+    assert [
+        c for c in calls if c[1] == "rename" or c[0] not in allowed
+    ] == []
+
+
 #: the deployment settings the package reads from the environment: paths,
 #: resources and credentials — never a choice between physical plans
 DEPLOYMENT_ENV = {
@@ -785,12 +900,15 @@ def test_no_checkout_path_literals_in_package():
         ("sources/writer.py", "upsert_partitioned"),
         ("update.py", "run_daily_update"),
         ("update.py", "_append_rankings"),
+        ("operators/availability.py", "materialize_fact"),
+        ("operators/availability.py", "availability_fact"),
     ],
 )
 def test_tick_commits_only_through_publish(module, name):
-    """The tick's table writers hold no ``DataFrameWriter`` of their own
-    (no ``.write`` attribute): every commit goes through
-    ``writer._publish``; the upsert calls it exactly once."""
+    """The tick's table writers and the fact materialization hold no
+    ``DataFrameWriter`` of their own (no ``.write`` attribute): every
+    commit goes through ``writer._publish``; the upsert calls it exactly
+    once."""
     fn = next(
         n
         for n in ast.walk(ast.parse((PACKAGE / module).read_text()))
