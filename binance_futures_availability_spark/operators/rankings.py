@@ -146,25 +146,6 @@ def volume_rankings(
     return out.orderBy("date", "rank", "symbol")
 
 
-def incremental_append(
-    existing: DataFrame, new_rows: DataFrame
-) -> DataFrame:
-    """U2 — append new dates to the archive with a duplicate-date guard.
-
-    Reference: generate_volume_rankings.py:259-293 (pa.concat_tables with
-    duplicate-date rejection). Raises if any new date already exists.
-    """
-    dup = (
-        existing.select("date")
-        .distinct()
-        .join(new_rows.select("date").distinct(), "date", "inner")
-    )
-    dup_dates = [r["date"] for r in dup.limit(5).collect()]
-    if dup_dates:
-        raise ValueError(f"duplicate dates in append: {dup_dates}")
-    return existing.unionByName(new_rows)
-
-
 def rank_gaps(rankings_df: DataFrame) -> DataFrame:
     """W9 — per-date rank-continuity validation.
 

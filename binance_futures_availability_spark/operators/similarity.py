@@ -4,9 +4,24 @@ North-star extension operators: brute-force cosine top-k as the correctness
 baseline, random-hyperplane LSH bucketing as the scale path, and
 embedding-cosine near-duplicate pairs for dedup.
 
-Determinism: embeddings are quantized to exact integers
-(functions.quantize_embedding) so dot products and norms are exactly
-representable and cosine values are bit-identical across engines and across
+Exactness rule — every cosine in this module, Spark- or numpy-side, and
+the DuckDB oracle's, is the same arithmetic:
+
+- embeddings are quantized to exact integers
+  (functions.quantize_embedding), so every dot product and squared norm
+  is an exact integer;
+- the dot is carried in float64, and a float64 GEMM over the quantized
+  integers is EXACT: every product of two components and every ≤64-term
+  partial sum is an integer below 2^53, so BLAS reduction order cannot
+  change it (it equals the JVM integer fold bit-wise);
+- cosine = dot / (sqrt(‖a‖²) · sqrt(‖b‖²)): one square root per side,
+  the two roots multiplied, one division. ``_cosines`` is the only numpy
+  form of it (``centroid_outliers``' row-wise kernel aside), and
+  ``cosine_from_quantized`` the only Spark one;
+- ties go to the lowest id (cell, label, code): ``argmax`` or a stable
+  ``argsort`` numpy-side, ``ORDER BY cos DESC, id`` in the plans.
+
+Cosine values are therefore bit-identical across engines and across
 reduction orders — which also makes results reproducible run-to-run on a
 real cluster (float atomics aren't).
 
@@ -45,14 +60,25 @@ from ..index_cache import (
     tracked_persist,
 )
 
+def _cosines(a, a_norm, b, b_norm):
+    """The (len(a), len(b)) cosine matrix of two quantized-vector
+    matrices given their exact squared norms — the module's exactness
+    rule as one numpy kernel (see the module docstring). Callers apply
+    their own selection: ``argmax``, a stable ``argsort`` or a threshold
+    mask."""
+    import numpy as np
+
+    return (a @ b.T) / (
+        np.sqrt(np.asarray(a_norm, dtype=np.float64))[:, None]
+        * np.sqrt(np.asarray(b_norm, dtype=np.float64))[None, :]
+    )
+
+
 def _block_cosine_fn(threshold: float):
     """Per-block-pair exact cosine kernel for applyInPandas.
 
-    Receives both blocks' vectors (tagged by ``side``), runs one dense GEMM,
-    and emits only the pairs above threshold. float64 GEMM is EXACT here:
-    every product of two quantized components and every ≤64-term partial sum
-    is an integer below 2^53, so BLAS reduction order cannot change the
-    result — it equals the JVM integer fold and the DuckDB oracle bit-wise.
+    Receives both blocks' vectors (tagged by ``side``), runs one dense
+    GEMM (``_cosines``), and emits only the pairs above threshold.
     """
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -69,11 +95,11 @@ def _block_cosine_fn(threshold: float):
         )
         if len(a) == 0 or len(b) == 0:
             return empty
-        am = np.asarray(a["q"].tolist(), dtype=np.float64)
-        bm = np.asarray(b["q"].tolist(), dtype=np.float64)
-        cos = (am @ bm.T) / (
-            np.sqrt(a["nrm"].to_numpy(dtype=np.float64))[:, None]
-            * np.sqrt(b["nrm"].to_numpy(dtype=np.float64))[None, :]
+        cos = _cosines(
+            np.asarray(a["q"].tolist(), dtype=np.float64),
+            a["nrm"],
+            np.asarray(b["q"].tolist(), dtype=np.float64),
+            b["nrm"],
         )
         ia = a["vid"].to_numpy()
         ib = b["vid"].to_numpy()
@@ -140,41 +166,54 @@ def _with_quantized(emb: DataFrame, vec_col: str) -> DataFrame:
     return cached_index(plan_key(emb, "quantized", vec_col), build)
 
 
-def _ann_scored(
-    emb: DataFrame, query_vec_id: int, id_col: str, vec_col: str
+def _query_cosine(vec: str = "__q", norm: str = "__norm"):
+    """The ``cosine`` column of each row's ``vec`` (exact squared norm
+    ``norm``) against the query carried as ``__qq``/``__qnorm`` columns."""
+    return cosine_from_quantized(
+        int_dot(F.col(vec), F.col("__qq")), F.col(norm), F.col("__qnorm")
+    ).alias("cosine")
+
+
+def _top_k(scored: DataFrame, k: int, id_col: str) -> DataFrame:
+    """ORDER BY (cosine DESC, id) LIMIT k — plans as
+    TakeOrderedAndProject (no corpus shuffle); the id tie-break keeps the
+    k-boundary stable."""
+    return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
+
+
+def _scored(
+    key,
+    store: Callable[[], DataFrame],
+    id_col: str,
+    query_vec_id: int,
+    corpus: tuple[str, str] = ("__q", "__norm"),
+    query: tuple[str, str] = ("__q", "__norm"),
 ) -> DataFrame:
-    """The EXACT single-probe scored stream — (id, cosine) of every
-    non-query vector against the probe — session-cached (index_cache
-    discipline: narrow, one row per vector). Five catalog consumers
-    re-derived it per execution: ``ann_topk`` itself, the exact-baseline
-    side of ``pq_recall_audit``/``rp_recall_audit``/``sq_recall_audit``,
-    and ``hybrid_rrf_topk``'s semantic list — each paying the broadcast
-    build job + the corpus dot-product scan for the identical stream
-    (guide §1.2). The exact ranking for a FIXED audit probe is the
-    baseline table an ANN deployment materializes once per audit run."""
+    """A single-probe scored stream — (id, cosine) of every non-query row
+    of ``store()`` (its ``corpus`` vector and norm columns) against the
+    query row's ``query`` columns, shipped by a broadcast ``crossJoin`` —
+    session-cached under ``key`` (index_cache discipline: narrow, one row
+    per vector).
+
+    One builder serves the exact stream (``ann_topk``: quantized vs
+    quantized), the projected one (``rp_topk``) and the asymmetric SQ8
+    one (``sq_topk``: reconstruction vs the exact query). Each top-k and
+    the recall audit over it (and ``hybrid_rrf_topk``'s semantic list for
+    the exact stream) serve from one entry per fixed probe instead of
+    paying the broadcast build job + corpus scan per consumer — the
+    ranking an ANN deployment materializes once per audit run."""
 
     def build() -> DataFrame:
-        base = _with_quantized(emb, vec_col)
-        qrow = (
-            base.filter(F.col(id_col) == query_vec_id)
-            .select(
-                F.col("__q").alias("__qq"), F.col("__norm").alias("__qnorm")
-            )
+        base = store()
+        qrow = base.filter(F.col(id_col) == query_vec_id).select(
+            F.col(query[0]).alias("__qq"), F.col(query[1]).alias("__qnorm")
         )
         joined = base.filter(F.col(id_col) != query_vec_id).crossJoin(
             F.broadcast(qrow)
         )
-        dot = int_dot(F.col("__q"), F.col("__qq"))
-        return joined.select(
-            F.col(id_col),
-            cosine_from_quantized(
-                dot, F.col("__norm"), F.col("__qnorm")
-            ).alias("cosine"),
-        )
+        return joined.select(F.col(id_col), _query_cosine(*corpus))
 
-    return cached_index(
-        plan_key(emb, "ann_scored", query_vec_id, id_col, vec_col), build
-    )
+    return cached_index(key, build)
 
 
 def ann_topk(
@@ -184,16 +223,17 @@ def ann_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Brute-force cosine top-k against one corpus vector as the query.
-
-    ORDER BY (cos DESC, id) LIMIT k plans as TakeOrderedAndProject — no
-    corpus shuffle. Deterministic tie-break on id keeps the k-boundary
-    stable. Serves from the shared ``_ann_scored`` stream.
-    """
-    return (
-        _ann_scored(emb, query_vec_id, id_col, vec_col)
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
+    """Brute-force cosine top-k against one corpus vector as the query,
+    served from the shared exact ``_scored`` stream (``_top_k``)."""
+    return _top_k(
+        _scored(
+            plan_key(emb, "ann_scored", query_vec_id, id_col, vec_col),
+            lambda: _with_quantized(emb, vec_col),
+            id_col,
+            query_vec_id,
+        ),
+        k,
+        id_col,
     )
 
 
@@ -301,16 +341,27 @@ def _cosine_pair_graph(
     )
 
 
+def _plane_dots(q: pd.Series, plane_rows):
+    """(n, len(plane_rows)) dots of a batch of quantized vectors with
+    integer planes — one float64 GEMM, exact by the module's rule
+    (quantized components × plane ints). Planes are EMB_DIM-wide;
+    lower-dim vectors project onto the leading dims (missing dims
+    contribute 0 to the dot product)."""
+    import numpy as np
+
+    qm = np.asarray(q.tolist(), dtype=np.float64)
+    return qm @ np.asarray(plane_rows, dtype=np.float64)[:, : qm.shape[1]].T
+
+
 @functools.lru_cache(maxsize=None)
 def _bucket_batch(n_planes: int = N_PLANES):
     """Arrow-batched LSH bucket id: sign bits of ``n_planes`` plane dots.
 
     The expression form (n interpreted `aggregate(zip_with(...))` folds per
     row = 64·n lambda evaluations each) measured ~1 s per 2 000 rows; one
-    float64 GEMM against the n×64 plane matrix does the same work in
-    microseconds and is exact (quantized components × plane ints: every
-    product and 64-term sum is an integer < 2^53). Lazy: pandas_udf needs
-    an active session. Cached per width.
+    GEMM against the n×64 plane matrix (``_plane_dots``) does the same
+    work in microseconds. Lazy: pandas_udf needs an active session.
+    Cached per width.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -322,20 +373,11 @@ def _bucket_batch(n_planes: int = N_PLANES):
 
         if len(q) == 0:
             return pd.Series([], dtype="int64")
-        qm = np.asarray(q.tolist(), dtype=np.float64)
-        # planes are EMB_DIM-wide; lower-dim vectors project onto the
-        # leading dims (missing dims contribute 0 to the dot product)
-        pm = np.asarray(plane_rows, dtype=np.float64)[:, : qm.shape[1]]
-        dots = qm @ pm.T  # (n, n_planes), exact integers in float64
+        dots = _plane_dots(q, plane_rows)
         weights = 1 << np.arange(len(plane_rows), dtype=np.int64)
         return pd.Series(((dots > 0) * weights).sum(axis=1).astype(np.int64))
 
     return bucket_batch
-
-
-def _bucket_expr(q_col, n_planes: int = N_PLANES):
-    """LSH bucket id of a quantized vector column (Arrow-batched kernel)."""
-    return _bucket_batch(n_planes)(q_col)
 
 
 def _bucketed(emb: DataFrame, vec_col: str, n_planes: int = N_PLANES) -> DataFrame:
@@ -346,7 +388,7 @@ def _bucketed(emb: DataFrame, vec_col: str, n_planes: int = N_PLANES) -> DataFra
     return cached_index(
         plan_key(emb, "lsh_bucketed", vec_col, n_planes),
         lambda: _with_quantized(emb, vec_col).withColumn(
-            "bucket", _bucket_expr(F.col("__q"), n_planes)
+            "bucket", _bucket_batch(n_planes)(F.col("__q"))
         ),
     )
 
@@ -472,9 +514,7 @@ def _multi_bucket_batch(n_planes: int, n_tables: int):
 
         if len(q) == 0:
             return pd.Series([], dtype="object")
-        qm = np.asarray(q.tolist(), dtype=np.float64)
-        pm = np.asarray(stacked, dtype=np.float64)[:, : qm.shape[1]]
-        bits = (qm @ pm.T > 0).reshape(len(qm), n_tables, n_planes)
+        bits = (_plane_dots(q, stacked) > 0).reshape(len(q), n_tables, n_planes)
         weights = 1 << np.arange(n_planes, dtype=np.int64)
         buckets = (bits * weights).sum(axis=2).astype(np.int64)  # (n, T)
         return pd.Series(list(buckets))
@@ -605,39 +645,58 @@ def _index_vectors(spark, root: str) -> DataFrame:
     )
 
 
-def _collect_seeds(base: DataFrame, id_col: str, n_cells: int, key=None):
-    """The IVF coarse quantizer: the ``n_cells`` lowest-id vectors.
+def _seed_arrays(rows):
+    """(sq, snrm) float64 arrays of collected ``(__q, __norm)`` seed rows,
+    in row order — the coarse-quantizer form every probe and assignment
+    kernel takes."""
+    import numpy as np
+
+    return (
+        np.asarray([r["__q"] for r in rows], dtype=np.float64),
+        np.asarray([r["__norm"] for r in rows], dtype=np.float64),
+    )
+
+
+def _seeds(emb: DataFrame, id_col: str, vec_col: str, n_cells: int):
+    """The IVF coarse quantizer over ``emb``: the ``n_cells`` lowest-id
+    vectors, as ``_seed_arrays``.
 
     Deterministic seed selection (no k-means RNG) keeps the index
     reproducible and lets the DuckDB oracle rebuild it with ``ORDER BY id
     LIMIT n``. Collecting the seeds to the driver is the IVF pattern, not a
     scale smell: the centroid table is a bounded dimension (n_cells × dim
     ints) that every IVF implementation ships to all workers. The table is
-    a registry value under ``key`` (``_seed_key``): real vector indexes
-    build it once and reuse it across queries.
+    a registry value under ``_seed_key``: real vector indexes build it
+    once and reuse it across queries.
     """
 
     def collect():
-        import numpy as np
-
         rows = (
-            base.orderBy(id_col)
+            _with_quantized(emb, vec_col)
+            .orderBy(id_col)
             .limit(n_cells)
             .select("__q", "__norm")
             .collect()
         )
         if not rows:
             raise ValueError("IVF index over an empty embeddings table")
-        sq = np.asarray([r["__q"] for r in rows], dtype=np.float64)
-        snrm = np.asarray([r["__norm"] for r in rows], dtype=np.float64)
-        return sq, snrm
+        return _seed_arrays(rows)
 
-    return cached_value(key, collect)
+    return cached_value(_seed_key(emb, id_col, vec_col, n_cells), collect)
+
+
+def _query_row(rows: DataFrame, id_col: str, query_vec_id: int, where: str):
+    """(quantized vector, norm) of row ``query_vec_id`` of a quantized
+    store — one bounded lookup job; raises when the id is absent."""
+    row = rows.filter(F.col(id_col) == query_vec_id).select("__q", "__norm").first()
+    if row is None:
+        raise ValueError(f"query {id_col}={query_vec_id} not found in {where}")
+    return list(row["__q"]), int(row["__norm"])
 
 
 def _cell_kernel(sq, snrm):
-    """Arrow-batched nearest-seed assignment: one GEMM per batch, argmax
-    over exact-integer cosines (ties → lowest cell, matching the oracle's
+    """Arrow-batched nearest-seed assignment: one ``_cosines`` GEMM per
+    batch, argmax (ties → lowest cell, matching the oracle's
     ``ORDER BY cos DESC, cell``)."""
     from pyspark.sql.functions import pandas_udf
 
@@ -648,9 +707,7 @@ def _cell_kernel(sq, snrm):
         if len(q) == 0:
             return pd.Series([], dtype="int32")
         qm = np.asarray(q.tolist(), dtype=np.float64)
-        cos = (qm @ sq.T) / (
-            np.sqrt((qm * qm).sum(axis=1))[:, None] * np.sqrt(snrm)[None, :]
-        )
+        cos = _cosines(qm, (qm * qm).sum(axis=1), sq, snrm)
         return pd.Series(np.argmax(cos, axis=1).astype(np.int32))
 
     return cell_of
@@ -671,9 +728,7 @@ def _ivf_assigned(
 
     def build() -> DataFrame:
         base = _with_quantized(emb, vec_col)
-        sq, snrm = _collect_seeds(
-            base, id_col, n_cells, _seed_key(emb, id_col, vec_col, n_cells)
-        )
+        sq, snrm = _seeds(emb, id_col, vec_col, n_cells)
         return base.withColumn("cell", _cell_kernel(sq, snrm)(F.col("__q")))
 
     return cached_index(plan_key(emb, "ivf_assigned", vec_col, n_cells), build)
@@ -711,72 +766,66 @@ def ivf_topk(
     bounded centroid table; the corpus side reads the session-cached
     assignment artifact (``_ivf_assigned`` — the cell kernel runs once per
     table, not per query) → filter (cell pruning, ~nprobe/n_cells of the
-    data) → broadcast query row → TakeOrderedAndProject. Zero corpus
-    shuffles, zero per-query re-assignment. Recall is approximate by
-    construction (a true neighbor assigned to an unprobed cell is missed)
-    — ``ann_topk`` is the exact baseline; raise ``nprobe`` to trade scan
-    fraction for recall. For the on-disk form with partition-level pruning
-    see ``write_ivf_index`` / ``ivf_topk_indexed``.
+    data) → query as folded literals (``_ivf_scored``) →
+    TakeOrderedAndProject. Zero corpus shuffles, zero per-query
+    re-assignment. Recall is approximate by construction (a true neighbor
+    assigned to an unprobed cell is missed) — ``ann_topk`` is the exact
+    baseline; raise ``nprobe`` to trade scan fraction for recall. For the
+    on-disk form with partition-level pruning see ``write_ivf_index`` /
+    ``ivf_topk_indexed``.
     """
-    base = _with_quantized(emb, vec_col)
-    sq, snrm = _collect_seeds(
-        base, id_col, n_cells, _seed_key(emb, id_col, vec_col, n_cells)
+    sq, snrm = _seeds(emb, id_col, vec_col, n_cells)
+    qq, qn = _query_row(
+        _with_quantized(emb, vec_col), id_col, query_vec_id, "embeddings"
     )
-    qrow = base.filter(F.col(id_col) == query_vec_id).select("__q", "__norm").first()
-    if qrow is None:
-        raise ValueError(f"query {id_col}={query_vec_id} not found in embeddings")
-    probe = _probe_cells(sq, snrm, qrow["__q"], qrow["__norm"], nprobe)
-    assigned = _ivf_assigned(emb, id_col, vec_col, n_cells)
-    cands = _attach_query_literals(
-        assigned.filter(F.col("cell").isin(probe)).filter(
-            F.col(id_col) != query_vec_id
-        ),
-        qrow["__q"],
-        qrow["__norm"],
+    scored = _ivf_scored(
+        _ivf_assigned(emb, id_col, vec_col, n_cells),
+        sq, snrm, qq, qn, nprobe, id_col, query_vec_id,
     )
-    return _topk_from_candidates(cands, k, id_col)
+    return _top_k(scored, k, id_col)
 
 
 def _probe_cells(sq, snrm, q_vec, q_norm, nprobe: int) -> list[int]:
-    """The ``nprobe`` cells nearest the query, driver-side over the bounded
-    centroid table. Same expression order as the oracle:
-    dot / (sqrt(ns) * sqrt(qn)); ties broken toward the lower cell id by
-    stable argsort."""
+    """The ``nprobe`` cells nearest the query, driver-side over the
+    bounded centroid table: ``_cosines`` and a stable argsort (ties →
+    lower cell id, the oracle's order)."""
     import numpy as np
 
-    qv = np.asarray(q_vec, dtype=np.float64)
-    qn = float(q_norm)
-    cos_seeds = (sq @ qv) / (np.sqrt(snrm) * np.sqrt(qn))
+    qv = np.asarray(q_vec, dtype=np.float64)[None, :]
+    cos_seeds = _cosines(qv, [q_norm], sq, snrm)[0]
     return [int(c) for c in np.argsort(-cos_seeds, kind="stable")[:nprobe]]
 
 
-def _attach_query_literals(df: DataFrame, qq, qn) -> DataFrame:
-    """Attach the (driver-resident) query vector as constant columns.
+def _ivf_scored(
+    corpus: DataFrame,
+    sq,
+    snrm,
+    qq,
+    qn,
+    nprobe: int,
+    id_col: str,
+    exclude_id: int | None = None,
+) -> DataFrame:
+    """The IVF probe path of every single-query IVF operator: (id, cosine)
+    of the ``corpus`` rows in the ``nprobe`` cells nearest the query
+    (``_probe_cells``), less row ``exclude_id`` (a corpus-row query
+    skips itself).
 
-    When the query row is already on the driver (IVF probe-cell choice
-    collected it anyway), shipping it as a folded literal array removes
-    the broadcast-exchange BUILD JOB a ``crossJoin(broadcast(qsel))``
-    pays per query — the scan stage becomes the only job. ConstantFolding
-    collapses the CreateArray of literals, so per-row cost is identical.
+    The query row is already on the driver (the probe-cell choice needs
+    it), so it is shipped as folded literal columns ``__qq``/``__qnorm``:
+    that removes the broadcast-exchange BUILD JOB a
+    ``crossJoin(broadcast(qsel))`` pays per query — the scan stage is the
+    only job. ConstantFolding collapses the CreateArray of literals, so
+    per-row cost is identical.
     """
-    return df.withColumn(
-        "__qq", F.array(*[F.lit(int(v)) for v in qq])
-    ).withColumn("__qnorm", F.lit(int(qn)))
-
-
-def _topk_from_candidates(cands: DataFrame, k: int, id_col: str) -> DataFrame:
-    """ORDER BY (cos DESC, id) LIMIT k over the candidate set — plans as
-    TakeOrderedAndProject; the query row arrives as broadcast ``__qq``."""
-    dot = int_dot(F.col("__q"), F.col("__qq"))
+    probe = _probe_cells(sq, snrm, qq, qn, nprobe)
+    cands = corpus.filter(F.col("cell").isin(probe))
+    if exclude_id is not None:
+        cands = cands.filter(F.col(id_col) != exclude_id)
     return (
-        cands.select(
-            F.col(id_col),
-            cosine_from_quantized(dot, F.col("__norm"), F.col("__qnorm")).alias(
-                "cosine"
-            ),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
+        cands.withColumn("__qq", F.array(*[F.lit(int(v)) for v in qq]))
+        .withColumn("__qnorm", F.lit(int(qn)))
+        .select(F.col(id_col), _query_cosine())
     )
 
 
@@ -800,13 +849,7 @@ def _ivf_seed_table(
 ) -> DataFrame:
     """The ``<index>/seeds`` table ``write_ivf_index`` writes over
     ``emb`` (the streaming IVF sink freezes it from its first batch)."""
-    sq, snrm = _collect_seeds(
-        _with_quantized(emb, vec_col),
-        id_col,
-        n_cells,
-        _seed_key(emb, id_col, vec_col, n_cells),
-    )
-    return _seed_table(emb.sparkSession, sq, snrm)
+    return _seed_table(emb.sparkSession, *_seeds(emb, id_col, vec_col, n_cells))
 
 
 def write_ivf_index(
@@ -830,9 +873,7 @@ def write_ivf_index(
     so the index is reproducible and the DuckDB oracle can rebuild it.
     """
     base = _with_quantized(emb, vec_col)
-    sq, snrm = _collect_seeds(
-        base, id_col, n_cells, _seed_key(emb, id_col, vec_col, n_cells)
-    )
+    sq, snrm = _seeds(emb, id_col, vec_col, n_cells)
     # rebuilt index: drop its resident seeds, readers, query rows, cells
     invalidate(path.rstrip("/"))
     _seed_table(emb.sparkSession, sq, snrm).write.mode("overwrite").parquet(
@@ -904,23 +945,16 @@ def ivf_topk_indexed(
     by parquet min/max stats on ``id``); at cluster scale pass the query
     embedding itself (``ivf_topk_indexed_vec``) — zero lookup jobs. The
     (tiny) centroid table is cached per index path after the first read —
-    the standard resident-coarse-quantizer pattern.
+    the standard resident-coarse-quantizer pattern. The query is resolved
+    once and cached, so the only job left per query is the pruned scan +
+    TakeOrdered.
     """
     root = index_path.rstrip("/")
     sq, snrm = _read_seeds(spark, root)
     vectors = _index_vectors(spark, root)
     qq, qn = _index_query_row(spark, root, id_col, query_vec_id)
-    probe = _probe_cells(sq, snrm, qq, qn, nprobe)
-    # query shipped as a folded literal (resolved once, cached): the only
-    # job left per query is the pruned scan + TakeOrdered
-    cands = _attach_query_literals(
-        vectors.filter(F.col("cell").isin(probe)).filter(
-            F.col(id_col) != query_vec_id
-        ),
-        qq,
-        qn,
-    )
-    return _topk_from_candidates(cands, k, id_col)
+    scored = _ivf_scored(vectors, sq, snrm, qq, qn, nprobe, id_col, query_vec_id)
+    return _top_k(scored, k, id_col)
 
 
 def ivf_range_indexed(
@@ -951,21 +985,8 @@ def ivf_range_indexed(
     sq, snrm = _read_seeds(spark, root)
     vectors = _index_vectors(spark, root)
     qq, qn = _index_query_row(spark, root, id_col, query_vec_id)
-    probe = _probe_cells(sq, snrm, qq, qn, nprobe)
-    cands = _attach_query_literals(
-        vectors.filter(F.col("cell").isin(probe)).filter(
-            F.col(id_col) != query_vec_id
-        ),
-        qq,
-        qn,
-    )
-    dot = int_dot(F.col("__q"), F.col("__qq"))
-    return cands.select(
-        F.col(id_col),
-        cosine_from_quantized(dot, F.col("__norm"), F.col("__qnorm")).alias(
-            "cosine"
-        ),
-    ).filter(F.col("cosine") >= min_cosine)
+    scored = _ivf_scored(vectors, sq, snrm, qq, qn, nprobe, id_col, query_vec_id)
+    return scored.filter(F.col("cosine") >= min_cosine)
 
 
 def _index_query_row(spark, root: str, id_col: str, query_vec_id: int):
@@ -974,36 +995,23 @@ def _index_query_row(spark, root: str, id_col: str, query_vec_id: int):
     repeat queries then cost only the pruned scan. A registry value
     under ``<root>/vectors`` (capped like every value, so serving new
     query ids forever stays flat)."""
-
-    def lookup():
-        row = (
-            _index_vectors(spark, root)
-            .filter(F.col(id_col) == query_vec_id)
-            .select("__q", "__norm")
-            .first()
-        )
-        if row is None:
-            raise ValueError(f"query {id_col}={query_vec_id} not found in index")
-        return list(row["__q"]), int(row["__norm"])
-
     return cached_value(
-        ((root + "/vectors",), "ivf_query_row", id_col, query_vec_id), lookup
+        ((root + "/vectors",), "ivf_query_row", id_col, query_vec_id),
+        lambda: _query_row(
+            _index_vectors(spark, root), id_col, query_vec_id, "index"
+        ),
     )
 
 
 def _read_seeds(spark, root: str):
     """Centroid table of a write_ivf_index artifact — a registry value
     under ``<root>/seeds``, read once per index."""
-
-    def read():
-        import numpy as np
-
-        rows = spark.read.parquet(root + "/seeds").orderBy("cell").collect()
-        sq = np.asarray([r["__q"] for r in rows], dtype=np.float64)
-        snrm = np.asarray([r["__norm"] for r in rows], dtype=np.float64)
-        return sq, snrm
-
-    return cached_value(((root + "/seeds",), "ivf_seeds"), read)
+    return cached_value(
+        ((root + "/seeds",), "ivf_seeds"),
+        lambda: _seed_arrays(
+            spark.read.parquet(root + "/seeds").orderBy("cell").collect()
+        ),
+    )
 
 
 def ivf_topk_indexed_vec(
@@ -1034,18 +1042,16 @@ def ivf_topk_indexed_vec(
     qn = int(np.dot(qq, qq))
     if qn == 0:
         raise ValueError("query vector has zero norm")
-    probe = _probe_cells(sq, snrm, qq, qn, nprobe)
-    vectors = _index_vectors(spark, root)
-    cands = _attach_query_literals(
-        vectors.filter(F.col("cell").isin(probe)), qq, qn
+    scored = _ivf_scored(
+        _index_vectors(spark, root), sq, snrm, qq, qn, nprobe, id_col
     )
-    return _topk_from_candidates(cands, k, id_col)
+    return _top_k(scored, k, id_col)
 
 
 def _probe_kernel(sq, snrm, nprobe: int):
-    """Arrow-batched probe-cell choice for a BATCH of queries: one GEMM
-    per batch, stable argsort over exact-integer cosines (ties → lowest
-    cell, same rule as ``_probe_cells``) → the ``nprobe`` nearest cells."""
+    """Arrow-batched probe-cell choice for a BATCH of queries: one
+    ``_cosines`` GEMM per batch, stable argsort (ties → lowest cell, same
+    rule as ``_probe_cells``) → the ``nprobe`` nearest cells."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<int>")
@@ -1055,9 +1061,7 @@ def _probe_kernel(sq, snrm, nprobe: int):
         if len(q) == 0:
             return pd.Series([], dtype=object)
         qm = np.asarray(q.tolist(), dtype=np.float64)
-        cos = (qm @ sq.T) / (
-            np.sqrt((qm * qm).sum(axis=1))[:, None] * np.sqrt(snrm)[None, :]
-        )
+        cos = _cosines(qm, (qm * qm).sum(axis=1), sq, snrm)
         idx = np.argsort(-cos, axis=1, kind="stable")[:, :nprobe]
         return pd.Series([row.astype("int32").tolist() for row in idx])
 
@@ -1146,35 +1150,25 @@ def knn_join(
     never shuffled by cell. Candidates are ``|Q| · nprobe/n_cells`` of
     the corpus; the only data shuffle is the per-query top-k window
     partitioned by query_id, which distributes across queries. Both
-    kernels and the cosine are exact-integer arithmetic → the DuckDB
-    oracle matches bit-for-bit.
+    kernels and the cosine follow the module's exactness rule → the
+    DuckDB oracle matches bit-for-bit.
     """
     assigned = _ivf_assigned(corpus, id_col, vec_col, n_cells)
-    base = _with_quantized(corpus, vec_col)
-    skey = _seed_key(corpus, id_col, vec_col, n_cells)
-    sq, snrm = _collect_seeds(base, id_col, n_cells, skey)
-    probes = _knn_probes(
-        queries,
-        sq,
-        snrm,
-        nprobe,
-        id_col,
-        vec_col,
-        None if skey is None else _seeds_digest(sq, snrm),
+    sq, snrm = _seeds(corpus, id_col, vec_col, n_cells)
+    # in-memory corpora have no seed key: probe and graph stay uncached
+    tag = (
+        None
+        if _seed_key(corpus, id_col, vec_col, n_cells) is None
+        else _seeds_digest(sq, snrm)
     )
+    probes = _knn_probes(queries, sq, snrm, nprobe, id_col, vec_col, tag)
     ranked = _knn_ranked(
         probes,
         assigned,
         id_col,
-        plan_key(
-            queries,
-            "knn_ranked",
-            vec_col,
-            nprobe,
-            None if skey is None else _seeds_digest(sq, snrm),
-        )
-        if skey is not None
-        else None,
+        None
+        if tag is None
+        else plan_key(queries, "knn_ranked", vec_col, nprobe, tag),
     )
     return ranked.filter(F.col("knn_rank") <= k)
 
@@ -1195,14 +1189,7 @@ def _knn_ranked(probes, corpus_side, id_col: str, key) -> DataFrame:
         cands = corpus_side.join(F.broadcast(probes), "cell").filter(
             F.col(id_col) != F.col("query_id")
         )
-        dot = int_dot(F.col("__q"), F.col("__qq"))
-        scored = cands.select(
-            "query_id",
-            F.col(id_col),
-            cosine_from_quantized(
-                dot, F.col("__norm"), F.col("__qnorm")
-            ).alias("cosine"),
-        )
+        scored = cands.select("query_id", F.col(id_col), _query_cosine())
         from pyspark.sql import Window
 
         w = Window.partitionBy("query_id").orderBy(
@@ -1321,9 +1308,9 @@ def kmeans_cells(
     clustering gate-checkable at all: cosine to a cell's MEAN equals
     cosine to its integer SUM vector (the 1/count scale cancels in the
     normalization), so centroids never leave integer space — the
-    assignment kernel is the same exact-GEMM argmax as round zero
-    (``_cell_kernel``: integer dots < 2^53, per-side sqrt, ties to the
-    lowest cell), and the update is one posexplode + SUM aggregate.
+    assignment kernel is the same ``_cell_kernel`` argmax as round zero
+    (the module's exactness rule, ties to the lowest cell), and the
+    update is one posexplode + SUM aggregate.
 
     Scale shape per round: one Arrow-batched assignment pass over the
     cached quantized table (no shuffle), one (cell, dim) aggregate —
@@ -1340,9 +1327,7 @@ def kmeans_cells(
     """
     def assign() -> DataFrame:
         base = _with_quantized(emb, vec_col)
-        sq, snrm = _trained_centroids(
-            base, emb, n_cells, n_iters, id_col, vec_col
-        )
+        sq, snrm = _trained_centroids(emb, n_cells, n_iters, id_col, vec_col)
         return base.withColumn(
             "cell", _cell_kernel(sq, snrm)(F.col("__q"))
         ).select(id_col, "cell")
@@ -1359,12 +1344,7 @@ def kmeans_cells(
 
 
 def _trained_centroids(
-    base: DataFrame,
-    emb: DataFrame,
-    n_cells: int,
-    n_iters: int,
-    id_col: str,
-    vec_col: str,
+    emb: DataFrame, n_cells: int, n_iters: int, id_col: str, vec_col: str
 ):
     """Lloyd-refined (sum-vector, norm) centroid tables for
     ``kmeans_cells`` and its riders (cluster_purity, semantic_dedup).
@@ -1372,7 +1352,7 @@ def _trained_centroids(
     The training loop — n_iters × (Arrow assignment pass + (cell, dim)
     aggregate collect) — is a pure function of the embeddings table and
     the (n_cells, n_iters) knobs, so the fitted model is session-cached
-    exactly like the untrained seed table (``_collect_seeds``): first call per
+    exactly like the untrained seed table (``_seeds``): first call per
     corpus pays the rounds, every rider serves assignments from the
     cached n_cells×dim integer array — the fitted quantizer MODEL, the
     train-once/serve-many artifact every IVF deployment persists, kept
@@ -1382,15 +1362,16 @@ def _trained_centroids(
     seed_key = _seed_key(emb, id_col, vec_col, n_cells)
     return cached_value(
         None if seed_key is None else seed_key + ("lloyd", n_iters),
-        lambda: _train_centroids(base, id_col, n_cells, n_iters, seed_key),
+        lambda: _train_centroids(emb, n_cells, n_iters, id_col, vec_col),
     )
 
 
-def _train_centroids(base, id_col: str, n_cells: int, n_iters: int, seed_key):
+def _train_centroids(
+    emb: DataFrame, n_cells: int, n_iters: int, id_col: str, vec_col: str
+):
     """The Lloyd rounds of ``_trained_centroids``, from the IVF seeds."""
-    import numpy as np
-
-    sq, snrm = _collect_seeds(base, id_col, n_cells, seed_key)
+    base = _with_quantized(emb, vec_col)
+    sq, snrm = _seeds(emb, id_col, vec_col, n_cells)
     sq = sq.copy()
     for _ in range(n_iters):
         assigned = base.withColumn("cell", _cell_kernel(sq, snrm)(F.col("__q")))
@@ -1406,15 +1387,23 @@ def _train_centroids(base, id_col: str, n_cells: int, n_iters: int, seed_key):
         for r in sums:
             new_sq[r["cell"], r["dim"]] = r["sv"]
         sq = new_sq
-        # centroid norms from EXACT integers: (count·1e6)² blows the f64
-        # 2^53 mantissa at cell populations ~100, so square-sum in Python
-        # ints (the oracle's exact SUM(sv·sv)) and round ONCE to double —
-        # the same single rounding DuckDB's sqrt(HUGEINT) applies.
-        snrm = np.asarray(
-            [float(sum(int(v) * int(v) for v in row)) for row in sq],
-            dtype=np.float64,
-        )
+        snrm = _int_norms(sq)
     return sq, snrm
+
+
+def _int_norms(rows):
+    """Exact squared norms of integer centroid rows (sum vectors), as
+    float64: square-summed in Python ints and rounded ONCE to double —
+    the oracle's exact SUM(sv·sv) and the same single rounding DuckDB's
+    sqrt(HUGEINT) applies. f64 squares of per-dim sums would lose
+    exactness at cell populations of only ~10² ((count·1e6)² passes the
+    2^53 mantissa)."""
+    import numpy as np
+
+    return np.asarray(
+        [float(sum(int(v) * int(v) for v in row)) for row in rows],
+        dtype=np.float64,
+    )
 
 
 def audit_sample(
@@ -1518,6 +1507,22 @@ def _label_centroid_rows(emb: DataFrame, vec_col: str, label_col: str):
     )
 
 
+def _label_matrix(sums):
+    """The per-label centroid matrix of non-empty ``_label_centroid_rows``
+    output: (labels ascending, {label: row}, #labels×dim integer sums as
+    float64, their ``_int_norms``). Cosine to a class MEAN equals cosine
+    to its integer SUM vector, so the model never leaves integer space."""
+    import numpy as np
+
+    labels = sorted({r["__lbl"] for r in sums})
+    dim = max(r["dim"] for r in sums) + 1
+    lq = np.zeros((len(labels), dim), dtype=np.float64)
+    pos = {lb: i for i, lb in enumerate(labels)}
+    for r in sums:
+        lq[pos[r["__lbl"]], r["dim"]] = r["sv"]
+    return labels, pos, lq, _int_norms(lq)
+
+
 def centroid_confusion(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -1544,17 +1549,8 @@ def centroid_confusion(
     import numpy as np
 
     base = _with_quantized(emb, vec_col)
-    sums = _label_centroid_rows(emb, vec_col, label_col)
-    labels = sorted({r["__lbl"] for r in sums})
-    dim = max(r["dim"] for r in sums) + 1
-    lq = np.zeros((len(labels), dim), dtype=np.float64)
-    pos = {lb: i for i, lb in enumerate(labels)}
-    for r in sums:
-        lq[pos[r["__lbl"]], r["dim"]] = r["sv"]
-    # exact-integer norms (same 2^53 discipline as kmeans_cells)
-    lnrm = np.asarray(
-        [float(sum(int(v) * int(v) for v in row)) for row in lq],
-        dtype=np.float64,
+    labels, _, lq, lnrm = _label_matrix(
+        _label_centroid_rows(emb, vec_col, label_col)
     )
     lbl_arr = np.asarray(labels)
 
@@ -1580,9 +1576,7 @@ def centroid_confusion(
         if len(q) == 0:
             return pd.Series([], dtype="object" if np_cast is None else np_cast)
         qm = np.asarray(q.tolist(), dtype=np.float64)
-        cos = (qm @ lq.T) / (
-            np.sqrt((qm * qm).sum(axis=1))[:, None] * np.sqrt(lnrm)[None, :]
-        )
+        cos = _cosines(qm, (qm * qm).sum(axis=1), lq, lnrm)
         picked = lbl_arr[np.argmax(cos, axis=1)]
         return pd.Series(picked if np_cast is None else picked.astype(np_cast))
 
@@ -1609,10 +1603,9 @@ def semantic_dedup_survivors(
     coarse quantizer is shared with ``ivf_topk``/``write_ivf_index``, so
     the cluster assignment is computed once per (table, n_cells) and the
     dedup pass adds no new corpus-wide kernel. Within-cluster pairs run
-    as ONE dense GEMM per cell in an Arrow-batched applyInPandas —
-    float64 GEMM over quantized integers is exact (every partial sum an
-    integer < 2^53; see _block_cosine_fn), and the denominator multiplies
-    per-side sqrts in the oracle's exact order.
+    as ONE dense ``_cosines`` GEMM per cell in an Arrow-batched
+    applyInPandas (exact by the module's rule, so it matches the
+    oracle bit-wise).
 
     Scale shape: ``n_cells`` bounds the quadratic — per-cell population
     ≈ n / n_cells, and cells are independent tasks, so sizing n_cells ≈
@@ -1633,8 +1626,7 @@ def semantic_dedup_survivors(
             return pd.DataFrame({"vid": pd.Series([], dtype="int64")})
         ids = pdf["__id"].to_numpy()
         q = np.asarray(pdf["__q"].tolist(), dtype=np.float64)
-        rt = np.sqrt(pdf["__norm"].to_numpy(dtype=np.float64))
-        cos = (q @ q.T) / (rt[:, None] * rt[None, :])
+        cos = _cosines(q, pdf["__norm"], q, pdf["__norm"])
         i, j = np.nonzero((cos >= threshold) & (ids[:, None] < ids[None, :]))
         if len(j) == 0:
             return pd.DataFrame({"vid": pd.Series([], dtype="int64")})
@@ -1771,10 +1763,9 @@ def centroid_outliers(
     arXiv:2303.09540 §3 use the same within-cluster cosine).
 
     Engine-exact end to end: centroids stay INTEGER sum vectors (the
-    cosine-to-mean ≡ cosine-to-sum identity of ``kmeans_cells``), dots
-    and norms are exact integers carried in float64 (< 2^53), and the
-    emitted cosine is exactly one float64 expression — dot / (sqrt(n_v)
-    · sqrt(n_c)) — the identical rounding the DuckDB oracle applies, so
+    cosine-to-mean ≡ cosine-to-sum identity of ``kmeans_cells``), and
+    the row-wise kernel — one vector against its own label's centroid,
+    not a ``_cosines`` matrix — applies the module's exactness rule, so
     even the ORDER at the top-k boundary is bit-stable. Shape: one
     bounded #labels×dim aggregate collected and broadcast into an
     Arrow-batched scoring pass (no shuffle), then TakeOrdered(k).
@@ -1796,16 +1787,7 @@ def centroid_outliers(
             f"{id_col} {emb.schema[id_col].dataType.simpleString()}, "
             f"label {lbl_type}, cos_centroid double",
         )
-    labels = sorted({r["__lbl"] for r in sums})
-    dim = max(r["dim"] for r in sums) + 1
-    lq = np.zeros((len(labels), dim), dtype=np.float64)
-    pos = {lb: i for i, lb in enumerate(labels)}
-    for r in sums:
-        lq[pos[r["__lbl"]], r["dim"]] = r["sv"]
-    lnrm = np.asarray(
-        [float(sum(int(v) * int(v) for v in row)) for row in lq],
-        dtype=np.float64,
-    )
+    _, pos, lq, lnrm = _label_matrix(sums)
 
     from pyspark.sql.functions import pandas_udf
 
@@ -1842,7 +1824,7 @@ def centroid_outliers(
 # asymmetric distance computation) instead of a 64-term dot product.
 #
 # Determinism discipline (the family contract): codebooks are the PQ_K
-# lowest-id vectors' subvectors (the _collect_seeds idiom — reproducible,
+# lowest-id vectors' subvectors (the _seeds idiom — reproducible,
 # SQL-expressible; a trained refinement would slot in exactly like
 # kmeans_cells does for the IVF coarse quantizer), encode minimizes the
 # EXACT integer L2² (‖x‖² − 2x·c + ‖c‖² over quantized ints, ties to the
@@ -2065,7 +2047,7 @@ def _pq_adc_scores(
     the entire point of PQ at 100 TB: the codes table is ~64× smaller
     than the float corpus.
 
-    Like ``_ann_scored``, the stream is a session-cached artifact
+    Like the ``_scored`` streams, it is a session-cached artifact
     (narrow, one row per vector, fixed probe): ``pq_topk``,
     ``ivf_pq_topk`` and ``pq_recall_audit`` each re-derived it per
     execution — the LUT join + per-id sum ran three times per catalog
@@ -2165,16 +2147,11 @@ def ivf_pq_topk(
     compressed codes. Both halves reuse their session-cached artifacts
     (cell assignment; codebook + codes), so the query-time work is two
     broadcast joins and one short-row aggregate."""
-    base = _with_quantized(emb, vec_col)
-    sq, snrm = _collect_seeds(
-        base, id_col, n_cells, _seed_key(emb, id_col, vec_col, n_cells)
+    sq, snrm = _seeds(emb, id_col, vec_col, n_cells)
+    qq, qn = _query_row(
+        _with_quantized(emb, vec_col), id_col, query_id, "embeddings"
     )
-    qrow = (
-        base.filter(F.col(id_col) == query_id).select("__q", "__norm").first()
-    )
-    if qrow is None:
-        raise ValueError(f"query {id_col}={query_id} not found in embeddings")
-    probe = _probe_cells(sq, snrm, qrow["__q"], qrow["__norm"], nprobe)
+    probe = _probe_cells(sq, snrm, qq, qn, nprobe)
     cand = _ivf_assigned(emb, id_col, vec_col, n_cells).filter(
         F.col("cell").isin(probe)
     ).select(id_col)
@@ -2257,8 +2234,8 @@ def _rp_batch(m: int):
     (DuckDB ``//`` semantics — numpy's ``//`` floors, so the kernel
     truncates explicitly via sign·(|x|//s)).
 
-    Same GEMM-not-fold rationale as ``_bucket_batch``: every plane dot is
-    an integer < 2^53 so the float64 matmul is exact; the division keeps
+    Same GEMM-not-fold rationale as ``_bucket_batch`` (``_plane_dots``,
+    exact by the module's rule); the division keeps
     the projected components (and therefore their m-term dots and norms)
     inside BIGINT without losing cross-engine exactness. The plane matrix
     is the same prefix-stable seed-42 family the LSH operators use —
@@ -2276,9 +2253,7 @@ def _rp_batch(m: int):
 
         if len(q) == 0:
             return pd.Series([], dtype="object")
-        qm = np.asarray(q.tolist(), dtype=np.float64)
-        pm = np.asarray(plane_rows, dtype=np.float64)[:, : qm.shape[1]]
-        dots = (qm @ pm.T).astype(np.int64)  # exact: every dot < 2^53
+        dots = _plane_dots(q, plane_rows).astype(np.int64)
         proj = np.sign(dots) * (np.abs(dots) // scale)
         return pd.Series(list(proj))
 
@@ -2332,37 +2307,20 @@ def rp_topk(
     ones (the scan/compute cost falls by dim/m; recall is the audited JL
     distortion). Ties break on id; zero-norm projections yield NULL
     cosine and drop to the bottom, matching the exact path's convention.
-    The scored stream is the session-cached ``_rp_scored`` artifact
-    shared with ``rp_recall_audit``'s approx side.
+    The scored stream is the session-cached ``_scored`` artifact shared
+    with ``rp_recall_audit``'s approx side.
     """
-    return (
-        _rp_scored(emb, query_vec_id, m, id_col, vec_col)
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def _rp_scored(
-    emb: DataFrame, query_vec_id: int, m: int, id_col: str, vec_col: str
-) -> DataFrame:
-    def build() -> DataFrame:
-        base = _with_projected(emb, vec_col, m)
-        qrow = base.filter(F.col(id_col) == query_vec_id).select(
-            F.col("__rp").alias("__qq"), F.col("__rpnorm").alias("__qnorm")
-        )
-        joined = base.filter(F.col(id_col) != query_vec_id).crossJoin(
-            F.broadcast(qrow)
-        )
-        dot = int_dot(F.col("__rp"), F.col("__qq"))
-        return joined.select(
-            F.col(id_col),
-            cosine_from_quantized(
-                dot, F.col("__rpnorm"), F.col("__qnorm")
-            ).alias("cosine"),
-        )
-
-    return cached_index(
-        plan_key(emb, "rp_scored", query_vec_id, m, id_col, vec_col), build
+    return _top_k(
+        _scored(
+            plan_key(emb, "rp_scored", query_vec_id, m, id_col, vec_col),
+            lambda: _with_projected(emb, vec_col, m),
+            id_col,
+            query_vec_id,
+            corpus=("__rp", "__rpnorm"),
+            query=("__rp", "__rpnorm"),
+        ),
+        k,
+        id_col,
     )
 
 
@@ -2395,35 +2353,6 @@ def rp_recall_audit(
 #: an 8× compression of the int64 quantized store and 4× of float32).
 SQ_LEVELS = 255
 
-def _collect_sq_grid(base: DataFrame, key=None):
-    """The SQ8 training pass: per-DIMENSION min/max over the quantized
-    corpus — the whole "codebook" of scalar quantization (FAISS SQ8 /
-    Milvus SQ8 keep exactly this: 2 numbers per dimension).
-
-    Plan shape: posexplode → groupBy(dim) MIN/MAX — one map-side-combined
-    aggregate whose post-shuffle cardinality is the embedding WIDTH, then
-    a dim-row bounded collect (the `_collect_seeds` class: a codebook is
-    shipped to every worker by construction, it is not corpus-sized).
-    A registry value under ``key`` so the training scan runs once.
-    """
-
-    def train():
-        rows = (
-            base.select(F.posexplode("__q").alias("__i", "__v"))
-            .groupBy("__i")
-            .agg(F.min("__v").alias("mn"), F.max("__v").alias("mx"))
-            .collect()
-        )
-        if not rows:
-            raise ValueError("SQ8 grid over an empty embeddings table")
-        by_i = {r["__i"]: (r["mn"], r["mx"]) for r in rows}
-        mins = [by_i[i][0] for i in sorted(by_i)]
-        maxs = [by_i[i][1] for i in sorted(by_i)]
-        return mins, maxs
-
-    return cached_value(key, train)
-
-
 def _with_sq(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """SQ8 store — (…, __sq codes, __sr reconstruction, __srnorm) — the
     SQ twin of ``_with_quantized``/``_with_projected``, session-cached.
@@ -2445,8 +2374,12 @@ def _with_sq(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
         # just the input files: a sample_ppm-filtered audit frame and the
         # full corpus share files but need DIFFERENT grids — a file-only
         # key would serve a sample-trained grid to full-corpus encodes
-        mins, maxs = _collect_sq_grid(
-            base, plan_key(emb, "sq_grid", id_col, vec_col)
+        mins, maxs = cached_value(
+            plan_key(emb, "sq_grid", id_col, vec_col),
+            lambda: _grid_bounds(
+                sq_grid(emb, id_col, vec_col).collect(),
+                "SQ8 grid over an empty embeddings table",
+            ),
         )
         code_of, recon_of = _sq_exprs(mins, maxs)
         coded = base.withColumn(
@@ -2488,10 +2421,18 @@ def _sq_exprs(mins, maxs):
 def sq_grid(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
-    """The SQ8 grid as a TABLE — (i, mn, mx) per 1-based dimension, the
-    trainable/freezable artifact form of ``_collect_sq_grid`` (what a
-    streaming sink persists once and every later batch encodes against,
-    the codebook-parquet pattern of the PQ sink)."""
+    """The SQ8 grid as a TABLE — (i, mn, mx) per 1-based dimension: the
+    training pass of scalar quantization, per-DIMENSION min/max over the
+    quantized corpus — its whole "codebook" (FAISS SQ8 / Milvus SQ8 keep
+    exactly this: 2 numbers per dimension).
+
+    Plan shape: posexplode → groupBy(dim) MIN/MAX — one map-side-combined
+    aggregate whose post-shuffle cardinality is the embedding WIDTH. The
+    corpus-trained store (``_with_sq``) collects it once as a registry
+    value (a dim-row bounded collect: a codebook is shipped to every
+    worker by construction, it is not corpus-sized); a streaming sink
+    persists it once and every later batch encodes against it
+    (``sq_encode_with``, the codebook-parquet pattern of the PQ sink)."""
     base = _with_quantized(emb, vec_col)
     return (
         base.select(F.posexplode("__q").alias("__i", "__v"))
@@ -2503,6 +2444,15 @@ def sq_grid(
             F.col("mx").cast("long").alias("mx"),
         )
     )
+
+
+def _grid_bounds(rows, empty: str):
+    """(mins, maxs) per dimension, ascending ``i``, of collected
+    ``sq_grid`` rows; raises ``ValueError(empty)`` on no rows."""
+    if not rows:
+        raise ValueError(empty)
+    rows = sorted(rows, key=lambda r: r["i"])
+    return [int(r["mn"]) for r in rows], [int(r["mx"]) for r in rows]
 
 
 def sq_encode_with(
@@ -2517,12 +2467,9 @@ def sq_encode_with(
     range clamp to [0, SQ_LEVELS], the standard SQ8 out-of-range rule).
     The grid is a dim-row bounded collect; encode stays a narrow
     projection."""
-    rows = sorted(grid.collect(), key=lambda r: r["i"])
-    if not rows:
-        raise ValueError("sq_encode_with: empty grid table")
-    mins = [int(r["mn"]) for r in rows]
-    maxs = [int(r["mx"]) for r in rows]
-    code_of, _ = _sq_exprs(mins, maxs)
+    code_of, _ = _sq_exprs(
+        *_grid_bounds(grid.collect(), "sq_encode_with: empty grid table")
+    )
 
     def clamped(x, i):
         return F.greatest(
@@ -2579,36 +2526,18 @@ def sq_topk(
     the cost). Same broadcast + TakeOrderedAndProject plan as ``ann_topk``;
     ties break on id; zero-norm reconstructions yield NULL cosine and
     sink, matching the family convention. The scored stream is the
-    session-cached ``_sq_scored`` artifact shared with
-    ``sq_recall_audit``'s approx side (the ``_ann_scored`` pattern)."""
-    return (
-        _sq_scored(emb, query_vec_id, id_col, vec_col)
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def _sq_scored(
-    emb: DataFrame, query_vec_id: int, id_col: str, vec_col: str
-) -> DataFrame:
-    def build() -> DataFrame:
-        base = _with_sq(emb, id_col, vec_col)
-        qrow = base.filter(F.col(id_col) == query_vec_id).select(
-            F.col("__q").alias("__qq"), F.col("__norm").alias("__qnorm")
-        )
-        joined = base.filter(F.col(id_col) != query_vec_id).crossJoin(
-            F.broadcast(qrow)
-        )
-        dot = int_dot(F.col("__sr"), F.col("__qq"))
-        return joined.select(
-            F.col(id_col),
-            cosine_from_quantized(
-                dot, F.col("__srnorm"), F.col("__qnorm")
-            ).alias("cosine"),
-        )
-
-    return cached_index(
-        plan_key(emb, "sq_scored", query_vec_id, id_col, vec_col), build
+    session-cached ``_scored`` artifact shared with ``sq_recall_audit``'s
+    approx side."""
+    return _top_k(
+        _scored(
+            plan_key(emb, "sq_scored", query_vec_id, id_col, vec_col),
+            lambda: _with_sq(emb, id_col, vec_col),
+            id_col,
+            query_vec_id,
+            corpus=("__sr", "__srnorm"),
+        ),
+        k,
+        id_col,
     )
 
 

@@ -912,6 +912,90 @@ def test_pq_adc_matches_python_reference(spark, vecs):
         assert abs(got[vid] - want) <= 1e-12
 
 
+@st.composite
+def _quantized_rows(draw, min_rows=1, max_rows=6, dim=None):
+    """Non-zero quantized vectors (|v| ≤ EMB_SCALE) of one width ≤ 64."""
+    from binance_futures_availability_spark.functions import EMB_SCALE
+
+    dim = draw(st.integers(1, 64)) if dim is None else dim
+    row = st.lists(
+        st.integers(-EMB_SCALE, EMB_SCALE), min_size=dim, max_size=dim
+    ).filter(any)
+    return draw(st.lists(row, min_size=min_rows, max_size=max_rows))
+
+
+def _int_cosine(a, b):
+    """The exactness rule from Python ints: dot / (sqrt(‖a‖²)·sqrt(‖b‖²))."""
+    import math as _math
+
+    dot = sum(x * y for x, y in zip(a, b))
+    return dot / (
+        _math.sqrt(sum(x * x for x in a)) * _math.sqrt(sum(x * x for x in b))
+    )
+
+
+@settings(max_examples=60, deadline=None)
+@given(data=st.data())
+def test_cosines_equal_the_python_int_rule(data):
+    """``similarity._cosines`` (the float64 GEMM every cosine kernel
+    calls) equals the cosine computed from Python ints for every pair of
+    quantized vectors up to 64 wide — the same double, compared with
+    ``==`` (bit for bit; only a zero's sign could differ)."""
+    import numpy as np
+
+    from binance_futures_availability_spark.operators.similarity import _cosines
+
+    a = data.draw(_quantized_rows(max_rows=4))
+    b = data.draw(_quantized_rows(dim=len(a[0])))
+
+    def norms(rows):
+        return np.asarray([sum(v * v for v in r) for r in rows], dtype=np.float64)
+
+    got = _cosines(
+        np.asarray(a, dtype=np.float64), norms(a),
+        np.asarray(b, dtype=np.float64), norms(b),
+    )
+    assert got.shape == (len(a), len(b))
+    for i, ra in enumerate(a):
+        for j, rb in enumerate(b):
+            assert got[i, j] == _int_cosine(ra, rb)
+
+
+@settings(
+    max_examples=30,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(data=st.data(), nprobe=st.integers(1, 8))
+def test_cell_and_probe_kernels_break_ties_to_the_lowest_cell(
+    spark, data, nprobe
+):
+    """With every seed row present twice (cell c and cell c+k equal),
+    the nearest-seed kernel assigns the lowest of the tied cells and both
+    probe paths (driver-side ``_probe_cells``, Arrow ``_probe_kernel``)
+    list cells by (cosine DESC, cell) — the oracle's order."""
+    import numpy as np
+    import pandas as pd
+
+    from binance_futures_availability_spark.operators import similarity
+
+    seeds = data.draw(_quantized_rows(max_rows=4))
+    queries = data.draw(_quantized_rows(max_rows=5, dim=len(seeds[0])))
+    cells_rows = seeds + seeds
+    sq = np.asarray(cells_rows, dtype=np.float64)
+    snrm = np.asarray([sum(v * v for v in r) for r in cells_rows], dtype=np.float64)
+
+    assigned = similarity._cell_kernel(sq, snrm).func(pd.Series(queries))
+    probed = similarity._probe_kernel(sq, snrm, nprobe).func(pd.Series(queries))
+    for q, cell, probe in zip(queries, assigned, probed):
+        cos = [_int_cosine(q, s) for s in cells_rows]
+        want = sorted(range(len(cells_rows)), key=lambda c: (-cos[c], c))
+        assert cell == want[0] < len(seeds)
+        assert list(probe) == want[:nprobe]
+        qn = sum(v * v for v in q)
+        assert similarity._probe_cells(sq, snrm, q, qn, nprobe) == want[:nprobe]
+
+
 @SETTINGS
 @given(
     groups=st.dictionaries(

@@ -6,6 +6,7 @@ trailing window, single-symbol edge, duplicate-date append guard."""
 from __future__ import annotations
 
 import datetime as dt
+import glob
 
 import pytest
 from pyspark.sql import functions as F
@@ -135,11 +136,42 @@ def test_incremental_start_date_filter(spark):
     assert [r["date"] for r in rows] == [D(2024, 1, 2)]
 
 
-def test_duplicate_date_append_rejected(spark):
-    da = make_da(spark, [(D(2024, 1, 1), "A", True, 100.0)])
-    out = rankings.volume_rankings(da, generated_at=GEN)
+def test_duplicate_date_append_rejected(spark, tmp_path, monkeypatch):
+    """The tick's duplicate-date guard (``update._append_rankings``):
+    staged rows at or below the archive's watermark raise before
+    anything is published — the archive is unchanged and no staging
+    directory is left. ``volume_rankings`` is made to ignore its
+    ``start_date`` watermark filter so the guard, not the filter, is
+    what stands between the duplicate dates and the archive."""
+    from binance_futures_availability_spark import update
+
+    da = make_da(
+        spark,
+        [
+            (D(2024, 1, 1), "A", True, 100.0),
+            (D(2024, 1, 2), "A", True, 90.0),
+        ],
+    )
+    path = str(tmp_path / "rankings")
+    rankings.volume_rankings(
+        da.filter(F.col("date") == D(2024, 1, 1)), generated_at=GEN, sort=False
+    ).write.parquet(path)
+
+    def archive():
+        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    before = archive()
+    real = rankings.volume_rankings
+    monkeypatch.setattr(
+        rankings,
+        "volume_rankings",
+        lambda da, start_date=None, **kw: real(da, **kw),
+    )
     with pytest.raises(ValueError, match="duplicate dates"):
-        rankings.incremental_append(out, out)
+        update._append_rankings(da, path, GEN, D(2024, 1, 2))
+    monkeypatch.undo()
+    assert archive() == before
+    assert not glob.glob(path + ".__staging__*")
 
 
 def test_append_and_validate(spark):
@@ -147,7 +179,7 @@ def test_append_and_validate(spark):
     da2 = make_da(spark, [(D(2024, 1, 2), "A", True, 90.0)])
     r1 = rankings.volume_rankings(da1, generated_at=GEN)
     r2 = rankings.volume_rankings(da2, generated_at=GEN)
-    merged = rankings.incremental_append(r1, r2)
+    merged = r1.unionByName(r2)
     assert merged.count() == 2
     report = rankings.validate_rankings(merged)
     assert report["ok"] and report["rows"] == 2

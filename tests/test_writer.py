@@ -927,3 +927,32 @@ def test_tick_commits_only_through_publish(module, name):
         ]
         assert called.count("_publish") == 1
         assert not [c for c in called if c and "overwrite" in c], called
+
+
+def test_square_roots_only_in_the_cosine_kernel():
+    """``operators/similarity.py`` computes cosine square roots in one
+    place: every ``np.sqrt`` call sits in ``_cosines`` (the shared
+    cosine-matrix kernel) or in ``centroid_outliers``' row-wise
+    ``cos_to_own``, so the kernels behind the oracle gate cannot drift
+    apart."""
+    allowed = {("_cosines",), ("centroid_outliers", "cos_to_own")}
+    bad = []
+
+    def visit(node, scope):
+        for n in ast.iter_child_nodes(node):
+            if isinstance(n, ast.FunctionDef):
+                visit(n, (*scope, n.name))
+                continue
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "sqrt"
+                and isinstance(n.func.value, ast.Name)
+                and n.func.value.id == "np"
+                and scope not in allowed
+            ):
+                bad.append((scope, n.lineno))
+            visit(n, scope)
+
+    visit(ast.parse((PACKAGE / "operators" / "similarity.py").read_text()), ())
+    assert bad == []
