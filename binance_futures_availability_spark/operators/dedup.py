@@ -5,10 +5,12 @@ step 9), designed Spark-first for a 100 TB training-data pipeline:
 
 - **exact**: hash-groupBy on normalized content (one shuffle on a 128-bit
   key; dictionary-encodable, skew-free).
-- **n-gram Jaccard**: shingle → inverted-index self-join → pair agg. The
-  candidate join is the scale hazard: common shingles create quadratic
-  blowup, so ``max_shingle_freq`` drops stop-shingles (df > cap) — standard
-  posting-list pruning; exact pairs above the cap are still found via LSH.
+- **n-gram Jaccard / containment**: shingle → df-ranked postings → PPJoin
+  prefix + positional candidate join → exact ``array_intersect`` verify
+  (``_prefix_filtered_pairs``; one verified table serves both metrics).
+  Common shingles are the scale hazard, so ``max_shingle_freq`` drops
+  stop-shingles (df > cap) — standard posting-list pruning; exact pairs
+  above the cap are still found via LSH.
 - **MinHash + LSH**: k permutation hashes ``(a_i·x + b_i) mod p`` over
   60-bit shingle hashes; banding (k=8, 4 bands × 2 rows) buckets candidates,
   then candidates are verified with true Jaccard. Bucket join shuffles on
@@ -22,11 +24,15 @@ Everything is built from deterministic md5-based integer hashes
 (functions.md5_int60) so the DuckDB oracle reproduces values exactly.
 No Python UDFs anywhere — pure Catalyst expressions.
 
-Persisted intermediates (shingle index, fingerprints) are tracked by the
-session index cache (index_cache.tracked_persist): long-lived sessions
-release every block deterministically with index_cache.clear_indexes().
-Tracked blocks live until that call — SQL caches sit in the JVM
-CacheManager until explicitly unpersisted; there is no GC fallback.
+Every reused artifact (shingle sets, postings, candidate and verified
+pair tables, signatures, pair graphs) is an artifact-registry entry
+(index_cache.cached_index / cached_value) keyed on the RAW corpus frame.
+A corpus that is not file-backed keys to None and takes the registry's
+own bypass: the same builder runs, uncached, per call, so in-memory
+corpora run exactly the plans file-backed ones cache. The one block held
+outside the keyed stores is ``simhash_pairs``' per-build fingerprint
+table (index_cache.tracked_persist); ``index_cache.clear_indexes()``
+releases it with the rest.
 """
 
 from __future__ import annotations
@@ -253,14 +259,49 @@ def _df_annotated_postings(sh: DataFrame, id_col: str, postings_key) -> DataFram
     )
 
 
+def _jaccard(inter: str, sz_a: str, sz_b: str):
+    """The exact Jaccard column ``inter / (sz_a + sz_b − inter)`` over
+    integer count columns — one double division, the expression every
+    verified pair table carries (the DuckDB oracle divides the same
+    integers)."""
+    return F.col(inter).cast("double") / (
+        F.col(sz_a) + F.col(sz_b) - F.col(inter)
+    )
+
+
+def _with_sizes(
+    pairs: DataFrame, sizes: DataFrame, id_col: str, hint=lambda df: df
+) -> DataFrame:
+    """The verified shingle-pair tail: ``pairs`` (id_a, id_b, inter)
+    joined to both sides' FULL set sizes — (id_a, id_b, inter, sz_a,
+    sz_b, jaccard). ``hint`` wraps each size side (the prefix path
+    broadcasts them)."""
+    a = hint(sizes.withColumnsRenamed({id_col: "id_a", "sz": "sz_a"}))
+    b = hint(sizes.withColumnsRenamed({id_col: "id_b", "sz": "sz_b"}))
+    return (
+        pairs.join(a, "id_a")
+        .join(b, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            "inter",
+            "sz_a",
+            "sz_b",
+            _jaccard("inter", "sz_a", "sz_b").alias("jaccard"),
+        )
+    )
+
+
 def _pair_jaccard(
     sh: DataFrame,
     id_col: str,
-    max_shingle_freq: int | None = None,
-    sizes: DataFrame | None = None,
-    postings_key=None,
+    max_shingle_freq: int | None,
+    sizes: DataFrame,
+    postings_key,
 ) -> DataFrame:
-    """All candidate pairs sharing ≥1 shingle, with exact Jaccard.
+    """All candidate pairs sharing ≥1 shingle, with exact Jaccard — the
+    naive posting self-join, and the reference the prefix-filtered path
+    is tested against.
 
     ``max_shingle_freq`` prunes posting lists (scale path): shingles
     appearing in more docs than the cap are dropped before the join.
@@ -275,15 +316,11 @@ def _pair_jaccard(
     Shuffle budget: the df cap is a WINDOW count over the hash (one
     shuffle, and it leaves the postings hash-partitioned by it, so the
     self-join that follows needs no further exchange) instead of a
-    groupBy + join-back (three). ``sizes`` (id, sz = |shingle set|) should
-    be the narrow ``size(shingle_array(...))`` projection when the caller
-    has the source docs — it joins against the (small) pair aggregate, so
-    AQE broadcasts the pair side and the size scan stays shuffle-free;
-    without it the sizes are recovered from the postings with one
-    partial-agg groupBy.
+    groupBy + join-back (three). ``sizes`` (id, sz = |shingle set|) is
+    the narrow ``size(shingle_array(...))`` projection — it joins against
+    the (small) pair aggregate, so AQE broadcasts the pair side and the
+    size scan stays shuffle-free.
     """
-    if sizes is None:
-        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     postings = _df_annotated_postings(sh, id_col, postings_key)
     if max_shingle_freq is not None:
         postings = postings.filter(F.col("__df") <= max_shingle_freq)
@@ -296,76 +333,34 @@ def _pair_jaccard(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    return (
-        inter.join(sizes.withColumnsRenamed({id_col: "id_a", "sz": "sz_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({id_col: "id_b", "sz": "sz_b"}), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "inter",
-            "sz_a",
-            "sz_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-            ).alias("jaccard"),
-        )
-    )
+    return _with_sizes(inter, sizes, id_col)
 
 
 def _prefix_filtered_pairs(
     sh: DataFrame,
     id_col: str,
     threshold: float,
-    metric: str,
     max_shingle_freq: int | None,
     sizes: DataFrame,
     postings_key,
 ) -> DataFrame:
-    """Shared-artifact front of ``_prefix_pairs_build``: when the corpus
-    is file-backed (``postings_key``), the verified candidate table —
-    (id_a, id_b, inter, sz_a, sz_b, jaccard) — is session-cached ONCE
-    per (corpus, cap, t) and serves BOTH metrics. The cached build
-    prunes with the CONTAINMENT bound, the strictly looser of the two
-    at equal t (containment ≥ jaccard always, so jaccard ≥ t ⟹
-    containment ≥ t ⟹ the pair survives containment pruning): its
-    output is a superset of every qualifying pair for either metric,
-    and each caller's final EXACT threshold filter (jaccard ≥ t /
-    containment ≥ t over the exact verified counts) is what defines the
-    query output — pruning is conservative-only in both pipelines. So
-    ``ngram_jaccard_pairs`` and ``containment_pairs`` at the same t
-    share one candidate+verify pass instead of re-running the ranked
-    prefix join each (guide §1.2); the jaccard-only cost is verifying
-    the containment-band extras, strictly less work than the second
-    full pipeline it replaces. Non-file-backed corpora keep the exact
-    per-metric pruning (tighter, uncached)."""
-    if postings_key is not None:
-        return cached_index(
-            (*postings_key, "prefix_pairs", max_shingle_freq, float(threshold)),
-            lambda: _prefix_pairs_build(
-                sh, id_col, threshold, "containment", max_shingle_freq,
-                sizes, postings_key,
-            ),
-        )
-    return _prefix_pairs_build(
-        sh, id_col, threshold, metric, max_shingle_freq, sizes, postings_key
-    )
+    """Every pair whose containment or Jaccard can reach ``threshold``,
+    verified exactly — (id_a, id_b, inter, sz_a, sz_b, jaccard) — by
+    PREFIX FILTERING (the PPJoin family — Xiao et al., WWW'08) with an
+    exact array-intersect verify. A registry entry keyed
+    ``(*postings_key, "prefix_pairs", cap, t)``; ``postings_key`` None (a
+    corpus that is not file-backed) takes the registry's bypass.
 
-
-def _prefix_pairs_build(
-    sh: DataFrame,
-    id_col: str,
-    threshold: float,
-    metric: str,
-    max_shingle_freq: int | None,
-    sizes: DataFrame,
-    postings_key,
-) -> DataFrame:
-    """Threshold-aware pair generation by PREFIX FILTERING (the PPJoin
-    family — Xiao et al., WWW'08) with an exact array-intersect verify.
-    Output is IDENTICAL to thresholding ``_pair_jaccard`` — same capped
+    One pruning rule, the CONTAINMENT bound: containment ≥ jaccard
+    always, so jaccard ≥ t ⟹ containment ≥ t ⟹ the pair survives. The
+    table is therefore a superset of every qualifying pair for either
+    metric, and each caller's final EXACT filter (jaccard ≥ t /
+    containment ≥ t over the exact verified counts) defines its output:
+    thresholding it equals thresholding ``_pair_jaccard`` — same capped
     intersection counts, same full-size denominators, same double
     divisions — found without materializing the Σ df'² candidate rows.
+    ``ngram_jaccard_pairs`` and ``containment_pairs`` at the same t share
+    one candidate+verify pass.
 
     Why: the plain capped-posting self-join emits ~Σ_h df'² rows into the
     pair aggregate. The cap bounds each shingle's fan-out but the total
@@ -376,10 +371,9 @@ def _prefix_pairs_build(
 
     The exact argument (one-sided, per qualifying pair (a, b)):
 
-    - Jaccard ≥ t ⟹ inter ≥ t/(1+t)·(szₐ+sz_b) and t·szₐ ≤ sz_b ≤ szₐ/t
-      (size band; inter counts only capped shingles, sizes are FULL set
-      sizes, so inter ≤ min(sz'ₐ, sz'_b) still holds) ⟹ inter ≥ t·szₐ.
-    - Containment ≥ t ⟹ inter ≥ t·min(szₐ, sz_b) — take a = the smaller.
+    - Containment ≥ t ⟹ inter ≥ t·min(szₐ, sz_b) — take a = the smaller
+      (inter counts only capped shingles, sizes are FULL set sizes, so
+      inter ≤ min(sz'ₐ, sz'_b) still holds).
     - Order each doc's capped shingles rarest-first (df, then hash — ONE
       global total order shared by every doc). If b shares NOTHING in a's
       first p = sz'ₐ − α + 1 shingles (α = ⌊t·szₐ⌋, clamped ≥ 1, an 1e-9
@@ -392,12 +386,12 @@ def _prefix_pairs_build(
       simultaneously the earliest common entry of both docs' lists, so
       inter ≤ min(sz'ₓ − rn_x(c₀), sz'_y − rn_y(c₀)) + 1 holds for the c₀
       join row on BOTH arms at once. Filtering every match row by
-      best-case-overlap ≥ α_pair (the pair-aware bound — both sizes are
-      visible at probe time) can therefore never lose a pair: c₀'s row
-      always survives, and distinct keeps the pair.
+      best-case-overlap ≥ α_pair (both sizes are visible at probe time)
+      can therefore never lose a pair: c₀'s row always survives, and
+      distinct keeps the pair.
     - Direction restriction: only probe prefix(x) against docs with
-      sz_y ≥ szₓ — the smaller side is always a sufficient prover
-      (for containment it is the ONLY sufficient side), halving volume.
+      sz_y ≥ szₓ — for containment the smaller side is the ONLY
+      sufficient prover, halving volume.
 
     Verification joins the distinct candidates to per-doc sorted capped
     hash ARRAYS (a cached artifact, BROADCAST while the corpus is small
@@ -408,9 +402,9 @@ def _prefix_pairs_build(
     100 TB shape: every stage is linear in postings + surviving
     candidates — the df window (one shuffle, reused cached artifact), the
     per-doc rank window (one shuffle by id, threshold-independent cached
-    artifact), the candidate equi-join on ``__h`` with size band +
-    positional bound as join residuals (probe-time prune), a distinct on
-    the surviving pair set, and the verify joins. Candidate volume tracks
+    artifact), the candidate equi-join on ``__h`` with the positional
+    bound as a join residual (probe-time prune), a distinct on the
+    surviving pair set, and the verify joins. Candidate volume tracks
     the corpus's shingle-sharing density: on a web-scale corpus rare
     shingles have df ≈ 1-2 and candidates ≈ true pairs; the synthetic
     gate corpus (31-word vocabulary, mean shingle df ≈ 90 at sf1) is the
@@ -420,140 +414,130 @@ def _prefix_pairs_build(
     semantics.
     """
     cap = max_shingle_freq
-    annotated = _df_annotated_postings(sh, id_col, postings_key)
-    capped = annotated.filter(F.col("__df") <= cap) if cap is not None else annotated
 
-    arr_key = (
-        (*postings_key, "capped_arrays", cap) if postings_key is not None else None
-    )
-    arrays = cached_index(
-        arr_key,
-        lambda: capped.groupBy(id_col).agg(
-            F.sort_array(F.collect_list("__h")).alias("__ca")
-        ),
-    )
+    def key(*tag):
+        # every artifact here hangs off the raw corpus's postings key
+        return (*postings_key, *tag) if postings_key is not None else None
 
-    # Verify-join strategy: the per-doc array/size tables are one row per
-    # document. While the corpus fits (≤ ~250k docs ≈ tens of MB of hash
-    # arrays) BROADCAST them — the candidate pairs then verify map-side in
-    # the stage that produces them, never shuffling with array payloads
-    # attached (measured: the two shuffled array joins dominated the whole
-    # operator on dense corpora). Beyond that the hint is skipped and the
-    # planner falls back to shuffled joins — the right call when per-doc
-    # state outgrows executor memory.
-    n_docs = cached_value(arr_key, arrays.count)
-    _bc = F.broadcast if n_docs <= 250_000 else (lambda df: df)
-
-    # rarest-first RANKED postings — (id, __h, rn, szp, sz) — shared by the
-    # prefix side and the probe side, threshold-INDEPENDENT (thresholds are
-    # filters/residuals over it), so one artifact serves jaccard and
-    # containment at any t
-    w_doc = Window.partitionBy(id_col).orderBy("__df", "__h")
-    w_id = Window.partitionBy(id_col)
-    rank_key = (
-        (*postings_key, "ranked_postings", cap) if postings_key is not None else None
-    )
-    ranked = cached_index(
-        rank_key,
-        lambda: capped.join(sizes, id_col)
-        .withColumn("__rn", F.row_number().over(w_doc))
-        .withColumn("__szp", F.count(F.lit(1)).over(w_id))
-        .select(id_col, "__h", "__rn", "__szp", "sz"),
-    )
-
-    t = F.lit(float(threshold))
-    alpha = F.greatest(
-        F.floor(t * F.col("sz") - F.lit(1e-9)).cast("int"), F.lit(1)
-    )
-    pref = ranked.filter(F.col("__rn") <= F.col("__szp") - alpha + F.lit(1)).select(
-        F.col(id_col).alias("id_x"),
-        "__h",
-        F.col("__rn").alias("rn_x"),
-        F.col("__szp").alias("szp_x"),
-        F.col("sz").alias("sz_x"),
-    )
-    # the probe side renames __h → __hy: both sides share the cached
-    # postings lineage, and a bare __h == __h self-join condition would be
-    # ambiguous (Spark's classic self-join trap)
-    right = ranked.select(
-        F.col(id_col).alias("id_y"),
-        F.col("__h").alias("__hy"),
-        F.col("__rn").alias("rn_y"),
-        F.col("__szp").alias("szp_y"),
-        F.col("sz").alias("sz_y"),
-    )
-    # direction restriction (valid for both metrics): the smaller-set doc
-    # is always a sufficient prover side — for containment the required
-    # overlap is t·min(szₐ, sz_b) (only the min side's prefix argument
-    # holds), for Jaccard both directions hold — so probing prefix(x)
-    # only against docs with sz_y ≥ sz_x halves the candidate volume
-    # (size ties are found in both directions; distinct dedupes).
-    #
-    # POSITIONAL filter (PPJoin): with both sizes known at match time the
-    # pair needs overlap ≥ α_pair = ⌈t/(1+t)·(sz_x+sz_y)⌉ (jaccard) or
-    # ⌈t·sz_x⌉ (containment, sz_x = min side). A match at ranks (rn_x,
-    # rn_y) caps the best case at min(szp_x−rn_x, szp_y−rn_y) + 1 shared
-    # shingles at-or-after this rank; a valid pair's EARLIEST common
-    # shingle always passes (its best-case bound ≥ the true overlap), so
-    # per-row pruning + distinct never loses a pair — while random pairs,
-    # whose only common shingles are common (late-ranked) ones, die here
-    # instead of in the O(|set|) verify.
-    if metric == "jaccard":
-        alpha_pair = F.ceil(
-            t / (F.lit(1.0) + t) * (F.col("sz_x") + F.col("sz_y")) - F.lit(1e-9)
+    def build() -> DataFrame:
+        annotated = _df_annotated_postings(sh, id_col, postings_key)
+        capped = (
+            annotated.filter(F.col("__df") <= cap) if cap is not None else annotated
         )
-    else:
+        arr_key = key("capped_arrays", cap)
+        arrays = cached_index(
+            arr_key,
+            lambda: capped.groupBy(id_col).agg(
+                F.sort_array(F.collect_list("__h")).alias("__ca")
+            ),
+        )
+
+        # Verify-join strategy: the per-doc array/size tables are one row
+        # per document. While the corpus fits (≤ ~250k docs ≈ tens of MB
+        # of hash arrays) BROADCAST them — the candidate pairs then verify
+        # map-side in the stage that produces them, never shuffling with
+        # array payloads attached (measured: the two shuffled array joins
+        # dominated the whole operator on dense corpora). Beyond that the
+        # hint is skipped and the planner falls back to shuffled joins —
+        # the right call when per-doc state outgrows executor memory.
+        n_docs = cached_value(arr_key, arrays.count)
+        _bc = F.broadcast if n_docs <= 250_000 else (lambda df: df)
+
+        # rarest-first RANKED postings — (id, __h, rn, szp, sz) — shared by
+        # the prefix side and the probe side, threshold-INDEPENDENT
+        # (thresholds are filters/residuals over it), so one artifact
+        # serves every t
+        w_doc = Window.partitionBy(id_col).orderBy("__df", "__h")
+        w_id = Window.partitionBy(id_col)
+        ranked = cached_index(
+            key("ranked_postings", cap),
+            lambda: capped.join(sizes, id_col)
+            .withColumn("__rn", F.row_number().over(w_doc))
+            .withColumn("__szp", F.count(F.lit(1)).over(w_id))
+            .select(id_col, "__h", "__rn", "__szp", "sz"),
+        )
+
+        t = F.lit(float(threshold))
+        alpha = F.greatest(
+            F.floor(t * F.col("sz") - F.lit(1e-9)).cast("int"), F.lit(1)
+        )
+        pref = ranked.filter(
+            F.col("__rn") <= F.col("__szp") - alpha + F.lit(1)
+        ).select(
+            F.col(id_col).alias("id_x"),
+            "__h",
+            F.col("__rn").alias("rn_x"),
+            F.col("__szp").alias("szp_x"),
+            F.col("sz").alias("sz_x"),
+        )
+        # the probe side renames __h → __hy: both sides share the cached
+        # postings lineage, and a bare __h == __h self-join condition would
+        # be ambiguous (Spark's classic self-join trap)
+        right = ranked.select(
+            F.col(id_col).alias("id_y"),
+            F.col("__h").alias("__hy"),
+            F.col("__rn").alias("rn_y"),
+            F.col("__szp").alias("szp_y"),
+            F.col("sz").alias("sz_y"),
+        )
+        # direction restriction: the required overlap is t·min(szₐ, sz_b),
+        # so only the smaller-set doc's prefix argument holds — probing
+        # prefix(x) only against docs with sz_y ≥ sz_x halves the
+        # candidate volume (size ties are found in both directions;
+        # distinct dedupes).
+        #
+        # POSITIONAL filter (PPJoin): the pair needs overlap ≥ α_pair =
+        # ⌈t·sz_x⌉ (sz_x = min side). A match at ranks (rn_x, rn_y) caps
+        # the best case at min(szp_x−rn_x, szp_y−rn_y) + 1 shared shingles
+        # at-or-after this rank; a valid pair's EARLIEST common shingle
+        # always passes (its best-case bound ≥ the true overlap), so
+        # per-row pruning + distinct never loses a pair — while random
+        # pairs, whose only common shingles are common (late-ranked) ones,
+        # die here instead of in the O(|set|) verify.
         alpha_pair = F.ceil(t * F.col("sz_x") - F.lit(1e-9))
-    cond = (
-        (F.col("__h") == F.col("__hy"))
-        & (F.col("id_x") != F.col("id_y"))
-        & (F.col("sz_y") >= F.col("sz_x"))
-        & (
-            F.least(
-                F.col("szp_x") - F.col("rn_x"), F.col("szp_y") - F.col("rn_y")
+        cond = (
+            (F.col("__h") == F.col("__hy"))
+            & (F.col("id_x") != F.col("id_y"))
+            & (F.col("sz_y") >= F.col("sz_x"))
+            & (
+                F.least(
+                    F.col("szp_x") - F.col("rn_x"), F.col("szp_y") - F.col("rn_y")
+                )
+                + F.lit(1)
+                >= alpha_pair
             )
-            + F.lit(1)
-            >= alpha_pair
         )
-    )
-    if metric == "jaccard":
-        # size band (valid for Jaccard only): evaluated as a join residual,
-        # so out-of-band matches die at probe time; ±1 integer slack makes
-        # double rounding harmless (prune-only — the exact filter follows)
-        cond = cond & (F.col("sz_y") <= F.col("sz_x") / t + F.lit(1.0))
-    cand = (
-        pref.join(right, cond)
-        .select(
-            F.least("id_x", "id_y").alias("id_a"),
-            F.greatest("id_x", "id_y").alias("id_b"),
+        cand = (
+            pref.join(right, cond)
+            .select(
+                F.least("id_x", "id_y").alias("id_a"),
+                F.greatest("id_x", "id_y").alias("id_b"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    return (
-        cand.join(
-            _bc(arrays.select(F.col(id_col).alias("id_a"), F.col("__ca").alias("__ca_a"))),
-            "id_a",
+        verified = (
+            cand.join(
+                _bc(
+                    arrays.select(
+                        F.col(id_col).alias("id_a"), F.col("__ca").alias("__ca_a")
+                    )
+                ),
+                "id_a",
+            )
+            .join(
+                _bc(
+                    arrays.select(
+                        F.col(id_col).alias("id_b"), F.col("__ca").alias("__ca_b")
+                    )
+                ),
+                "id_b",
+            )
+            .withColumn("inter", F.size(F.array_intersect("__ca_a", "__ca_b")))
+            .filter(F.col("inter") > 0)
         )
-        .join(
-            _bc(arrays.select(F.col(id_col).alias("id_b"), F.col("__ca").alias("__ca_b"))),
-            "id_b",
-        )
-        .withColumn("inter", F.size(F.array_intersect("__ca_a", "__ca_b")))
-        .filter(F.col("inter") > 0)
-        .join(_bc(sizes.withColumnsRenamed({id_col: "id_a", "sz": "sz_a"})), "id_a")
-        .join(_bc(sizes.withColumnsRenamed({id_col: "id_b", "sz": "sz_b"})), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "inter",
-            "sz_a",
-            "sz_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-            ).alias("jaccard"),
-        )
-    )
+        return _with_sizes(verified, sizes, id_col, _bc)
+
+    return cached_index(key("prefix_pairs", cap, float(threshold)), build)
 
 
 #: default posting-list cap: shingles shared by more docs than this are
@@ -561,6 +545,32 @@ def _prefix_pairs_build(
 #: make the self-join quadratic on any real corpus. 1000 keeps every
 #: discriminative shingle while bounding a single shingle's pair fan-out.
 DEFAULT_MAX_SHINGLE_FREQ = 1000
+
+
+def _shingle_pairs(
+    docs: DataFrame,
+    threshold: float,
+    id_col: str,
+    text_col: str,
+    n: int,
+    max_shingle_freq: int | None,
+) -> DataFrame:
+    """The verified shingle-pair table both n-gram pair operators filter —
+    (id_a, id_b, inter, sz_a, sz_b, jaccard): the prefix-filtered table
+    (every pair either metric can qualify at ``threshold``) when
+    ``threshold > 0``, else every pair sharing a capped shingle. Sizes
+    are the narrow ``size(__sa)`` projection of the cached shingle
+    arrays; the postings key comes from the raw corpus frame."""
+    sh = shingles(docs, id_col, text_col, n)
+    sizes = shingle_arrays(docs, id_col, text_col, n).select(
+        F.col(id_col), F.size("__sa").alias("sz")
+    )
+    postings_key = plan_key(docs, "postings_h", id_col, text_col, n)
+    if threshold > 0:
+        return _prefix_filtered_pairs(
+            sh, id_col, threshold, max_shingle_freq, sizes, postings_key
+        )
+    return _pair_jaccard(sh, id_col, max_shingle_freq, sizes, postings_key)
 
 
 def ngram_jaccard_pairs(
@@ -580,32 +590,10 @@ def ngram_jaccard_pairs(
     intersection (never overcount), so precision of ``≥ threshold`` output
     against capped postings is conservative.
     """
-    sh = shingles(docs, id_col, text_col, n)
-    sizes = shingle_arrays(docs, id_col, text_col, n).select(
-        F.col(id_col), F.size("__sa").alias("sz")
-    )
+    pairs = _shingle_pairs(docs, threshold, id_col, text_col, n, max_shingle_freq)
     # pairs over a high threshold are sparse by construction → gathered
     # presentation sort (a range orderBy would pay a sampling job that
     # partially re-executes the pair pipeline)
-    pairs = (
-        _prefix_filtered_pairs(
-            sh,
-            id_col,
-            threshold,
-            "jaccard",
-            max_shingle_freq,
-            sizes=sizes,
-            postings_key=plan_key(docs, "postings_h", id_col, text_col, n),
-        )
-        if threshold > 0
-        else _pair_jaccard(
-            sh,
-            id_col,
-            max_shingle_freq,
-            sizes=sizes,
-            postings_key=plan_key(docs, "postings_h", id_col, text_col, n),
-        )
-    )
     return gathered_sort(
         pairs.filter(F.col("jaccard") >= threshold).select(
             "id_a", "id_b", "jaccard"
@@ -631,36 +619,12 @@ def containment_pairs(
     but containment ≈ 1 — the variant web-dedup pipelines run to catch
     mirrored snippets and quoted boilerplate.
 
-    Same machinery and scale shape as ``ngram_jaccard_pairs`` (shared
-    cached postings artifact, capped posting lists, one pair aggregate);
-    containment = |A∩B| / min(|A|, |B|) is one extra exact-integer
-    division over the counts the pipeline already carries.
+    Same verified pair table as ``ngram_jaccard_pairs`` (``_shingle_pairs``
+    — at equal t both serve one artifact); containment = |A∩B| /
+    min(|A|, |B|) is one extra exact-integer division over the counts it
+    already carries.
     """
-    from ..index_cache import plan_key
-
-    sh = shingles(docs, id_col, text_col, n)
-    sizes = shingle_arrays(docs, id_col, text_col, n).select(
-        F.col(id_col), F.size("__sa").alias("sz")
-    )
-    pairs = (
-        _prefix_filtered_pairs(
-            sh,
-            id_col,
-            threshold,
-            "containment",
-            max_shingle_freq,
-            sizes=sizes,
-            postings_key=plan_key(docs, "postings_h", id_col, text_col, n),
-        )
-        if threshold > 0
-        else _pair_jaccard(
-            sh,
-            id_col,
-            max_shingle_freq,
-            sizes=sizes,
-            postings_key=plan_key(docs, "postings_h", id_col, text_col, n),
-        )
-    )
+    pairs = _shingle_pairs(docs, threshold, id_col, text_col, n, max_shingle_freq)
     containment = F.col("inter").cast("double") / F.least(
         F.col("sz_a"), F.col("sz_b")
     )
@@ -698,11 +662,10 @@ def _lsh_band_candidates(
     num_perm: int,
     n_bands: int,
     max_bucket_pop: int | None,
-    cand_key=None,
+    cand_key,
 ) -> DataFrame:
     """Banded LSH candidate pairs (id_a < id_b, distinct) from a
-    signature table — the shared core of ``minhash_lsh_pairs`` and
-    ``minhash_estimate_audit``.
+    signature table — the candidate side of ``_candidate_pair_stats``.
 
     ``cand_key`` (a plan_key built from the RAW corpus frame — sigs is
     derived from a cached handle and would key to None, the
@@ -711,54 +674,55 @@ def _lsh_band_candidates(
     consumers (lsh pairs, estimate audit, clusters ×2, survivors, rate
     dashboard) over the same corpus and parameters, and the candidate
     list is the sparse, byte-bounded pair INDEX a dedup deployment
-    materializes once. Verification (exact Jaccard) stays per-query —
-    only the candidate generation is shared."""
-    if cand_key is not None:
-        return cached_index(
-            cand_key,
-            lambda: _lsh_band_candidates(
-                sigs, id_col, num_perm, n_bands, max_bucket_pop
-            ),
-        )
-    bands_spec = band_partition(num_perm, n_bands)
-    # one row per (doc, band) via a single explode — a union of per-band
-    # selects would re-run the signature aggregation once per band. The
-    # band array is one parsed expression string (see the note in
-    # _signatures_from_shingles on why strings beat Column loops here).
-    band_structs = F.expr(
-        "array("
-        + ", ".join(
-            f"struct({band_id} AS band, concat_ws('_', "
-            + ", ".join(f"CAST(h{c} AS STRING)" for c in cols)
-            + ") AS bucket)"
-            for band_id, cols in enumerate(bands_spec)
-        )
-        + ")"
-    )
-    bands = sigs.select(F.col(id_col), F.explode(band_structs).alias("bb")).select(
-        F.col(id_col), F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    if max_bucket_pop is not None:
-        # window count over the SELF-JOIN key (band, bucket): one shuffle
-        # that leaves the surviving band rows hash-partitioned exactly as
-        # the candidate join needs them (the winnow_overlap_pairs df-cap
-        # shape — never a corpus-sized broadcast list).
-        bands = (
-            bands.withColumn(
-                "__pop",
-                F.count(F.lit(1)).over(Window.partitionBy("band", "bucket")),
+    materializes once (verification is the separate
+    ``_candidate_pair_stats`` entry)."""
+
+    def build() -> DataFrame:
+        bands_spec = band_partition(num_perm, n_bands)
+        # one row per (doc, band) via a single explode — a union of per-band
+        # selects would re-run the signature aggregation once per band. The
+        # band array is one parsed expression string (see the note in
+        # _signatures_from_shingles on why strings beat Column loops here).
+        band_structs = F.expr(
+            "array("
+            + ", ".join(
+                f"struct({band_id} AS band, concat_ws('_', "
+                + ", ".join(f"CAST(h{c} AS STRING)" for c in cols)
+                + ") AS bucket)"
+                for band_id, cols in enumerate(bands_spec)
             )
-            .filter(F.col("__pop") <= max_bucket_pop)
-            .drop("__pop")
+            + ")"
         )
-    left = bands.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    right = bands.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    return (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+        bands = sigs.select(
+            F.col(id_col), F.explode(band_structs).alias("bb")
+        ).select(
+            F.col(id_col),
+            F.col("bb.band").alias("band"),
+            F.col("bb.bucket").alias("bucket"),
+        )
+        if max_bucket_pop is not None:
+            # window count over the SELF-JOIN key (band, bucket): one shuffle
+            # that leaves the surviving band rows hash-partitioned exactly as
+            # the candidate join needs them (the winnow_overlap_pairs df-cap
+            # shape — never a corpus-sized broadcast list).
+            bands = (
+                bands.withColumn(
+                    "__pop",
+                    F.count(F.lit(1)).over(Window.partitionBy("band", "bucket")),
+                )
+                .filter(F.col("__pop") <= max_bucket_pop)
+                .drop("__pop")
+            )
+        left = bands.select(F.col(id_col).alias("id_a"), "band", "bucket")
+        right = bands.select(F.col(id_col).alias("id_b"), "band", "bucket")
+        return (
+            left.join(right, ["band", "bucket"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
+        )
+
+    return cached_index(cand_key, build)
 
 
 def minhash_signatures(
@@ -793,13 +757,21 @@ def _candidate_pair_stats(
     num_perm: int,
     n_bands: int,
     max_bucket_pop: int | None,
-) -> DataFrame | None:
+) -> DataFrame:
     """The MinHash family's shared VERIFIED-candidate table — one row per
     banded LSH candidate pair carrying every exact statistic any consumer
     derives a metric from: (id_a, id_b, __m signature-component matches,
-    __inter exact shingle intersection, __za, __zb set sizes). Returns
-    None for non-file-backed corpora (plan_key None — the ``postings_key``
-    pitfall), where callers keep their uncached inline pipelines.
+    __inter exact shingle intersection, __za, __zb set sizes). A registry
+    entry keyed on the raw corpus; a corpus that is not file-backed keys
+    to None and gets the same table rebuilt per call (the registry's
+    bypass).
+
+    Verification is a per-row ``array_intersect`` of the two sides'
+    cached shingle sets: the inner joins against the candidate list ARE
+    the restriction (only candidate docs' arrays survive), with no
+    posting explode and no pair aggregation. With the candidate side
+    small (near-dups are a sliver of any real corpus) the optimizer
+    broadcasts it and the corpus scan stays shuffle-free.
 
     r13: ``minhash_lsh_pairs`` and ``minhash_estimate_audit`` shared the
     banded CANDIDATE list but each re-ran verification per execution —
@@ -817,8 +789,6 @@ def _candidate_pair_stats(
         docs, "lsh_verified_stats", id_col, text_col, n, num_perm,
         n_bands, max_bucket_pop,
     )
-    if key is None:
-        return None
 
     def _build() -> DataFrame:
         sigs = minhash_signatures(docs, id_col, text_col, n, num_perm)
@@ -886,6 +856,7 @@ def minhash_lsh_pairs(
     Banding: a pair is a candidate iff it collides on ALL rows of ≥1 band.
     Candidates are then verified against true shingle Jaccard — LSH only
     prunes, so results equal brute-force Jaccard restricted to candidates.
+    Served from the shared verified table (``_candidate_pair_stats``).
 
     ``num_perm``/``n_bands`` are the scale knobs (see band_partition's
     rule): the default 8×(4 bands × 2 rows) targets sf-scale corpora; at
@@ -914,49 +885,8 @@ def minhash_lsh_pairs(
     stats = _candidate_pair_stats(
         docs, id_col, text_col, n, num_perm, n_bands, max_bucket_pop
     )
-    if stats is None:
-        # non-file-backed corpus: inline verification, uncached.
-        # Each side of a candidate pair brings its per-doc shingle SET
-        # along as an array column (the same narrow shingle_array
-        # projection the signatures consumed — no posting explode, no
-        # pair aggregation), and the exact Jaccard is a per-row
-        # array_intersect. The inner join against the candidate pairs IS
-        # the restriction: only candidate docs' arrays survive, and with
-        # the candidate side small (near-dups are a sliver of any real
-        # corpus) the optimizer broadcasts it, leaving the corpus scan
-        # shuffle-free. When candidates outgrow broadcast, this degrades
-        # to one corpus shuffle by id — exactly what the previous
-        # postings semi-join paid, minus its pair-aggregation and
-        # size-join shuffles (measured 1.6 → 0.9 s warm at sf0.1).
-        sigs = minhash_signatures(docs, id_col, text_col, n, num_perm)
-        candidates = _lsh_band_candidates(
-            sigs, id_col, num_perm, n_bands, max_bucket_pop
-        )
-        arrs = shingle_arrays(docs, id_col, text_col, n)
-        stats = (
-            candidates.join(
-                arrs.select(F.col(id_col).alias("id_a"), F.col("__sa").alias("__sa_a")),
-                "id_a",
-            )
-            .join(
-                arrs.select(F.col(id_col).alias("id_b"), F.col("__sa").alias("__sa_b")),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                F.size(F.array_intersect("__sa_a", "__sa_b")).alias("__inter"),
-                F.size("__sa_a").alias("__za"),
-                F.size("__sa_b").alias("__zb"),
-            )
-        )
     verified = stats.select(
-        "id_a",
-        "id_b",
-        (
-            F.col("__inter").cast("double")
-            / (F.col("__za") + F.col("__zb") - F.col("__inter"))
-        ).alias("jaccard"),
+        "id_a", "id_b", _jaccard("__inter", "__za", "__zb").alias("jaccard")
     ).filter(F.col("jaccard") >= threshold)
     return gathered_sort(verified, "id_a", "id_b")
 
@@ -1044,56 +974,14 @@ def minhash_estimate_audit(
     Exactness discipline: BOTH jaccards are ×10⁶ integer FLOOR
     quotients (est: matches·10⁶ div k; true: inter·10⁶ div union), the
     mean is one more exact integer division — no double accumulates, so
-    the audit row is gate-hashable. Shape: candidates come from the
-    shared ``_lsh_band_candidates`` core (linear with the pop cap), the
-    estimate join touches only the (bounded) candidate set against the
-    cached signature table, truth reuses the cached shingle arrays, and
-    the output is a single aggregate row.
+    the audit row is gate-hashable. Shape: both quotients are
+    projections of the shared verified table (``_candidate_pair_stats``
+    — bounded by the pop cap, signature matches and exact shingle counts
+    per candidate), and the output is a single aggregate row.
     """
     stats = _candidate_pair_stats(
         docs, id_col, text_col, n, num_perm, n_bands, max_bucket_pop
     )
-    if stats is None:
-        # non-file-backed corpus: inline (signatures + shingle arrays
-        # joined onto the candidate list per execution), uncached.
-        sigs = minhash_signatures(docs, id_col, text_col, n, num_perm)
-        cand = _lsh_band_candidates(
-            sigs, id_col, num_perm, n_bands, max_bucket_pop
-        )
-        sa = sigs.select(
-            F.col(id_col).alias("id_a"),
-            *[F.col(f"h{i}").alias(f"__a{i}") for i in range(num_perm)],
-        )
-        sb = sigs.select(
-            F.col(id_col).alias("id_b"),
-            *[F.col(f"h{i}").alias(f"__b{i}") for i in range(num_perm)],
-        )
-        matches = sum(
-            (F.col(f"__a{i}") == F.col(f"__b{i}")).cast("long")
-            for i in range(num_perm)
-        )
-        arrs = shingle_arrays(docs, id_col, text_col, n)
-        stats = (
-            cand.join(sa, "id_a")
-            .join(sb, "id_b")
-            .select("id_a", "id_b", matches.alias("__m"))
-            .join(
-                arrs.select(F.col(id_col).alias("id_a"), F.col("__sa").alias("__la")),
-                "id_a",
-            )
-            .join(
-                arrs.select(F.col(id_col).alias("id_b"), F.col("__sa").alias("__lb")),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                "__m",
-                F.size(F.array_intersect("__la", "__lb")).alias("__inter"),
-                F.size("__la").alias("__za"),
-                F.size("__lb").alias("__zb"),
-            )
-        )
     paired = stats.select(
         F.expr(f"__m * 1000000 div {num_perm}").alias("__est_ppm"),
         F.expr(

@@ -685,13 +685,24 @@ def _seeds(emb: DataFrame, id_col: str, vec_col: str, n_cells: int):
     return cached_value(_seed_key(emb, id_col, vec_col, n_cells), collect)
 
 
-def _query_row(rows: DataFrame, id_col: str, query_vec_id: int, where: str):
+def _query_row(key, rows: DataFrame, id_col: str, query_vec_id: int, where: str):
     """(quantized vector, norm) of row ``query_vec_id`` of a quantized
-    store — one bounded lookup job; raises when the id is absent."""
-    row = rows.filter(F.col(id_col) == query_vec_id).select("__q", "__norm").first()
-    if row is None:
-        raise ValueError(f"query {id_col}={query_vec_id} not found in {where}")
-    return list(row["__q"]), int(row["__norm"])
+    store — one bounded lookup job, then a registry value under ``key``
+    (capped like every value, so serving new query ids forever stays
+    flat; ``key`` None looks up per call). Raises when the id is
+    absent."""
+
+    def lookup():
+        row = (
+            rows.filter(F.col(id_col) == query_vec_id)
+            .select("__q", "__norm")
+            .first()
+        )
+        if row is None:
+            raise ValueError(f"query {id_col}={query_vec_id} not found in {where}")
+        return list(row["__q"]), int(row["__norm"])
+
+    return cached_value(key, lookup)
 
 
 def _cell_kernel(sq, snrm):
@@ -776,7 +787,8 @@ def ivf_topk(
     """
     sq, snrm = _seeds(emb, id_col, vec_col, n_cells)
     qq, qn = _query_row(
-        _with_quantized(emb, vec_col), id_col, query_vec_id, "embeddings"
+        plan_key(emb, "query_row", vec_col, id_col, query_vec_id),
+        _with_quantized(emb, vec_col), id_col, query_vec_id, "embeddings",
     )
     scored = _ivf_scored(
         _ivf_assigned(emb, id_col, vec_col, n_cells),
@@ -952,7 +964,10 @@ def ivf_topk_indexed(
     root = index_path.rstrip("/")
     sq, snrm = _read_seeds(spark, root)
     vectors = _index_vectors(spark, root)
-    qq, qn = _index_query_row(spark, root, id_col, query_vec_id)
+    qq, qn = _query_row(
+        ((root + "/vectors",), "ivf_query_row", id_col, query_vec_id),
+        vectors, id_col, query_vec_id, "index",
+    )
     scored = _ivf_scored(vectors, sq, snrm, qq, qn, nprobe, id_col, query_vec_id)
     return _top_k(scored, k, id_col)
 
@@ -984,23 +999,12 @@ def ivf_range_indexed(
     root = index_path.rstrip("/")
     sq, snrm = _read_seeds(spark, root)
     vectors = _index_vectors(spark, root)
-    qq, qn = _index_query_row(spark, root, id_col, query_vec_id)
+    qq, qn = _query_row(
+        ((root + "/vectors",), "ivf_query_row", id_col, query_vec_id),
+        vectors, id_col, query_vec_id, "index",
+    )
     scored = _ivf_scored(vectors, sq, snrm, qq, qn, nprobe, id_col, query_vec_id)
     return scored.filter(F.col("cosine") >= min_cosine)
-
-
-def _index_query_row(spark, root: str, id_col: str, query_vec_id: int):
-    """(quantized vector, norm) of corpus row ``query_vec_id`` in an
-    on-disk IVF index. A serving system resolves a query embedding once;
-    repeat queries then cost only the pruned scan. A registry value
-    under ``<root>/vectors`` (capped like every value, so serving new
-    query ids forever stays flat)."""
-    return cached_value(
-        ((root + "/vectors",), "ivf_query_row", id_col, query_vec_id),
-        lambda: _query_row(
-            _index_vectors(spark, root), id_col, query_vec_id, "index"
-        ),
-    )
 
 
 def _read_seeds(spark, root: str):
@@ -2149,7 +2153,8 @@ def ivf_pq_topk(
     broadcast joins and one short-row aggregate."""
     sq, snrm = _seeds(emb, id_col, vec_col, n_cells)
     qq, qn = _query_row(
-        _with_quantized(emb, vec_col), id_col, query_id, "embeddings"
+        plan_key(emb, "query_row", vec_col, id_col, query_id),
+        _with_quantized(emb, vec_col), id_col, query_id, "embeddings",
     )
     probe = _probe_cells(sq, snrm, qq, qn, nprobe)
     cand = _ivf_assigned(emb, id_col, vec_col, n_cells).filter(

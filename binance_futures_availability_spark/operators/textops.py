@@ -1783,8 +1783,7 @@ def bm25_scores(
     # each re-ran the postings join + per-doc sum per execution. One
     # narrow row per MATCHING doc — bounded by the query terms' posting
     # lists, not the corpus — so it session-caches under the index_cache
-    # byte budget; in-memory corpora (plan_key None) keep the inline
-    # pipeline.
+    # byte budget.
     from ..index_cache import cached_index, plan_key
 
     key = plan_key(
@@ -1792,8 +1791,6 @@ def bm25_scores(
             str(t) for t in query_terms
         )
     )
-    if key is None:
-        return _build()
     return cached_index(key, _build)
 
 

@@ -43,26 +43,6 @@ from pyspark.sql import functions as F
 from ..schema import DAILY_AVAILABILITY
 
 
-def dedup_latest(
-    df: DataFrame, key: list[str], version_col: str
-) -> DataFrame:
-    """Keep exactly one row per key — the one with the highest version.
-
-    Ties (same version) break deterministically on the remaining column
-    values, mirroring last-write-wins of INSERT OR REPLACE
-    (availability_db.py:97-101).
-    """
-    order = [F.col(version_col).desc()] + [
-        F.col(c).desc() for c in df.columns if c not in key and c != version_col
-    ]
-    w = Window.partitionBy(*key).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def upsert(
     existing: DataFrame,
     incoming: DataFrame,

@@ -516,8 +516,7 @@ def test_prefix_pair_artifact_shared_and_exact(spark, tmp_path):
     """ngram_jaccard_pairs and containment_pairs at the same threshold
     share ONE session-cached verified candidate table (containment-bound
     pruning, the strictly looser superset at equal t) — and both outputs
-    are identical to the cache-bypassed (in-memory source, per-metric
-    pruning) builds."""
+    are identical to the cache-bypassed (in-memory source) builds."""
     from binance_futures_availability_spark import index_cache
     from binance_futures_availability_spark.operators import dedup
 
@@ -897,6 +896,16 @@ def test_lsh_verified_stats_artifact_shared_and_exact(spark, tmp_path):
     assert audit == sorted(
         tuple(r) for r in dedup.minhash_estimate_audit(mem).collect()
     )
+    # the in-memory corpus reaches the same builder through the
+    # registry's None-key bypass: same verified rows, nothing cached
+    args = ("doc_id", "text", 3, 8, 4, 512)
+    file_stats = sorted(
+        tuple(r) for r in dedup._candidate_pair_stats(docs, *args).collect()
+    )
+    mem_stats = dedup._candidate_pair_stats(mem, *args)
+    assert mem_stats is not None
+    assert file_stats and sorted(tuple(r) for r in mem_stats.collect()) == file_stats
+    assert n_keys() == 1
     index_cache.clear_indexes()
 
 

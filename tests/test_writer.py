@@ -59,18 +59,6 @@ def test_upsert_accepts_narrower_incoming_frame(spark):
     assert rows[0]["quote_volume_usdt"] is None  # replaced, not carried over
 
 
-def test_dedup_latest(spark):
-    import datetime
-
-    r1 = list(_row(D(2024, 1, 1), "BTCUSDT", True, 1.0))
-    r2 = list(_row(D(2024, 1, 1), "BTCUSDT", True, 2.0))
-    r2[7] = datetime.datetime(2024, 1, 17)  # later probe_timestamp wins
-    df = spark.createDataFrame([tuple(r1), tuple(r2)], DAILY_AVAILABILITY)
-    out = writer.dedup_latest(df, ["date", "symbol"], "probe_timestamp").collect()
-    assert len(out) == 1
-    assert out[0]["quote_volume_usdt"] == 2.0
-
-
 def test_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
     path = str(tmp_path / "fact")
     initial = make_da(
@@ -956,3 +944,25 @@ def test_square_roots_only_in_the_cosine_kernel():
 
     visit(ast.parse((PACKAGE / "operators" / "similarity.py").read_text()), ())
     assert bad == []
+
+
+def test_one_intersect_verify_per_dedup_pair_path():
+    """``operators/dedup.py`` verifies shingle pairs in one place per
+    path: at most two ``array_intersect`` calls, one in the prefix-pair
+    builder and one in the MinHash verified-stats build, so no private
+    copy of either verify can return beside the registry's artifact."""
+    tree = ast.parse((PACKAGE / "operators" / "dedup.py").read_text())
+    calls = [
+        (top.name, n.lineno)
+        for top in tree.body
+        if isinstance(top, ast.FunctionDef)
+        for n in ast.walk(top)
+        if isinstance(n, ast.Call)
+        and getattr(n.func, "attr", getattr(n.func, "id", None))
+        == "array_intersect"
+    ]
+    assert len(calls) <= 2, calls
+    assert {name for name, _ in calls} <= {
+        "_prefix_filtered_pairs",
+        "_candidate_pair_stats",
+    }, calls
