@@ -2,13 +2,16 @@
 
 North-star extension operators (no reference counterpart — SURVEY.md §2.10):
 language-ID (stopword n-gram heuristic), quality scoring, token counting,
-document fingerprinting. All pure ``pyspark.sql.functions`` expressions —
-whole-stage-codegen'd, no Python in the hot path — with exact DuckDB
-equivalents for the oracle gate.
+document fingerprinting, TF-IDF/BM25, LM and classifier scoring, hash
+splits, boilerplate removal — each with an exact DuckDB equivalent for
+the oracle gate. Almost all are native ``pyspark.sql.functions``
+expressions; ``pii_scrub`` is one ``mapInArrow`` pass.
 
-Scale: every operator here is a narrow projection (no shuffle at all) — it
-streams through 100 TB at scan speed and pairs with predicate pushdown on
-(lang, source) partitions.
+Every derived table an operator reuses (the inverted index, the per-doc
+profile, the LM counts, ranked and scored streams) is a session registry
+entry (``index_cache.cached_index``/``cached_value``) keyed on the raw
+source frame; a corpus that is not file-backed has no key and takes the
+registry's ``key=None`` bypass, which builds the same frame inline.
 """
 
 from __future__ import annotations
@@ -16,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import md5_int60, normalized_text, token_count
+from ..functions import md5_int60, normalized_text, token_count, tokens
 
 #: language → stopword regex (word-boundary alternation, full-match group 0)
 LANG_STOPWORDS = {
@@ -61,21 +64,6 @@ def token_counts(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     )
 
 
-def quality_score_expr(t):
-    """The heuristic quality score as a reusable column expression —
-    raw doubles in a fixed evaluation order (no round(): cross-engine
-    round implementations differ in last-ulp cases; integer-derived
-    ratios are already bit-deterministic)."""
-    wc = token_count(t)
-    nonspace = F.length(F.regexp_replace(t, r"\s", ""))
-    stop = _stop_count(t, "en")
-    return (
-        0.4 * F.least(wc.cast("double") / 100.0, F.lit(1.0))
-        + 0.4 * (stop.cast("double") / wc)
-        + 0.2 * F.least((nonspace.cast("double") / wc) / 10.0, F.lit(1.0))
-    )
-
-
 def _doc_profile(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -95,8 +83,7 @@ def _doc_profile(
     score's operand order is unchanged — see ``_profile_quality``).
     One narrow row per doc (a 32-char hash + ~10 ints), the per-doc
     metadata table every curation pipeline materializes once per corpus
-    snapshot. In-memory corpora (plan_key None) build the same
-    projection inline, uncached.
+    snapshot.
     """
     from ..index_cache import cached_index, plan_key
 
@@ -124,10 +111,12 @@ def _doc_profile(
 
 
 def _profile_quality():
-    """``quality_score_expr`` re-expressed over the profile's integer
-    columns — the identical arithmetic (operand order, casts, implicit
-    int→double promotions) over the identical integers, so the score
-    doubles are bit-equal to the direct-scan form."""
+    """The heuristic quality score over the profile's integer columns
+    (word count, non-space chars, English stopwords) — raw doubles in a
+    fixed evaluation order (no round(): cross-engine round
+    implementations differ in last-ulp cases; integer-derived ratios are
+    already bit-deterministic). ``oracles.quality_score_sql`` is its
+    DuckDB mirror."""
     wc = F.col("__wc")
     nonspace = F.col("__nonspace")
     stop = F.col("__stop_en_raw")
@@ -243,7 +232,7 @@ def fingerprints(
     snapshot, so it is session-cached (r13, the scored-stream
     discipline): a warm execution otherwise re-runs the normalize+md5
     scan and the per-shingle hash+min over the whole cached shingle
-    stream. In-memory corpora (plan_key None) keep the inline pipeline.
+    stream.
     """
     from ..index_cache import cached_index, plan_key
     from .dedup import shingles  # local import to avoid cycle
@@ -297,13 +286,23 @@ def tf_index(
     from ..index_cache import cached_index, plan_key
 
     def _build() -> DataFrame:
-        terms = docs.select(
-            F.col(id_col),
-            F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("term"),
-        ).filter(F.col("term") != "")
+        terms = _term_stream(docs, text_col, "term", id_col)
         return terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
 
     return cached_index(plan_key(docs, "tf_index", id_col, text_col), _build)
+
+
+def _term_stream(
+    docs: DataFrame, text_col: str, alias: str, *cols: str
+) -> DataFrame:
+    """The whitespace term stream: one row per non-empty token of
+    ``text_col`` (as ``alias``), carrying ``cols``. The one tokenizer
+    behind ``tf_index``, the classifier's serving postings and the BPE
+    word tables."""
+    return docs.select(
+        *[F.col(c) for c in cols],
+        F.explode(tokens(F.col(text_col))).alias(alias),
+    ).filter(F.col(alias) != "")
 
 
 def term_frequencies(
@@ -521,7 +520,7 @@ def contamination_check(
     # re-aggregated the corpus-sized posting stream per run. Keyed on
     # BOTH source frames (multi_plan_key — a rewrite of either side
     # invalidates) but NOT on min_overlap, which is a pure projection
-    # below. Non-file-backed inputs bypass.
+    # below.
     from ..index_cache import multi_plan_key
 
     def _build_counted() -> DataFrame:
@@ -644,7 +643,7 @@ def repetition_scores(
     # The per-doc repetition table is the Gopher-rules quality artifact a
     # filtering pipeline materializes once per corpus (the batch-9/10
     # scored-stream discipline): one narrow row per doc, 5 ints + 2
-    # doubles. In-memory corpora (plan_key None) keep the inline pipeline.
+    # doubles.
     return cached_index(
         plan_key(docs, "repetition_stats", id_col, text_col), _build
     )
@@ -652,6 +651,33 @@ def repetition_scores(
 
 #: default split fractions: cumulative per-mille thresholds over the hash
 DEFAULT_SPLITS = (("train", 980), ("val", 990), ("test", 1000))
+
+
+def _split_bucket(salt: str, key):
+    """The salted per-mille hash bucket of a key column, in [0, 1000)."""
+    return md5_int60(F.concat(F.lit(salt), F.lit(":"), key.cast("string"))) % 1000
+
+
+def _split_col(splits: tuple, salt: str, key):
+    """The split name of each row: the first ``(name, upper)`` whose
+    upper exceeds the row's salted bucket of ``key``.
+
+    ``splits`` must cover the full [0, 1000) hash range with strictly
+    increasing uppers ending at exactly 1000 — otherwise documents
+    hashing above the last bound would silently get a NULL split and
+    leak out of every partition."""
+    uppers = [upper for _, upper in splits]
+    if any(b <= a for a, b in zip(uppers, uppers[1:])) or uppers[-1] != 1000 or uppers[0] <= 0:
+        raise ValueError(
+            f"splits uppers must be strictly increasing in (0, 1000] and end at "
+            f"exactly 1000 to cover the hash range; got {uppers}"
+        )
+    bucket = _split_bucket(salt, key)
+    expr = None
+    for name, upper in splits:
+        cond = bucket < F.lit(upper)
+        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
+    return expr
 
 
 def corpus_split(
@@ -674,22 +700,10 @@ def corpus_split(
     Narrow projection, zero shuffles — scan-speed at any corpus size.
 
     ``splits`` must cover the full [0, 1000) hash range with strictly
-    increasing uppers ending at exactly 1000 — otherwise documents hashing
-    above the last bound would silently get a NULL split and leak out of
-    every partition.
+    increasing uppers ending at exactly 1000 (``ValueError`` otherwise).
     """
-    uppers = [upper for _, upper in splits]
-    if any(b <= a for a, b in zip(uppers, uppers[1:])) or uppers[-1] != 1000 or uppers[0] <= 0:
-        raise ValueError(
-            f"splits uppers must be strictly increasing in (0, 1000] and end at "
-            f"exactly 1000 to cover the hash range; got {uppers}"
-        )
-    bucket = md5_int60(F.concat(F.lit(salt), F.lit(":"), F.col(id_col).cast("string"))) % 1000
-    expr = None
-    for name, upper in splits:
-        cond = bucket < F.lit(upper)
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    return docs.select(F.col(id_col), expr.alias("split"))
+    split = _split_col(splits, salt, F.col(id_col))
+    return docs.select(F.col(id_col), split.alias("split"))
 
 
 def vocab_growth(
@@ -756,20 +770,8 @@ def grouped_split(
     ones), same full-range validation. Still a narrow zero-shuffle
     projection — the group key is already on the row.
     """
-    uppers = [upper for _, upper in splits]
-    if any(b <= a for a, b in zip(uppers, uppers[1:])) or uppers[-1] != 1000 or uppers[0] <= 0:
-        raise ValueError(
-            f"splits uppers must be strictly increasing in (0, 1000] and end at "
-            f"exactly 1000 to cover the hash range; got {uppers}"
-        )
-    bucket = md5_int60(
-        F.concat(F.lit(salt), F.lit(":"), F.col(group_col).cast("string"))
-    ) % 1000
-    expr = None
-    for name, upper in splits:
-        cond = bucket < F.lit(upper)
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    return docs.select(F.col(id_col), F.col(group_col), expr.alias("split"))
+    split = _split_col(splits, salt, F.col(group_col))
+    return docs.select(F.col(id_col), F.col(group_col), split.alias("split"))
 
 
 def pack_sequences(
@@ -839,8 +841,6 @@ def top_terms(
     vocabulary-sized, not corpus-sized — the aggregate did the heavy
     lifting map-side.
     """
-    from ..functions import tokens
-
     terms = docs.select(
         F.col(strata_col),
         F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("term"),
@@ -882,7 +882,6 @@ def source_overlap(
     BIGINT counts — engine-deterministic. Zero-overlap pairs are absent
     (inner join), mirroring the oracle.
     """
-    from ..functions import tokens
     from ..index_cache import cached_index, plan_key
 
     def _build_vocab() -> DataFrame:
@@ -944,6 +943,59 @@ def source_overlap(
     )
 
 
+def _ntile(
+    docs: DataFrame,
+    n_tiles: int,
+    rank_tag: str,
+    scored,
+    order_col: str,
+    total,
+    id_col: str,
+    text_col: str,
+):
+    """``NTILE(n_tiles) OVER (ORDER BY order_col, id_col)`` without a
+    window: returns (ranked, tile) — the frame ``scored()`` with a
+    1-based ``__rank`` column, and the tile column over it.
+
+    NTILE over a corpus cannot run as a window: Catalyst plans an
+    un-partitioned ORDER BY window as one task holding the entire
+    corpus. Instead the global position comes from
+    ``functions.global_row_number`` (range repartition + per-partition
+    offsets — fully distributed), and the tile is pure integer
+    arithmetic on (rank, total): the first ``total % n`` tiles take
+    ``total//n + 1`` rows, the rest ``total//n`` — exactly SQL NTILE
+    semantics, so the DuckDB oracle can use the real NTILE. The ranked
+    frame is a registry entry under ``rank_tag`` (repeated tile
+    queries reslice it instead of re-running the range sort + offset
+    passes); ``total(ranked)`` is its row count.
+
+    ``n_tiles`` is checked first: ranking and counting are eager jobs,
+    and ``n_tiles <= 0`` would otherwise fail only after them
+    (``divmod`` by zero) or assign nonsense tiles."""
+    if n_tiles < 1:
+        raise ValueError(f"n_tiles must be >= 1, got {n_tiles}")
+    from ..functions import global_row_number
+    from ..index_cache import cached_index, plan_key
+
+    ranked = cached_index(
+        plan_key(docs, rank_tag, id_col, text_col),
+        lambda: global_row_number(
+            scored(), [order_col, id_col], rank_col="__rank"
+        ),
+    )
+    q, rem = divmod(total(ranked), n_tiles)
+    big = q + 1
+    r0 = F.col("__rank") - 1  # 0-based
+    cut = rem * big
+    if q == 0:  # fewer rows than tiles: each row its own tile
+        tile = r0 + 1
+    else:
+        tile = F.when(
+            F.col("__rank") <= cut, F.floor(r0 / F.lit(big)) + 1
+        ).otherwise(F.floor((r0 - cut) / F.lit(q)) + rem + 1)
+    return ranked, tile.cast("int")
+
+
 def quality_deciles(
     docs: DataFrame,
     n_tiles: int = 10,
@@ -955,49 +1007,22 @@ def quality_deciles(
     (ORDER BY quality_score, doc_id)`` — the standard pre-training move
     of keeping/weighting the top quality buckets.
 
-    NTILE over a corpus cannot run as a window: Catalyst plans an
-    un-partitioned ORDER BY window as one task holding the entire
-    corpus. Instead the global position comes from
-    ``functions.global_row_number`` (range repartition + per-partition
-    offsets — fully distributed), and the tile is pure integer
-    arithmetic on (rank, total): the first ``total % n`` tiles take
-    ``total//n + 1`` rows, the rest ``total//n`` — exactly SQL NTILE
-    semantics, so the DuckDB oracle can use the real NTILE. The one
-    extra job is the bounded per-partition count collect.
+    Distributed NTILE over the session-cached quality rank (see
+    ``_ntile``).
     """
-    from ..functions import global_row_number
-    from ..index_cache import cached_index, plan_key
-
-    def _build_ranked() -> DataFrame:
-        scored = quality_scores(docs, id_col, text_col).select(
+    ranked, tile = _ntile(
+        docs,
+        n_tiles,
+        "quality_rank",
+        lambda: quality_scores(docs, id_col, text_col).select(
             id_col, "quality_score"
-        )
-        return global_row_number(
-            scored, ["quality_score", id_col], rank_col="__rank"
-        )
-
-    # the ranked frame is a session-cached index artifact (same discipline
-    # as the tf inverted index): repeated decile/threshold queries serve
-    # from the cache instead of re-running the range sort + offset passes
-    ranked = cached_index(
-        plan_key(docs, "quality_rank", id_col, text_col), _build_ranked
-    )
-    total = _corpus_count(docs)  # session-cached corpus count
-    q, rem = divmod(total, n_tiles)
-    big = q + 1
-    r0 = F.col("__rank") - 1  # 0-based
-    cut = rem * big
-    if q == 0:  # fewer rows than tiles: each row its own tile
-        tile = r0 + 1
-    else:
-        tile = F.when(
-            F.col("__rank") <= cut, F.floor(r0 / F.lit(big)) + 1
-        ).otherwise(F.floor((r0 - cut) / F.lit(q)) + rem + 1)
-    return ranked.select(
-        id_col,
+        ),
         "quality_score",
-        tile.cast("int").alias("decile"),
+        lambda _: _corpus_count(docs),
+        id_col,
+        text_col,
     )
+    return ranked.select(id_col, "quality_score", tile.alias("decile"))
 
 
 def curate_corpus(
@@ -1014,7 +1039,7 @@ def curate_corpus(
     (doc_id, quality_score, n_tokens, split).
 
     This is the operator-composition story: every stage is the same
-    expression its standalone operator uses (quality_score_expr,
+    expression its standalone operator uses (``_profile_quality``,
     normalized-text md5, the salted per-mille split), so Catalyst fuses
     the whole pipeline into ONE narrow scan + ONE shuffle (the dedup
     aggregate's content-hash partitioning) — no intermediate
@@ -1033,6 +1058,7 @@ def curate_corpus(
     ~40 bytes/row instead of document bodies (guide §2.3 — shuffle
     metadata, not payloads).
     """
+    split = _split_col(splits, salt, F.col(id_col))
     # The quality gate is applied INSIDE the aggregate input (min ignores
     # nulls), not as a pre-aggregate filter: a Filter above the projection
     # would be pushed below it and re-evaluate the quality expression a
@@ -1066,20 +1092,11 @@ def curate_corpus(
             F.col("__keep.__nt").alias("n_tokens"),
         )
     )
-    uppers = [u for _, u in splits]
-    if any(b <= a for a, b in zip(uppers, uppers[1:])) or uppers[-1] != 1000 or uppers[0] <= 0:
-        raise ValueError(f"splits must cover (0, 1000]; got {uppers}")
-    bucket = md5_int60(
-        F.concat(F.lit(salt), F.lit(":"), F.col(id_col).cast("string"))
-    ) % 1000
-    split_col = F.lit(None).cast("string")
-    for name, upper in reversed(splits):
-        split_col = F.when(bucket < upper, F.lit(name)).otherwise(split_col)
     return survivors.select(
         id_col,
         "quality_score",
         "n_tokens",
-        split_col.alias("split"),
+        split.alias("split"),
     )
 
 
@@ -1104,8 +1121,6 @@ def chunk_documents(
     filter on n_tokens if they need full windows only). Deterministic:
     same whitespace tokenizer as token_counts, mirrored in the oracle.
     """
-    from ..functions import tokens
-
     if overlap >= chunk_tokens:
         raise ValueError(
             f"overlap ({overlap}) must be < chunk_tokens ({chunk_tokens})"
@@ -1145,7 +1160,7 @@ def _chunk_stream(
     per CALL through ``tracked_persist``); the stream for a fixed
     (corpus, width, overlap) is the line-dedup family's span-stream
     analogue (dedup.span_index precedent — corpus-payload-sized but
-    byte-budgeted under the index_cache LRU). In-memory corpora bypass.
+    byte-budgeted under the index_cache LRU).
     """
     from ..index_cache import cached_index, plan_key
 
@@ -1243,27 +1258,12 @@ def scrub_boilerplate(
     ``boilerplate_chunks`` (``_chunk_stream`` + ``_repeated_chunks``)
     instead of a per-CALL ``tracked_persist`` of a fresh chunker pass —
     a warm execution re-chunks nothing and the anti join's build side
-    broadcasts from the sparse artifact's known stats. In-memory corpora
-    (plan_key None) fall back to the per-call persist so the two
-    consumers of the stream still share one materialization.
+    broadcasts from the sparse artifact's known stats.
     """
-    from ..index_cache import plan_key, tracked_persist
-
-    if plan_key(docs) is None:
-        ch = tracked_persist(
-            chunk_documents(docs, chunk_tokens, 0, id_col, text_col)
-        )
-        bp = (
-            ch.groupBy("chunk_text")
-            .agg(F.countDistinct(id_col).alias("__nd"))
-            .filter(F.col("__nd") >= min_docs)
-            .select("chunk_text")
-        )
-    else:
-        ch = _chunk_stream(docs, chunk_tokens, 0, id_col, text_col)
-        bp = _repeated_chunks(
-            docs, chunk_tokens, min_docs, id_col, text_col
-        ).select("chunk_text")
+    ch = _chunk_stream(docs, chunk_tokens, 0, id_col, text_col)
+    bp = _repeated_chunks(
+        docs, chunk_tokens, min_docs, id_col, text_col
+    ).select("chunk_text")
     kept = ch.join(bp, "chunk_text", "left_anti")
     pieces = F.array_sort(
         F.collect_list(F.struct("chunk_id", "chunk_text"))
@@ -1300,7 +1300,7 @@ def doc_keyterms(
     corpus-wide state. The ranked top-``k`` table (≤ k rows per doc —
     the keyterm TAG table an indexing pipeline materializes once per
     corpus) is session-cached (r13): the vocabulary join + per-doc
-    window otherwise re-ran per execution. In-memory corpora bypass.
+    window otherwise re-ran per execution.
     """
     from pyspark.sql import Window
 
@@ -1343,7 +1343,6 @@ def bigram_index(
     shuffle are paid at build time only; ``bigram_lm_scores`` (and any
     future phrase-statistics operator) serve from the cached postings.
     Documents with <2 tokens produce no rows."""
-    from ..functions import tokens
     from ..index_cache import cached_index, plan_key
 
     def _build() -> DataFrame:
@@ -1426,23 +1425,70 @@ def bigram_lm_scores(
     )
 
 
+def _lm_counts(
+    docs: DataFrame,
+    train: DataFrame,
+    prefix: str,
+    tag: tuple,
+    id_col: str,
+    text_col: str,
+):
+    """The bigram LM's count model trained on ``train`` — (bc, uni): the
+    corpus bigram counts (w1, w2, cb) folded from ``bigram_index`` and
+    the unigram counts (w1, cu) folded from ``tf_index``. Both are
+    registry entries keyed on the RAW ``docs`` frame as
+    ``<prefix>bigram_counts`` / ``<prefix>unigram_counts`` plus ``tag``
+    (``train`` may be a filter of ``docs``), so every operator reading
+    one model reads one artifact per key."""
+    from ..index_cache import cached_index, plan_key
+
+    bc = cached_index(
+        plan_key(docs, f"{prefix}bigram_counts", *tag, id_col, text_col),
+        lambda: bigram_index(train, id_col, text_col)
+        .groupBy("w1", "w2")
+        .agg(F.sum("tf_b").alias("cb")),
+    )
+    uni = cached_index(
+        plan_key(docs, f"{prefix}unigram_counts", *tag, id_col, text_col),
+        lambda: tf_index(train, id_col, text_col)
+        .groupBy("term")
+        .agg(F.sum("tf").alias("cu"))
+        .withColumnRenamed("term", "w1"),
+    )
+    return bc, uni
+
+
+def _nano_nats(cb, cu, vocab_n: int):
+    """The Laplace-smoothed bigram log-probability ln((cb + 1) /
+    (cu + |V|)) quantized to integer nano-nats: round(ln · 10⁹) as
+    BIGINT (see ``bigram_lm_scores``)."""
+    return F.round(
+        F.log((cb + F.lit(1.0)) / (cu + F.lit(float(vocab_n)))) * F.lit(1e9)
+    ).cast("long")
+
+
+def _lm_doc_scores(joined: DataFrame, ilp, id_col: str) -> DataFrame:
+    """(id, n_bigrams, avg_neg_logprob) from per-doc bigram counts
+    (id, tf_b) joined to their per-bigram nano-nat value ``ilp``: an
+    integer sum per doc, one division at the end."""
+    scored = joined.select(
+        id_col, "tf_b", (F.col("tf_b") * ilp).alias("__ilp")
+    )
+    return scored.groupBy(id_col).agg(
+        F.sum("tf_b").cast("long").alias("n_bigrams"),
+        (
+            -F.sum("__ilp").cast("double") / F.lit(1e9) / F.sum("tf_b")
+        ).alias("avg_neg_logprob"),
+    )
+
+
 def _bigram_lm_scores_build(
     docs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     from ..index_cache import cached_index, plan_key
 
     bigrams = bigram_index(docs, id_col, text_col)
-    bc = cached_index(
-        plan_key(docs, "bigram_counts", id_col, text_col),
-        lambda: bigrams.groupBy("w1", "w2").agg(F.sum("tf_b").alias("cb")),
-    )
-    uni = cached_index(
-        plan_key(docs, "unigram_counts", id_col, text_col),
-        lambda: tf_index(docs, id_col, text_col)
-        .groupBy("term")
-        .agg(F.sum("tf").alias("cu"))
-        .withColumnRenamed("term", "w1"),
-    )
+    bc, uni = _lm_counts(docs, docs, "", (), id_col, text_col)
     vocab_n = _vocab_count(docs, uni, id_col, text_col)
     # fold the ln into a VOCABULARY-sized score table (one nano-nat value
     # per distinct bigram, cached like the counts): the corpus-sized
@@ -1455,29 +1501,11 @@ def _bigram_lm_scores_build(
         lambda: bc.join(uni, "w1").select(
             "w1",
             "w2",
-            F.round(
-                F.log(
-                    (F.col("cb") + F.lit(1.0))
-                    / (F.col("cu") + F.lit(float(vocab_n)))
-                )
-                * F.lit(1e9)
-            )
-            .cast("long")
-            .alias("__ilp1"),
+            _nano_nats(F.col("cb"), F.col("cu"), vocab_n).alias("__ilp1"),
         ),
     )
-    scored = bigrams.join(F.broadcast(ilp), ["w1", "w2"]).select(
-        id_col,
-        "tf_b",
-        (F.col("tf_b") * F.col("__ilp1")).alias("__ilp"),
-    )
-    return scored.groupBy(id_col).agg(
-        F.sum("tf_b").cast("long").alias("n_bigrams"),
-        (
-            -F.sum("__ilp").cast("double")
-            / F.lit(1e9)
-            / F.sum("tf_b")
-        ).alias("avg_neg_logprob"),
+    return _lm_doc_scores(
+        bigrams.join(F.broadcast(ilp), ["w1", "w2"]), F.col("__ilp1"), id_col
     )
 
 
@@ -1541,18 +1569,8 @@ def _cross_lm_scores_build(
     ref = docs.filter(F.col(source_col).isin(list(ref_sources)))
     bigrams = bigram_index(docs, id_col, text_col)
     ref_tag = tuple(sorted(ref_sources))
-    bc = cached_index(
-        plan_key(docs, "xlm_bigram_counts", source_col, ref_tag, id_col, text_col),
-        lambda: bigram_index(ref, id_col, text_col)
-        .groupBy("w1", "w2")
-        .agg(F.sum("tf_b").alias("cb")),
-    )
-    uni = cached_index(
-        plan_key(docs, "xlm_unigram_counts", source_col, ref_tag, id_col, text_col),
-        lambda: tf_index(ref, id_col, text_col)
-        .groupBy("term")
-        .agg(F.sum("tf").alias("cu"))
-        .withColumnRenamed("term", "w1"),
+    bc, uni = _lm_counts(
+        docs, ref, "xlm_", (source_col, ref_tag), id_col, text_col
     )
     vocab_n = _vocab_count(ref, uni, id_col, text_col)
     if vocab_n < 1:
@@ -1572,55 +1590,22 @@ def _cross_lm_scores_build(
         lambda: bc.join(uni, "w1").select(
             "w1",
             "w2",
-            F.round(
-                F.log(
-                    (F.col("cb") + F.lit(1.0))
-                    / (F.col("cu") + F.lit(float(vocab_n)))
-                )
-                * F.lit(1e9)
-            )
-            .cast("long")
-            .alias("__ilpr"),
+            _nano_nats(F.col("cb"), F.col("cu"), vocab_n).alias("__ilpr"),
         ),
     )
     ilp_ctx = cached_index(
         plan_key(docs, "xlm_ilp_ctx", source_col, ref_tag, id_col, text_col),
         lambda: uni.select(
-            "w1",
-            F.round(
-                F.log(
-                    (F.lit(0) + F.lit(1.0))
-                    / (F.col("cu") + F.lit(float(vocab_n)))
-                )
-                * F.lit(1e9)
-            )
-            .cast("long")
-            .alias("__ilpc"),
+            "w1", _nano_nats(F.lit(0), F.col("cu"), vocab_n).alias("__ilpc")
         ),
     )
-    ilp_unseen = F.round(
-        F.log(
-            (F.lit(0) + F.lit(1.0)) / (F.lit(0) + F.lit(float(vocab_n)))
-        )
-        * F.lit(1e9)
-    ).cast("long")
-    scored = (
-        bigrams.join(F.broadcast(ilp_ref), ["w1", "w2"], "left")
-        .join(F.broadcast(ilp_ctx), "w1", "left")
-        .select(
-            id_col,
-            "tf_b",
-            (
-                F.col("tf_b")
-                * F.coalesce("__ilpr", "__ilpc", ilp_unseen)
-            ).alias("__ilp"),
-        )
-    )
-    return scored.groupBy(id_col).agg(
-        F.sum("tf_b").cast("long").alias("n_bigrams"),
-        (
-            -F.sum("__ilp").cast("double") / F.lit(1e9) / F.sum("tf_b")
-        ).alias("avg_neg_logprob"),
+    ilp_unseen = _nano_nats(F.lit(0), F.lit(0), vocab_n)
+    return _lm_doc_scores(
+        bigrams.join(F.broadcast(ilp_ref), ["w1", "w2"], "left").join(
+            F.broadcast(ilp_ctx), "w1", "left"
+        ),
+        F.coalesce("__ilpr", "__ilpc", ilp_unseen),
+        id_col,
     )
 
 
@@ -1640,45 +1625,25 @@ def lm_quality_buckets(
     Pure composition of two verified pieces: ``bigram_lm_scores``
     (session-cached LM artifacts; exact integer nano-nat sums, so the
     ordering key is engine-identical) and the distributed-NTILE
-    arithmetic of ``quality_deciles`` over ``functions.
-    global_row_number`` — no un-partitioned ORDER BY window anywhere.
-    Documents with <2 tokens have no bigrams, hence no score and no
-    bucket (absent, mirrored by the oracle)."""
-    if n_tiles < 1:
-        # validate before paying the scoring/ranking Spark jobs —
-        # divmod(total, 0) would only raise after the full pipeline ran,
-        # and negative values would assign nonsense buckets silently
-        raise ValueError(f"n_tiles must be >= 1, got {n_tiles}")
-    from ..functions import global_row_number
-    from ..index_cache import cached_index, cached_value, plan_key
+    arithmetic of ``quality_deciles`` (``_ntile``) — no un-partitioned
+    ORDER BY window anywhere. Documents with <2 tokens have no bigrams,
+    hence no score and no bucket (absent, mirrored by the oracle)."""
+    from ..index_cache import cached_value, plan_key
 
-    def _build_ranked() -> DataFrame:
-        scored = bigram_lm_scores(docs, id_col, text_col)
-        return global_row_number(
-            scored, ["avg_neg_logprob", id_col], rank_col="__rank"
-        )
-
-    ranked = cached_index(
-        plan_key(docs, "lm_quality_rank", id_col, text_col), _build_ranked
-    )
-    total = cached_value(
-        plan_key(docs, "lm_scored_n", id_col, text_col), ranked.count
-    )
-    q, rem = divmod(total, n_tiles)
-    big = q + 1
-    r0 = F.col("__rank") - 1  # 0-based
-    cut = rem * big
-    if q == 0:  # fewer scored docs than tiles: each row its own tile
-        tile = r0 + 1
-    else:
-        tile = F.when(
-            F.col("__rank") <= cut, F.floor(r0 / F.lit(big)) + 1
-        ).otherwise(F.floor((r0 - cut) / F.lit(q)) + rem + 1)
-    return ranked.select(
-        id_col,
-        "n_bigrams",
+    ranked, tile = _ntile(
+        docs,
+        n_tiles,
+        "lm_quality_rank",
+        lambda: bigram_lm_scores(docs, id_col, text_col),
         "avg_neg_logprob",
-        tile.cast("int").alias("bucket"),
+        lambda r: cached_value(
+            plan_key(docs, "lm_scored_n", id_col, text_col), r.count
+        ),
+        id_col,
+        text_col,
+    )
+    return ranked.select(
+        id_col, "n_bigrams", "avg_neg_logprob", tile.alias("bucket")
     )
 
 
@@ -1837,10 +1802,7 @@ def classifier_doc_meta(
     salt so the 80/20 classifier split is independent of the pipeline's
     980/10/10 split). Narrow projection over the session-cached per-doc
     profile (r13 — the stopword/token ints are the profile's columns)."""
-    bucket = (
-        md5_int60(F.concat(F.lit(CLS_SALT), F.lit(":"), F.col(id_col).cast("string")))
-        % 1000
-    )
+    bucket = _split_bucket(CLS_SALT, F.col(id_col))
     return _doc_profile(docs, id_col, text_col).select(
         F.col(id_col),
         (F.col("__stop_en_raw") * CLS_STOP_FACTOR >= F.col("__wc"))
@@ -1919,18 +1881,22 @@ def classifier_weights(
     )
 
 
-def _weighted_term_agg(
+def _weighted_term_scores(
+    base: DataFrame,
     posting: DataFrame,
     weights: DataFrame,
     id_col: str,
+    *extra: str,
 ) -> DataFrame:
     """Shared scoring core: distinct (doc, term) postings × a trained
-    (term, weight) table → per-doc (n_pos, n_neg, logit). Used by the
-    batch held-out scorer and the streaming frozen-weights sink. The
+    (term, weight) table → per-doc (n_pos, n_neg, logit, pred_good) for
+    every ``base`` row, then ``base``'s ``extra`` columns; a doc with no
+    weighted terms scores 0 through the left join. Used by the batch
+    held-out scorer and the streaming frozen-weights sink. The
     vocabulary-sized weight table is broadcast, which assumes a
     natural-language vocabulary that fits a broadcast."""
     w = weights.select("term", "weight")
-    return (
+    per_doc = (
         posting.join(F.broadcast(w), "term")
         .groupBy(id_col)
         .agg(
@@ -1942,6 +1908,14 @@ def _weighted_term_agg(
             .alias("n_neg"),
             F.sum("weight").cast("long").alias("logit"),
         )
+    )
+    return base.join(per_doc, id_col, "left").select(
+        id_col,
+        F.coalesce("n_pos", F.lit(0)).cast("long").alias("n_pos"),
+        F.coalesce("n_neg", F.lit(0)).cast("long").alias("n_neg"),
+        F.coalesce("logit", F.lit(0)).cast("long").alias("logit"),
+        (F.coalesce("logit", F.lit(0)) > 0).cast("int").alias("pred_good"),
+        *extra,
     )
 
 
@@ -1957,22 +1931,8 @@ def classifier_score_with(
     the session-cached training index; tokenization is inline because the
     scored batch is typically transient). Docs with no weighted terms
     score 0 through the left join — never silently dropped."""
-    posting = (
-        docs.select(
-            F.col(id_col),
-            F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("term"),
-        )
-        .filter(F.col("term") != "")
-        .distinct()
-    )
-    per_doc = _weighted_term_agg(posting, weights, id_col)
-    return docs.select(id_col).join(per_doc, id_col, "left").select(
-        id_col,
-        F.coalesce("n_pos", F.lit(0)).cast("long").alias("n_pos"),
-        F.coalesce("n_neg", F.lit(0)).cast("long").alias("n_neg"),
-        F.coalesce("logit", F.lit(0)).cast("long").alias("logit"),
-        (F.coalesce("logit", F.lit(0)) > 0).cast("int").alias("pred_good"),
-    )
+    posting = _term_stream(docs, text_col, "term", id_col).distinct()
+    return _weighted_term_scores(docs.select(id_col), posting, weights, id_col)
 
 
 def classifier_scores(
@@ -2012,15 +1972,7 @@ def _classifier_scores_build(
     eval_meta = meta.filter(F.col("split") == "eval").drop("split")
     w = classifier_weights(docs, min_df, id_col, text_col)
     posting = tf_index(docs, id_col, text_col).select(id_col, "term")
-    per_doc = _weighted_term_agg(posting, w, id_col)
-    return eval_meta.join(per_doc, id_col, "left").select(
-        id_col,
-        F.coalesce("n_pos", F.lit(0)).cast("long").alias("n_pos"),
-        F.coalesce("n_neg", F.lit(0)).cast("long").alias("n_neg"),
-        F.coalesce("logit", F.lit(0)).cast("long").alias("logit"),
-        (F.coalesce("logit", F.lit(0)) > 0).cast("int").alias("pred_good"),
-        "label_good",
-    )
+    return _weighted_term_scores(eval_meta, posting, w, id_col, "label_good")
 
 
 def classifier_eval(
@@ -2299,22 +2251,16 @@ def bigram_pmi_topk(
     bigram_lm_scores assumption that the vocabulary fits a broadcast, and
     the top-k collapses to TakeOrderedAndProject.
     """
-    from ..index_cache import cached_index, plan_key
+    from ..index_cache import cached_value, plan_key
 
-    bigrams = bigram_index(docs, id_col, text_col)
-    bc = cached_index(
-        plan_key(docs, "bigram_counts", id_col, text_col),
-        lambda: bigrams.groupBy("w1", "w2").agg(F.sum("tf_b").alias("cb")),
-    )
-    uni = cached_index(
-        plan_key(docs, "unigram_counts", id_col, text_col),
-        lambda: tf_index(docs, id_col, text_col)
-        .groupBy("term")
-        .agg(F.sum("tf").alias("cu"))
-        .withColumnRenamed("term", "w1"),
-    )
-    n_tokens = int(
-        uni.agg(F.coalesce(F.sum("cu"), F.lit(0))).collect()[0][0]
+    bc, uni = _lm_counts(docs, docs, "", (), id_col, text_col)
+    # the corpus token total N is a registry value: a driver collect
+    # per call otherwise
+    n_tokens = cached_value(
+        plan_key(docs, "pmi_n_tokens", id_col, text_col),
+        lambda: int(
+            uni.agg(F.coalesce(F.sum("cu"), F.lit(0))).collect()[0][0]
+        ),
     )
     u1 = uni.select(F.col("w1"), F.col("cu").alias("__c1"))
     u2 = uni.select(F.col("w1").alias("w2"), F.col("cu").alias("__c2"))

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .textops import _term_stream
+
 #: truncate lineage every this many merge rounds
 _CHECKPOINT_EVERY = 4
 
@@ -45,9 +47,7 @@ def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq): the corpus's word-frequency table — the ONLY
     corpus-scale pass in BPE training (same whitespace tokenizer as
     ``tf_index``; empty tokens dropped)."""
-    words = docs.select(
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word")
-    ).filter(F.col("word") != "")
+    words = _term_stream(docs, text_col, "word")
     return words.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
 
 
@@ -230,10 +230,7 @@ def bpe_encode(
     independent Python fold either way)."""
     from ..index_cache import cached_index, plan_key
 
-    words = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word"),
-    ).filter(F.col("word") != "")
+    words = _term_stream(docs, text_col, "word", id_col)
 
     def _build() -> DataFrame:
         uniq = words.select("word").distinct()

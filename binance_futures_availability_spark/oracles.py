@@ -1004,7 +1004,7 @@ STOPWORDS_SQL = {
 
 def quality_score_sql() -> str:
     """The heuristic quality score as ONE shared SQL fragment — the
-    DuckDB mirror of textops.quality_score_expr, used by every oracle
+    DuckDB mirror of textops._profile_quality, used by every oracle
     that scores documents (quality_scores, curate_corpus,
     token_budget_selection, quality_deciles via sql_quality_scores) so
     the formula cannot drift between oracles while each still passes its

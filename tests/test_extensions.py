@@ -898,17 +898,20 @@ def test_corpus_split_fractions_roughly_hold(spark):
 
 
 def test_corpus_split_rejects_uncovering_splits(docs):
-    # not reaching 1000 → rows above the last bound would get NULL splits
-    with pytest.raises(ValueError, match="1000"):
-        textops.corpus_split(docs, splits=(("train", 980), ("val", 990)))
-    # unsorted uppers → earlier when() shadows later ones
-    with pytest.raises(ValueError, match="increasing"):
-        textops.corpus_split(
-            docs, splits=(("train", 990), ("val", 980), ("test", 1000))
-        )
-    # zero-width first bucket
-    with pytest.raises(ValueError):
-        textops.corpus_split(docs, splits=(("train", 0), ("test", 1000)))
+    for split in (
+        textops.corpus_split,
+        textops.grouped_split,
+        textops.curate_corpus,
+    ):
+        # not reaching 1000 → rows above the last bound would get NULL splits
+        with pytest.raises(ValueError, match="1000"):
+            split(docs, splits=(("train", 980), ("val", 990)))
+        # unsorted uppers → earlier when() shadows later ones
+        with pytest.raises(ValueError, match="increasing"):
+            split(docs, splits=(("train", 990), ("val", 980), ("test", 1000)))
+        # zero-width first bucket
+        with pytest.raises(ValueError):
+            split(docs, splits=(("train", 0), ("test", 1000)))
 
 
 def test_corpus_count_keyed_by_plan_not_just_files(spark, tmp_path):
@@ -2073,14 +2076,25 @@ def test_lm_quality_buckets_orders_fluency(spark):
     )
 
 
-def test_lm_quality_buckets_rejects_bad_n_tiles(spark):
+@pytest.mark.parametrize("n_tiles", [0, -3])
+@pytest.mark.parametrize(
+    "op", ["lm_quality_buckets", "quality_deciles", "quality_dup_crosstab"]
+)
+def test_ntile_operators_reject_bad_n_tiles(spark, op, n_tiles):
+    """A bad tile count raises before any Spark job: ranking and counting
+    the corpus are eager, and would otherwise run first."""
     docs = spark.createDataFrame(
         [(1, "a b c"), (2, "d e f")], "doc_id long, text string"
     )
-    with pytest.raises(ValueError, match="n_tiles"):
-        textops.lm_quality_buckets(docs, n_tiles=0)
-    with pytest.raises(ValueError, match="n_tiles"):
-        textops.lm_quality_buckets(docs, n_tiles=-3)
+    sc = spark.sparkContext
+    group = f"bad-n-tiles-{op}-{n_tiles}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="n_tiles"):
+            getattr(textops, op)(docs, n_tiles=n_tiles)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_bm25_scores_formula_and_ordering(spark):

@@ -108,9 +108,9 @@ def test_fact_derived_key_survives_sweep_and_unrelated_miss(spark, tmp_path, tin
 def test_scrub_boilerplate_falls_back_when_plan_key_is_none(
     spark, tmp_path, monkeypatch
 ):
-    """scrub_boilerplate branches on cacheability exactly as the registry
-    keys it: a file-backed frame whose plan cannot be keyed takes the
-    tracked per-call persist, not the (then uncached) artifact path."""
+    """A file-backed frame whose plan cannot be keyed takes the
+    registry's ``key=None`` bypass: scrub_boilerplate persists nothing
+    outside the registry and returns the keyed run's rows."""
     from binance_futures_availability_spark import index_cache
     from binance_futures_availability_spark.operators import textops
 
@@ -121,11 +121,14 @@ def test_scrub_boilerplate_falls_back_when_plan_key_is_none(
     ).write.parquet(path)
     docs = spark.read.parquet(path)
     index_cache.clear_indexes()
+    keyed = sorted(textops.scrub_boilerplate(docs, chunk_tokens=4).collect())
+    index_cache.clear_indexes()
     monkeypatch.setattr(index_cache, "plan_key", lambda df, *extra: None)
     n = len(index_cache._SCOPED)
-    out = textops.scrub_boilerplate(docs, chunk_tokens=4)
-    assert len(index_cache._SCOPED) == n + 1
-    assert out.count() == 4
+    out = sorted(textops.scrub_boilerplate(docs, chunk_tokens=4).collect())
+    assert len(index_cache._SCOPED) == n
+    assert not index_cache._HANDLES
+    assert len(out) == 4 and out == keyed
     index_cache.clear_indexes()
 
 

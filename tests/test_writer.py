@@ -946,23 +946,46 @@ def test_square_roots_only_in_the_cosine_kernel():
     assert bad == []
 
 
-def test_one_intersect_verify_per_dedup_pair_path():
-    """``operators/dedup.py`` verifies shingle pairs in one place per
-    path: at most two ``array_intersect`` calls, one in the prefix-pair
-    builder and one in the MinHash verified-stats build, so no private
-    copy of either verify can return beside the registry's artifact."""
-    tree = ast.parse((PACKAGE / "operators" / "dedup.py").read_text())
-    calls = [
+def _calls_by_function(module: str, name: str):
+    """(top-level function, line) of every call of ``name`` (as a
+    function or an attribute) in ``operators/<module>``."""
+    tree = ast.parse((PACKAGE / "operators" / module).read_text())
+    return [
         (top.name, n.lineno)
         for top in tree.body
         if isinstance(top, ast.FunctionDef)
         for n in ast.walk(top)
         if isinstance(n, ast.Call)
-        and getattr(n.func, "attr", getattr(n.func, "id", None))
-        == "array_intersect"
+        and getattr(n.func, "attr", getattr(n.func, "id", None)) == name
     ]
+
+
+def test_one_intersect_verify_per_dedup_pair_path():
+    """``operators/dedup.py`` verifies shingle pairs in one place per
+    path: at most two ``array_intersect`` calls, one in the prefix-pair
+    builder and one in the MinHash verified-stats build, so no private
+    copy of either verify can return beside the registry's artifact."""
+    calls = _calls_by_function("dedup.py", "array_intersect")
     assert len(calls) <= 2, calls
     assert {name for name, _ in calls} <= {
         "_prefix_filtered_pairs",
         "_candidate_pair_stats",
     }, calls
+
+
+def test_one_quantizer_and_one_ntile_rule_in_textops():
+    """``operators/textops.py`` writes the nano-nat quantizer and the
+    NTILE tile arithmetic once: at most three ``F.log`` calls (the
+    ``tfidf_weights`` idf, the ``bm25_scores`` idf and ``_nano_nats``) and
+    one ``divmod`` (in ``_ntile``), so no operator can carry a private
+    copy that drifts from the shared one."""
+    logs = _calls_by_function("textops.py", "log")
+    assert len(logs) <= 3, logs
+    assert {name for name, _ in logs} <= {
+        "tfidf_weights",
+        "bm25_scores",
+        "_nano_nats",
+    }, logs
+    divmods = _calls_by_function("textops.py", "divmod")
+    assert len(divmods) <= 1, divmods
+    assert {name for name, _ in divmods} <= {"_ntile"}, divmods
