@@ -10,16 +10,16 @@ this from its buffer pool). The registry holds two stores:
 - **Frames** (``cached_index``, store ``_HANDLES``): persisted
   DataFrames — the corpus index artifacts of the dedup/similarity/text
   operators (shingle arrays, MinHash signatures, quantized embeddings,
-  pair graphs…), hot-pinned catalog tables (``catalog.load_table_hot``),
-  imported fact tables (``duckdb_io.read_fact``) and the symbol-clustered
-  fact projections. Bound: ``INDEX_CACHE_BUDGET_BYTES``. On every miss
-  insert the registry polls the JVM's persisted-block footprint and
-  unpersists least-recently-USED frames until the total fits (hits
-  refresh recency).
+  pair graphs…), hot-pinned catalog tables (``catalog.load_table_hot``)
+  and the symbol-clustered fact projections. Bound:
+  ``INDEX_CACHE_BUDGET_BYTES``. On every miss insert the registry polls
+  the JVM's persisted-block footprint and unpersists least-recently-USED
+  frames until the total fits (hits refresh recency).
 - **Values** (``cached_value``, store ``_VALUES``): driver-side values
   and unpersisted relation handles — row counts, IVF seed tables, SQ
   grids, trained centroids, BPE merge lists, resolved query rows,
-  probe-cell lists, table readers. Bound: ``SCALAR_CACHE_CAP`` entries,
+  probe-cell lists, table readers, imported fact tables
+  (``duckdb_io.read_fact``). Bound: ``SCALAR_CACHE_CAP`` entries,
   least-recently-used first (hits refresh recency).
 
 Keys. Every key has the ``plan_key`` shape: ``key[0]`` is the tuple of
@@ -45,10 +45,12 @@ the sweep cannot see (the on-disk IVF index, a re-imported fact table).
 persists (``tracked_persist``): storage returns to its baseline.
 
 Two caches stay outside the registry: ``operators.availability.
-_FACT_HANDLES`` (fact-table handles by path) and ``__spark_entry__.
-_IVF_INDEX_PATHS`` (the on-disk IVF index per ``sf_dir``); the benchmark
-harness reads them by name. It also reads three names here: ``cached_index`` (wrapped to count builds and
-hits), ``_HANDLES`` (a hit is ``key in _HANDLES``) and ``storage_bytes``.
+_FACT_HANDLES`` (fact-table handles by path: plain parquet reads, never
+persisted, each carrying its ``_spark_graft_source``) and
+``__spark_entry__._IVF_INDEX_PATHS`` (the on-disk IVF index per
+``sf_dir``); the benchmark harness reads them by name. It also reads
+three names here: ``cached_index`` (wrapped to count builds and hits),
+``_HANDLES`` (a hit is ``key in _HANDLES``) and ``storage_bytes``.
 """
 
 from __future__ import annotations
@@ -67,8 +69,8 @@ _VALUES: dict = {}
 
 #: Total persisted-storage budget (bytes) above which miss inserts evict
 #: least-recently-used frames. Counts ALL persisted blocks in the
-#: session (fact handles and tracked scoped persists included — they share
-#: the same storage pool), but only registry frames are evictable.
+#: session (tracked scoped persists and the API's matview included — they
+#: share the same storage pool), but only registry frames are evictable.
 #: Default 8 GiB — generous for a single-node session, a rounding error
 #: for a cluster (override via SPARK_GRAFT_INDEX_CACHE_BYTES; executors
 #: sized for 100 TB set it to a fraction of aggregate storage memory).
@@ -94,8 +96,8 @@ def storage_bytes(spark) -> int:
         return 0
 
 
-#: Bytes persisted by NON-evictable owners (fact handles, tracked scoped
-#: persists) observed the last time evicting every frame still left
+#: Bytes persisted by NON-evictable owners (tracked scoped persists, the
+#: API's matview) observed the last time evicting every frame still left
 #: the session over budget. storage_bytes() counts the whole session pool,
 #: so without this floor a foreign footprint larger than the budget makes
 #: every miss insert evict every frame down to the inserted key
@@ -141,8 +143,8 @@ def _evict_over_budget(spark, keep_key) -> int:
     Freshly inserted, not-yet-materialized handles report 0 bytes, so the
     budget reacts one insert late — steady state is bounded by budget +
     one artifact. If evicting every evictable frame still leaves the
-    session over budget, the residual is non-evictable (fact handles,
-    scoped persists): it is recorded as the foreign floor and discounted
+    session over budget, the residual is non-evictable (scoped persists,
+    the API's matview): it is recorded as the foreign floor and discounted
     from later checks, so a big foreign footprint degrades to a smaller
     effective budget instead of evict-everything thrash."""
     global _FOREIGN_FLOOR, EVICTION_STALLS
@@ -204,16 +206,17 @@ def plan_key(df: DataFrame, *extra):
     (see dedup._pair_jaccard's ``postings_key``). Hot-pinned catalog
     tables (``catalog.load_table_hot``) and fact handles carry their
     source identity in ``_spark_graft_source`` — (path, fingerprint) —
-    which substitutes for the empty file list as a ``hot:`` URI, so
-    derived artifacts over them cache too and go stale exactly when the
-    directory's fingerprint changes."""
+    which is used before the file list as a ``hot:`` URI, so derived
+    artifacts over them cache too (a pinned handle lists no files) and
+    go stale exactly when the directory's fingerprint changes."""
     try:
-        files = tuple(sorted(df.inputFiles()))
-        if not files:
-            src = getattr(df, "_spark_graft_source", None)
-            if src is None:
-                return None
+        src = getattr(df, "_spark_graft_source", None)
+        if src is not None:
             files = (_hot_uri(*src),)
+        else:
+            files = tuple(sorted(df.inputFiles()))
+            if not files:
+                return None
         plan = df._jdf.queryExecution().analyzed().canonicalized().toString()
     except Exception:  # noqa: BLE001 — streaming/exotic plans: just don't cache
         return None

@@ -153,8 +153,8 @@ def transition_events(da: DataFrame) -> DataFrame:
     # adversarially flappy synthetic fixture emits events on 36% of fact
     # rows at sf10 — 7.8M rows), so the single-partition gathered sort is
     # only safe below a size cutoff. Catalyst's optimized-plan stats give
-    # a zero-job estimate of the INPUT fact (a cached catalog read here,
-    # so the estimate is the materialized in-memory size, not a guess);
+    # a zero-job estimate of the INPUT fact (a parquet read here, so the
+    # estimate is the fact's file size, not a guess);
     # large facts take the distributed range sort over a lazily
     # checkpointed event stream instead — the checkpoint stops orderBy's
     # range-sampling pass from re-executing the whole LAG window, and the
@@ -162,7 +162,7 @@ def transition_events(da: DataFrame) -> DataFrame:
     # at sf1 (2.1M-row fact, ~0.8M events) the gathered sort wins
     # (1.1 s vs 1.7 s — checkpoint+range machinery costs more than a
     # sub-million-row local sort); at sf10 (21M-row fact, 7.8M events)
-    # distributed wins 3.1 s vs 6.3 s. 300 MB of cached fact sits
+    # distributed wins 3.1 s vs 6.3 s. 300 MB of fact file sits
     # between the two.
     # (cutover logic generalized into functions.sized_sort in r13 —
     # the measurement above is where its 300 MB constant came from)

@@ -119,8 +119,8 @@ def materialize_fact(da: DataFrame, path: str) -> None:
     One layout: a handful of range-split files, each sorted by (date,
     symbol) with NON-OVERLAPPING ranges, so parquet footer min/max serve
     file-level date pruning (P1/J3/J4) and row-group stats the symbol path
-    (P3), while full scans (aggregations, windows, the cached-handle
-    build) parallelize across the splits. A table that takes updates is
+    (P3), while full scans (aggregations, windows, the symbol-clustered
+    projection's build) parallelize across the splits. A table that takes updates is
     written with ``writer.write_partitioned`` instead (directory per date,
     what ``upsert_partitioned`` rewrites); the writers that update in
     place refuse this layout.
@@ -141,9 +141,11 @@ def materialize_fact(da: DataFrame, path: str) -> None:
     )
 
 
-#: session-lifetime handles to the materialized table, keyed by parquet path —
-#: ``.cache()``d so repeated catalog reads within one session scan the
-#: in-memory columnar form (the analogue of DuckDB's buffer pool).
+#: session-lifetime handles to the materialized table, keyed by parquet path.
+#: Each is a plain parquet read, never pinned in memory: the handle keeps
+#: the file listing, so repeated catalog reads skip re-discovery, and only
+#: the narrow artifacts derived from it (symbol-clustered projections,
+#: index artifacts) are persisted, in the registry.
 _FACT_HANDLES: dict[str, DataFrame] = {}
 
 
@@ -153,7 +155,7 @@ def _source_fingerprint(sf_dir: str) -> str:
 
     Folding this into the cache key means regenerating the testdata in
     place yields a NEW cache entry instead of silently serving stale rows
-    (the _SUCCESS marker and the in-memory .cache() handle both survive an
+    (the _SUCCESS marker and the session's fact handle both survive an
     in-place rewrite and would otherwise mask it)."""
     src = os.path.join(os.path.realpath(sf_dir), "lineitem.parquet")
     entries: list[str] = []
@@ -200,30 +202,26 @@ def availability_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     if handle is not None:
         return handle
     # a new fingerprint supersedes any older materialization of the same
-    # sf_dir — unpersist the stale handle and release every registry
-    # entry derived from it (clustered projections, index artifacts) so
-    # a session that regenerates testdata doesn't strand cached blocks
+    # sf_dir — drop the stale handle and release every registry entry
+    # derived from it (clustered projections, index artifacts) so a
+    # session that regenerates testdata doesn't strand cached blocks
     stale_prefix = name.rsplit("-", 1)[0] + "-"
     for old_path in [
         p
         for p in _FACT_HANDLES
         if os.path.basename(p).startswith(stale_prefix) and p != path
     ]:
-        try:
-            _FACT_HANDLES.pop(old_path).unpersist()
-        except Exception:  # noqa: BLE001 — eviction is best-effort
-            pass
+        del _FACT_HANDLES[old_path]
         invalidate(old_path)
     if not writer.table_exists(spark, path):
         materialize_fact(availability_from_lineitem(spark, sf_dir), path)
-    handle = spark.read.parquet(path).cache()
+    handle = spark.read.parquet(path)
     # carry the source identity the way catalog.load_table_hot does:
-    # inputFiles() can come back empty through the cached handle, and
-    # without this attribute plan_key(da, ...) returns None and SILENTLY
-    # disables every index artifact derived from the fact. The
-    # fingerprint is the directory's own (catalog._dir_fingerprint), the
-    # one the registry's sweep recomputes — any other digest would read
-    # as stale and evict the fact's artifacts on every miss insert.
+    # plan_key keys every artifact derived from the fact on this ``hot:``
+    # directory URI, not on its part files. The fingerprint is the
+    # directory's own (catalog._dir_fingerprint), the one the registry's
+    # sweep recomputes — any other digest would read as stale and evict
+    # the fact's artifacts on every miss insert.
     handle._spark_graft_source = (path, _dir_fingerprint(path))
     _FACT_HANDLES[path] = handle
     return handle

@@ -293,15 +293,23 @@ def tf_index(
 
 
 def _term_stream(
-    docs: DataFrame, text_col: str, alias: str, *cols: str
+    docs: DataFrame,
+    text_col: str,
+    alias: str,
+    *cols: str,
+    distinct: bool = False,
 ) -> DataFrame:
     """The whitespace term stream: one row per non-empty token of
-    ``text_col`` (as ``alias``), carrying ``cols``. The one tokenizer
-    behind ``tf_index``, the classifier's serving postings and the BPE
-    word tables."""
+    ``text_col`` (as ``alias``), carrying ``cols``; with ``distinct``,
+    one row per distinct token of each document (``array_distinct``
+    before the explode). The one tokenizer behind ``tf_index``, the
+    classifier's serving postings, the BPE word tables and the
+    per-stratum vocabularies."""
+    terms = tokens(F.col(text_col))
+    if distinct:
+        terms = F.array_distinct(terms)
     return docs.select(
-        *[F.col(c) for c in cols],
-        F.explode(tokens(F.col(text_col))).alias(alias),
+        *[F.col(c) for c in cols], F.explode(terms).alias(alias)
     ).filter(F.col(alias) != "")
 
 
@@ -841,10 +849,7 @@ def top_terms(
     vocabulary-sized, not corpus-sized — the aggregate did the heavy
     lifting map-side.
     """
-    terms = docs.select(
-        F.col(strata_col),
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("term"),
-    ).filter(F.col("term") != "")
+    terms = _term_stream(docs, text_col, "term", strata_col, distinct=True)
     df_tbl = terms.groupBy(strata_col, "term").agg(
         F.count(F.lit(1)).alias("df")
     )
@@ -891,13 +896,8 @@ def source_overlap(
         # exchange-free (the distinct's (stratum, term) partitioning
         # would force both sides through a shuffle per run)
         return (
-            docs.select(
-                F.col(strata_col).alias("stratum"),
-                F.explode(F.array_distinct(tokens(F.col(text_col)))).alias(
-                    "term"
-                ),
-            )
-            .filter(F.col("term") != "")
+            _term_stream(docs, text_col, "term", strata_col, distinct=True)
+            .select(F.col(strata_col).alias("stratum"), "term")
             .distinct()
             .repartition("term")
         )

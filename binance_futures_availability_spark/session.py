@@ -36,7 +36,7 @@ def _apply_driver_memory() -> None:
     JVM launch. The only reliable local-mode channel is PYSPARK_SUBMIT_ARGS
     before the first getOrCreate; on a real cluster pass --driver-memory to
     spark-submit instead. Defaults to 8g (Spark's 1g default is too small
-    for the cached fact table + persisted dedup indexes in one process);
+    for the persisted index artifacts of a whole catalog in one process);
     an already-set PYSPARK_SUBMIT_ARGS always wins.
     """
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")

@@ -41,7 +41,7 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..index_cache import cached_index, invalidate, path_key
+from ..index_cache import cached_value, invalidate, path_key
 from ..schema import DAILY_AVAILABILITY
 
 #: SQL identifiers interpolated into DuckDB statements (CREATE/COPY/INSERT
@@ -92,18 +92,18 @@ def read_fact(spark: SparkSession, path: str) -> DataFrame:
     """Catalog read of an imported fact table in declared column order and
     types.
 
-    The handle is a persisted registry frame — the same buffer-pool
-    analogue as operators.availability._FACT_HANDLES: repeat reads serve
-    from the cached columnar form instead of re-listing and re-reading
-    the files. Keyed per (resolved path, top-level directory fingerprint,
-    session): an in-place rewrite misses and the sweep releases the
-    superseded snapshot; ``import_duckdb`` also invalidates eagerly on
-    re-import. Unreadable/remote paths are never cached."""
+    The handle is a registry value, like operators.availability.
+    _FACT_HANDLES: an unpersisted parquet read that keeps its file
+    listing, so repeat reads skip re-discovery without pinning the whole
+    table in memory. Keyed per (resolved path, top-level directory
+    fingerprint, session): an in-place rewrite misses and the sweep
+    releases the superseded snapshot; ``import_duckdb`` also invalidates
+    eagerly on re-import. Unreadable/remote paths are never cached."""
     from ..catalog import _dir_fingerprint
 
     real = os.path.realpath(path)
     fp = _dir_fingerprint(real)
-    return cached_index(
+    return cached_value(
         None
         if fp is None
         else path_key(real, fp, "fact_import", spark.sparkContext.applicationId),

@@ -90,7 +90,7 @@ def test_read_fact_evicts_on_rewrite(spark, tmp_path, populated_da):
         real = os.path.realpath(path)
         live = [
             k
-            for k in index_cache._HANDLES
+            for k in index_cache._VALUES
             if "fact_import" in k and k[0][0].startswith(f"hot:{real}#")
         ]
         assert len(live) == 1

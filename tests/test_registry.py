@@ -105,6 +105,28 @@ def test_fact_derived_key_survives_sweep_and_unrelated_miss(spark, tmp_path, tin
     index_cache.clear_indexes()
 
 
+def test_fact_readers_pin_nothing(spark, tmp_path, tiny_sf, populated_da):
+    """Both fact readers serve straight from their parquet files: reading
+    the whole fact through ``availability_fact`` or ``read_fact`` adds
+    no persisted block, and neither handle is cached."""
+    from binance_futures_availability_spark import index_cache
+    from binance_futures_availability_spark.operators.availability import (
+        availability_fact,
+    )
+    from binance_futures_availability_spark.sources import duckdb_io
+
+    fact_path = str(tmp_path / "imported.parquet")
+    populated_da.write.parquet(fact_path)
+    availability_fact(spark, tiny_sf)  # materialize before the baseline
+    base = index_cache.storage_bytes(spark)
+    da = availability_fact(spark, tiny_sf)
+    assert da.count() > 0
+    imported = duckdb_io.read_fact(spark, fact_path)
+    assert imported.count() == populated_da.count()
+    assert index_cache.storage_bytes(spark) == base
+    assert not da.is_cached and not imported.is_cached
+
+
 def test_scrub_boilerplate_falls_back_when_plan_key_is_none(
     spark, tmp_path, monkeypatch
 ):
@@ -264,8 +286,8 @@ def test_clear_indexes_empties_every_store(spark, tmp_path, tiny_sf, populated_d
     )
     from binance_futures_availability_spark.sources import duckdb_io
 
-    # the fact handle itself lives outside the registry: materialize it
-    # before taking the baseline
+    # the fact table itself is stored outside the registry: materialize
+    # it before taking the baseline
     availability_fact(spark, tiny_sf).count()
     index_cache.clear_indexes()
     base = index_cache.storage_bytes(spark)

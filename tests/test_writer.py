@@ -989,3 +989,42 @@ def test_one_quantizer_and_one_ntile_rule_in_textops():
     divmods = _calls_by_function("textops.py", "divmod")
     assert len(divmods) <= 1, divmods
     assert {name for name, _ in divmods} <= {"_ntile"}, divmods
+
+
+#: the only places the package pins a frame in executor storage, as
+#: (module, outermost function; None = anywhere in the module): the
+#: artifact registry, the BPE trainer's per-round tables and the API's
+#: in-memory matview
+PERSIST_SITES = {
+    ("index_cache.py", None),
+    ("operators/vocab.py", "_train_merges"),
+    ("api.py", "refresh_matview"),
+}
+
+
+def test_persists_only_in_registry_bpe_rounds_and_matview():
+    """``.cache()``/``.persist()`` is called only in ``index_cache.py``,
+    in ``vocab._train_merges`` and in ``Engine.refresh_matview``: no
+    whole-table copy (the fact table, a catalog read) can be pinned
+    beside the registry's narrow artifacts."""
+    allowed = {(f"{PACKAGE.name}/{m}", fn) for m, fn in PERSIST_SITES}
+    bad = []
+
+    def visit(node, rel, fn):
+        for n in ast.iter_child_nodes(node):
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(n, rel, fn or n.name)
+                continue
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("cache", "persist")
+                and (rel, None) not in allowed
+                and (rel, fn) not in allowed
+            ):
+                bad.append((rel, fn, n.lineno))
+            visit(n, rel, fn)
+
+    for p, tree in _package_trees():
+        visit(tree, p.relative_to(PACKAGE.parent).as_posix(), None)
+    assert bad == []

@@ -71,7 +71,7 @@ HEADLINERS = {
     "gap_filled_volumes": "LOCF gap fill: generated per-symbol date skeleton (no shuffle for the explode), left join, ONE carry-forward window",
     "availability_pivot": "explicit-value PIVOT: one partial-agg shuffle, no values-discovery job",
     "bigram_lm_scores": "bigram LM: bigram postings, corpus counts, and |V| are session-cached index artifacts (InMemoryTableScan); a warm call is the scoring join + one per-doc integer nano-nat aggregate",
-    "duckdb_import_snapshot": "migration connector read: memoized cached handle over the imported fact (no per-call partition discovery); snapshot filter served from the InMemoryTableScan",
+    "duckdb_import_snapshot": "migration connector read: memoized registry read over the imported fact (no per-call partition discovery, nothing pinned in memory); snapshot filter pushed into the parquet scan",
     "daily_update": "composed cron tick read-back: probed window served from the cached committed table; the pipeline itself (probe -> upsert -> validate -> rankings) ran once at build",
     "release_stats": "release consistency block: ONE partial-aggregated reduction to a single row; the two exact distincts expand over dimension-bounded columns",
     "pq_codes": "PQ encode: cached codebook broadcast under a per-(vector,subspace) min-reduction; one short-row shuffle, fan-out bounded by the constant k",
